@@ -164,8 +164,9 @@ object Mutations {
     * `pmod(user_id, nBuckets)`, one deterministic data-derived CDC
     * batch applies through the maintainer's OWN tick body
     * ([[graft.streaming.EventStream.cdcMergeTick]] — pruned
-    * touched-bucket read, [[applyBatchDelta]], tombstoned
-    * `applyTick`), and the result is the post-apply store read back
+    * touched-bucket read, [[applyBatchDelta]] resolved once inside
+    * `applyTick`'s write, tombstones dropped with the batch keys),
+    * and the result is the post-apply store read back
     * from disk. Oracle = the same batch merged in plain SQL
     * (union + latest-wins window + tombstone filter).
     *

@@ -275,7 +275,7 @@ object Retrieval {
     if (BucketStore.appliedBatchId(store) < batchId) {
       BucketStore.applyAppendTick(spark, statsStore,
         statsPartialOf(delta).withColumn(BucketStore.BucketCol, statsBucket),
-        batchId = batchId, n = StatsBuckets, onCompact = statsCompact)
+        batchId = batchId, n = StatsBuckets, onCompact = Some(statsCompact))
       BucketStore.applyAppendTick(spark, store,
         postingsOf(delta).withColumn(BucketStore.BucketCol, tokenBucket(col("token"))),
         batchId = batchId, n = IndexBuckets)
@@ -330,7 +330,7 @@ object Retrieval {
           coalesce(sum(col("sdl")), lit(0L)).as("sum_dl"))
       BucketStore.applyAppendTick(spark, statsStore,
         signed.withColumn(BucketStore.BucketCol, statsBucket),
-        batchId = batchId, n = StatsBuckets, onCompact = statsCompact)
+        batchId = batchId, n = StatsBuckets, onCompact = Some(statsCompact))
       BucketStore.applyTick(spark, store,
         changes.withColumn(BucketStore.BucketCol, tokenBucket(col("token"))),
         Seq("doc_id", "token"), batchId = batchId, n = IndexBuckets,

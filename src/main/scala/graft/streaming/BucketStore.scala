@@ -129,19 +129,17 @@ private[graft] object BucketStore {
   /** Live-generation bound before a tick auto-compacts (see
     * [[applyTick]]): once the previous manifest references this many
     * distinct generations, the next tick folds the whole store into
-    * its own generation. Bounds per-bucket file count and manifest
-    * fan-out at a constant; one amortized full rewrite every
-    * ~`DefaultMaxLiveGenerations` ticks is the LSM trade.
+    * its own generation. Bounds live generations (and with them the
+    * manifest fan-out and read-plan width) at a constant; one
+    * amortized full rewrite every ~`DefaultMaxLiveGenerations` ticks
+    * is the LSM trade. It does NOT bound files per bucket: a
+    * broadcast-gated merge or a plain append fold writes narrowly (no
+    * re-shuffle of the carried rows), so a bucket's file count after
+    * such a write follows the scan's file packing
+    * (`spark.sql.files.maxPartitionBytes` — a task packing k buckets
+    * writes k files) plus the delta's own files.
     */
   val DefaultMaxLiveGenerations = 8
-
-  /** The default (no-reduction) `onCompact` for [[applyAppendTick]] —
-    * a NAMED function value so the fold can recognize "plain
-    * disjoint-key append" by reference and take the narrow (no
-    * full-store re-shuffle) write path. A bare `identity` default
-    * eta-expands to a fresh lambda and would defeat the check.
-    */
-  private[graft] val IdentityCompact: DataFrame => DataFrame = df => df
 
   private val Marker = "_graft_applied_batch"
   private val LeaseFile = "_graft_writer_lease"
@@ -409,6 +407,21 @@ private[graft] object BucketStore {
     (rows.map(_.getInt(0)).toSeq, rows.map(_.getLong(1)).sum)
   }
 
+  /** A merge tick's delta-key summary, supplied by a caller that
+    * already holds it (see [[applyTick]]'s `keys`): the buckets the
+    * tick touches, a frame of the delta's keys (`keyCols` only) and
+    * that frame's row count. The caller's invariant: the key SET of
+    * `dropKeys` is the key set of `changes ∪ removed` — every delta
+    * key resolves to exactly one surviving or tombstoned row — so
+    * `touched` is what [[touchedBucketStats]] over `changes ∪
+    * removed` would return. `dropKeys` may repeat a key (it only
+    * feeds the carry-over anti join), so `keyRows` bounds the
+    * distinct count from above; it only gates the broadcast. The
+    * generation write reads `dropKeys`, so it should be cheap to
+    * re-read (a projection of a cached frame).
+    */
+  private[graft] case class TickKeys(touched: Seq[Int], keyRows: Long, dropKeys: DataFrame)
+
   /** Apply one tick: `changes` is the post-merge state of every
     * touched key (bucket column included); `removed` optionally names
     * keys whose post-merge state is GONE (CDC tombstones — bucket
@@ -430,20 +443,35 @@ private[graft] object BucketStore {
     * references `maxLiveGenerations` distinct generations widens its
     * touched set to every live bucket and folds the whole store into
     * its own generation: one amortized full rewrite every ~`maxLive`
-    * ticks bounds live generations (and the per-bucket file count) at
-    * a constant, with zero protocol changes — the compacting tick
-    * publishes, recovers, and snapshot-isolates exactly like any
-    * other, and older generations age out through the normal
-    * retention gc. Callers that pin untouched-bucket byte-identity
-    * across a tick must size `maxLiveGenerations` above their tick
-    * count or account for the fold.
+    * ticks bounds live generations at a constant, with zero protocol
+    * changes — the compacting tick publishes, recovers, and
+    * snapshot-isolates exactly like any other, and older generations
+    * age out through the normal retention gc. The fold does not bound
+    * files per bucket: below the broadcast gate the write is narrow,
+    * so a bucket's file count depends on the scan's file packing (see
+    * [[DefaultMaxLiveGenerations]]). Callers that pin untouched-bucket
+    * byte-identity across a tick must size `maxLiveGenerations` above
+    * their tick count or account for the fold.
+    *
+    * '''Caller-supplied key summary.''' Without `keys` the tick
+    * derives its touched buckets, key-row count and drop-key set from
+    * `changes ∪ removed` itself: both are cached and one stats pass
+    * resolves them before the write. A caller that already holds
+    * those facts (a CDC tick, whose batch keys each resolve to one
+    * surviving or tombstoned row — see [[TickKeys]]) passes them as
+    * `keys`; the tick then runs no stats pass, caches nothing and
+    * ignores `removed` (the drop-key set already covers it), so the
+    * plan behind `changes` runs exactly once, inside the generation
+    * write. Publish protocol, fence, lease, compaction and gc are the
+    * same on both paths.
     */
   def applyTick(spark: SparkSession, dir: String, changes: DataFrame,
                 keyCols: Seq[String], batchId: Long, n: Int,
                 removed: Option[DataFrame] = None,
                 maxLiveGenerations: Int = DefaultMaxLiveGenerations,
                 beforePublish: () => Unit = () => (),
-                lease: Option[WriterLease] = None): TickStats = {
+                lease: Option[WriterLease] = None,
+                keys: Option[TickKeys] = None): TickStats = {
     // fence snapshot: the raw marker this tick's view of the store is
     // based on. Any publish by another writer changes it (the UUID on
     // line 2), and this tick then aborts at a checkFence instead of
@@ -462,15 +490,24 @@ private[graft] object BucketStore {
     try {
     val (fs, p) = fsFor(dir)
     val prevManifest = readManifest(fs, p, prevId)
-    val ch = changes.cache()
-    val rm = removed.map(_.cache())
+    // with a caller's summary the delta is consumed once (by the
+    // write), so there is nothing to cache
+    val ownStats = keys.isEmpty
+    val ch = if (ownStats) changes.cache() else changes
+    val rm = if (ownStats) removed.map(_.cache()) else None
     try {
     // one delta pass yields the touched buckets AND the row count the
     // broadcast gate below needs (previously a distinct + a count —
-    // two scheduled jobs per tick for one aggregation's worth of facts)
-    val (changed, deltaKeyRows) = touchedBucketStats(
-      rm.map(r => ch.select(col(BucketCol)).unionByName(r.select(col(BucketCol))))
-        .getOrElse(ch.select(col(BucketCol))))
+    // two scheduled jobs per tick for one aggregation's worth of
+    // facts). dropKeys projects the same ch ∪ rm rows, so its size is
+    // that row count by construction
+    val TickKeys(changed, deltaKeyRows, dropKeys) = keys.getOrElse {
+      def project(cs: Seq[String]) = rm.map(r => ch.select(cs.map(col): _*)
+          .unionByName(r.select(cs.map(col): _*)))
+        .getOrElse(ch.select(cs.map(col): _*))
+      val (buckets, rows) = touchedBucketStats(project(Seq(BucketCol)))
+      TickKeys(buckets, rows, project(keyCols))
+    }
     val compacting = liveGenCount(prevManifest) >= maxLiveGenerations
     if (changed.isEmpty && !compacting) {
       // an all-duplicate tick changes nothing but must still advance
@@ -496,12 +533,8 @@ private[graft] object BucketStore {
     // removed. The changed-key side is delta-sized — size-gated
     // broadcast at the conservative (string-key) row cap, same
     // convention as every delta hint (Hints.broadcastIfSmall); the
-    // gate reuses touchedBucketStats' row count (dropKeys is a
-    // projection of the same ch ∪ rm rows, so the counts are identical
-    // by construction) instead of scheduling a second counting job.
-    val dropKeys = rm.map(r => ch.select(keyCols.map(col): _*)
-        .unionByName(r.select(keyCols.map(col): _*)))
-      .getOrElse(ch.select(keyCols.map(col): _*))
+    // gate reuses the stats row count instead of scheduling a second
+    // counting job.
     val deltaBroadcast =
       deltaKeyRows <= graft.operators.Hints.DeltaBroadcastMaxRowsMd5
     val carry = old
@@ -526,6 +559,13 @@ private[graft] object BucketStore {
     // clobber a same-named generation dir the winner's manifest
     // references (mode=overwrite deletes the dir first)
     checkFence(dir, fence0, batchId)
+    // the write IS the materialisation, also of a caller's lazy
+    // `changes` whose plan reads this store. That read cannot hit the
+    // materialise-before-mutate hazard: the target gen-<batchId> is
+    // never a live generation (prevManifest names only the seed's and
+    // generations published at or before prevId < batchId), so the
+    // overwrite deletes no file the plan reads, and gc runs only after
+    // the write
     merged.write.partitionBy(BucketCol).mode("overwrite").parquet(s"$dir/$gen")
     // new manifest: touched buckets move (collapse) to this single
     // generation iff the write produced rows for them (emptied
@@ -544,7 +584,7 @@ private[graft] object BucketStore {
       compacted = compacting, liveGenerations = liveGenCount(newManifest))
     log.info(s"$dir $st")
     st
-    } finally { ch.unpersist(); rm.foreach(_.unpersist()) }
+    } finally if (ownStats) { ch.unpersist(); rm.foreach(_.unpersist()) }
     } finally lease.foreach(releaseLease(dir, _))
   }
 
@@ -577,15 +617,15 @@ private[graft] object BucketStore {
     * count. The reduction must preserve the bucket column (group by
     * key AND bucket — keys hash to one bucket, so this adds nothing)
     * and must be associative/commutative over row groups (the fold
-    * sees arbitrary generation boundaries). Identity (the default)
-    * is the plain disjoint-key append.
+    * sees arbitrary generation boundaries). `None` (the default) is
+    * the plain disjoint-key append.
     */
   def applyAppendTick(spark: SparkSession, dir: String, appended: DataFrame,
                       batchId: Long, n: Int,
                       maxLiveGenerations: Int = DefaultMaxLiveGenerations,
                       beforePublish: () => Unit = () => (),
                       lease: Option[WriterLease] = None,
-                      onCompact: DataFrame => DataFrame = IdentityCompact): TickStats = {
+                      onCompact: Option[DataFrame => DataFrame] = None): TickStats = {
     val (prevId, fence0) = markerSnapshot(dir)
     if (prevId >= batchId)
       return TickStats(batchId, applied = false, touchedBuckets = 0,
@@ -608,9 +648,9 @@ private[graft] object BucketStore {
       // guard's requirement); the orphaned empty dir is swept by gc
       // once it leaves the retention window.
       // r18 (guide §2.4, the applyTick narrow-merge twin): a plain
-      // disjoint-key fold (onCompact = IdentityCompact) re-clusters
-      // nothing — the store side is already bucket-clustered by the
-      // partition-discovered scan, so only the delta needs the bucket
+      // disjoint-key fold (onCompact = None) re-clusters nothing — the
+      // store side is already bucket-clustered by the partition-
+      // discovered scan, so only the delta needs the bucket
       // repartition and the fold's write skips the full-store
       // exchange. A reducing onCompact re-groups rows (its aggregation
       // hash-partitions by key, not bucket), so that path keeps the
@@ -618,10 +658,11 @@ private[graft] object BucketStore {
       val out =
         if (compacting) {
           val store = selectOrEmpty(spark, dir, prevManifest, prevManifest)
-          if (onCompact eq IdentityCompact)
-            store.unionByName(appended.repartition(col(BucketCol)))
-          else onCompact(store.unionByName(appended))
-            .repartition(col(BucketCol))
+          onCompact match {
+            case None => store.unionByName(appended.repartition(col(BucketCol)))
+            case Some(reduce) =>
+              reduce(store.unionByName(appended)).repartition(col(BucketCol))
+          }
         } else appended.repartition(col(BucketCol))
       checkFence(dir, fence0, batchId)
       out.write.partitionBy(BucketCol).mode("overwrite").parquet(s"$dir/$gen")

@@ -380,7 +380,7 @@ object DocStream {
           } else {
             BucketStore.applyAppendTick(spark, storeDir,
               members(b), batchId, n = n,
-              onCompact = _.dropDuplicates("text_md5", "doc_id"))
+              onCompact = Some(_.dropDuplicates("text_md5", "doc_id")))
           }
           ()
         }
@@ -452,9 +452,9 @@ object DocStream {
             deltaCounts.withColumn(BucketStore.BucketCol,
               BucketStore.md5Bucket(md5(col("k")), n)),
             batchId, n = n,
-            onCompact = _.groupBy(col("k"), col(BucketStore.BucketCol))
+            onCompact = Some(_.groupBy(col("k"), col(BucketStore.BucketCol))
               .agg(sum(col("ndocs")).as("ndocs"))
-              .filter(col("ndocs") =!= 0))
+              .filter(col("ndocs") =!= 0)))
         }
         b.unpersist()
         ()

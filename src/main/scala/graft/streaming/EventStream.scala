@@ -76,13 +76,15 @@ object EventStream {
     * BUCKET-PARTITIONED ratings snapshot ([[BucketStore]], bucketed by
     * `pmod(user_id, nBuckets)`) per micro-batch — the streaming
     * version of the reference's REST write path, with the same
-    * O(delta)-I/O contract as the materialized-view maintainers: the
-    * batch's keys name their buckets up front, the resolution reads
-    * only those buckets' current rows
-    * ([[graft.operators.Mutations.applyBatchDelta]], work ∝ batch),
-    * and the apply publishes only those buckets into a new store
-    * generation — tombstones included (a delete that empties a bucket
-    * drops it from the manifest). On a lake this whole body is one
+    * O(delta)-I/O contract as the materialized-view maintainers. Each
+    * micro-batch past the replay guard runs one [[cdcMergeTick]]: one
+    * keys pass, then one generation write that resolves the batch
+    * against only its touched buckets' rows and publishes only those
+    * buckets — tombstones included (a delete that empties a bucket
+    * drops it from the manifest). An empty micro-batch is detected by
+    * that keys pass and leaves the store and its marker untouched.
+    * The batch is cached for the two passes and released on every
+    * exit, a failed tick's included. On a lake this whole body is one
     * `MERGE INTO` against Delta/Iceberg; the bucket layout is the
     * plain-parquet equivalent.
     *
@@ -104,47 +106,68 @@ object EventStream {
       .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], batchId: Long) =>
         val spark = batch.sparkSession
         BucketStore.recover(snapshot)
-        val b = batch.toDF().cache()
-        // nBuckets ≤ 0 (r15 default): the store meta is the layout
-        if (b.count() > 0 && BucketStore.appliedBatchId(snapshot) < batchId)
-          cdcMergeTick(spark, snapshot, b, batchId,
+        if (BucketStore.appliedBatchId(snapshot) < batchId) {
+          val b = batch.toDF().cache()
+          // nBuckets ≤ 0 (r15 default): the store meta is the layout
+          try cdcMergeTick(spark, snapshot, b, batchId,
             if (nBuckets > 0) nBuckets else BucketStore.seededBuckets(snapshot))
-        b.unpersist()
+          finally { b.unpersist(); () }
+        }
         ()
       }
       .start()
 
   /** One CDC merge tick against a bucketed ratings snapshot — the
-    * shared body of [[startCdcApply]] and [[startRetrainLoop]]: the
-    * batch's keys name the touched buckets up front, the resolution
-    * reads only those buckets' current rows
-    * ([[graft.operators.Mutations.applyBatchDelta]], work ∝ batch),
-    * and the apply publishes only those buckets into a new store
-    * generation, tombstones included. Package-visible so
+    * shared body of [[startCdcApply]] and [[startRetrainLoop]]. It
+    * resolves the batch once:
+    *
+    *  1. one pass over the batch's (user, item) keys yields the
+    *     touched buckets and the key-row count (an empty batch stops
+    *     here: no apply, marker unchanged);
+    *  2. the resolution — the touched buckets' current rows,
+    *     semi-joined to the broadcast keys, latest-wins against the
+    *     batch ([[graft.operators.Mutations.applyBatchDelta]], work ∝
+    *     batch) — is handed to [[BucketStore.applyTick]] lazily,
+    *     together with that key summary ([[BucketStore.TickKeys]]), so
+    *     it runs exactly once, inside the generation write.
+    *
+    * The summary needs no pass of its own: every distinct batch key
+    * resolves to exactly one row, a survivor or a tombstone, so the
+    * key set of the apply's `changes ∪ removed` IS the batch's key
+    * set — the same touched buckets, and the batch's key projection
+    * is the carry-over's drop set. That projection is not de-duplicated:
+    * the semi and anti joins that consume it ignore repeats, and its
+    * row count only gates the broadcast. `b` must be cached by the
+    * caller — the keys pass and the write both read it. The tick
+    * caches nothing itself, so a fenced-off or failed tick leaves no
+    * cached frame behind. Package-visible so
     * [[graft.operators.Mutations.cdcSnapshotStore]] can hash-gate
     * this exact body against a SQL oracle.
+    *
+    * @param beforePublish fault-injection seam, passed to
+    *                      [[BucketStore.applyTick]]
+    * @return the apply's stats; None for an empty batch
     */
   private[graft] def cdcMergeTick(spark: SparkSession, snapshot: String, b: DataFrame,
-                           batchId: Long, nBuckets: Int): Unit = {
-    val keys = b.select(col("user_id"), col("item_id")).distinct().cache()
-    // one pass over the cached keys yields the pruned read's bucket
-    // list AND the broadcast gate's row count (r17 — previously a
-    // distinct-collect plus a separate count, two jobs per tick)
-    val (touched, nKeys) = BucketStore.touchedBucketStats(keys.select(
+                           batchId: Long, nBuckets: Int,
+                           beforePublish: () => Unit = () => ()): Option[BucketStore.TickStats] = {
+    val keys = b.select(col("user_id"), col("item_id"))
+    val (touched, keyRows) = BucketStore.touchedBucketStats(keys.select(
       BucketStore.longBucket(col("user_id"), nBuckets).as(BucketStore.BucketCol)))
-    val keysHinted = if (nKeys <= graft.operators.Hints.DeltaBroadcastMaxRows)
-      broadcast(keys) else keys
-    val baseTouched = BucketStore.readBuckets(spark, snapshot, touched, nBuckets)
-      .join(keysHinted, Seq("user_id", "item_id"), "left_semi")
-    val (changes, removed) =
-      graft.operators.Mutations.applyBatchDelta(baseTouched, b)
-    def bucketed(df: DataFrame) = df.withColumn(BucketStore.BucketCol,
-      BucketStore.longBucket(col("user_id"), nBuckets))
-    BucketStore.applyTick(spark, snapshot, bucketed(changes),
-      Seq("user_id", "item_id"), batchId, n = nBuckets,
-      removed = Some(bucketed(removed)))
-    keys.unpersist()
-    ()
+    if (keyRows == 0) None
+    else {
+      val keysHinted = if (keyRows <= graft.operators.Hints.DeltaBroadcastMaxRows)
+        broadcast(keys) else keys
+      val baseTouched = BucketStore.readBuckets(spark, snapshot, touched, nBuckets)
+        .join(keysHinted, Seq("user_id", "item_id"), "left_semi")
+      val (changes, _) = graft.operators.Mutations.applyBatchDelta(baseTouched, b)
+      Some(BucketStore.applyTick(spark, snapshot,
+        changes.withColumn(BucketStore.BucketCol,
+          BucketStore.longBucket(col("user_id"), nBuckets)),
+        Seq("user_id", "item_id"), batchId, n = nBuckets,
+        beforePublish = beforePublish,
+        keys = Some(BucketStore.TickKeys(touched, keyRows, keys))))
+    }
   }
 
   /** Streaming materialized view of the co-occurrence matrix: each
@@ -280,12 +303,14 @@ object EventStream {
         val spark = batch.sparkSession
         BucketStore.recover(snapshot)
         val b = batch.toDF().cache()
-        val n = b.count()
-        // nBuckets ≤ 0 (r15 default): the store meta is the layout
-        if (n > 0 && BucketStore.appliedBatchId(snapshot) < batchId)
-          cdcMergeTick(spark, snapshot, b, batchId,
-            if (nBuckets > 0) nBuckets else BucketStore.seededBuckets(snapshot))
-        b.unpersist()
+        val n = try {
+          val rows = b.count()
+          // nBuckets ≤ 0 (r15 default): the store meta is the layout
+          if (rows > 0 && BucketStore.appliedBatchId(snapshot) < batchId)
+            cdcMergeTick(spark, snapshot, b, batchId,
+              if (nBuckets > 0) nBuckets else BucketStore.seededBuckets(snapshot))
+          rows
+        } finally { b.unpersist(); () }
         if (n > 0 && pending.addAndGet(n) >= retrainEvery) {
           val train = BucketStore.readAll(spark, snapshot).select(
             col("user_id").cast("int").as("user"),

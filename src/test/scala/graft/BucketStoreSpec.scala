@@ -1,6 +1,8 @@
 package graft
 
-import graft.streaming.BucketStore
+import graft.operators.Mutations
+import graft.streaming.{BucketStore, EventStream}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -19,6 +21,82 @@ class BucketStoreSpec extends AnyFunSuite {
   private def storeRows(dir: String): Set[(Long, Long)] =
     BucketStore.readAll(spark, dir).select("k", "v")
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
+
+  /** Counts the jobs each `jobsOf(group) { … }` section schedules.
+    * Per-JOB-GROUP counts (r17 ADVICE): a bare global counter let late
+    * JobStart events from one section bleed into the next on a
+    * contended host; tagging each section with its own job group makes
+    * the attribution race-free — the settle loop only absorbs the
+    * bus's delivery lag for the section's OWN jobs. AQE surfaces each
+    * query stage as its own job, which would make a budget
+    * Spark-version-shaped; the pins are about GRAFT's job structure,
+    * so the body runs with AQE off (session conf restored after).
+    */
+  private def withJobCounts(body: JobsOf => Unit): Unit = {
+    val jobsByGroup = new java.util.concurrent.ConcurrentHashMap[String, Integer]()
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(js: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
+        val g = Option(js.properties)
+          .flatMap(p => Option(p.getProperty("spark.jobGroup.id"))).getOrElse("")
+        jobsByGroup.merge(g, 1, (a, b) => a + b); ()
+      }
+    }
+    // the listener bus is async — read the group's counter once it
+    // stops moving
+    def settled(group: String): Int = {
+      def cnt(): Int = Option(jobsByGroup.get(group)).fold(0)(_.intValue())
+      var prev = -1; var cur = cnt(); var spins = 0
+      while (cur != prev && spins < 100) {
+        prev = cur; Thread.sleep(50); cur = cnt(); spins += 1
+      }
+      cur
+    }
+    spark.sparkContext.addSparkListener(listener)
+    val aqe0 = spark.conf.get("spark.sql.adaptive.enabled")
+    spark.conf.set("spark.sql.adaptive.enabled", "false")
+    try body(new JobsOf {
+      def apply(group: String)(f: => Unit): Int = {
+        spark.sparkContext.setJobGroup(group, group)
+        try f finally spark.sparkContext.clearJobGroup()
+        settled(group)
+      }
+    })
+    finally {
+      spark.conf.set("spark.sql.adaptive.enabled", aqe0)
+      spark.sparkContext.removeSparkListener(listener)
+    }
+  }
+
+  private trait JobsOf { def apply(group: String)(f: => Unit): Int }
+
+  private def ts(s: String) = java.sql.Timestamp.valueOf(s)
+
+  /** A bucketed ratings store in the CDC tick's schema. */
+  private def seedRatings(dir: String, n: Int,
+                          rows: Seq[(Long, Long, Double)]): Unit = {
+    import spark.implicits._
+    BucketStore.seed(
+      rows.map { case (u, i, r) => (u, i, r, false, ts("2024-01-01 00:00:00")) }
+        .toDF("user_id", "item_id", "rating", "is_implicit", "ts"),
+      BucketStore.longBucket(col("user_id"), n), dir, n)
+  }
+
+  private def ratingRows(dir: String): Set[(Long, Long, Double, Boolean, java.sql.Timestamp)] =
+    BucketStore.readAll(spark, dir)
+      .select("user_id", "item_id", "rating", "is_implicit", "ts").collect()
+      .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2), r.getBoolean(3),
+        r.getTimestamp(4))).toSet
+
+  /** Bucket ids the store's current manifest lists. */
+  private def manifestBuckets(dir: String): Set[Int] = {
+    val id = BucketStore.appliedBatchId(dir)
+    new String(java.nio.file.Files.readAllBytes(
+      java.nio.file.Paths.get(dir, s"_graft_manifest_$id")), "UTF-8")
+      .split("\n").filter(_.nonEmpty).map(_.split("\t")(0).toInt).toSet
+  }
+
+  /** Ids of the session's materialised persisted RDDs. */
+  private def persistedRdds(): Set[Int] = spark.sparkContext.getPersistentRDDs.keySet.toSet
 
   test("recover rolls an unpublished tick back; replayed batch recomputes idempotently") {
     import spark.implicits._
@@ -339,7 +417,7 @@ class BucketStoreSpec extends AnyFunSuite {
     // zero carry-over writes (each generation holds exactly 1 row)
     (0L to 2L).foreach { b =>
       BucketStore.applyAppendTick(spark, dir, partial(("hot", 1L)),
-        batchId = b, n = 64, onCompact = reduce)
+        batchId = b, n = 64, onCompact = Some(reduce))
       assert(spark.read.parquet(s"$dir/gen-$b").count() === 1L)
     }
     // merge-on-read: the aggregated view is exact at every point
@@ -348,7 +426,7 @@ class BucketStoreSpec extends AnyFunSuite {
     // the compaction fold applies the SAME reduction: after it fires,
     // the hot key's partials collapse to ONE physical row
     val st = BucketStore.applyAppendTick(spark, dir, partial(("hot", 1L)),
-      batchId = 3L, n = 64, maxLiveGenerations = 3, onCompact = reduce)
+      batchId = 3L, n = 64, maxLiveGenerations = 3, onCompact = Some(reduce))
     assert(st.compacted && st.liveGenerations === 1)
     assert(summed === Map("hot" -> 5L, "cold" -> 1L))
     assert(spark.read.parquet(s"$dir/gen-3")
@@ -432,6 +510,27 @@ class BucketStoreSpec extends AnyFunSuite {
       batchId = 7L, n = 64)
     assert(!replay.applied)
     assert(storeRows(dir) === Set((1L, 77L), (2L, 222L), (3L, 30L)))
+
+    // the same loud loss through a CDC tick: nothing the fenced-off
+    // tick cached outlives it in the long-lived session
+    val rdir = java.nio.file.Files.createTempDirectory("bucket_store_fence_cdc").toString + "/store"
+    seedRatings(rdir, 64, Seq((1L, 10L, 4.0), (2L, 10L, 5.0)))
+    def cdcBatch(u: Long, r: Double) =
+      Seq(RatingUpdate(u, 10L, r, false, ts("2024-01-02 00:00:00"), "upsert")).toDF()
+    val loser = cdcBatch(1L, 1.0)
+    val cached0 = persistedRdds()
+    val e3 = intercept[BucketStore.ConcurrentWriterException] {
+      EventStream.cdcMergeTick(spark, rdir, loser, batchId = 5L, nBuckets = 64,
+        beforePublish = () => {
+          assert(EventStream.cdcMergeTick(spark, rdir, cdcBatch(2L, 2.0),
+            batchId = 4L, nBuckets = 64).exists(_.applied))
+          ()
+        })
+    }
+    assert(e3.getMessage.contains("another maintainer"))
+    assert(BucketStore.appliedBatchId(rdir) === 4L)
+    assert(ratingRows(rdir).map(r => (r._1, r._3)) === Set((1L, 4.0), (2L, 2.0)))
+    assert(persistedRdds() === cached0, "the fenced-off tick left cached blocks behind")
   }
 
   test("writer lease: the loser is blocked at ENTRY — no orphan generation written at all") {
@@ -588,41 +687,7 @@ class BucketStoreSpec extends AnyFunSuite {
     // into ONE aggregation job, and removed the append tick's pre-write
     // distinct outright (touched buckets come off the written
     // generation's partition dirs, a filesystem listing)
-    // per-JOB-GROUP counts (r17 ADVICE): a bare global counter let late
-    // JobStart events from one jobsOf section bleed into the next on a
-    // contended host; tagging each section with its own job group makes
-    // the attribution race-free — the settle loop below only absorbs
-    // the bus's delivery lag for the section's OWN jobs
-    val jobsByGroup = new java.util.concurrent.ConcurrentHashMap[String, Integer]()
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(js: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
-        val g = Option(js.properties)
-          .flatMap(p => Option(p.getProperty("spark.jobGroup.id"))).getOrElse("")
-        jobsByGroup.merge(g, 1, (a, b) => a + b); ()
-      }
-    }
-    spark.sparkContext.addSparkListener(listener)
-    // the listener bus is async — read the group's counter once it
-    // stops moving
-    def settled(group: String): Int = {
-      def cnt(): Int = Option(jobsByGroup.get(group)).fold(0)(_.intValue())
-      var prev = -1; var cur = cnt(); var spins = 0
-      while (cur != prev && spins < 100) {
-        prev = cur; Thread.sleep(50); cur = cnt(); spins += 1
-      }
-      cur
-    }
-    // AQE surfaces each query stage as its own job, which would make
-    // the budget Spark-version-shaped; the pin is about GRAFT's job
-    // structure, so pin it with AQE off (session conf restored below)
-    val aqe0 = spark.conf.get("spark.sql.adaptive.enabled")
-    spark.conf.set("spark.sql.adaptive.enabled", "false")
-    try {
-      def jobsOf(group: String)(f: => Unit): Int = {
-        spark.sparkContext.setJobGroup(group, group)
-        try f finally spark.sparkContext.clearJobGroup()
-        settled(group)
-      }
+    withJobCounts { jobsOf =>
       // merge tick: ONE delta stats job (touched buckets + gate count
       // fused) + the broadcast build + the generation write = 3; the
       // pre-r17 shape paid 4 (distinct, gate count, broadcast, write)
@@ -659,9 +724,6 @@ class BucketStoreSpec extends AnyFunSuite {
         bucketed((9L, 90L)), batchId = 2L, n = 64)
       assert(!st2.applied)
       assert(storeRows(dir) === Set((1L, 11L), (3L, 30L)))
-    } finally {
-      spark.conf.set("spark.sql.adaptive.enabled", aqe0)
-      spark.sparkContext.removeSparkListener(listener)
     }
   }
 
@@ -713,5 +775,102 @@ class BucketStoreSpec extends AnyFunSuite {
         (0L until 1000L).filterNot(k => k == 1L || k == 2L || k == 9L)
           .map(k => (k, k * 2)).toSet ++ Set((1L, 99L), (9L, 90L))))
     } finally spark.listenerManager.unregister(listener)
+  }
+
+  test("cdc tick job budget: one keys pass and one resolution, inside the write, on a store with 3 live generations") {
+    import spark.implicits._
+    val dir = java.nio.file.Files.createTempDirectory("bucket_store_cdc_jobs").toString + "/store"
+    val n = 16
+    seedRatings(dir, n, (0L until 48L).map(u => (u, u % 5 + 1, 3.0)))
+    def batch(rows: RatingUpdate*): DataFrame = rows.toDF().cache()
+    // two ticks on distinct buckets stack generations: base, gen-0 (bucket 1), gen-1 (bucket 2)
+    Seq(0L -> 1L, 1L -> 2L).foreach { case (batchId, u) =>
+      val b = batch(RatingUpdate(u, 100L, 4.0, false, ts("2024-01-02 00:00:00"), "upsert"))
+      EventStream.cdcMergeTick(spark, dir, b, batchId, n)
+      b.unpersist()
+    }
+    // the measured tick reads a bucket out of each live generation
+    val b = batch(
+      RatingUpdate(1L, 100L, 2.2, false, ts("2024-01-03 00:00:00"), "upsert"), // gen-0
+      RatingUpdate(2L, 3L, 0.0, false, ts("2024-01-03 00:00:00"), "delete"),   // gen-1
+      RatingUpdate(3L, 200L, 5.0, true, ts("2024-01-03 00:00:00"), "upsert"))  // base
+    assert(BucketStore.readBuckets(spark, dir, Seq(1, 2, 3), n).inputFiles
+      .map(_.split("/").find(_.startsWith("gen-")).get).toSet ===
+      Set("gen-base", "gen-0", "gen-1"))
+    b.count() // the caller's batch cache is not the tick's work
+    withJobCounts { jobsOf =>
+      var st: Option[BucketStore.TickStats] = None
+      val jobs = jobsOf("budget-cdc") {
+        st = EventStream.cdcMergeTick(spark, dir, b, batchId = 2L, nBuckets = n)
+      }
+      assert(st.exists(s => s.applied && s.touchedBuckets === 3 && !s.compacted))
+      // one keys stats job, one broadcast of the batch keys (the semi
+      // join's per-generation copies and the carry-over anti join
+      // reuse one exchange with AQE off) and the generation write,
+      // which runs the resolution. A second resolution (applyTick
+      // caching its own changes/removed) or a second stats pass costs
+      // at least one job more
+      assert(jobs <= 3,
+        s"cdc merge tick should schedule at most 3 jobs (keys stats + broadcast + write), saw $jobs")
+    }
+    b.unpersist()
+    assert(ratingRows(dir).collect { case (u, i, r, _, _) if u <= 3L => (u, i, r) } ===
+      Set((0L, 1L, 3.0), (1L, 2L, 3.0), (1L, 100L, 2.0), (2L, 100L, 4.0),
+        (3L, 4L, 3.0), (3L, 200L, 5.0)))
+  }
+
+  test("cdc summary path ≡ applyTick's own derivation: rows, manifest buckets and TickStats per tick") {
+    import spark.implicits._
+    val n = 16
+    val root = java.nio.file.Files.createTempDirectory("bucket_store_cdc_equiv").toString
+    val own = root + "/own"; val summary = root + "/summary"
+    val seedRows = (0L until 48L).flatMap(u => Seq((u, 1L, 3.0), (u, 2L, 4.0)))
+    Seq(own, summary).foreach(seedRatings(_, n, seedRows))
+    def bucketed(df: DataFrame) =
+      df.withColumn(BucketStore.BucketCol, BucketStore.longBucket(col("user_id"), n))
+    // the tick body without a key summary: applyTick derives touched
+    // buckets, key count and drop set from changes ∪ removed itself
+    def ownTick(b: DataFrame, batchId: Long): BucketStore.TickStats = {
+      val keys = b.select(col("user_id"), col("item_id")).distinct()
+      val touched = BucketStore.touchedBuckets(bucketed(keys).select(BucketStore.BucketCol))
+      val base = BucketStore.readBuckets(spark, own, touched, n)
+        .join(keys, Seq("user_id", "item_id"), "left_semi")
+      val (changes, removed) = Mutations.applyBatchDelta(base, b)
+      BucketStore.applyTick(spark, own, bucketed(changes), Seq("user_id", "item_id"),
+        batchId, n, removed = Some(bucketed(removed)))
+    }
+    def day(d: Int) = ts(f"2024-02-$d%02d 00:00:00")
+    def up(u: Long, i: Long, r: Double, d: Int) = RatingUpdate(u, i, r, false, day(d), "upsert")
+    def del(u: Long, i: Long, d: Int) = RatingUpdate(u, i, 0.0, false, day(d), "delete")
+    val cases = Seq(
+      // users 5, 21, 37 are all of bucket 5: the tick empties it
+      "empties a bucket" -> Seq(5L, 21L, 37L).flatMap(u => Seq(del(u, 1L, 1), del(u, 2L, 1))),
+      // same-ts upsert/delete pairs on one key: the upsert wins
+      "same-ts conflict" -> Seq(up(6L, 1L, 1.3, 2), del(6L, 1L, 2),
+        del(7L, 2L, 2), up(7L, 2L, 2.0, 2)),
+      "delete of an absent key" -> Seq(del(8L, 99L, 3)),
+      "brand-new keys" -> Seq(up(100L, 1L, 3.3, 4), up(9L, 50L, 2.5, 4))) ++
+      // one fresh bucket per tick stacks live generations until the
+      // live-generation bound makes a tick compact
+      (10L to 15L).map(u => s"filler user $u" -> Seq(up(u, 1L, 1.0, 5)))
+    var compactions = 0
+    cases.zipWithIndex.foreach { case ((name, rows), i) =>
+      val b = rows.toDF().cache()
+      val ownSt = ownTick(b, i.toLong)
+      val sumSt = EventStream.cdcMergeTick(spark, summary, b, i.toLong, n)
+      b.unpersist()
+      assert(sumSt === Some(ownSt), s"$name: TickStats differ")
+      assert(ratingRows(summary) === ratingRows(own), s"$name: store rows differ")
+      assert(manifestBuckets(summary) === manifestBuckets(own), s"$name: manifest buckets differ")
+      if (ownSt.compacted) compactions += 1
+    }
+    assert(!manifestBuckets(summary).contains(5), "the emptied bucket stays in the manifest")
+    assert(ratingRows(summary).exists(r => r._1 == 6L && r._2 == 1L && r._3 == 1.5))
+    assert(compactions === 1, "the sequence should end on exactly one compacting tick")
+    // an empty batch applies nothing: no stats, marker untouched
+    val marker0 = BucketStore.appliedBatchId(summary)
+    assert(EventStream.cdcMergeTick(spark, summary,
+      Seq.empty[RatingUpdate].toDF(), marker0 + 1, n).isEmpty)
+    assert(BucketStore.appliedBatchId(summary) === marker0)
   }
 }

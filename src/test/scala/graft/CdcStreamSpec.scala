@@ -59,6 +59,48 @@ class CdcStreamSpec extends AnyFunSuite {
     untouched.foreach { case (p, h) => assert(afterB2.get(p).contains(h)) }
   }
 
+  test("a failed CDC tick leaves nothing cached; an empty micro-batch leaves the marker unchanged") {
+    implicit val sqlCtx = spark.sqlContext
+    import spark.implicits._
+    val root = java.nio.file.Files.createTempDirectory("cdc_edges").toString
+    val dir = root + "/ratings"
+    graft.streaming.BucketStore.seed(
+      Seq((1L, 10L, 4.0, false, ts("2024-01-01 00:00:00")))
+        .toDF("user_id", "item_id", "rating", "is_implicit", "ts"),
+      pmod(col("user_id"), lit(64)).cast("int"), dir, n = 64)
+    def cached(): Set[Int] = spark.sparkContext.getPersistentRDDs.keySet.toSet
+
+    // a maintainer given the wrong bucket count fails its first tick at
+    // the pruned read, after the batch and its keys were cached
+    val cached0 = cached()
+    val bad = MemoryStream[RatingUpdate]
+    val qBad = EventStream.startCdcApply(bad.toDF(), dir, root + "/ckpt_bad", nBuckets = 32)
+    bad.addData(RatingUpdate(1L, 10L, 1.0, false, ts("2024-01-02 00:00:00"), "upsert"))
+    val e = intercept[org.apache.spark.sql.streaming.StreamingQueryException] {
+      qBad.processAllAvailable()
+    }
+    assert(e.getCause.getMessage.contains("bucket-count mismatch"))
+    assert(cached() === cached0, "the failed tick left cached blocks behind")
+    assert(graft.streaming.BucketStore.appliedBatchId(dir) === -1L)
+
+    val input = MemoryStream[RatingUpdate]
+    val q = EventStream.startCdcApply(input.toDF(), dir, root + "/ckpt")
+    input.addData(RatingUpdate(2L, 10L, 3.0, false, ts("2024-01-02 00:00:00"), "upsert"))
+    q.processAllAvailable()
+    assert(graft.streaming.BucketStore.appliedBatchId(dir) === 0L)
+    val markerPath = java.nio.file.Paths.get(dir, "_graft_applied_batch")
+    val marker0 = java.nio.file.Files.readAllBytes(markerPath).toSeq
+    // batch 1 carries no rows: nothing to apply, and the marker — fence
+    // token included — must not move
+    input.addData()
+    q.processAllAvailable()
+    q.stop()
+    assert(q.lastProgress.batchId === 1L && q.lastProgress.numInputRows === 0L)
+    assert(java.nio.file.Files.readAllBytes(markerPath).toSeq === marker0)
+    assert(graft.streaming.BucketStore.readAll(spark, dir).count() === 2L)
+    assert(cached() === cached0)
+  }
+
   test("retrain loop refreshes the per-user recs once enough mutations land") {
     implicit val sqlCtx = spark.sqlContext
     import spark.implicits._

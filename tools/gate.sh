@@ -1,8 +1,9 @@
 #!/usr/bin/env bash
 # The pre-snapshot full gate (SURVEY §5): every registered query dumped
-# and DuckDB-compared, full ScalaTest suite, bench smoke. Run this as
-# the LAST act of every round — r7 shipped six crashed queries because
-# a testdata regeneration landed after the last full rehearsal.
+# and DuckDB-compared, the benchmark harness's own tests, full ScalaTest
+# suite, bench smoke. Run this as the LAST act of every round — r7
+# shipped six crashed queries because a testdata regeneration landed
+# after the last full rehearsal.
 #
 # Usage: tools/gate.sh [sfDir]   (default /root/testdata/sf0.001)
 set -uo pipefail
@@ -34,6 +35,11 @@ echo "== gate: scale-artifact drift check"
 python3 tools/check_scale_artifact.py
 ARC=$?
 echo "== gate: scale-artifact exit $ARC"
+echo "== gate: benchmark harness tests"
+python3 -m unittest discover -s perfbench/tests > "$OUT/perfbench_tests.log" 2>&1
+PRC=$?
+tail -n 3 "$OUT/perfbench_tests.log"
+echo "== gate: benchmark harness tests exit $PRC"
 echo "== gate: full test suite"
 sbt -batch test > "$OUT/test.log" 2>&1
 TRC=$?
@@ -48,6 +54,7 @@ echo "== gate: bench exit $BRC"
 # boolean accumulation, NOT a sum: exit codes can sum to a multiple of
 # 256 (e.g. 130+126) and wrap to 0 through exit's 8-bit truncation
 RC=0
-[ "$VRC" -eq 0 ] && [ "$ORC" -eq 0 ] && [ "$ARC" -eq 0 ] && [ "$TRC" -eq 0 ] && [ "$BRC" -eq 0 ] || RC=1
+[ "$VRC" -eq 0 ] && [ "$ORC" -eq 0 ] && [ "$ARC" -eq 0 ] && [ "$PRC" -eq 0 ] && \
+  [ "$TRC" -eq 0 ] && [ "$BRC" -eq 0 ] || RC=1
 echo "== gate: OVERALL $([ "$RC" -eq 0 ] && echo PASS || echo FAIL) (logs in $OUT)"
 exit $RC
