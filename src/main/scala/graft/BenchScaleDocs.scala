@@ -301,8 +301,8 @@ object BenchScaleDocs {
     // follow-through). Assignment is the flat exact argmin at EVERY
     // nlist — both sub-linear alternatives were built and measured
     // off (exact ball-pruned: slower at dim 64; top-k heuristic:
-    // recall 1.0000 → 0.9594) — see TwoLevelMinNlist's receipt and
-    // IvfBuildPhaseProbe. The derived build's TRAINER crosses
+    // recall 1.0000 → 0.9594) — see Similarity.assignClusters' receipt.
+    // The derived build's TRAINER crosses
     // ScalableTrainMinNlist: deterministic Lloyd's instead of the
     // MLlib fit whose driver-side k-quadratic init dominated the
     // build (probe: ~36 s of the 49 s wall).

@@ -64,15 +64,13 @@ object SparkEntry {
     // base groups materialized, one tick applied, store read back
     "dedup_exact_store"   -> ((s, d) => Dedup.exactIncrementalStore(s, d)),
     "dedup_minhash"       -> ((s, d) => Dedup.minhashLsh(s, d)),
-    // the ingest-tick regime: delta signatures band-joined against the
-    // corpus band index, base×base never regenerated (rows-only; the
-    // base∪tick ≡ batch identity is spec-gated)
+    // the ingest-tick regime, one BucketStore tick: base slice seeded
+    // into the row + band stores, delta applied as batch 1, pairs read
+    // from the tick's pair log (rows-only; base∪tick ≡ batch is
+    // spec-gated). The _inc and _store keys are the same rung — both
+    // stay registered
     "dedup_minhash_inc"   -> ((s, d) => Dedup.minhashLshIncremental(s, d)),
-    // the same tick through a REAL materialized signature/band store:
-    // base index written to parquet, delta probed against the read-back
-    // store, delta rows appended after the tick (rows-only; the
-    // base∪tick ≡ batch identity through the store is spec-gated)
-    "dedup_minhash_store" -> ((s, d) => Dedup.minhashLshIncrementalStore(s, d)),
+    "dedup_minhash_store" -> ((s, d) => Dedup.minhashLshIncremental(s, d)),
     // CDC rung: delete/re-ingest through the banded BucketStores —
     // before-images come from the row store itself (keyed by id),
     // tombstoned ids excluded from candidate+verify, band store
@@ -80,10 +78,9 @@ object SparkEntry {
     // fresh seed of the mutated corpus is spec-gated
     "dedup_minhash_cdc"   -> ((s, d) => Dedup.minhashCdcStore(s, d)),
     "dedup_simhash"       -> ((s, d) => Dedup.simhash(s, d)),
+    // the same one-tick rung for SimHash, under both keys
     "dedup_simhash_inc"   -> ((s, d) => Dedup.simhashIncremental(s, d)),
-    // the simhash tick through a REAL parquet fingerprint/band store
-    // (rows-only; base∪tick ≡ batch through the store is spec-gated)
-    "dedup_simhash_store" -> ((s, d) => Dedup.simhashIncrementalStore(s, d)),
+    "dedup_simhash_store" -> ((s, d) => Dedup.simhashIncremental(s, d)),
     "dedup_ngram_jaccard" -> ((s, d) => Dedup.ngramJaccard(s, d)),
     "dedup_substring"     -> ((s, d) => Dedup.substringDedup(s, d)),
     "dedup_substring_inc" -> ((s, d) => Dedup.substringDedupIncremental(s, d)),
@@ -100,10 +97,9 @@ object SparkEntry {
     // planted near-dups (rows-only; recall vs all-pairs is spec-gated)
     "dedup_embed_lsh"     -> ((s, d) => Dedup.embedLshPlanted(s, d)),
     "dedup_embed_lsh_wide" -> ((s, d) => Dedup.embedLshWidePlanted(s, d)),
-    // its ingest-tick regime: delta signatures vs the corpus band index
+    // its ingest-tick regime: the same one-tick rung, under both keys
     "dedup_embed_lsh_inc" -> ((s, d) => Dedup.embedLshIncremental(s, d)),
-    // the embed-LSH tick through a REAL parquet signature/band store
-    "dedup_embed_lsh_store" -> ((s, d) => Dedup.embedLshIncrementalStore(s, d)),
+    "dedup_embed_lsh_store" -> ((s, d) => Dedup.embedLshIncremental(s, d)),
     // pair graph → connected components → survivor manifest, over the
     // exact ngram-jaccard edges; value-gated by a DuckDB WITH RECURSIVE
     // transitive-closure oracle (the one operator deciding deletions)

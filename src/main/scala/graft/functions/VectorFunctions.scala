@@ -1044,241 +1044,6 @@ object VectorFunctions {
       copy(child = newChild)
   }
 
-  /** nearest_cluster_2l(v) → the single nearest centroid id by
-    * squared-L2 through a TWO-LEVEL scan with triangle-inequality
-    * pruning — the EXACT sub-linear coarse assignment (the r16
-    * verdict's #1: the flat [[NearestClusters]] argmin is
-    * O(nlist·dim) per row, and with nlist scale-deriving to 65536 it
-    * grows with the corpus until the clamp). The nlist centroids are
-    * pre-clustered driver-side into ~√nlist ball groups
-    * ([[graft.operators.Similarity.groupCentroids]] — tiny, the BPE
-    * merge-table precedent), each carrying its radius `gR(g)` = max
-    * ‖member − group centroid‖. Per row: distance to every group
-    * centroid (G·dim MACs), scan groups in ascending (dist, group)
-    * order doing the EXACT (dist, id) argmin over each group's
-    * members, and prune by the ball bound — every member m of group
-    * g satisfies ‖v−m‖ ≥ ‖v−c_g‖ − r_g, so a group whose bound
-    * exceeds the best-so-far cannot improve it, and once
-    * ‖v−c_g‖ − rMax passes the bound NO later group can (groups are
-    * distance-sorted). The result is therefore ALWAYS the global
-    * argmin: per-centroid distances use the SAME accumulation order
-    * as [[NearestClusters]] (norm2 + ‖c‖² − 2·⟨v,c⟩, ascending j),
-    * and the prune is made strictly conservative with a 1e-9
-    * relative pad (×(1−1e-9) on the squared bound — ~1e5 times the
-    * fp accumulation error of a dim-4096 dot product), so a pruned
-    * centroid's computed distance strictly exceeds the running best
-    * and could neither win nor tie. Bit-identical to the flat argmin
-    * at any nlist, on any geometry — an earlier top-k-groups
-    * heuristic traded exactness for speed and measurably regressed
-    * IVF recall at 2M (1.0000 → 0.9594: KMeans cells tile a
-    * continuum, so boundary vectors are common even on clustered
-    * corpora). Cost per row adapts to geometry:
-    * G·dim + (scanned members)·dim — clustered corpora scan 1–3
-    * groups (~3·√nlist·dim, 15× fewer MACs at nlist 2048, 85× at
-    * the clamp); the degenerate worst case scans everything and
-    * matches flat + G·dim overhead. Callers keep the flat path below
-    * the [[graft.operators.Similarity.TwoLevelMinNlist]] threshold
-    * where the group pass is pure overhead.
-    *
-    * `gOff`/`gIdx` are the CSR layout of group membership: group g's
-    * members are `gIdx(gOff(g) until gOff(g+1))`, indices into the
-    * id-sorted centroid arrays; every centroid appears exactly once
-    * (with pruning correct, exhaustive membership is what makes the
-    * scan exact).
-    */
-  case class NearestClusterTwoLevel(child: Expression,
-      cents: Array[Double], c2: Array[Double], ids: Array[Int], dim: Int,
-      gCents: Array[Double], gC2: Array[Double], gR: Array[Double],
-      gOff: Array[Int], gIdx: Array[Int])
-      extends UnaryExpression {
-    require(ids.length == c2.length && cents.length == ids.length * dim,
-      s"centroid shapes disagree: ${cents.length} flat, ${c2.length} c2, ${ids.length} ids, dim $dim")
-    require(gOff.length >= 2 && gOff.head == 0 && gOff.last == ids.length,
-      s"group offsets must span all ${ids.length} centroids: ${gOff.headOption}..${gOff.lastOption}")
-    require(gIdx.length == ids.length && gIdx.toSet == ids.indices.toSet,
-      "group membership must be a permutation of the centroid indices")
-    require(gC2.length == gOff.length - 1 && gCents.length == gC2.length * dim,
-      s"group centroid shapes disagree: ${gCents.length} flat, ${gC2.length} g2, ${gOff.length - 1} groups")
-    require(gR.length == gC2.length && gR.forall(_ >= 0.0),
-      s"one non-negative ball radius per group: ${gR.length} vs ${gC2.length}")
-    private val nGroups = gOff.length - 1
-    private val rMax = gR.max
-    // strictly conservative prune: shrink the squared lower bound by
-    // 1e-9 relative so fp accumulation error in the member-distance
-    // MACs (~dim·2⁻⁵² relative — 1e-12 even at dim 4096) can never
-    // let the bound prune a centroid whose computed distance would
-    // have won or tied the running best
-    private val pad = 1.0 - 1e-9
-
-    override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-      case ArrayType(DoubleType, _) => TypeCheckResult.TypeCheckSuccess
-      case other => TypeCheckResult.TypeCheckFailure(
-        s"$prettyName requires array<double> input, got ${other.simpleString}")
-    }
-    override def dataType: DataType = IntegerType
-    override def prettyName: String = "graft_nearest_cluster_2l"
-
-    override def nullSafeEval(input: Any): Any = {
-      val v = input.asInstanceOf[ArrayData]
-      val n = math.min(v.numElements(), dim)
-      var norm2 = 0.0
-      var i = 0
-      while (i < n) { val x = v.getDouble(i); norm2 += x * x; i += 1 }
-      // level 1: true distance to every group centroid
-      val gDq = new Array[Double](nGroups)
-      var g = 0
-      while (g < nGroups) {
-        var dot = 0.0
-        var j = 0
-        val base = g * dim
-        while (j < n) { dot += v.getDouble(j) * gCents(base + j); j += 1 }
-        gDq(g) = math.sqrt(math.max(0.0, norm2 + gC2(g) - 2.0 * dot))
-        g += 1
-      }
-      // ascending (dist, group) scan order — insertion sort over the
-      // tiny group set (≤256 at the nlist clamp); strict > keeps the
-      // identity init's lower-group-first tie order
-      val ord = new Array[Int](nGroups)
-      var k = 0
-      while (k < nGroups) { ord(k) = k; k += 1 }
-      var s = 1
-      while (s < nGroups) {
-        val gi = ord(s)
-        val dq = gDq(gi)
-        var p = s - 1
-        while (p >= 0 && gDq(ord(p)) > dq) { ord(p + 1) = ord(p); p -= 1 }
-        ord(p + 1) = gi
-        s += 1
-      }
-      // level 2: exact (dist, id) argmin, ball-bound pruned — a group
-      // whose every member sits at least (dq − r_g) away cannot beat
-      // the best; once (dq − rMax)² passes it no LATER group can
-      // (ascending dq), so break
-      var bestD = Double.PositiveInfinity
-      var bestId = Int.MaxValue
-      var t = 0
-      var done = false
-      while (t < nGroups && !done) {
-        val gi = ord(t)
-        val dq = gDq(gi)
-        val lbAll = dq - rMax
-        if (lbAll > 0.0 && lbAll * lbAll * pad > bestD) done = true
-        else {
-          val lb = dq - gR(gi)
-          if (!(lb > 0.0 && lb * lb * pad > bestD)) {
-            var m = gOff(gi)
-            val end = gOff(gi + 1)
-            while (m < end) {
-              val c = gIdx(m)
-              var dot = 0.0
-              var j = 0
-              val base = c * dim
-              while (j < n) { dot += v.getDouble(j) * cents(base + j); j += 1 }
-              val d = norm2 + c2(c) - 2.0 * dot
-              val id = ids(c)
-              if (d < bestD || (d == bestD && id < bestId)) { bestD = d; bestId = id }
-              m += 1
-            }
-          }
-        }
-        t += 1
-      }
-      bestId
-    }
-
-    override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-      nullSafeCodeGen(ctx, ev, a => {
-        val centsRef = ctx.addReferenceObj("tlCents", cents, "double[]")
-        val c2Ref = ctx.addReferenceObj("tlC2", c2, "double[]")
-        val idsRef = ctx.addReferenceObj("tlIds", ids, "int[]")
-        val gCentsRef = ctx.addReferenceObj("tlGCents", gCents, "double[]")
-        val gC2Ref = ctx.addReferenceObj("tlGC2", gC2, "double[]")
-        val gOffRef = ctx.addReferenceObj("tlGOff", gOff, "int[]")
-        val gIdxRef = ctx.addReferenceObj("tlGIdx", gIdx, "int[]")
-        val n = ctx.freshName("n")
-        val gRRef = ctx.addReferenceObj("tlGR", gR, "double[]")
-        val norm2 = ctx.freshName("norm2")
-        val x = ctx.freshName("x")
-        val gDq = ctx.freshName("gDq")
-        val ord = ctx.freshName("ord")
-        val i = ctx.freshName("i")
-        val g = ctx.freshName("g")
-        val j = ctx.freshName("j")
-        val k = ctx.freshName("k")
-        val srt = ctx.freshName("srt")
-        val cur = ctx.freshName("cur")
-        val dq = ctx.freshName("dq")
-        val base = ctx.freshName("base")
-        val dot = ctx.freshName("dot")
-        val d = ctx.freshName("d")
-        val p = ctx.freshName("p")
-        val bestD = ctx.freshName("bestD")
-        val bestId = ctx.freshName("bestId")
-        val t = ctx.freshName("t")
-        val gi = ctx.freshName("gi")
-        val lb = ctx.freshName("lb")
-        val lbAll = ctx.freshName("lbAll")
-        val m = ctx.freshName("m")
-        val end = ctx.freshName("end")
-        val c = ctx.freshName("c")
-        val id = ctx.freshName("id")
-        s"""
-           |int $n = java.lang.Math.min($a.numElements(), $dim);
-           |double $norm2 = 0.0;
-           |for (int $i = 0; $i < $n; $i++) {
-           |  double $x = $a.getDouble($i); $norm2 += $x * $x;
-           |}
-           |double[] $gDq = new double[$nGroups];
-           |for (int $g = 0; $g < $nGroups; $g++) {
-           |  double $dot = 0.0;
-           |  int $base = $g * $dim;
-           |  for (int $j = 0; $j < $n; $j++) {
-           |    $dot += $a.getDouble($j) * $gCentsRef[$base + $j];
-           |  }
-           |  $gDq[$g] = java.lang.Math.sqrt(
-           |    java.lang.Math.max(0.0, $norm2 + $gC2Ref[$g] - 2.0 * $dot));
-           |}
-           |int[] $ord = new int[$nGroups];
-           |for (int $k = 0; $k < $nGroups; $k++) { $ord[$k] = $k; }
-           |for (int $srt = 1; $srt < $nGroups; $srt++) {
-           |  int $cur = $ord[$srt];
-           |  double $dq = $gDq[$cur];
-           |  int $p = $srt - 1;
-           |  while ($p >= 0 && $gDq[$ord[$p]] > $dq) { $ord[$p + 1] = $ord[$p]; $p--; }
-           |  $ord[$p + 1] = $cur;
-           |}
-           |double $bestD = Double.POSITIVE_INFINITY;
-           |int $bestId = Integer.MAX_VALUE;
-           |for (int $t = 0; $t < $nGroups; $t++) {
-           |  int $gi = $ord[$t];
-           |  double $dq = $gDq[$gi];
-           |  double $lbAll = $dq - $rMax;
-           |  if ($lbAll > 0.0 && $lbAll * $lbAll * $pad > $bestD) break;
-           |  double $lb = $dq - $gRRef[$gi];
-           |  if ($lb > 0.0 && $lb * $lb * $pad > $bestD) continue;
-           |  int $end = $gOffRef[$gi + 1];
-           |  for (int $m = $gOffRef[$gi]; $m < $end; $m++) {
-           |    int $c = $gIdxRef[$m];
-           |    double $dot = 0.0;
-           |    int $base = $c * $dim;
-           |    for (int $j = 0; $j < $n; $j++) {
-           |      $dot += $a.getDouble($j) * $centsRef[$base + $j];
-           |    }
-           |    double $d = $norm2 + $c2Ref[$c] - 2.0 * $dot;
-           |    int $id = $idsRef[$c];
-           |    if ($d < $bestD || ($d == $bestD && $id < $bestId)) {
-           |      $bestD = $d; $bestId = $id;
-           |    }
-           |  }
-           |}
-           |${ev.value} = $bestId;
-         """.stripMargin
-      })
-
-    override protected def withNewChildInternal(newChild: Expression): Expression =
-      copy(child = newChild)
-  }
-
   /** rolling_fp(text) → the Rabin–Karp-style rolling polynomial
     * document fingerprint over token hashes, one pass: split on ' '
     * (the same `UTF8String.split` Spark's split() lowers to, limit

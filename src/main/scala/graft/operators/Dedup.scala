@@ -1,6 +1,7 @@
 package graft.operators
 
 import graft.Tables
+import graft.sources.Sinks.freshStoreDir
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -317,113 +318,51 @@ object Dedup {
       .select(col("doc_a"), col("doc_b"), col("est_jaccard"), col("jaccard"))
   }
 
-  /** Incremental MinHash+LSH — the ingest-tick regime of
-    * [[minhashLsh]]: at 100 TB near-dup detection does not re-run LSH
-    * over the landed corpus per ingest batch; the tick computes
-    * signatures for the DELTA docs only and band-joins them against
-    * the corpus band index (here built in-query over the dup-planted
-    * corpus for self-containment, the same regime split as
-    * [[exactIncremental]]; in deployment `sets`/`bands` are the
-    * materialized signature store and band index, and the delta rows
-    * are appended to both after the tick). Base×base pairs are never
-    * regenerated — candidate work is delta-bands × colliding buckets.
+  /** The ingest-tick regime of [[minhashLsh]] (registered as both
+    * `dedup_minhash_inc` and `dedup_minhash_store`): near-dup detection
+    * does not re-run LSH over the landed corpus per ingest batch; the
+    * tick computes signatures for the DELTA docs only and probes the
+    * stored band index with them, so base×base pairs are never
+    * regenerated. One [[bandedLadder]] tick over the dup-planted
+    * corpus — the planted copies guarantee cross-tick pairs at every
+    * SF (each copy pairs its base original at jaccard 1.0).
     *
-    * Output: verified near-dup pairs touching ≥1 delta doc — the tick
-    * payload appended to the pair set. The planted copies guarantee
-    * cross-tick pairs at every SF (each copy pairs its base original
-    * at jaccard 1.0). DedupSimilaritySpec pins the identity
-    * base-pairs ∪ tick ≡ batch over the planted corpus, and that the
-    * tick emits no base-only pair.
+    * Output: verified near-dup pairs touching ≥1 delta doc.
+    * DedupSimilaritySpec pins base-pairs ∪ tick ≡ batch over the
+    * planted corpus, that the tick emits no base-only pair and no
+    * duplicate row, and that the post-tick row store holds the full
+    * corpus.
     */
-  def minhashLshIncremental(spark: SparkSession, sfDir: String, threshold: Double = 0.5,
-                            baseFrac: Double = 0.8, bucketCap: Int = 10000): DataFrame = {
-    graft.functions.VectorFunctions.register(spark)
-    val cut = Tables.documents(spark, sfDir)
-      .agg(floor(count(lit(1)) * baseFrac).cast("long").as("cut"))
-    val sets = minhashSets(spark, dupPlantedDocs(spark, sfDir)).cache()
-    val bandsC = minhashBands(sets).crossJoin(broadcast(cut))
-    // hot buckets frozen from the BASE index — deployment semantics
-    // (hotness is decided when the store is built, a tick cannot
-    // retroactively un-generate base×base candidates; see
-    // [[hotBucketList]]) and the regime where the spec's base run and
-    // this tick agree on dropped buckets
-    val hot = hotBucketList(bandsC.filter(col("doc_id") < col("cut")), bucketCap)
-    val pruned = bandsC.join(broadcast(hot), Seq("band", "key"), "left_anti").cache()
-    val bands = pruned.drop("cut")
-    val deltaBands = pruned.filter(col("doc_id") >= col("cut")).drop("cut")
-    // delta side drives: every candidate has a delta doc on the a-side;
-    // delta×delta pairs arrive from both directions → the canonical
-    // (min, max) projection + distinct collapses them
-    val cand = deltaBands.as("a").join(bands.as("b"),
-        col("a.band") === col("b.band") && col("a.key") === col("b.key") &&
-        col("a.doc_id") =!= col("b.doc_id"))
-      .select(least(col("a.doc_id"), col("b.doc_id")).as("doc_a"),
-        greatest(col("a.doc_id"), col("b.doc_id")).as("doc_b"))
-      .distinct()
-    verifyMinhashPairs(cand, sets, threshold)
-  }
+  def minhashLshIncremental(spark: SparkSession, sfDir: String,
+      artifactDir: String = "target/graft-artifacts"): DataFrame =
+    bandedLadder(spark, "minhash_ladder", sfDir, artifactDir,
+      minhashDetector(spark, 0.5), dupPlantedDocs(spark, sfDir),
+      Tables.documents(spark, sfDir).count())
 
-  /** [[minhashLshIncremental]] exercised through a REAL materialized
-    * signature store (registered as `dedup_minhash_store`) — the
-    * MinHash twin of [[exactIncrementalStore]]: the base slice's
-    * signatures AND band index are WRITTEN to parquet stores, the tick
-    * reads them back, probes the delta's bands against the stored
-    * index (hot list frozen from the STORED base index — the
-    * deployment semantics [[hotBucketList]] documents), verifies
-    * candidates with the exact Jaccard over stored + delta shingle
-    * sets, and finally APPENDS the delta's rows to both stores so the
-    * index is ready for the next tick. Base×base pairs are never
-    * regenerated; store reads are the only base-side cost.
-    *
-    * Store paths live under the same shared-FS artifacts contract as
-    * [[exactIncrementalStore]]; the seed write is `overwrite`, so a
-    * re-run rebuilds rather than double-appends — retention stays one
-    * store pair per corpus. The tick result is materialized BEFORE
-    * the append (the verify plan reads the store lazily; appending
-    * first would double-count delta rows). DedupSimilaritySpec pins
-    * base-pairs ∪ tick ≡ batch through the store round-trip and that
-    * the post-tick store holds the full corpus.
+  /** The banded near-dup ladder rung, shared by the MinHash, SimHash
+    * and embed-LSH families: seed the row + band BucketStores
+    * ([[seedNearDupStores]]) from the corpus slice below the cut (the
+    * first 80% of the un-planted corpus's ids), apply the slice at or
+    * above it as batch 1 through the same [[nearDupStoreTick]] the
+    * CDC rung and every maintainer run, and return the tick's pair
+    * log ([[readPairLog]]). The store root is unique per run
+    * ([[graft.sources.Sinks.freshStoreDir]]), so concurrent runs on
+    * one corpus never share a seed; values are path-independent.
     */
-  def minhashLshIncrementalStore(spark: SparkSession, sfDir: String,
-      threshold: Double = 0.5, baseFrac: Double = 0.8, bucketCap: Int = 10000,
-      artifactDir: String = "target/graft-artifacts"): DataFrame = {
-    graft.functions.VectorFunctions.register(spark)
-    val digest = java.security.MessageDigest.getInstance("MD5")
-      .digest(sfDir.getBytes("UTF-8")).map("%02x".format(_)).mkString.take(8)
-    val sigDir = s"$artifactDir/minhash_sig_store_$digest"
-    val bandDir = s"$artifactDir/minhash_band_store_$digest"
-    val cut = Tables.documents(spark, sfDir)
-      .agg(floor(count(lit(1)) * baseFrac).cast("long").as("cut"))
-    val all = minhashSets(spark, dupPlantedDocs(spark, sfDir))
-      .crossJoin(broadcast(cut)).cache()
-    graft.PhaseTimer.timed("dedup_minhash_store", "seed") {
-      all.filter(col("doc_id") < col("cut")).drop("cut")
-        .write.mode("overwrite").parquet(sigDir)
-      minhashBands(all.filter(col("doc_id") < col("cut")).drop("cut"))
-        .write.mode("overwrite").parquet(bandDir)
-    }
-    val storeSets = spark.read.parquet(sigDir)
-    val storeBands = spark.read.parquet(bandDir)
-    val deltaSets = all.filter(col("doc_id") >= col("cut")).drop("cut").cache()
-    val deltaBands = minhashBands(deltaSets)
-    val hot = hotBucketList(storeBands, bucketCap)
-    val dPruned = deltaBands.join(broadcast(hot), Seq("band", "key"), "left_anti")
-    val probe = storeBands.unionByName(deltaBands)
-      .join(broadcast(hot), Seq("band", "key"), "left_anti")
-    val cand = dPruned.as("a").join(probe.as("b"),
-        col("a.band") === col("b.band") && col("a.key") === col("b.key") &&
-        col("a.doc_id") =!= col("b.doc_id"))
-      .select(least(col("a.doc_id"), col("b.doc_id")).as("doc_a"),
-        greatest(col("a.doc_id"), col("b.doc_id")).as("doc_b"))
-      .distinct()
-    val out = verifyMinhashPairs(cand,
-      storeSets.unionByName(deltaSets), threshold).cache()
-    graft.PhaseTimer.timed("dedup_minhash_store", "tick") {
-      out.count()
-      deltaSets.write.mode("append").parquet(sigDir)
-      deltaBands.write.mode("append").parquet(bandDir)
-    }
-    out
+  private def bandedLadder(spark: SparkSession, tag: String, sfDir: String,
+      artifactDir: String, det: NearDupDetector, corpus: DataFrame,
+      nUnplanted: Long): DataFrame = {
+    val cut = math.floor(nUnplanted * 0.8).toLong
+    val root = freshStoreDir(tag, sfDir, artifactDir)
+    val input = corpus.cache()
+    try {
+      seedNearDupStores(spark, input.filter(col(det.idCol) < cut), det,
+        s"$root/rows", s"$root/band")
+      nearDupStoreTick(spark, det, s"$root/rows", s"$root/band", s"$root/pairs",
+        input.filter(col(det.idCol) >= cut), batchId = 1L, nBuckets = -1,
+        bucketCap = 10000)
+    } finally input.unpersist()
+    readPairLog(spark, s"$root/pairs")
   }
 
   /** Registered `dedup_minhash_cdc` — the CDC rung of the banded-store
@@ -445,13 +384,7 @@ object Dedup {
       artifactDir: String = "target/graft-artifacts"): DataFrame = {
     graft.functions.VectorFunctions.register(spark)
     val det = minhashDetector(spark, 0.5)
-    val digest = java.security.MessageDigest.getInstance("MD5")
-      .digest(sfDir.getBytes("UTF-8")).map("%02x".format(_)).mkString.take(8)
-    // per-run unique store path — the lineDedupStore convention (a
-    // shared path would let a concurrent bench/verify pair race the
-    // seed overwrite; values are path-independent)
-    val runId = java.util.UUID.randomUUID().toString.take(8)
-    val root = s"$artifactDir/minhash_cdc_${digest}_$runId"
+    val root = freshStoreDir("minhash_cdc", sfDir, artifactDir)
     val docs = dupPlantedDocs(spark, sfDir).select(col("doc_id"), col("text")).cache()
     graft.PhaseTimer.timed("dedup_minhash_cdc", "seed") {
       // derived layout (r15): the registered demo seeds at the DEFAULT
@@ -574,11 +507,11 @@ object Dedup {
       sigDir: String, bandDir: String, nBuckets: Int): Unit =
     seedNearDupStores(spark, docs, minhashDetector(spark, 0.5), sigDir, bandDir, nBuckets)
 
-  /** One continuous-maintenance near-dup tick against BucketStore'd
-    * row + band stores — the one-shot store queries' semantics with
-    * atomic generation publishing and a replay guard instead of bare
-    * appends, so a crash can never leave the two stores inconsistent
-    * as a pair.
+  /** One near-dup tick against BucketStore'd row + band stores — the
+    * tick every banded rung runs (the registered ladder, the CDC rung,
+    * the continuous maintainers): atomic generation publishing and a
+    * replay guard, so a crash can never leave the two stores
+    * inconsistent as a pair.
     * Detector-generic ([[NearDupDetector]]): the same machinery runs
     * MinHash, SimHash, and embedding-LSH maintenance —
     *
@@ -663,12 +596,21 @@ object Dedup {
     val nBuckets = if (nBuckets0 > 0) nBuckets0
       else BucketStore.seededBuckets(rowsDir)
     val id = det.idCol
-    val deltaRows = det.rows(batchRows).cache()
-    val deltaBands = det.bands(deltaRows).cache()
+    // every frame the tick caches, released only after the scope below
+    // has joined every overlapped leg (which read them) — on the
+    // failure path too
+    val caches = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
+    def cached(df: DataFrame): DataFrame = caches.synchronized { caches += df.cache(); df }
+    // the scope joins every leg it started before the tick returns or
+    // throws: no store writer outlives the tick, and a leg's failure
+    // rides along as suppressed on the inline failure that ended it
+    try Overlap.scoped { legs =>
+    val deltaRows = cached(det.rows(batchRows))
+    val deltaBands = cached(det.bands(deltaRows))
     // tombstoned ids' stored band keys, materialized BEFORE any store
     // mutates (the lazy-read gc hazard): pruned row-store read by id,
     // band keys re-derived from the stored signatures
-    val gone = tombstones.map(_.cache())
+    val gone = tombstones.map(cached)
     // r18, guide §2.6: the tombstoned ids' stored band keys are consumed
     // only by the band store's applyTick at the very END of the tick —
     // every candidate/verify job in between is independent of them, so
@@ -681,13 +623,13 @@ object Dedup {
     // tombstone-list-sized distinct; both reads see the same published
     // store snapshot (nothing mutates until the await).
     val goneBandKeysStarted = gone.map { g =>
-      Overlap.start(s"gone-band-keys-$batchId") {
+      legs.start(s"gone-band-keys-$batchId") {
         val gBuckets = BucketStore.touchedBuckets(g.select(
           BucketStore.longBucket(col(id), nBuckets).as(BucketStore.BucketCol)))
-        val k = det.bands(
+        val k = cached(det.bands(
             BucketStore.readBuckets(spark, rowsDir, gBuckets, nBuckets)
               .join(g, Seq(id), "left_semi"))
-          .select(col(id), col("band"), col("key")).distinct().cache()
+          .select(col(id), col("band"), col("key")).distinct())
         k.count()
         k
       }
@@ -720,7 +662,7 @@ object Dedup {
     val joined = aSide.as("a").join(bSide.as("b"),
         col("a.band") === col("b.band") && col("a.key") === col("b.key") &&
         col(s"a.$id") =!= col(s"b.$id"))
-    val cand = (if (det.minShared > 1)
+    val cand = cached(if (det.minShared > 1)
         joined
           .select(least(col(s"a.$id"), col(s"b.$id")).as(det.aCol),
             greatest(col(s"a.$id"), col(s"b.$id")).as(det.bCol),
@@ -733,7 +675,7 @@ object Dedup {
       else joined
         .select(least(col(s"a.$id"), col(s"b.$id")).as(det.aCol),
           greatest(col(s"a.$id"), col(s"b.$id")).as(det.bCol))
-        .distinct()).cache()
+        .distinct())
     val candBuckets = BucketStore.touchedBuckets(
       cand.select(explode(array(col(det.aCol), col(det.bCol))).as(id))
         .select(BucketStore.longBucket(col(id), nBuckets).as(BucketStore.BucketCol)))
@@ -762,6 +704,12 @@ object Dedup {
     // the same states as the serial code: the last-published store
     // (the replay guard's commitDir) never leads the first, an orphan
     // generation from an aborted inline tick is swept by recover().
+    // An inline apply that throws before its beforePublish (fence
+    // abort, bucket-count mismatch, failed merge job) still waits for
+    // the threaded apply at the scope's exit, so a restart's recover()
+    // never races a live writer. A replayed inline tick that skips on
+    // its marker never reaches beforePublish either; the scope joins
+    // that leg too, before the caches unpersist under it.
     // Chaos re-run: NearDupStoreSpec + ChaosSoakSpec + CdcStreamSpec
     // green over this shape (interleaved CDC, restarts, orphan debris).
     gone match {
@@ -775,7 +723,7 @@ object Dedup {
         // bands, and the maxLiveGenerations fold amortizes compaction.
         // Publish order rows→band (the maintainer's replay guard keys
         // on the band store, the LAST to move).
-        val rowsStarted = Overlap.start(s"rows-append-$batchId") {
+        val rowsStarted = legs.start(s"rows-append-$batchId") {
           BucketStore.applyAppendTick(spark, rowsDir,
             deltaRows.withColumn(BucketStore.BucketCol,
               BucketStore.longBucket(col(id), nBuckets)),
@@ -786,10 +734,6 @@ object Dedup {
             BucketStore.longBucket(col("key"), nBuckets)),
           batchId, n = nBuckets,
           beforePublish = () => { rowsStarted.await(); () })
-        // replay-skip path: a band tick that no-ops on its marker never
-        // reaches beforePublish — join the rows leg before the caches
-        // below unpersist under it (await on a done thread is free)
-        rowsStarted.await()
       case Some(g) =>
         // CDC: rows must come OUT of buckets → merge ticks with
         // tombstones (upserted ids are in BOTH removed and appended;
@@ -802,7 +746,7 @@ object Dedup {
         // the inverse order would strand tombstoned band entries
         // forever (the before-image is gone once the row store
         // advances).
-        val bandStarted = Overlap.start(s"band-tick-$batchId") {
+        val bandStarted = legs.start(s"band-tick-$batchId") {
           BucketStore.applyTick(spark, bandDir,
             deltaBands.withColumn(BucketStore.BucketCol,
               BucketStore.longBucket(col("key"), nBuckets)),
@@ -817,12 +761,9 @@ object Dedup {
           removed = Some(g.select(col(id),
             BucketStore.longBucket(col(id), nBuckets).as(BucketStore.BucketCol))),
           beforePublish = () => { bandStarted.await(); () })
-        // same replay-skip join as the append branch
-        bandStarted.await()
     }
-    (Seq(deltaRows, deltaBands, cand) ++ gone ++ goneBandKeys)
-      .foreach(_.unpersist())
     ()
+    } finally caches.synchronized(caches.foreach(_.unpersist()))
   }
 
   /** Planted-recall drift probe for the six banded near-dup store
@@ -1120,95 +1061,20 @@ object Dedup {
       "transform(sequence(0, 3), b -> named_struct('band', b, 'key', shiftright(fp, b * 16) & 65535))"
     )).as("e")).select(col("doc_id"), col("fp"), col("e.band"), col("e.key"))
 
-  /** The ingest-tick regime of [[simhash]] — same split as
-    * [[minhashLshIncremental]]: DELTA fingerprints band-joined against
-    * the corpus band index (in-query stand-in for the materialized
-    * fingerprint store), base×base pairs never regenerated. The
-    * planted copies (fingerprint-identical → Hamming 0) guarantee
-    * cross-tick pairs at every SF. DedupSimilaritySpec pins
-    * base-pairs ∪ tick ≡ batch over the planted corpus.
+  /** The ingest-tick regime of [[simhash]] (registered as both
+    * `dedup_simhash_inc` and `dedup_simhash_store`) — the
+    * [[minhashLshIncremental]] rung for SimHash: DELTA fingerprints
+    * probe the stored band index, Hamming verified against the stored
+    * fingerprints, base×base pairs never regenerated. The planted
+    * copies (fingerprint-identical → Hamming 0) guarantee cross-tick
+    * pairs at every SF. DedupSimilaritySpec pins base-pairs ∪ tick ≡
+    * batch over the planted corpus.
     */
-  def simhashIncremental(spark: SparkSession, sfDir: String, maxHamming: Int = 6,
-                         baseFrac: Double = 0.8, bucketCap: Int = 10000): DataFrame = {
-    graft.functions.VectorFunctions.register(spark)
-    val cut = Tables.documents(spark, sfDir)
-      .agg(floor(count(lit(1)) * baseFrac).cast("long").as("cut"))
-    val fp = simhashFingerprints(dupPlantedDocs(spark, sfDir)).cache()
-    val bandsC = simhashBands(fp).crossJoin(broadcast(cut))
-    // hot buckets frozen from the BASE index (see [[hotBucketList]])
-    val hot = hotBucketList(bandsC.filter(col("doc_id") < col("cut")), bucketCap)
-    val prunedC = bandsC.join(broadcast(hot), Seq("band", "key"), "left_anti").cache()
-    val pruned = prunedC.drop("cut")
-    val deltaBands = prunedC.filter(col("doc_id") >= col("cut")).drop("cut")
-    deltaBands.as("a").join(pruned.as("b"),
-        col("a.band") === col("b.band") && col("a.key") === col("b.key") &&
-        col("a.doc_id") =!= col("b.doc_id"))
-      .select(
-        least(col("a.doc_id"), col("b.doc_id")).as("doc_a"),
-        greatest(col("a.doc_id"), col("b.doc_id")).as("doc_b"),
-        bit_count(col("a.fp").bitwiseXOR(col("b.fp"))).as("hamming"))
-      .distinct()
-      .filter(col("hamming") <= maxHamming)
-  }
-
-  /** [[simhashIncremental]] exercised through a REAL materialized
-    * fingerprint store (registered as `dedup_simhash_store`) — the
-    * SimHash twin of [[minhashLshIncrementalStore]]: the base slice's
-    * fingerprints AND band index are WRITTEN to parquet stores, the
-    * tick reads them back, probes the delta's bands against the
-    * stored index (hot list frozen from the STORED base index), and
-    * finally APPENDS the delta's rows to both stores so the index is
-    * ready for the next tick. The band rows carry the fingerprint, so
-    * Hamming verification needs no second store lookup. Base×base
-    * pairs are never regenerated; store reads are the only base-side
-    * cost. Same shared-FS artifacts contract and materialize-before-
-    * append ordering as the MinHash store; the CONTINUOUS crash-safe
-    * regime for this family is
-    * [[graft.streaming.DocStream.startNearDupMaintain]]'s BucketStore
-    * protocol.
-    */
-  def simhashIncrementalStore(spark: SparkSession, sfDir: String,
-      maxHamming: Int = 6, baseFrac: Double = 0.8, bucketCap: Int = 10000,
-      artifactDir: String = "target/graft-artifacts"): DataFrame = {
-    graft.functions.VectorFunctions.register(spark)
-    val digest = java.security.MessageDigest.getInstance("MD5")
-      .digest(sfDir.getBytes("UTF-8")).map("%02x".format(_)).mkString.take(8)
-    val fpDir = s"$artifactDir/simhash_fp_store_$digest"
-    val bandDir = s"$artifactDir/simhash_band_store_$digest"
-    val cut = Tables.documents(spark, sfDir)
-      .agg(floor(count(lit(1)) * baseFrac).cast("long").as("cut"))
-    val all = simhashFingerprints(dupPlantedDocs(spark, sfDir))
-      .crossJoin(broadcast(cut)).cache()
-    graft.PhaseTimer.timed("dedup_simhash_store", "seed") {
-      all.filter(col("doc_id") < col("cut")).drop("cut")
-        .write.mode("overwrite").parquet(fpDir)
-      simhashBands(all.filter(col("doc_id") < col("cut")).drop("cut"))
-        .write.mode("overwrite").parquet(bandDir)
-    }
-    val storeBands = spark.read.parquet(bandDir)
-    val deltaFp = all.filter(col("doc_id") >= col("cut")).drop("cut").cache()
-    val deltaBands = simhashBands(deltaFp)
-    val hot = hotBucketList(storeBands, bucketCap)
-    val dPruned = deltaBands.join(broadcast(hot), Seq("band", "key"), "left_anti")
-    val probe = storeBands.unionByName(deltaBands)
-      .join(broadcast(hot), Seq("band", "key"), "left_anti")
-    val out = dPruned.as("a").join(probe.as("b"),
-        col("a.band") === col("b.band") && col("a.key") === col("b.key") &&
-        col("a.doc_id") =!= col("b.doc_id"))
-      .select(
-        least(col("a.doc_id"), col("b.doc_id")).as("doc_a"),
-        greatest(col("a.doc_id"), col("b.doc_id")).as("doc_b"),
-        bit_count(col("a.fp").bitwiseXOR(col("b.fp"))).as("hamming"))
-      .distinct()
-      .filter(col("hamming") <= maxHamming)
-      .cache()
-    graft.PhaseTimer.timed("dedup_simhash_store", "tick") {
-      out.count()
-      deltaFp.write.mode("append").parquet(fpDir)
-      deltaBands.write.mode("append").parquet(bandDir)
-    }
-    out
-  }
+  def simhashIncremental(spark: SparkSession, sfDir: String,
+      artifactDir: String = "target/graft-artifacts"): DataFrame =
+    bandedLadder(spark, "simhash_ladder", sfDir, artifactDir,
+      simhashDetector(6), dupPlantedDocs(spark, sfDir),
+      Tables.documents(spark, sfDir).count())
 
   /** Drop (band, key) buckets with more than `cap` members from a
     * banded signature table — the dfCap pattern applied to LSH
@@ -1499,95 +1365,21 @@ object Dedup {
       .filter(col("cos") >= threshold)
       .select(col("vec_a"), col("vec_b"), col("cos"))
 
-  /** The ingest-tick regime of [[embedLsh]] — same split as
-    * [[minhashLshIncremental]], over the planted embedding corpus
-    * ([[plantedCorpus]], so the tick has guaranteed true near-dups at
-    * every SF: the planted copies' ids sit above any corpus id and
-    * land in the delta, pairing their base originals at cos ≈ 0.999):
-    * DELTA vectors' signatures band-joined against the corpus band
-    * index, base×base pairs never regenerated. DedupSimilaritySpec
-    * pins base-pairs ∪ tick ≡ batch over the same planted corpus.
+  /** The ingest-tick regime of [[embedLsh]] (registered as both
+    * `dedup_embed_lsh_inc` and `dedup_embed_lsh_store`) — the
+    * [[minhashLshIncremental]] rung over the planted embedding corpus
+    * ([[plantedCorpus]], 50 copies: their ids sit above any corpus id
+    * and land in the delta, pairing their base originals at cos ≈
+    * 0.999): DELTA vectors' signatures probe the stored band index,
+    * exact cosine verified against the stored vectors, base×base
+    * pairs never regenerated. DedupSimilaritySpec pins base-pairs ∪
+    * tick ≡ batch over the same planted corpus.
     */
-  def embedLshIncremental(spark: SparkSession, sfDir: String, threshold: Double = 0.9,
-                          baseFrac: Double = 0.8, nPlant: Int = 50,
-                          bucketCap: Int = 10000): DataFrame = {
-    graft.functions.VectorFunctions.register(spark)
-    val cut = Tables.embeddings(spark, sfDir)
-      .agg(floor(count(lit(1)) * baseFrac).cast("long").as("cut"))
-    val e = hyperSets(plantedCorpus(spark, sfDir, nPlant)).cache()
-    val bandsC = hyperBands(e).crossJoin(broadcast(cut))
-    // hot buckets frozen from the BASE index (see [[hotBucketList]])
-    val hot = hotBucketList(bandsC.filter(col("vec_id") < col("cut")), bucketCap)
-    val prunedC = bandsC.join(broadcast(hot), Seq("band", "key"), "left_anti").cache()
-    val bands = prunedC.drop("cut")
-    val deltaBands = prunedC.filter(col("vec_id") >= col("cut")).drop("cut")
-    val cand = deltaBands.as("a").join(bands.as("b"),
-        col("a.band") === col("b.band") && col("a.key") === col("b.key") &&
-        col("a.vec_id") =!= col("b.vec_id"))
-      .select(least(col("a.vec_id"), col("b.vec_id")).as("vec_a"),
-        greatest(col("a.vec_id"), col("b.vec_id")).as("vec_b"))
-      .distinct()
-    verifyCosPairs(cand, e, threshold)
-  }
-
-  /** [[embedLshIncremental]] exercised through a REAL materialized
-    * signature store (registered as `dedup_embed_lsh_store`) — the
-    * embedding twin of [[minhashLshIncrementalStore]]: the base
-    * slice's (vector, norm, hyperplane signature) rows AND band index
-    * are WRITTEN to parquet stores, the tick reads them back, probes
-    * the delta's bands against the stored index (hot list frozen from
-    * the STORED base index), verifies candidates with the exact
-    * cosine over stored + delta vectors, and finally APPENDS the
-    * delta's rows to both stores. Base×base pairs are never
-    * regenerated; same shared-FS artifacts contract and
-    * materialize-before-append ordering as the MinHash store; the
-    * crash-safe continuous regime is the
-    * [[graft.streaming.DocStream.startNearDupMaintain]] BucketStore
-    * protocol (band-hash buckets work identically for hyperplane
-    * signatures).
-    */
-  def embedLshIncrementalStore(spark: SparkSession, sfDir: String,
-      threshold: Double = 0.9, baseFrac: Double = 0.8, nPlant: Int = 50,
-      bucketCap: Int = 10000,
-      artifactDir: String = "target/graft-artifacts"): DataFrame = {
-    graft.functions.VectorFunctions.register(spark)
-    val digest = java.security.MessageDigest.getInstance("MD5")
-      .digest(sfDir.getBytes("UTF-8")).map("%02x".format(_)).mkString.take(8)
-    val sigDir = s"$artifactDir/embedlsh_sig_store_$digest"
-    val bandDir = s"$artifactDir/embedlsh_band_store_$digest"
-    val cut = Tables.embeddings(spark, sfDir)
-      .agg(floor(count(lit(1)) * baseFrac).cast("long").as("cut"))
-    val all = hyperSets(plantedCorpus(spark, sfDir, nPlant))
-      .crossJoin(broadcast(cut)).cache()
-    graft.PhaseTimer.timed("dedup_embed_lsh_store", "seed") {
-      all.filter(col("vec_id") < col("cut")).drop("cut")
-        .write.mode("overwrite").parquet(sigDir)
-      hyperBands(all.filter(col("vec_id") < col("cut")).drop("cut"))
-        .write.mode("overwrite").parquet(bandDir)
-    }
-    val storeSets = spark.read.parquet(sigDir)
-    val storeBands = spark.read.parquet(bandDir)
-    val deltaSets = all.filter(col("vec_id") >= col("cut")).drop("cut").cache()
-    val deltaBands = hyperBands(deltaSets)
-    val hot = hotBucketList(storeBands, bucketCap)
-    val dPruned = deltaBands.join(broadcast(hot), Seq("band", "key"), "left_anti")
-    val probe = storeBands.unionByName(deltaBands)
-      .join(broadcast(hot), Seq("band", "key"), "left_anti")
-    val cand = dPruned.as("a").join(probe.as("b"),
-        col("a.band") === col("b.band") && col("a.key") === col("b.key") &&
-        col("a.vec_id") =!= col("b.vec_id"))
-      .select(least(col("a.vec_id"), col("b.vec_id")).as("vec_a"),
-        greatest(col("a.vec_id"), col("b.vec_id")).as("vec_b"))
-      .distinct()
-    val out = verifyCosPairs(cand,
-      storeSets.unionByName(deltaSets), threshold).cache()
-    graft.PhaseTimer.timed("dedup_embed_lsh_store", "tick") {
-      out.count()
-      deltaSets.write.mode("append").parquet(sigDir)
-      deltaBands.write.mode("append").parquet(bandDir)
-    }
-    out
-  }
+  def embedLshIncremental(spark: SparkSession, sfDir: String,
+      artifactDir: String = "target/graft-artifacts"): DataFrame =
+    bandedLadder(spark, "embedlsh_ladder", sfDir, artifactDir,
+      embedLshDetector(0.9), plantedCorpus(spark, sfDir, 50),
+      Tables.embeddings(spark, sfDir).count())
 
   /** Embedding-cosine near-dup pairs. Norms are precomputed per row
     * (map-side); the pair join is a self-join thresholded on cosine.

@@ -14,6 +14,8 @@ package graft.operators
   * inline. `await()` joins and RETHROWS the body's failure — the
   * fail-fast contract of the previously-inline action is preserved;
   * callers must await before any store mutation the leg's reads race.
+  * Legs started through [[scoped]] are also joined when the scope
+  * exits by a throw, so none outlives the code that started it.
   */
 private[graft] object Overlap {
 
@@ -39,5 +41,45 @@ private[graft] object Overlap {
     t.setDaemon(true)
     t.start()
     new Started(t, ref)
+  }
+
+  /** Run `body` with a [[Scope]] whose legs are ALL joined before
+    * `scoped` returns or throws — a leg never outlives its caller,
+    * even when the body fails before awaiting it. A body failure is
+    * rethrown with every leg failure attached as suppressed; a body
+    * that succeeds rethrows the first leg failure it did not await
+    * (later ones suppressed on it).
+    */
+  def scoped[T](body: Scope => T): T = {
+    val scope = new Scope
+    val result =
+      try body(scope)
+      catch { case e: Throwable => scope.joinAll(Some(e)); throw e }
+    scope.joinAll(None)
+    result
+  }
+
+  final class Scope private[Overlap] {
+    private val legs = scala.collection.mutable.ArrayBuffer.empty[Started[_]]
+
+    def start[T](name: String)(body: => T): Started[T] = {
+      val leg = Overlap.start(name)(body)
+      legs.synchronized { legs += leg }
+      leg
+    }
+
+    private[Overlap] def joinAll(primary: Option[Throwable]): Unit = {
+      var first = primary
+      legs.synchronized(legs.toList).foreach { leg =>
+        try leg.await()
+        catch {
+          case e: Throwable => first match {
+            case Some(p) => if (p ne e) p.addSuppressed(e)
+            case None => first = Some(e)
+          }
+        }
+      }
+      if (primary.isEmpty) first.foreach(e => throw e)
+    }
   }
 }

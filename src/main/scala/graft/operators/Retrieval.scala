@@ -1,6 +1,7 @@
 package graft.operators
 
 import graft.Tables
+import graft.sources.Sinks.freshStoreDir
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -369,19 +370,6 @@ object Retrieval {
     scoreBm25(tf, dfreq, readBm25Stats(spark, dir), qt, topK, k1, b)
   }
 
-  /** Per-run unique index root — a deterministic shared path would
-    * let two concurrent invocations on the same sfDir (bench and the
-    * oracle harness) race each other's seed-delete; the values are
-    * path-independent, so uniqueness costs nothing (the
-    * lineDedupStore convention).
-    */
-  private def freshIndexDir(tag: String, sfDir: String, artifactDir: String): String = {
-    val digest = java.security.MessageDigest.getInstance("MD5")
-      .digest(sfDir.getBytes("UTF-8")).map("%02x".format(_)).mkString.take(8)
-    val runId = java.util.UUID.randomUUID().toString.take(8)
-    s"$artifactDir/${tag}_${digest}_$runId"
-  }
-
   /** text_bm25_store: build → search round trip on the corpus tables
     * (the registered demo; production builds once and searches many).
     * The build phase is PhaseTimer'd so the bench separates the
@@ -389,7 +377,7 @@ object Retrieval {
     */
   def bm25Stored(spark: SparkSession, sfDir: String, topK: Int = 10,
                  artifactDir: String = "target/graft-artifacts"): DataFrame = {
-    val dir = freshIndexDir("bm25_index", sfDir, artifactDir)
+    val dir = freshStoreDir("bm25_index", sfDir, artifactDir)
     val docs = Tables.documents(spark, sfDir)
     graft.PhaseTimer.timed("text_bm25_store", "build") {
       buildBm25Index(docs, dir)
@@ -413,7 +401,7 @@ object Retrieval {
     val all = docs.crossJoin(broadcast(cut))
     val base = all.filter(col("doc_id") < col("cut")).select(col("doc_id"), col("text"))
     val delta = all.filter(col("doc_id") >= col("cut")).select(col("doc_id"), col("text"))
-    val dir = freshIndexDir("bm25_inc", sfDir, artifactDir)
+    val dir = freshStoreDir("bm25_inc", sfDir, artifactDir)
     // r16 receipt for the r15 verdict's watch item #2 (official
     // seed/tick 1.40/1.70 s r14 → 2.80/3.88 s r15 at sf0.1 with an
     // untouched write path and byte-identical shuffle volumes):
@@ -445,7 +433,7 @@ object Retrieval {
   def bm25Cdc(spark: SparkSession, sfDir: String, topK: Int = 10,
               artifactDir: String = "target/graft-artifacts"): DataFrame = {
     val docs = Tables.documents(spark, sfDir)
-    val dir = freshIndexDir("bm25_cdc", sfDir, artifactDir)
+    val dir = freshStoreDir("bm25_cdc", sfDir, artifactDir)
     graft.PhaseTimer.timed("text_bm25_cdc", "seed") {
       buildBm25Index(docs.select(col("doc_id"), col("text")), dir)
     }
@@ -557,7 +545,7 @@ object Retrieval {
     graft.functions.VectorFunctions.register(spark)
     val docs = Tables.documents(spark, sfDir)
     val queries = pseudoQueries(docs)
-    val textDir = freshIndexDir("hybrid_bm25", sfDir, artifactDir)
+    val textDir = freshStoreDir("hybrid_bm25", sfDir, artifactDir)
     // r18, guide §2.6: the two arms build INDEPENDENT artifacts from
     // independent inputs (postings store from docs; quantizer + IVF
     // store from embeddings) and nothing reads either until fuseStored
@@ -571,7 +559,7 @@ object Retrieval {
         buildBm25Index(docs.select(col("doc_id"), col("text")), textDir)
       }
     }
-    val denseRoot = freshIndexDir("hybrid_ivf", sfDir, artifactDir)
+    val denseRoot = freshStoreDir("hybrid_ivf", sfDir, artifactDir)
     val emb = Tables.embeddings(spark, sfDir)
       .select(col("vec_id"), col("embedding").cast("array<double>").as("v"))
       .withColumn("norm", sqrt(expr("graft_dot(v, v)")))
@@ -787,7 +775,7 @@ object Retrieval {
     graft.functions.VectorFunctions.register(spark)
     val docs = Tables.documents(spark, sfDir)
     val queries = pseudoQueries(docs)
-    val textDir = freshIndexDir("hn_bm25", sfDir, artifactDir)
+    val textDir = freshStoreDir("hn_bm25", sfDir, artifactDir)
     // r18, guide §2.6 (the hybridRrfStored overlap): the postings
     // build and the vector sidecar seed are artifact builds over
     // disjoint inputs; the mining below is the first reader of both
@@ -800,7 +788,7 @@ object Retrieval {
       .select(col("vec_id"), col("embedding").cast("array<double>").as("v"))
       .withColumn("norm", sqrt(expr("graft_dot(v, v)")))
       .cache()
-    val byIdDir = freshIndexDir("hn_byid", sfDir, artifactDir)
+    val byIdDir = freshStoreDir("hn_byid", sfDir, artifactDir)
     graft.PhaseTimer.timed("q_hard_negatives_store", "byid_seed") {
       seedVecSidecar(spark, emb, byIdDir)
     }

@@ -676,9 +676,8 @@ object Similarity {
     * interpreted the whole nc·dim MAC per row — the dominant term of
     * every corpus-wide assignment). This flat scan serves the
     * QUERY-side probe selection (k = nprobe, cost ∝ queries — never
-    * corpus-proportional); the corpus-wide k = 1 assignment goes
-    * through [[assignClusters]], which switches to the two-level
-    * sub-linear scan above [[TwoLevelMinNlist]] (r17).
+    * corpus-proportional); the corpus-wide k = 1 assignment is
+    * [[assignClusters]].
     */
   private def nearestClustersCol(vCol: String,
       cents: Seq[(Int, Seq[Double])], k: Int): org.apache.spark.sql.Column = {
@@ -691,237 +690,23 @@ object Similarity {
         cents.map(_._1).toArray, dim, k))
   }
 
-  /** Routing pin for [[assignClusters]]: the flat codegen argmin
-    * serves EVERY nlist. The exact ball-pruned two-level rail
-    * ([[assignClustersTwoLevel]]) is kept and spec-pinned, but the
-    * router never chooses it — the r17 measured receipt
-    * (IvfBuildPhaseProbe, the 2M dim-64 bench corpus): flat
-    * 11.4 / 39.2 s vs two-level 15.1 / 96.1 s at nlist 2048 / 8192.
-    * High-dimensional distance concentration keeps the group radii
-    * near the inter-group distances, so the triangle-inequality
-    * bound prunes almost nothing while paying √nlist group MACs, a
-    * per-row sort, and two allocations the flat loop never pays.
-    * (The FAISS-style top-k-groups HEURISTIC is genuinely
-    * sub-linear, but was measured to cost IVF recall — 1.0000 →
-    * 0.9594 at 2M — and rejected; a store whose vectors sit in the
-    * wrong inverted list is silently incomplete at any nprobe.)
-    * Net: O(n·nlist·dim) IS the exact-assignment law in high dim;
-    * the scale levers are the nlist derivation clamp, the bounded
-    * train sample, and one-time build amortization — not a cleverer
-    * scan. Re-route only with a measured crossover on a real
-    * corpus: ball pruning bites at LOW dim (≤ ~16), where the
-    * radii shrink relative to spacing.
-    */
-  private[graft] val TwoLevelMinNlist = Int.MaxValue
-
-  /** CSR group structure over a centroid set: `gIdx(gOff(g) until
-    * gOff(g+1))` are group g's members as indices into the id-sorted
-    * centroid order; `gCents`/`gC2` are the flattened group centroids
-    * and their squared norms; `gR(g)` is the group's BALL RADIUS —
-    * max ‖member − group centroid‖ — the triangle-inequality prune
-    * bound that makes the two-level scan exact.
-    */
-  private[graft] case class CoarseGroups(gCents: Array[Double], gC2: Array[Double],
-      gR: Array[Double], gOff: Array[Int], gIdx: Array[Int]) {
-    def nGroups: Int = gOff.length - 1
-  }
-
-  /** Cluster the nlist centroids into ~√nlist groups — the level-1
-    * quantizer of the FAISS-IMI-style two-level assignment
-    * ([[graft.functions.VectorFunctions.NearestClusterTwoLevel]]).
-    * Pure driver-side Lloyd's over the CENTROIDS (not the corpus):
-    * deterministic evenly-spaced init over the id-sorted order, ≤ 8
-    * iterations with stable-assignment early exit, ties to the lower
-    * group, empty groups dropped at compaction — a pure function of
-    * the centroid set, so seed and every later tick/rebuild derive
-    * the SAME groups from the same centroid artifact with nothing
-    * extra persisted (the BPE merge-table precedent). Cost is
-    * O(nc·√nc·dim·iters): ~120M MACs at nlist 2048, ~17G at the
-    * 65536 clamp — seconds, once per JVM per centroid artifact
-    * ([[coarseGroupsFor]] memoizes), amortized against the corpus
-    * pass it makes 15-85× cheaper.
-    */
-  private[graft] def groupCentroids(cents: Seq[(Int, Seq[Double])], groups0: Int = -1): CoarseGroups = {
-    val sorted = cents.sortBy(_._1)
-    val nc = sorted.size
-    require(nc > 0, "groupCentroids needs at least one centroid")
-    val dim = sorted.head._2.size
-    val cArr = new Array[Double](nc * dim)
-    var ci = 0
-    sorted.foreach { case (_, v) =>
-      var j = 0; while (j < dim) { cArr(ci * dim + j) = v(j); j += 1 }; ci += 1
-    }
-    val G = if (groups0 > 0) math.min(groups0, nc)
-      else math.max(1, math.ceil(math.sqrt(nc.toDouble)).toInt)
-    val gc = new Array[Double](G * dim)
-    var g0 = 0
-    while (g0 < G) { // evenly-spaced deterministic init
-      System.arraycopy(cArr, ((g0.toLong * nc) / G).toInt * dim, gc, g0 * dim, dim)
-      g0 += 1
-    }
-    val assign = new Array[Int](nc)
-    java.util.Arrays.fill(assign, -1)
-    var iter = 0
-    var changed = true
-    while (changed && iter < 8) {
-      changed = false
-      var c = 0
-      while (c < nc) {
-        var best = 0
-        var bd = Double.PositiveInfinity
-        var g = 0
-        while (g < G) {
-          var d = 0.0
-          var j = 0
-          while (j < dim) { val t = cArr(c * dim + j) - gc(g * dim + j); d += t * t; j += 1 }
-          if (d < bd) { bd = d; best = g } // strict <: ties keep the lower g
-          g += 1
-        }
-        if (assign(c) != best) { assign(c) = best; changed = true }
-        c += 1
-      }
-      // the LAST pass is always an assignment against the shipped
-      // means: a centroid must live in the group whose centroid is
-      // nearest to IT, or the level-1 ranking of a vector sitting on
-      // that centroid would not surface its own group first
-      if (changed && iter < 7) {
-        val sums = new Array[Double](G * dim)
-        val cnt = new Array[Int](G)
-        var c = 0
-        while (c < nc) {
-          val g = assign(c); cnt(g) += 1
-          var j = 0; while (j < dim) { sums(g * dim + j) += cArr(c * dim + j); j += 1 }
-          c += 1
-        }
-        var g = 0
-        while (g < G) { // empty groups keep their previous centroid
-          if (cnt(g) > 0) {
-            var j = 0; while (j < dim) { gc(g * dim + j) = sums(g * dim + j) / cnt(g); j += 1 }
-          }
-          g += 1
-        }
-      } else changed = false
-      iter += 1
-    }
-    // compact to live groups; members in ascending centroid order
-    val cnt = new Array[Int](G)
-    assign.foreach(g => cnt(g) += 1)
-    val live = (0 until G).filter(cnt(_) > 0)
-    val gOff = new Array[Int](live.size + 1)
-    live.zipWithIndex.foreach { case (g, k) => gOff(k + 1) = gOff(k) + cnt(g) }
-    val remap = new Array[Int](G)
-    live.zipWithIndex.foreach { case (g, k) => remap(g) = k }
-    val gIdx = new Array[Int](nc)
-    val cursor = java.util.Arrays.copyOf(gOff, gOff.length)
-    var c1 = 0
-    while (c1 < nc) {
-      val k = remap(assign(c1)); gIdx(cursor(k)) = c1; cursor(k) += 1; c1 += 1
-    }
-    val gCents = new Array[Double](live.size * dim)
-    live.zipWithIndex.foreach { case (g, k) =>
-      System.arraycopy(gc, g * dim, gCents, k * dim, dim)
-    }
-    val gC2 = new Array[Double](live.size)
-    var k = 0
-    while (k < live.size) {
-      var s = 0.0
-      var j = 0
-      while (j < dim) { val x = gCents(k * dim + j); s += x * x; j += 1 }
-      gC2(k) = s; k += 1
-    }
-    // ball radii: max member distance to the group centroid — the
-    // exactness bound (any point's distance to a member is at least
-    // its distance to the group centroid minus this radius)
-    val gR = new Array[Double](live.size)
-    var k2 = 0
-    while (k2 < live.size) {
-      var m = gOff(k2)
-      var r = 0.0
-      while (m < gOff(k2 + 1)) {
-        val c = gIdx(m)
-        var d2 = 0.0
-        var j = 0
-        while (j < dim) {
-          val t = cArr(c * dim + j) - gCents(k2 * dim + j); d2 += t * t; j += 1
-        }
-        val d = math.sqrt(d2)
-        if (d > r) r = d
-        m += 1
-      }
-      gR(k2) = r; k2 += 1
-    }
-    CoarseGroups(gCents, gC2, gR, gOff, gIdx)
-  }
-
-  // group structure per centroid artifact, memoized by content hash —
-  // maintainers call assignClusters once per micro-batch with the same
-  // loaded centroids; the Lloyd's pass should run once per JVM, not
-  // once per tick (access-ordered LRU of 8 — more artifacts than any
-  // one session drives)
-  private val coarseGroupMemo = java.util.Collections.synchronizedMap(
-    new java.util.LinkedHashMap[String, CoarseGroups](16, 0.75f, true) {
-      override def removeEldestEntry(
-          e: java.util.Map.Entry[String, CoarseGroups]): Boolean = size() > 8
-    })
-
-  private[graft] def coarseGroupsFor(sorted: Seq[(Int, Seq[Double])]): CoarseGroups = {
-    val md = java.security.MessageDigest.getInstance("MD5")
-    val bb = java.nio.ByteBuffer.allocate(8192)
-    def flush(): Unit = { md.update(bb.array(), 0, bb.position()); bb.clear() }
-    sorted.foreach { case (id, v) =>
-      if (bb.remaining() < 4 + v.size * 8) flush()
-      bb.putInt(id)
-      v.foreach { x => if (bb.remaining() < 8) flush(); bb.putDouble(x) }
-    }
-    flush()
-    val key = md.digest().map("%02x".format(_)).mkString
-    coarseGroupMemo.synchronized {
-      val hit = coarseGroupMemo.get(key)
-      if (hit != null) hit
-      else { val g = groupCentroids(sorted); coarseGroupMemo.put(key, g); g }
-    }
-  }
-
   /** Nearest-centroid assignment, map-side; ties break to the lowest
-    * cluster id (the struct ordering the array_min form used) — the
-    * EXACT global argmin, as a pure projection (centroids ship as
-    * codegen reference objects, zero shuffle). Routed by
-    * [[TwoLevelMinNlist]], which the r17 probe receipts pin to the
-    * flat rail at every nlist (see the constant's scaladoc — exact
-    * sub-linear assignment measurably LOSES to the flat codegen loop
-    * at dim 64, and the approximate variant costs recall).
+    * cluster id — the EXACT global argmin as one allocation-free
+    * codegen loop over every centroid
+    * ([[graft.functions.VectorFunctions.NearestClusters]], k = 1),
+    * centroids shipped as reference objects, zero shuffle.
+    *
+    * Flat at every nlist, by measurement (r17, 2M dim-64 vectors):
+    * flat 11.4 / 39.2 s against an exact ball-pruned two-level scan's
+    * 15.1 / 96.1 s at nlist 2048 / 8192 — in high dimension the group
+    * radii stay near the inter-group distances, so the triangle bound
+    * prunes almost nothing. The top-k-groups heuristic is sub-linear
+    * but cost IVF recall (1.0000 → 0.9594 at 2M): a vector in the
+    * wrong inverted list is missed at any nprobe.
     */
-  private[graft] def assignClusters(df: DataFrame, cents: Seq[(Int, Seq[Double])]): DataFrame =
-    if (cents.size < TwoLevelMinNlist) assignClustersFlat(df, cents)
-    else assignClustersTwoLevel(df, cents)
-
-  /** The flat rail: one [[graft.functions.VectorFunctions.NearestClusters]]
-    * pass over every centroid — the k=1 exact argmin as a tight
-    * allocation-free codegen loop.
-    */
-  private[graft] def assignClustersFlat(df: DataFrame, cents: Seq[(Int, Seq[Double])]): DataFrame = {
+  private[graft] def assignClusters(df: DataFrame, cents: Seq[(Int, Seq[Double])]): DataFrame = {
     graft.functions.VectorFunctions.register(df.sparkSession)
     df.withColumn("cluster", element_at(nearestClustersCol("v", cents, 1), 1))
-  }
-
-  /** The two-level rail: ball-pruned scan over driver-derived
-    * centroid groups ([[groupCentroids]] +
-    * [[graft.functions.VectorFunctions.NearestClusterTwoLevel]]) —
-    * the same exact argmin, sub-linear in nlist on clustered
-    * geometry.
-    */
-  private[graft] def assignClustersTwoLevel(df: DataFrame, cents: Seq[(Int, Seq[Double])]): DataFrame = {
-    graft.functions.VectorFunctions.register(df.sparkSession)
-    val sorted = cents.sortBy(_._1)
-    val g = coarseGroupsFor(sorted)
-    val dim = sorted.head._2.size
-    df.withColumn("cluster", org.apache.spark.sql.GraftShims.column(
-      graft.functions.VectorFunctions.NearestClusterTwoLevel(
-        org.apache.spark.sql.GraftShims.expression(col("v")),
-        sorted.flatMap(_._2).toArray,
-        sorted.map(_._2.map(x => x * x).sum).toArray,
-        sorted.map(_._1).toArray, dim,
-        g.gCents, g.gC2, g.gR, g.gOff, g.gIdx)))
   }
 
   /** Below this many centroids the coarse fit stays on MLlib KMeans
@@ -983,7 +768,7 @@ object Similarity {
     * centroids, and a coarse quantizer needs coverage, not optimal
     * quantization error). Then ≤ `maxIter` Lloyd's iterations with
     * ties to the lowest centroid id, empty clusters keeping their
-    * previous centroid (the [[groupCentroids]] convention), and
+    * previous centroid, and
     * early exit when no coordinate moved > 1e-12 — on one of two
     * rails picked by [[LocalTrainMaxBytes]]:
     *

@@ -13,6 +13,20 @@ import org.apache.spark.sql.functions._
   */
 object Sinks {
 
+  /** Per-run unique store root `<artifactDir>/<tag>_<sfDir digest>_<run id>`
+    * for the registered store demos (index builds, ladder ticks). A
+    * deterministic shared path would let two concurrent invocations on
+    * the same corpus (a bench beside an oracle run) race each other's
+    * seed delete; the stored values are path-independent, so
+    * uniqueness costs nothing.
+    */
+  private[graft] def freshStoreDir(tag: String, sfDir: String, artifactDir: String): String = {
+    val digest = java.security.MessageDigest.getInstance("MD5")
+      .digest(sfDir.getBytes("UTF-8")).map("%02x".format(_)).mkString.take(8)
+    val runId = java.util.UUID.randomUUID().toString.take(8)
+    s"$artifactDir/${tag}_${digest}_$runId"
+  }
+
   /** Hive-style partitioned parquet: one directory per partition value,
     * so readers filtering on the partition column prune entire files.
     */

@@ -35,9 +35,10 @@ object DocStream {
 
   /** Continuous NEAR-dup maintenance over MinHash signature + band
     * BucketStores — the top rung of the near-dup ladder (batch
-    * [[graft.operators.Dedup.minhashLsh]] → in-query tick
-    * `dedup_minhash_inc` → one-shot store `dedup_minhash_store` →
-    * this). Each micro-batch runs one detector tick
+    * [[graft.operators.Dedup.minhashLsh]] → one seeded tick
+    * `dedup_minhash_inc` / `dedup_minhash_store`, the same BucketStore
+    * tick registered under both keys → this). Each micro-batch runs
+    * one detector tick
     * ([[graft.operators.Dedup.nearDupStoreTick]]): the delta's band
     * hashes name the band-store buckets it can collide with before
     * any store read, candidates form only within those buckets, exact
@@ -45,8 +46,7 @@ object DocStream {
     * both stores advance through [[BucketStore.applyTick]]'s atomic
     * generation publish under the batch id — untouched buckets stay
     * byte-identical, and a crash between the two store applies heals
-    * on replay instead of leaving the pair inconsistent (the flaw the
-    * one-shot store query's bare appends accept, documented there).
+    * on replay instead of leaving the pair inconsistent.
     *
     * The verified pairs land at `pairsDir/batch=<id>` (overwritten on
     * replay — the pair log is idempotent); `spark.read.parquet(pairsDir)`

@@ -138,147 +138,64 @@ class DedupSimilaritySpec extends AnyFunSuite {
     inc.unpersist()
   }
 
-  test("incremental minhash tick plus base pairs equals the batch pair set") {
-    import spark.implicits._
-    val nDocs = Tables.documents(spark, sf).count()
-    val cut = math.floor(nDocs * 0.8).toLong
-    val planted = Dedup.dupPlantedDocs(spark, sf).cache()
-    def pairs(df: org.apache.spark.sql.DataFrame) =
-      df.collect().map(r => (r.getAs[Long]("doc_a"), r.getAs[Long]("doc_b"))).toSet
-    val full = pairs(Dedup.minhashLshOn(spark, planted, threshold = 0.5))
-    val base = pairs(Dedup.minhashLshOn(spark,
-      planted.filter(col("doc_id") < cut), threshold = 0.5))
-    val tick = pairs(Dedup.minhashLshIncremental(spark, sf))
-    // the tick emits ONLY pairs touching the delta…
-    assert(tick.nonEmpty)
-    assert(tick.forall { case (a, b) => a >= cut || b >= cut })
-    assert(tick.intersect(base).isEmpty)
-    // …and together with the base pairs reproduces the batch run
-    assert(base.union(tick) === full)
-    // planted copies guarantee cross-tick pairs at any SF
-    assert(tick.exists { case (_, b) => b >= 10000000L })
-    planted.unpersist()
-    spark.catalog.clearCache()
-  }
+  /** One banded ladder family: its registered tick (one BucketStore
+    * tick over the planted corpus, registered under both its `_inc`
+    * and `_store` keys), the batch detector the tick must agree with,
+    * the corpus both run over, and where the planted copies' ids start.
+    */
+  private case class LadderFamily(name: String, idCol: String, aCol: String, bCol: String,
+      corpus: () => org.apache.spark.sql.DataFrame, unplanted: () => Long,
+      batch: org.apache.spark.sql.DataFrame => org.apache.spark.sql.DataFrame,
+      tick: String => org.apache.spark.sql.DataFrame, plantedFrom: Long)
 
-  test("minhash tick through the materialized signature store matches the batch pair set") {
-    import spark.implicits._
-    val nDocs = Tables.documents(spark, sf).count()
-    val cut = math.floor(nDocs * 0.8).toLong
-    val planted = Dedup.dupPlantedDocs(spark, sf).cache()
-    def pairs(df: org.apache.spark.sql.DataFrame) =
-      df.collect().map(r => (r.getAs[Long]("doc_a"), r.getAs[Long]("doc_b"))).toSet
-    val full = pairs(Dedup.minhashLshOn(spark, planted, threshold = 0.5))
-    val base = pairs(Dedup.minhashLshOn(spark,
-      planted.filter(col("doc_id") < cut), threshold = 0.5))
-    val root = java.nio.file.Files.createTempDirectory("minhash_store").toString
-    val tick = pairs(Dedup.minhashLshIncrementalStore(spark, sf, artifactDir = root))
-    // same contract as the in-query tick — but the base side came off
-    // a real parquet store round-trip
-    assert(tick.nonEmpty)
-    assert(tick.forall { case (a, b) => a >= cut || b >= cut })
-    assert(tick.intersect(base).isEmpty)
-    assert(base.union(tick) === full)
-    // the post-tick store holds the FULL corpus: delta rows appended,
-    // ready to serve the next tick as its base
-    val digest = java.security.MessageDigest.getInstance("MD5")
-      .digest(sf.getBytes("UTF-8")).map("%02x".format(_)).mkString.take(8)
-    val stored = spark.read.parquet(s"$root/minhash_sig_store_$digest")
-      .select("doc_id").collect().map(_.getLong(0)).toSet
-    assert(stored === planted.select("doc_id").collect().map(_.getLong(0)).toSet)
-    planted.unpersist()
-    spark.catalog.clearCache()
-  }
-
-  test("simhash tick through the materialized fingerprint store matches the batch pair set") {
-    import spark.implicits._
-    val nDocs = Tables.documents(spark, sf).count()
-    val cut = math.floor(nDocs * 0.8).toLong
-    val planted = Dedup.dupPlantedDocs(spark, sf).cache()
-    def pairs(df: org.apache.spark.sql.DataFrame) =
-      df.collect().map(r => (r.getAs[Long]("doc_a"), r.getAs[Long]("doc_b"))).toSet
-    val full = pairs(Dedup.simhashOn(spark, planted))
-    val base = pairs(Dedup.simhashOn(spark, planted.filter(col("doc_id") < cut)))
-    val root = java.nio.file.Files.createTempDirectory("simhash_store").toString
-    val tick = pairs(Dedup.simhashIncrementalStore(spark, sf, artifactDir = root))
-    assert(tick.nonEmpty)
-    assert(tick.forall { case (a, b) => a >= cut || b >= cut })
-    assert(tick.intersect(base).isEmpty)
-    assert(base.union(tick) === full)
-    // the post-tick store holds the FULL corpus, ready for the next tick
-    val digest = java.security.MessageDigest.getInstance("MD5")
-      .digest(sf.getBytes("UTF-8")).map("%02x".format(_)).mkString.take(8)
-    val stored = spark.read.parquet(s"$root/simhash_fp_store_$digest")
-      .select("doc_id").collect().map(_.getLong(0)).toSet
-    assert(stored === planted.select("doc_id").collect().map(_.getLong(0)).toSet)
-    planted.unpersist()
-    spark.catalog.clearCache()
-  }
-
-  test("embed-LSH tick through the materialized signature store matches the batch pair set") {
-    import org.apache.spark.sql.functions.col
-    val nVecs = Tables.embeddings(spark, sf).count()
-    val cut = math.floor(nVecs * 0.8).toLong
-    val corpus = Dedup.plantedCorpus(spark, sf, nPlant = 50).cache()
-    def pairs(df: org.apache.spark.sql.DataFrame) =
-      df.collect().map(r => (r.getAs[Long]("vec_a"), r.getAs[Long]("vec_b"))).toSet
-    val full = pairs(Dedup.embedLshOn(spark, corpus, threshold = 0.9))
-    val base = pairs(Dedup.embedLshOn(spark,
-      corpus.filter(col("vec_id") < cut), threshold = 0.9))
-    val root = java.nio.file.Files.createTempDirectory("embedlsh_store").toString
-    val tick = pairs(Dedup.embedLshIncrementalStore(spark, sf, artifactDir = root))
-    assert(tick.nonEmpty)
-    assert(tick.forall { case (a, b) => a >= cut || b >= cut })
-    assert(tick.intersect(base).isEmpty)
-    assert(base.union(tick) === full)
-    val digest = java.security.MessageDigest.getInstance("MD5")
-      .digest(sf.getBytes("UTF-8")).map("%02x".format(_)).mkString.take(8)
-    val stored = spark.read.parquet(s"$root/embedlsh_sig_store_$digest")
-      .select("vec_id").collect().map(_.getLong(0)).toSet
-    assert(stored === corpus.select("vec_id").collect().map(_.getLong(0)).toSet)
-    corpus.unpersist()
-    spark.catalog.clearCache()
-  }
-
-  test("incremental simhash tick plus base pairs equals the batch pair set") {
-    import spark.implicits._
-    val nDocs = Tables.documents(spark, sf).count()
-    val cut = math.floor(nDocs * 0.8).toLong
-    val planted = Dedup.dupPlantedDocs(spark, sf).cache()
-    def pairs(df: org.apache.spark.sql.DataFrame) =
-      df.collect().map(r => (r.getAs[Long]("doc_a"), r.getAs[Long]("doc_b"))).toSet
-    val full = pairs(Dedup.simhashOn(spark, planted))
-    val base = pairs(Dedup.simhashOn(spark, planted.filter(col("doc_id") < cut)))
-    val tick = pairs(Dedup.simhashIncremental(spark, sf))
-    assert(tick.nonEmpty)
-    assert(tick.forall { case (a, b) => a >= cut || b >= cut })
-    assert(tick.intersect(base).isEmpty)
-    assert(base.union(tick) === full)
+  private val ladder = Seq(
+    LadderFamily("minhash", "doc_id", "doc_a", "doc_b",
+      () => Dedup.dupPlantedDocs(spark, sf), () => Tables.documents(spark, sf).count(),
+      Dedup.minhashLshOn(spark, _, threshold = 0.5),
+      root => Dedup.minhashLshIncremental(spark, sf, artifactDir = root), 10000000L),
     // fingerprint-identical planted copies pair their originals at hamming 0
-    assert(tick.exists { case (_, b) => b >= 10000000L })
-    planted.unpersist()
-    spark.catalog.clearCache()
-  }
-
-  test("incremental embed-LSH tick plus base pairs equals the batch pair set") {
-    import org.apache.spark.sql.functions.col
-    val nVecs = Tables.embeddings(spark, sf).count()
-    val cut = math.floor(nVecs * 0.8).toLong
-    val corpus = Dedup.plantedCorpus(spark, sf, nPlant = 50).cache()
-    def pairs(df: org.apache.spark.sql.DataFrame) =
-      df.collect().map(r => (r.getAs[Long]("vec_a"), r.getAs[Long]("vec_b"))).toSet
-    val full = pairs(Dedup.embedLshOn(spark, corpus, threshold = 0.9))
-    val base = pairs(Dedup.embedLshOn(spark,
-      corpus.filter(col("vec_id") < cut), threshold = 0.9))
-    val tick = pairs(Dedup.embedLshIncremental(spark, sf))
-    assert(tick.nonEmpty)
-    assert(tick.forall { case (a, b) => a >= cut || b >= cut })
-    assert(tick.intersect(base).isEmpty)
-    assert(base.union(tick) === full)
+    LadderFamily("simhash", "doc_id", "doc_a", "doc_b",
+      () => Dedup.dupPlantedDocs(spark, sf), () => Tables.documents(spark, sf).count(),
+      Dedup.simhashOn(spark, _),
+      root => Dedup.simhashIncremental(spark, sf, artifactDir = root), 10000000L),
     // planted near-identical copies (ids ≥ 10⁶) pair their originals
-    assert(tick.exists { case (_, b) => b >= 1000000L })
-    corpus.unpersist()
-    spark.catalog.clearCache()
+    LadderFamily("embed-LSH", "vec_id", "vec_a", "vec_b",
+      () => Dedup.plantedCorpus(spark, sf, nPlant = 50), () => Tables.embeddings(spark, sf).count(),
+      Dedup.embedLshOn(spark, _, threshold = 0.9),
+      root => Dedup.embedLshIncremental(spark, sf, artifactDir = root), 1000000L))
+
+  ladder.foreach { f =>
+    test(s"incremental ${f.name} tick plus base pairs equals the batch pair set") {
+      val cut = math.floor(f.unplanted() * 0.8).toLong
+      val corpus = f.corpus().cache()
+      def pairs(df: org.apache.spark.sql.DataFrame) =
+        df.collect().map(r => (r.getAs[Long](f.aCol), r.getAs[Long](f.bCol))).toSet
+      val full = pairs(f.batch(corpus))
+      val base = pairs(f.batch(corpus.filter(col(f.idCol) < cut)))
+      val root = java.nio.file.Files.createTempDirectory(s"ladder_${f.name}").toString
+      val out = f.tick(root)
+      val rows = out.collect()
+      val tick = pairs(out)
+      // one row per pair
+      assert(rows.length === rows.distinct.length, s"${f.name} tick returned duplicate rows")
+      assert(rows.length === tick.size)
+      // the tick emits ONLY pairs touching the delta…
+      assert(tick.nonEmpty)
+      assert(tick.forall { case (a, b) => a >= cut || b >= cut })
+      assert(tick.intersect(base).isEmpty)
+      // …and together with the base pairs reproduces the batch run
+      assert(base.union(tick) === full)
+      // planted copies guarantee cross-tick pairs at any SF
+      assert(tick.exists { case (_, b) => b >= f.plantedFrom })
+      // the post-tick row store holds the FULL corpus: delta rows
+      // applied, ready to serve the next tick as its base
+      val Array(storeRoot) = new java.io.File(root).listFiles().filter(_.isDirectory)
+      val stored = graft.streaming.BucketStore.readAll(spark, s"$storeRoot/rows")
+        .select(f.idCol).collect().map(_.getLong(0)).toSet
+      assert(stored === corpus.select(f.idCol).collect().map(_.getLong(0)).toSet)
+      corpus.unpersist()
+      spark.catalog.clearCache()
+    }
   }
 
   test("connected components survive a chain deeper than the checkpoint interval") {

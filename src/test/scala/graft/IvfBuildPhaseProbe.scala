@@ -16,23 +16,18 @@ import graft.operators.Similarity
   *      → [[Similarity.fitCoarseCentroids]] routes nlist > 256 to
   *      deterministic Lloyd's; train measured 36 → 12–16 s under a
   *      2× higher-load host (same-run assign keys inflated alike).
-  *   2. The EXACT ball-pruned two-level scan loses to the flat
-  *      codegen argmin at dim 64, and the gap WIDENS with nlist —
+  *   2. The EXACT ball-pruned two-level scan lost to the flat
+  *      codegen argmin at dim 64, and the gap WIDENED with nlist —
   *      same-run pairs: flat 11.4 / 39.2 / 196 s vs two-level
-  *      15.1 / 96.1 / 684 s at nlist 2048 / 8192 / 32768 (1.4× →
-  *      2.5× → 3.5×) — high-dim distance concentration leaves the
-  *      triangle-inequality bound nothing to prune, and crowding
-  *      the manifold with more centroids makes it worse. →
-  *      [[Similarity.assignClusters]] pins FLAT at every nlist
-  *      ([[Similarity.TwoLevelMinNlist]]).
+  *      15.1 / 96.1 / 684 s at nlist 2048 / 8192 / 32768 — so
+  *      [[Similarity.assignClusters]] is flat at every nlist and the
+  *      two-level kernel and its probe legs were deleted.
   *
   * Phases timed solo in a fresh mirror of the BenchScaleDocs session
   * against the bench's own persisted 2M corpus
   * (`target/graft-scale-docs/vecs` — run BenchScaleDocs first):
-  * `train` ([[Similarity.trainQuantizer]]), `assign_2l` / `assign_flat`
-  * (corpus-wide, noop write), `seed_store`
-  * ([[Similarity.seedIvfStore]]), then the assignment-only crossover
-  * sweep on synthetic data-distributed centroid sets.
+  * `train` ([[Similarity.trainQuantizer]]), `assign` (corpus-wide,
+  * noop write) and `seed_store` ([[Similarity.seedIvfStore]]).
   */
 object IvfBuildPhaseProbe {
   def main(args: Array[String]): Unit = {
@@ -73,55 +68,13 @@ object IvfBuildPhaseProbe {
         cents = Similarity.trainQuantizer(spark, corpus(),
           s"target/graft-ivfprobe/cents_$i", nlist, n = n)
       }
-      once(s"assign_2l_$i") {
-        Similarity.assignClustersTwoLevel(corpus(), cents)
-          .write.format("noop").mode("overwrite").save()
-      }
-      once(s"assign_flat_$i") {
-        Similarity.assignClustersFlat(corpus(), cents)
+      once(s"assign_$i") {
+        Similarity.assignClusters(corpus(), cents)
           .write.format("noop").mode("overwrite").save()
       }
       once(s"seed_store_$i") {
         Similarity.seedIvfStore(spark, corpus(),
           s"target/graft-ivfprobe/store_$i", cents, nlist)
-      }
-    }
-
-    // ----- assignment-only crossover sweep -----------------------
-    // flat vs two-level at synthetic nlist (centroids = the first k
-    // corpus vectors — data-distributed, so the group structure sees
-    // the geometry real centroid sets have). This is the measured
-    // anchor behind Similarity.TwoLevelMinNlist: at 2048 the flat
-    // codegen loop still wins (no allocations, no sqrt/sort, perfect
-    // locality); the ball-pruned scan must win on measured MACs
-    // before the router sends anything to it.
-    once("scan_base") {
-      corpus().select(col("vec_id")).write.format("noop").mode("overwrite").save()
-    }
-    // 2048 = the 2M corpus's derived nlist (trained-centroid geometry
-    // covered above); 8192 = 4× past it. A 32768 arm ran once and was
-    // then dropped from the loop (~5–20 min per rep): flat 196 s vs
-    // two-level 684 s solo — the ratio WIDENS with nlist (1.4× at
-    // 2048, 2.1–2.5× at 8192, 3.5× at 32768): the ball bound prunes
-    // less as centroids crowd the same manifold, so there is no
-    // crossover to find in this direction.
-    Seq(2048, 8192).foreach { k =>
-      val synth = corpus().filter(col("vec_id") < k)
-        .orderBy(col("vec_id")).collect()
-        .map(r => (r.getLong(0).toInt, r.getSeq[Double](r.fieldIndex("v"))))
-        .toSeq
-      // derive + memoize the groups OUTSIDE the timed region: in real
-      // builds groupCentroids runs once per artifact per JVM
-      Similarity.coarseGroupsFor(synth.sortBy(_._1))
-      for (i <- 1 to 2) {
-        once(s"sweep_flat_${k}_$i") {
-          Similarity.assignClustersFlat(corpus(), synth)
-            .write.format("noop").mode("overwrite").save()
-        }
-        once(s"sweep_2l_${k}_$i") {
-          Similarity.assignClustersTwoLevel(corpus(), synth)
-            .write.format("noop").mode("overwrite").save()
-        }
       }
     }
     spark.stop()

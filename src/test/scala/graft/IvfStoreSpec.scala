@@ -544,6 +544,51 @@ class IvfStoreSpec extends AnyFunSuite {
     corpus.unpersist()
     ()
   }
+
+  test("end-to-end: store whose quantizer trains on the scalable Lloyd's rail surfaces planted near-dups") {
+    import spark.implicits._
+    val dim = 6
+    val nc = 300
+    // nc well-separated centroids: seeded gaussians scaled 50 — at
+    // dim ≥ 4 pairwise distances are O(100) against the O(1)
+    // intra-cluster spreads planted below, so every planted vector's
+    // nearest centroid is unambiguous
+    val crnd = new scala.util.Random(3L)
+    val cents = (0 until nc).map(i => (i, Seq.fill(dim)(crnd.nextGaussian() * 50.0)))
+    val rnd = new scala.util.Random(41)
+    // corpus: 20 vectors per cluster with ±5 spread — wide enough
+    // that same-cluster cosines round BELOW 1.0000 at the search's 4
+    // decimals, so the planted copy (cosine exactly 1) is the unique
+    // rank-1, not a vec_id tie-break among rounded ties. Queries are
+    // exact copies scaled 1.0001 of the first member of every 30th
+    // cluster (same nearest centroid by construction).
+    val base = (0L until 6000L).map { i =>
+      val c = cents((i % nc).toInt)._2
+      (i, c.map(_ + rnd.nextDouble() * 10.0 - 5.0))
+    }
+    val corpus = Similarity.withVecNorm(spark, base.toDF("vec_id", "v"))
+    val dir = java.nio.file.Files.createTempDirectory("lloyd_ivf").toString
+    Similarity.trainQuantizer(spark, corpus, s"$dir/cents", nlist = nc, n = 6000L)
+    val loaded = Similarity.loadCentroids(spark, s"$dir/cents")
+    assert(loaded.size === nc)
+    Similarity.seedIvfStore(spark, corpus, s"$dir/store", loaded, nlist = nc)
+    // ids 0..299 are each cluster's first member; take every 30th
+    val planted = base.filter { case (id, _) => id < nc && id % 30 == 0 }
+    val queries = planted.map { case (id, v) =>
+      (id + 1000000L, v.map(_ * 1.0001))
+    }.toDF("vec_id", "v")
+    val q = Similarity.withVecNorm(spark, queries)
+      .select(col("vec_id").as("query_id"), col("v").as("qv"), col("norm").as("qnorm"))
+    val hits = Similarity.searchIvfStore(spark, s"$dir/store", loaded, q,
+        k = 3, nprobe = 4, nlist = nc)
+      .filter(col("rn") === 1)
+      .select("query_id", "neighbor_id").collect()
+      .map(r => r.getLong(0) -> r.getLong(1)).toMap
+    planted.foreach { case (id, _) =>
+      assert(hits.get(id + 1000000L).contains(id),
+        s"planted near-dup $id must be the rank-1 hit of its scaled copy")
+    }
+  }
 }
 
 case class VecCdc(vec_id: Long, embedding: Seq[Double], op: String)

@@ -1009,6 +1009,90 @@ class NearDupStoreSpec extends AnyFunSuite {
     // the log is now bounded by the live corpus: ≤ live-pair rows
     assert(!pairSet.exists(p => p._1 == 2L || p._2 == 2L))
   }
+
+  test("a failed inline store apply joins its overlapped leg first; recover() + replay ≡ a fresh seed") {
+    import spark.implicits._
+    import org.apache.hadoop.fs.Path
+    import scala.jdk.CollectionConverters._
+    val Dedup = graft.operators.Dedup
+    val root = java.nio.file.Files.createTempDirectory("neardup_fault").toString
+    val (sigDir, bandDir, pairsDir) = (s"$root/sig", s"$root/band", s"$root/pairs")
+    val det = Dedup.minhashDetector(spark, 0.5)
+    val d1 = "the quick brown fox jumps over the lazy dog by the river tonight"
+    val seed = Seq(1L -> d1,
+      3L -> "completely unrelated text about cooking pasta with garlic and olive oil",
+      4L -> "another distinct document covering mountain hiking trails in early spring")
+    val batch1 = Seq(10L -> d1.replace("tonight", "today"))
+    val batch2 = Seq(11L -> d1.replace("quick", "sly"),
+      12L -> "financial report third quarter revenue grew beyond expectations this year")
+    Dedup.seedNearDupStores(spark, seed.toDF("doc_id", "text"), det, sigDir, bandDir,
+      nBuckets = 64)
+    def tick(d: Dedup.NearDupDetector, docs: Seq[(Long, String)], batchId: Long): Unit =
+      Dedup.nearDupStoreTick(spark, d, sigDir, bandDir, pairsDir, docs.toDF("doc_id", "text"),
+        batchId, nBuckets = 64, bucketCap = 10000)
+    tick(det, batch1, 1L) // both stores carry a published marker from here on
+
+    val fs = new Path(root).getFileSystem(spark.sparkContext.hadoopConfiguration)
+    def read(p: String): String = {
+      val in = fs.open(new Path(p))
+      try new String(in.readAllBytes(), "UTF-8") finally in.close()
+    }
+    def write(p: String, content: String): Unit = {
+      val out = fs.create(new Path(p), true)
+      try out.write(content.getBytes("UTF-8")) finally out.close()
+    }
+    val bandMeta = s"$bandDir/_graft_store_meta"
+    val sigMarker = s"$sigDir/_graft_applied_batch"
+    val (meta0, marker0) = (read(bandMeta), read(sigMarker))
+    // the fault lands while the tick plans its verify — after both
+    // stores' snapshots were resolved, before either store applies: a
+    // second writer re-seeds the band store with another layout, so
+    // the INLINE band apply fails at entry; the row store's marker
+    // reads torn, so the OVERLAPPED row apply retries (~0.5 s) and
+    // then fails too
+    val faulty = det.copy(verify = (cand, rows) => {
+      write(bandMeta, "n=32\nkind=long\n")
+      write(sigMarker, "")
+      det.verify(cand, rows)
+    })
+    val e = intercept[IllegalArgumentException](tick(faulty, batch2, 2L))
+    assert(e.getMessage.contains("bucket-count mismatch"), e.getMessage)
+    // the tick waited for its leg before throwing: the leg's failure
+    // rides along, and no store writer outlives the tick
+    assert(e.getSuppressed.exists(_.getMessage.contains("unreadable")),
+      e.getSuppressed.map(_.getMessage).mkString("; "))
+    val live = Thread.getAllStackTraces.keySet.asScala.filter(t => t.isAlive &&
+      Seq("gone-band-keys-", "rows-append-", "band-tick-").exists(t.getName.startsWith))
+    assert(live.isEmpty, s"store legs still running: ${live.map(_.getName)}")
+
+    // heal: the metadata comes back — both stores still serve the
+    // pre-tick snapshot (nothing published, no manifest names a
+    // missing generation) — recover() sweeps whatever the aborted
+    // applies left, and the redelivered batch replays
+    write(bandMeta, meta0)
+    write(sigMarker, marker0)
+    def idSet(dir: String) = BucketStore.readAll(spark, dir)
+      .select("doc_id").collect().map(_.getLong(0)).toSet
+    val before = (seed ++ batch1).map(_._1).toSet
+    assert(idSet(sigDir) === before && idSet(bandDir) === before)
+    BucketStore.recover(sigDir)
+    BucketStore.recover(bandDir)
+    tick(det, batch2, 2L)
+    val all = seed ++ batch1 ++ batch2
+    Dedup.seedNearDupStores(spark, all.toDF("doc_id", "text"), det,
+      s"$root/sig2", s"$root/band2", nBuckets = 64)
+    def bandSet(dir: String) = BucketStore.readAll(spark, dir)
+      .select("doc_id", "band", "key")
+      .collect().map(r => (r.getLong(0), r.getInt(1), r.getLong(2))).toSet
+    assert(idSet(sigDir) === idSet(s"$root/sig2"))
+    assert(bandSet(bandDir) === bandSet(s"$root/band2"))
+    // the seed holds no pair, so the pair log alone ≡ the batch recompute
+    def pairsOf(df: org.apache.spark.sql.DataFrame) =
+      df.select("doc_a", "doc_b").collect().map(r => (r.getLong(0), r.getLong(1))).toSet
+    val batchPairs = pairsOf(Dedup.minhashLshOn(spark, all.toDF("doc_id", "text"), 0.5))
+    assert(batchPairs.contains((1L, 11L)))
+    assert(pairsOf(Dedup.readPairLog(spark, pairsDir)) === batchPairs)
+  }
 }
 
 case class VecIngest(vec_id: Long, embedding: Seq[Double])
