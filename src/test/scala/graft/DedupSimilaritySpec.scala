@@ -142,59 +142,80 @@ class DedupSimilaritySpec extends AnyFunSuite {
     * tick over the planted corpus, registered under both its `_inc`
     * and `_store` keys), the batch detector the tick must agree with,
     * the corpus both run over, and where the planted copies' ids start.
+    * The tick runs once per family; its `_inc` and `_store` tests below
+    * both read that one run.
     */
-  private case class LadderFamily(name: String, idCol: String, aCol: String, bCol: String,
+  private case class LadderFamily(name: String, store: String, idCol: String,
+      aCol: String, bCol: String,
       corpus: () => org.apache.spark.sql.DataFrame, unplanted: () => Long,
       batch: org.apache.spark.sql.DataFrame => org.apache.spark.sql.DataFrame,
-      tick: String => org.apache.spark.sql.DataFrame, plantedFrom: Long)
+      tick: String => org.apache.spark.sql.DataFrame, plantedFrom: Long) {
+    lazy val run: LadderRun = {
+      val cut = math.floor(unplanted() * 0.8).toLong
+      val input = corpus().cache()
+      def pairs(rows: Array[org.apache.spark.sql.Row]) =
+        rows.map(r => (r.getAs[Long](aCol), r.getAs[Long](bCol))).toSet
+      val full = pairs(batch(input).collect())
+      val base = pairs(batch(input.filter(col(idCol) < cut)).collect())
+      val root = java.nio.file.Files.createTempDirectory(s"ladder_$name").toString
+      val rows = tick(root).collect()
+      val Array(storeRoot) = new java.io.File(root).listFiles().filter(_.isDirectory)
+      val stored = graft.streaming.BucketStore.readAll(spark, s"$storeRoot/rows")
+        .select(idCol).collect().map(_.getLong(0)).toSet
+      val ids = input.select(idCol).collect().map(_.getLong(0)).toSet
+      input.unpersist()
+      spark.catalog.clearCache()
+      LadderRun(cut, full, base, rows, pairs(rows), stored, ids)
+    }
+  }
+
+  private case class LadderRun(cut: Long, full: Set[(Long, Long)], base: Set[(Long, Long)],
+      rows: Array[org.apache.spark.sql.Row], tick: Set[(Long, Long)],
+      stored: Set[Long], corpusIds: Set[Long])
 
   private val ladder = Seq(
-    LadderFamily("minhash", "doc_id", "doc_a", "doc_b",
+    LadderFamily("minhash", "signature", "doc_id", "doc_a", "doc_b",
       () => Dedup.dupPlantedDocs(spark, sf), () => Tables.documents(spark, sf).count(),
       Dedup.minhashLshOn(spark, _, threshold = 0.5),
       root => Dedup.minhashLshIncremental(spark, sf, artifactDir = root), 10000000L),
     // fingerprint-identical planted copies pair their originals at hamming 0
-    LadderFamily("simhash", "doc_id", "doc_a", "doc_b",
+    LadderFamily("simhash", "fingerprint", "doc_id", "doc_a", "doc_b",
       () => Dedup.dupPlantedDocs(spark, sf), () => Tables.documents(spark, sf).count(),
       Dedup.simhashOn(spark, _),
       root => Dedup.simhashIncremental(spark, sf, artifactDir = root), 10000000L),
     // planted near-identical copies (ids ≥ 10⁶) pair their originals
-    LadderFamily("embed-LSH", "vec_id", "vec_a", "vec_b",
+    LadderFamily("embed-LSH", "signature", "vec_id", "vec_a", "vec_b",
       () => Dedup.plantedCorpus(spark, sf, nPlant = 50), () => Tables.embeddings(spark, sf).count(),
       Dedup.embedLshOn(spark, _, threshold = 0.9),
       root => Dedup.embedLshIncremental(spark, sf, artifactDir = root), 1000000L))
 
+  /** The tick contract both keys share: one row per pair, only pairs
+    * touching the delta, and base ∪ tick reproduces the batch run.
+    */
+  private def assertTickContract(f: LadderFamily): Unit = {
+    val r = f.run
+    assert(r.rows.length === r.rows.distinct.length, s"${f.name} tick returned duplicate rows")
+    assert(r.rows.length === r.tick.size)
+    // the tick emits ONLY pairs touching the delta…
+    assert(r.tick.nonEmpty)
+    assert(r.tick.forall { case (a, b) => a >= r.cut || b >= r.cut })
+    assert(r.tick.intersect(r.base).isEmpty)
+    // …and together with the base pairs reproduces the batch run
+    assert(r.base.union(r.tick) === r.full)
+  }
+
   ladder.foreach { f =>
     test(s"incremental ${f.name} tick plus base pairs equals the batch pair set") {
-      val cut = math.floor(f.unplanted() * 0.8).toLong
-      val corpus = f.corpus().cache()
-      def pairs(df: org.apache.spark.sql.DataFrame) =
-        df.collect().map(r => (r.getAs[Long](f.aCol), r.getAs[Long](f.bCol))).toSet
-      val full = pairs(f.batch(corpus))
-      val base = pairs(f.batch(corpus.filter(col(f.idCol) < cut)))
-      val root = java.nio.file.Files.createTempDirectory(s"ladder_${f.name}").toString
-      val out = f.tick(root)
-      val rows = out.collect()
-      val tick = pairs(out)
-      // one row per pair
-      assert(rows.length === rows.distinct.length, s"${f.name} tick returned duplicate rows")
-      assert(rows.length === tick.size)
-      // the tick emits ONLY pairs touching the delta…
-      assert(tick.nonEmpty)
-      assert(tick.forall { case (a, b) => a >= cut || b >= cut })
-      assert(tick.intersect(base).isEmpty)
-      // …and together with the base pairs reproduces the batch run
-      assert(base.union(tick) === full)
+      assertTickContract(f)
       // planted copies guarantee cross-tick pairs at any SF
-      assert(tick.exists { case (_, b) => b >= f.plantedFrom })
+      assert(f.run.tick.exists { case (_, b) => b >= f.plantedFrom })
+    }
+
+    test(s"${f.name} tick through the materialized ${f.store} store matches the batch pair set") {
+      assertTickContract(f)
       // the post-tick row store holds the FULL corpus: delta rows
       // applied, ready to serve the next tick as its base
-      val Array(storeRoot) = new java.io.File(root).listFiles().filter(_.isDirectory)
-      val stored = graft.streaming.BucketStore.readAll(spark, s"$storeRoot/rows")
-        .select(f.idCol).collect().map(_.getLong(0)).toSet
-      assert(stored === corpus.select(f.idCol).collect().map(_.getLong(0)).toSet)
-      corpus.unpersist()
-      spark.catalog.clearCache()
+      assert(f.run.stored === f.run.corpusIds)
     }
   }
 
