@@ -165,12 +165,8 @@ object BenchScale {
     val deltaFacts = factsUnskewed.filter(col("ts") >= lit(cutTs).cast("timestamp"))
       .select(col("user_id"), col("item_id"))
     def soakAt(nBuckets: Int, seedKey: String, tickKey: String): Unit = {
+      // the seed clears the previous run's store at this path
       val soakDir = s"target/graft-scale/cooc_store_${rows}_b$nBuckets"
-      locally {
-        val hp = new org.apache.hadoop.fs.Path(soakDir)
-        hp.getFileSystem(spark.sparkContext.hadoopConfiguration).delete(hp, true)
-        ()
-      }
       // r17: the matrix store is packed-key — (pk, n_users), bucketed
       // by pairBucket (≡ the previous pmod(item_a, n) placement); the
       // read-back projects pk so the timed frame's width matches the
@@ -181,17 +177,8 @@ object BenchScale {
             ItemCF.pairBucket(col("pk"), nBuckets), soakDir, nBuckets)
           graft.streaming.BucketStore.readAll(spark, soakDir).select(col("pk")) })
       timed(tickKey) {
-        val (pairCounts, caches) = ItemCF.deltaPairCountsTracked(oldFacts, deltaFacts)
-        val deltaPairs = pairCounts.cache()
-        val touched = graft.streaming.BucketStore.touchedBuckets(deltaPairs.select(
-          ItemCF.pairBucket(col("pk"), nBuckets).as(graft.streaming.BucketStore.BucketCol)))
-        val matrix = graft.streaming.BucketStore.readBuckets(spark, soakDir, touched, nBuckets)
-        val (changes, mergeCaches) = ItemCF.coocChangesFromPairsPk(matrix, deltaPairs)
-        graft.streaming.BucketStore.applyTick(spark, soakDir,
-          changes.withColumn(graft.streaming.BucketStore.BucketCol,
-            ItemCF.pairBucket(col("pk"), nBuckets)),
-          Seq("pk"), batchId = 0L, n = nBuckets)
-        (caches ++ mergeCaches :+ deltaPairs).foreach(_.unpersist())
+        ItemCF.coocMergeTick(spark, soakDir, oldFacts, deltaFacts, batchId = 0L,
+          nBuckets = nBuckets)
         graft.streaming.BucketStore.readAll(spark, soakDir).select(col("pk"))
       }
     }

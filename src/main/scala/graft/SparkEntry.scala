@@ -60,8 +60,8 @@ object SparkEntry {
     // the incremental identity), tick payload = touched groups only
     "dedup_exact_inc"     -> ((s, d) => Dedup.exactIncremental(s, d)),
     "dedup_exact_delta"   -> ((s, d) => Dedup.exactDelta(s, d)),
-    // the same IVM identity exercised through a REAL parquet store:
-    // base groups materialized, one tick applied, store read back
+    // the same IVM identity through the maintainer's member BucketStore:
+    // base seeded, the rest applied as one dedupMemberTick, groups read back
     "dedup_exact_store"   -> ((s, d) => Dedup.exactIncrementalStore(s, d)),
     "dedup_minhash"       -> ((s, d) => Dedup.minhashLsh(s, d)),
     // the ingest-tick regime, one BucketStore tick: base slice seeded
@@ -191,8 +191,8 @@ object SparkEntry {
     // (touched keys only), delta docs cleaned; oracle = batch
     // restricted to delta ids
     "text_line_dedup_inc"   -> ((s, d) => TextAnalysis.lineDedupIncremental(s, d)),
-    // same identity through a materialized parquet line-count store
-    // (seed -> tick apply -> read back); plan changes, values don't
+    // same identity through the maintainer's line-count BucketStore
+    // (seed -> one lineCountTick -> read back); plan changes, values don't
     "text_line_dedup_store" -> ((s, d) => TextAnalysis.lineDedupStore(s, d)),
     // PII scrub over deterministically planted emails/phones; the full
     // redacted string is value-gated via md5
@@ -308,9 +308,9 @@ object SparkEntry {
     // incremental-view-maintenance path; oracle = the BATCH pair count,
     // so the gate checks the IVM identity itself
     "q_item_cooc_inc" -> ((s, d) => ItemCF.coocIncremental(s, d)),
-    // the same IVM identity through a REAL bucket-partitioned parquet
-    // store: base matrix seeded, one tick applied via BucketStore
-    // (touched buckets only read AND written), store read back
+    // the same IVM identity through the maintainer's matrix BucketStore:
+    // base matrix seeded, one coocMergeTick applied (touched buckets
+    // only read AND written), store read back
     "q_item_cooc_store" -> ((s, d) => ItemCF.coocIncrementalStore(s, d)),
     // the tick payload (changed rows only); oracle = pair-count diff
     "q_item_cooc_delta" -> ((s, d) => ItemCF.coocDeltaDemo(s, d)),
@@ -476,28 +476,10 @@ object SparkEntry {
         |  count(*) AS n_copies
         |FROM documents GROUP BY md5(text)""".stripMargin,
 
-    // the IVM identity: incremental merge must equal the batch dedup
-    // (over the dup-planted corpus — copies land in the delta, their
-    // originals in the base, so groups genuinely merge across the tick)
-    "dedup_exact_inc" ->
-      """WITH p AS (
-        |  SELECT doc_id, text FROM documents
-        |  UNION ALL
-        |  SELECT doc_id + 10000000 AS doc_id, text FROM documents WHERE doc_id % 10 = 3)
-        |SELECT md5(text) AS text_md5, min(doc_id) AS keep_doc_id,
-        |  count(*) AS n_copies
-        |FROM p GROUP BY md5(text)""".stripMargin,
-
-    // the store regime reproduces the identical merged groups — same
-    // IVM-identity oracle as dedup_exact_inc
-    "dedup_exact_store" ->
-      """WITH p AS (
-        |  SELECT doc_id, text FROM documents
-        |  UNION ALL
-        |  SELECT doc_id + 10000000 AS doc_id, text FROM documents WHERE doc_id % 10 = 3)
-        |SELECT md5(text) AS text_md5, min(doc_id) AS keep_doc_id,
-        |  count(*) AS n_copies
-        |FROM p GROUP BY md5(text)""".stripMargin,
+    // the IVM identity: incremental merge must equal the batch dedup;
+    // the store regime reproduces the identical merged groups
+    "dedup_exact_inc" -> dedupExactPlantedOracle,
+    "dedup_exact_store" -> dedupExactPlantedOracle,
 
     "dedup_exact_delta" ->
       """WITH nn AS (SELECT CAST(floor(0.8 * count(*)) AS BIGINT) AS cut FROM documents),
@@ -870,21 +852,10 @@ object SparkEntry {
          |  ON a.user_id = b.user_id AND a.item_id < b.item_id
          |GROUP BY 1, 2 HAVING count(*) >= 3""".stripMargin,
 
-    "q_item_cooc_inc" ->
-      s"""$I SELECT a.item_id AS item_a, b.item_id AS item_b,
-         |  count(*) AS n_users
-         |FROM interactions a JOIN interactions b
-         |  ON a.user_id = b.user_id AND a.item_id < b.item_id
-         |GROUP BY 1, 2 HAVING count(*) >= 3""".stripMargin,
-
-    // the bucketed-store regime reproduces the identical merged
-    // matrix — same IVM-identity oracle as q_item_cooc_inc
-    "q_item_cooc_store" ->
-      s"""$I SELECT a.item_id AS item_a, b.item_id AS item_b,
-         |  count(*) AS n_users
-         |FROM interactions a JOIN interactions b
-         |  ON a.user_id = b.user_id AND a.item_id < b.item_id
-         |GROUP BY 1, 2 HAVING count(*) >= 3""".stripMargin,
+    // the IVM identity: the incremental merge and the bucketed-store
+    // tick both reproduce the batch pair count
+    "q_item_cooc_inc" -> itemCoocOracle,
+    "q_item_cooc_store" -> itemCoocOracle,
 
     "q_item_cooc_delta" ->
       s"""$I, pc_all AS (
@@ -1073,6 +1044,26 @@ object SparkEntry {
       |SELECT doc_id, lang, n_tok, logsb,
       |  ntile(3) OVER (PARTITION BY lang ORDER BY logsb ASC, doc_id ASC) AS tercile
       |FROM d""".stripMargin
+
+  // the batch dedup over the dup-planted corpus (every doc_id % 10 = 3
+  // copied at id + 10⁷): copies land in the delta, their originals in
+  // the base, so groups genuinely merge across the tick
+  private val dedupExactPlantedOracle: String =
+    """WITH p AS (
+      |  SELECT doc_id, text FROM documents
+      |  UNION ALL
+      |  SELECT doc_id + 10000000 AS doc_id, text FROM documents WHERE doc_id % 10 = 3)
+      |SELECT md5(text) AS text_md5, min(doc_id) AS keep_doc_id,
+      |  count(*) AS n_copies
+      |FROM p GROUP BY md5(text)""".stripMargin
+
+  // the batch pair count over the full facts, thresholded at 3 users
+  private val itemCoocOracle: String =
+    s"""$I SELECT a.item_id AS item_a, b.item_id AS item_b,
+       |  count(*) AS n_users
+       |FROM interactions a JOIN interactions b
+       |  ON a.user_id = b.user_id AND a.item_id < b.item_id
+       |GROUP BY 1, 2 HAVING count(*) >= 3""".stripMargin
 
   private val lineDedupDeltaOracle: String =
     """WITH lines AS (

@@ -62,11 +62,11 @@ object Dedup {
     * rather than passing disjoint groups through. Deterministic,
     * mirrored in the oracles.
     *
-    * The tick boundary is FRACTIONAL — the newest `1 - baseFrac` of
-    * corpus ids, with the cut computed in-plan from the corpus count
-    * (broadcast scalar, no driver collect) — so the delta stays a
-    * representative ~20% slice at every scale factor instead of a
-    * fixed id absorbing the whole corpus as the data grows.
+    * The tick boundary is FRACTIONAL — the newest 20% of corpus ids,
+    * with the cut computed in-plan from the corpus count (broadcast
+    * scalar, no driver collect) — so the delta stays a representative
+    * slice at every scale factor instead of a fixed id absorbing the
+    * whole corpus as the data grows.
     */
   private[graft] def dupPlantedDocs(spark: SparkSession, sfDir: String): DataFrame = {
     val docs = Tables.documents(spark, sfDir).select(col("doc_id"), col("text"))
@@ -76,17 +76,16 @@ object Dedup {
   }
 
   /** Planted corpus + the in-plan cut column (docs, cut). */
-  private def dupDocsWithCut(spark: SparkSession, sfDir: String,
-                             baseFrac: Double): DataFrame = {
+  private def dupDocsWithCut(spark: SparkSession, sfDir: String): DataFrame = {
     val cut = Tables.documents(spark, sfDir)
-      .agg(floor(count(lit(1)) * baseFrac).cast("long").as("cut"))
+      .agg(floor(count(lit(1)) * 0.8).cast("long").as("cut"))
     dupPlantedDocs(spark, sfDir)
       .select(col("doc_id"), md5(col("text")).as("text_md5"))
       .crossJoin(broadcast(cut))
   }
 
-  def exactIncremental(spark: SparkSession, sfDir: String, baseFrac: Double = 0.8): DataFrame = {
-    val docs = dupDocsWithCut(spark, sfDir, baseFrac)
+  def exactIncremental(spark: SparkSession, sfDir: String): DataFrame = {
+    val docs = dupDocsWithCut(spark, sfDir)
     val baseG = docs.filter(col("doc_id") < col("cut"))
       .groupBy(col("text_md5"))
       .agg(min(col("doc_id")).as("keep_doc_id"), count(lit(1)).as("n_copies"))
@@ -110,9 +109,9 @@ object Dedup {
     * member — the changed-rows contract itself is value-gated, as
     * with [[ItemCF.coocDelta]].
     */
-  def exactDelta(spark: SparkSession, sfDir: String, baseFrac: Double = 0.8,
+  def exactDelta(spark: SparkSession, sfDir: String,
                  broadcastMaxRows: Long = Hints.DeltaBroadcastMaxRowsMd5): DataFrame = {
-    val docs = dupDocsWithCut(spark, sfDir, baseFrac)
+    val docs = dupDocsWithCut(spark, sfDir)
     val touched = docs.filter(col("doc_id") >= col("cut"))
       .select(col("text_md5")).distinct()
       .cache()
@@ -122,91 +121,31 @@ object Dedup {
       .agg(min(col("doc_id")).as("keep_doc_id"), count(lit(1)).as("n_copies"))
   }
 
-  /** [[exactDeltaApplyTracked]] exercised end-to-end through a REAL
-    * materialized store (registered as `dedup_exact_store`): the base
-    * 80% of the dup-planted corpus is deduped and WRITTEN to a parquet
-    * store, the newest 20% is applied as one tick, and the result is
-    * the post-apply store read back from disk. Oracle = the batch
-    * dedup over the full planted corpus — the same IVM identity
-    * `dedup_exact_inc` gates, but through the store regime the
-    * deployment actually runs: parquet round-trip, store-apply merge,
-    * tick compute ∝ delta. (The streaming twin with staged-swap +
-    * replay guard is [[graft.streaming.DocStream.startDedupMaintain]],
-    * DedupStoreSpec-gated.)
+  /** The exact-dedup store rung (registered as `dedup_exact_store`):
+    * the member store [[graft.streaming.DocStream.startDedupMaintain]]
+    * keeps, exercised end to end — [[seedDedupMemberStore]] on the
+    * planted corpus below the cut (the first 80% of the un-planted
+    * ids), the rest applied as batch 1 through the maintainer's own
+    * [[dedupMemberTick]], the groups read back by [[readDedupGroups]].
+    * Oracle = the batch dedup over the full planted corpus — the IVM
+    * identity `dedup_exact_inc` gates, through the store the
+    * deployment runs. The store root is unique per run
+    * ([[graft.sources.Sinks.freshStoreDir]]), so concurrent runs on
+    * one corpus never share a seed; values are path-independent.
     */
   def exactIncrementalStore(spark: SparkSession, sfDir: String,
-                            baseFrac: Double = 0.8,
                             artifactDir: String = "target/graft-artifacts"): DataFrame = {
-    val cut = Tables.documents(spark, sfDir)
-      .agg(floor(count(lit(1)) * baseFrac).cast("long").as("cut"))
-    val raw = dupPlantedDocs(spark, sfDir).crossJoin(broadcast(cut))
-    // the store lives under a configurable artifacts root — in
-    // production a SHARED filesystem prefix every driver and executor
-    // resolves identically (the same contract as
-    // [[Sampling.curriculumSampleApproxFrozen]]'s cutpoints; a
-    // driver-local temp dir would break the executor read-back on a
-    // real cluster). Fixed path + overwrite bounds retention at one
-    // copy per (corpus, run) instead of leaking a dir per invocation.
-    val digest = java.security.MessageDigest.getInstance("MD5")
-      .digest(sfDir.getBytes("UTF-8")).map("%02x".format(_)).mkString.take(8)
-    val storeDir = s"$artifactDir/dedup_store_$digest"
+    val cut = math.floor(Tables.documents(spark, sfDir).count() * 0.8).toLong
+    val dir = freshStoreDir("dedup_exact", sfDir, artifactDir)
+    val docs = dupPlantedDocs(spark, sfDir)
     graft.PhaseTimer.timed("dedup_exact_store", "seed") {
-      raw.filter(col("doc_id") < col("cut"))
-        .groupBy(md5(col("text")).as("text_md5"))
-        .agg(min(col("doc_id")).as("keep_doc_id"), count(lit(1)).as("n_copies"))
-        .write.mode("overwrite").parquet(storeDir)
+      seedDedupMemberStore(spark, docs.filter(col("doc_id") < cut), dir)
     }
     graft.PhaseTimer.timed("dedup_exact_store", "tick") {
-      val store = spark.read.parquet(storeDir)
-      val delta = raw.filter(col("doc_id") >= col("cut"))
-        .select(col("doc_id"), col("text"))
-      val (changes, _) = exactDeltaApplyTracked(store, delta)
-      store.join(changes.select(col("text_md5")), Seq("text_md5"), "left_anti")
-        .unionByName(changes)
-        .write.mode("overwrite").parquet(storeDir + "_applied")
+      dedupMemberTick(spark, dir, docs.filter(col("doc_id") >= cut), batchId = 1L,
+        nBuckets = -1)
     }
-    // the applied write consumed the seed store — drop it now; the
-    // applied dir IS the lazily returned result and stays until the
-    // next run overwrites it
-    val seedPath = new org.apache.hadoop.fs.Path(storeDir)
-    seedPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      .delete(seedPath, true)
-    spark.read.parquet(storeDir + "_applied")
-  }
-
-  /** Merge one ingest batch of documents into a MATERIALIZED
-    * exact-dedup group store — the store-regime twin of [[exactDelta]]
-    * (whose base is derived in-query for oracle self-containment).
-    * Returns the post-merge state of ONLY the touched groups — the
-    * tick payload the store applies; compute ∝ batch, the store never
-    * shuffles: groups present on both sides merge (min keeper — taken
-    * with `least` so the operator is arrival-order-agnostic; counts
-    * add), brand-new groups pass through. Delta-side hints are
-    * size-gated as everywhere ([[Hints.broadcastIfSmall]]).
-    *
-    * Batch rows are deduped by (doc_id, text) first: at-least-once
-    * delivery WITHIN a tick must not double-count a copy. ACROSS
-    * ticks idempotence belongs to the caller's replay guard (the
-    * applied-batch marker in
-    * [[graft.streaming.DocStream.startDedupMaintain]]).
-    */
-  private[graft] def exactDeltaApplyTracked(store: DataFrame, batch: DataFrame,
-      broadcastMaxRows: Long = Hints.DeltaBroadcastMaxRowsMd5): (DataFrame, Seq[DataFrame]) = {
-    val deltaG = batch.select(col("doc_id"), col("text")).distinct()
-      .groupBy(md5(col("text")).as("text_md5"))
-      .agg(min(col("doc_id")).as("keep_doc_id"), count(lit(1)).as("n_copies"))
-      .cache()
-    val small = deltaG.count() <= broadcastMaxRows
-    def hinted(df: DataFrame): DataFrame = if (small) broadcast(df) else df
-    val bumped = store
-      .join(hinted(deltaG.select(col("text_md5"), col("keep_doc_id").as("d_keep"),
-        col("n_copies").as("d_n"))), Seq("text_md5"))
-      .select(col("text_md5"),
-        least(col("keep_doc_id"), col("d_keep")).as("keep_doc_id"),
-        (col("n_copies") + col("d_n")).as("n_copies"))
-      .cache()
-    val brandNew = deltaG.join(hinted(bumped.select(col("text_md5"))), Seq("text_md5"), "left_anti")
-    (bumped.unionByName(brandNew), Seq(deltaG, bumped))
+    readDedupGroups(spark, dir)
   }
 
   /** Seed the streaming exact-dedup MEMBER store (r14 — the CDC
@@ -232,6 +171,43 @@ object Dedup {
     graft.streaming.BucketStore.seed(members,
       graft.streaming.BucketStore.md5Bucket(col("text_md5"), n),
       storeDir, n, kind = graft.streaming.BucketStore.KindMd5)
+  }
+
+  /** One tick of the member store — the single body behind
+    * [[graft.streaming.DocStream.startDedupMaintain]] and
+    * [[exactIncrementalStore]]. A batch of (doc_id, text) rows is
+    * append-only ingest: its members stack as one O(delta) generation
+    * (`applyAppendTick`; the compaction fold drops a redelivered
+    * member). A batch WITH (op ∈ 'i'|'u'|'d', doc_id, text,
+    * text_before) columns is CDC, merged by one `applyTick`: the new
+    * texts' members are inserted, and the before-image members the new
+    * text does not re-assert are removed (an unchanged-content 'u'
+    * must not delete its member). `nBuckets` ≤ 0 recovers the layout
+    * from the store's meta — resolved here, inside the caller's replay
+    * guard, so an empty first batch against a not-yet-seeded store
+    * stays a no-op rather than a meta lookup crash.
+    */
+  private[graft] def dedupMemberTick(spark: SparkSession, storeDir: String,
+      b: DataFrame, batchId: Long, nBuckets: Int): Unit = {
+    import graft.streaming.BucketStore
+    val n = if (nBuckets > 0) nBuckets else BucketStore.seededBuckets(storeDir)
+    def members(df: DataFrame): DataFrame = df
+      .filter(col("text").isNotNull)
+      .select(md5(col("text")).as("text_md5"), col("doc_id")).distinct()
+      .withColumn(BucketStore.BucketCol, BucketStore.md5Bucket(col("text_md5"), n))
+    if (b.columns.contains("op")) {
+      val changes = members(
+        b.filter(col("op").isin("i", "u")).select(col("doc_id"), col("text")))
+      val removedKeys = members(b.filter(col("op").isin("u", "d"))
+          .select(col("doc_id"), col("text_before").as("text")))
+        .join(changes.select(col("text_md5"), col("doc_id")),
+          Seq("text_md5", "doc_id"), "left_anti")
+      BucketStore.applyTick(spark, storeDir, changes, Seq("text_md5", "doc_id"),
+        batchId, n = n, removed = Some(removedKeys))
+    } else
+      BucketStore.applyAppendTick(spark, storeDir, members(b), batchId, n = n,
+        onCompact = Some(_.dropDuplicates("text_md5", "doc_id")))
+    ()
   }
 
   /** Canonical reader of the member store: the dedup DECISION surface

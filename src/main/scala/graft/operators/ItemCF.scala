@@ -196,7 +196,7 @@ object ItemCF {
   /** (item_a, item_b, n_users) view of a PACKED-key pair frame — the
     * seam between the packed-key domain the aggregations and the
     * matrix STORE live in (r17: the store persists (pk, n_users), see
-    * [[coocIncrementalStore]]) and the unpacked rows the registered
+    * [[coocMergeTick]]) and the unpacked rows the registered
     * queries emit.
     */
   private[graft] def unpackCoocPk(pkCounts: DataFrame): DataFrame =
@@ -459,6 +459,41 @@ object ItemCF {
   private[graft] def pairBucket(pk: org.apache.spark.sql.Column, n: Int): org.apache.spark.sql.Column =
     pmod(shiftrightunsigned(pk, 32), lit(n)).cast("int")
 
+  /** One merge tick of the bucketed matrix store — the single body
+    * behind [[graft.streaming.EventStream.startCoocMaintain]],
+    * [[coocIncrementalStore]] and the scale bench's store soak. The
+    * delta's pair counts ([[deltaPairCountsTracked]]: facts + delta
+    * only) name the touched buckets before any matrix read — the
+    * changed-key set ≡ the delta-pair key set — so the merge
+    * ([[coocChangesFromPairsPk]]) reads only those buckets and
+    * [[graft.streaming.BucketStore.applyTick]] publishes only them.
+    * Every frame the tick caches is released on the way out, a failed
+    * tick included — only this tick's frames: a session-wide
+    * clearCache would thrash concurrent queries' caches. `nBuckets`
+    * ≤ 0 recovers the layout from the store's meta.
+    */
+  private[graft] def coocMergeTick(spark: SparkSession, matrixDir: String,
+      oldFacts: DataFrame, delta: DataFrame, batchId: Long, nBuckets: Int): Unit = {
+    import graft.streaming.BucketStore
+    val n = if (nBuckets > 0) nBuckets else BucketStore.seededBuckets(matrixDir)
+    val caches = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
+    try {
+      val (pairCounts, pairCaches) = deltaPairCountsTracked(oldFacts, delta)
+      caches ++= pairCaches
+      val deltaPairs = pairCounts.cache()
+      caches += deltaPairs
+      val touched = BucketStore.touchedBuckets(deltaPairs.select(
+        pairBucket(col("pk"), n).as(BucketStore.BucketCol)))
+      val (changes, mergeCaches) = coocChangesFromPairsPk(
+        BucketStore.readBuckets(spark, matrixDir, touched, n), deltaPairs)
+      caches ++= mergeCaches
+      BucketStore.applyTick(spark, matrixDir,
+        changes.withColumn(BucketStore.BucketCol, pairBucket(col("pk"), n)),
+        Seq("pk"), batchId, n = n)
+      ()
+    } finally caches.foreach(_.unpersist())
+  }
+
   /** Incremental maintenance of the co-occurrence matrix — merge a
     * delta batch of interactions into existing pair counts. The
     * textbook IVM identity for this additive join-aggregate:
@@ -569,23 +604,17 @@ object ItemCF {
     p.toInt
   }
 
-  /** [[coocDelta]] exercised through a REAL bucket-partitioned matrix
-    * store (registered as `q_item_cooc_store`) — the cooc twin of
-    * [[Dedup.exactIncrementalStore]], and the HASH-GATED proof of the
-    * [[graft.streaming.BucketStore]] regime the streaming maintainer
-    * runs: the pre-cutoff matrix is seeded into a bucketed parquet
-    * store, the post-cutoff interactions apply as ONE tick (delta pair
-    * counts → touched buckets known before any matrix read → pruned
-    * merge → only touched bucket dirs rewritten), and the result is
-    * the post-apply store read back from disk, thresholded. Oracle =
+  /** [[coocDelta]] exercised through the bucketed matrix store the
+    * streaming maintainer keeps (registered as `q_item_cooc_store`):
+    * the pre-2001-06-01 matrix is seeded into a [[graft.streaming
+    * .BucketStore]], the later interactions apply as ONE
+    * [[coocMergeTick]] — the maintainer's own tick — and the result is
+    * the post-apply store read back, thresholded at 3 users. Oracle =
     * the batch pair count over the full facts — the same IVM identity
-    * `q_item_cooc_inc` gates, but through the bucketed store
-    * round-trip the deployment actually runs.
-    *
-    * Store path follows the shared-FS artifacts contract
-    * ([[Sampling.curriculumSampleApproxFrozen]]); the seed clears any
-    * previous run's store dir, so reruns rebuild rather than
-    * replay-skip against a stale marker.
+    * `q_item_cooc_inc` gates, through the store round-trip the
+    * deployment runs. The store root is unique per run
+    * ([[graft.sources.Sinks.freshStoreDir]]), so concurrent runs on
+    * one corpus never share a seed.
     *
     * Cost note: the measured time is seed + tick — the in-query seed
     * materializes the full unfiltered matrix (two shuffles: the pair
@@ -598,41 +627,30 @@ object ItemCF {
     * timing, is what this query exists for.
     */
   def coocIncrementalStore(spark: SparkSession, sfDir: String,
-      cutoff: String = "2001-06-01", minUsers: Int = 3, nBuckets: Int = -1,
       artifactDir: String = "target/graft-artifacts"): DataFrame = {
     import graft.streaming.BucketStore
-    val digest = java.security.MessageDigest.getInstance("MD5")
-      .digest(sfDir.getBytes("UTF-8")).map("%02x".format(_)).mkString.take(8)
-    val storeDir = s"$artifactDir/cooc_store_$digest"
-    locally {
-      val hp = new org.apache.hadoop.fs.Path(storeDir)
-      hp.getFileSystem(spark.sparkContext.hadoopConfiguration).delete(hp, true)
-      ()
-    }
+    val storeDir = graft.sources.Sinks.freshStoreDir("cooc_store", sfDir, artifactDir)
     val base = Tables.interactions(spark, sfDir)
       .select(col("user_id"), col("item_id"), col("ts"))
       .cache()
-    val old = base.filter(col("ts") < lit(cutoff).cast("date"))
+    val old = base.filter(col("ts") < lit("2001-06-01").cast("date"))
       .select(col("user_id"), col("item_id")).cache()
-    val delta = base.filter(col("ts") >= lit(cutoff).cast("date"))
+    val delta = base.filter(col("ts") >= lit("2001-06-01").cast("date"))
       .select(col("user_id"), col("item_id"))
-    // nBuckets ≤ 0 (the r16 default): the layout derives from the
-    // MATRIX row count ([[deriveMatrixBuckets]] — the measured curve,
-    // NOT the row-store one; test SFs keep the historical 64). The
-    // matrix is cached across the count and the seed write — the
-    // derive costs one read of an already-materialized frame, and a
-    // 100 TB deployment that cannot cache its matrix pays one count
-    // pass on its one-off seed (or passes the count explicitly).
+    // the layout derives from the MATRIX row count
+    // ([[deriveMatrixBuckets]] — the measured curve, NOT the row-store
+    // one; test SFs keep the historical 64). The matrix is cached
+    // across the count and the seed write — the derive costs one read
+    // of an already-materialized frame.
     //
     // r17: the store persists the PACKED pair key — (pk, n_users), pk
     // = item_a << 32 | item_b, bucketed by pairBucket (≡ the previous
     // pmod(item_a, n), so bucket placement is unchanged). Two longs
     // per row instead of three through every store read, the merge
     // tick's joins, the bucket shuffle, and the parquet write; and
-    // applyTick's carry-over anti keys on ONE long. Measured at sf0.1
-    // (12.1M matrix rows): the tick phase 10.8 → see OPTIMIZATION_r17.
+    // applyTick's carry-over anti keys on ONE long.
     val seedMatrix = coocCountsPkOn(old).cache()
-    val n = if (nBuckets > 0) nBuckets else deriveMatrixBuckets(seedMatrix.count())
+    val n = deriveMatrixBuckets(seedMatrix.count())
     graft.PhaseTimer.timed("q_item_cooc_store", "seed") {
       BucketStore.seed(seedMatrix, pairBucket(col("pk"), n), storeDir, n)
     }
@@ -642,21 +660,11 @@ object ItemCF {
     // (overlapped) at sf0.1: both legs are parallel shuffles that
     // saturate the cores, so there is no straggler tail to back-fill
     // and the concurrent shuffles only contend. Kept serial.
-    val (pairCounts, pairCaches) = deltaPairCountsTracked(old, delta)
-    val deltaPairs = pairCounts.cache()
-    val mergeCaches = graft.PhaseTimer.timed("q_item_cooc_store", "tick") {
-      val touched = BucketStore.touchedBuckets(deltaPairs.select(
-        pairBucket(col("pk"), n).as(BucketStore.BucketCol)))
-      val matrix = BucketStore.readBuckets(spark, storeDir, touched, n)
-      val (changes, caches) = coocChangesFromPairsPk(matrix, deltaPairs)
-      BucketStore.applyTick(spark, storeDir,
-        changes.withColumn(BucketStore.BucketCol, pairBucket(col("pk"), n)),
-        Seq("pk"), batchId = 0L, n = n)
-      caches
-    }
-    (pairCaches ++ Seq(base, old, deltaPairs, seedMatrix) ++ mergeCaches).foreach(_.unpersist())
+    try graft.PhaseTimer.timed("q_item_cooc_store", "tick") {
+      coocMergeTick(spark, storeDir, old, delta, batchId = 0L, nBuckets = n)
+    } finally Seq(base, old, seedMatrix).foreach(_.unpersist())
     unpackCoocPk(BucketStore.readAll(spark, storeDir)
-      .filter(col("n_users") >= minUsers))
+      .filter(col("n_users") >= 3))
   }
 
   /** Item-item cosine similarity over user-rating vectors:

@@ -157,8 +157,8 @@ object Mutations {
 
   /** Oracle-gated CDC snapshot lifecycle through the bucketed store
     * (`q_ratings_cdc_store`) — the ratings twin of
-    * [[graft.operators.ItemCF.coocIncrementalStore]], and the
-    * HASH-GATED proof of the regime
+    * [[graft.operators.ItemCF.coocIncrementalStore]] (each rung runs
+    * its maintainer's own named tick), and the HASH-GATED proof of the regime
     * [[graft.streaming.EventStream.startCdcApply]] runs: the ratings
     * fact is seeded into a [[graft.streaming.BucketStore]] on
     * `pmod(user_id, nBuckets)`, one deterministic data-derived CDC

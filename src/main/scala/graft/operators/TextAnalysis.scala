@@ -505,10 +505,9 @@ object TextAnalysis {
     * to the batch operator restricted to delta ids, which is the
     * registered oracle.
     */
-  def lineDedupIncremental(spark: SparkSession, sfDir: String, minDocs: Int = 2,
-                           baseFrac: Double = 0.8): DataFrame = {
+  def lineDedupIncremental(spark: SparkSession, sfDir: String, minDocs: Int = 2): DataFrame = {
     val docs = Tables.documents(spark, sfDir).select(col("doc_id"), col("text"))
-    val cut = docs.agg(floor(count(lit(1)) * baseFrac).cast("long").as("cut"))
+    val cut = docs.agg(floor(count(lit(1)) * 0.8).cast("long").as("cut"))
     val all = docs.crossJoin(broadcast(cut))
     val base = all.filter(col("doc_id") < col("cut")).select(col("doc_id"), col("text"))
     val delta = all.filter(col("doc_id") >= col("cut")).select(col("doc_id"), col("text"))
@@ -528,57 +527,38 @@ object TextAnalysis {
     cleanWithBoiler(delta, merged.filter(col("ndocs") >= minDocs).select(col("k")))
   }
 
-  /** [[lineDedupDeltaOf]] through a REAL materialized line-count store
-    * (registered `text_line_dedup_store`, same structure as
-    * [[Dedup.exactIncrementalStore]]): base counts written to parquet,
-    * one delta tick applied — untouched keys pass through untouched,
-    * touched keys merge — the post-apply store round-trips through
-    * disk, and the returned result is the delta cleaned against it.
-    * Same oracle as the incremental rung: the store plumbing changes
-    * the plan, never the values.
+  /** [[lineDedupIncremental]] through the line-count store the
+    * streaming maintainer keeps (registered `text_line_dedup_store`):
+    * the first 80% of the corpus ids' counts are seeded into a
+    * md5-bucketed [[graft.streaming.BucketStore]], the rest apply as
+    * batch 1 through the maintainer's own
+    * [[graft.streaming.DocStream.lineCountTick]], and the delta docs
+    * are cleaned against the store's merged counts
+    * ([[graft.streaming.DocStream.readLineCounts]]) at 2+ docs. Same
+    * oracle as the incremental rung: the store plumbing changes the
+    * plan, never the values. The store root is unique per run
+    * ([[graft.sources.Sinks.freshStoreDir]]), so concurrent runs on one
+    * corpus never share a seed.
     */
-  def lineDedupStore(spark: SparkSession, sfDir: String, minDocs: Int = 2,
-                     baseFrac: Double = 0.8,
+  def lineDedupStore(spark: SparkSession, sfDir: String,
                      artifactDir: String = "target/graft-artifacts"): DataFrame = {
+    import graft.streaming.{BucketStore, DocStream}
     val docs = Tables.documents(spark, sfDir).select(col("doc_id"), col("text"))
-    val cut = docs.agg(floor(count(lit(1)) * baseFrac).cast("long").as("cut"))
-    val all = docs.crossJoin(broadcast(cut))
-    val base = all.filter(col("doc_id") < col("cut")).select(col("doc_id"), col("text"))
-    val delta = all.filter(col("doc_id") >= col("cut")).select(col("doc_id"), col("text"))
-    // per-run unique store path: a deterministic shared path would
-    // let two concurrent invocations on the same sfDir (e.g. bench
-    // and oracle harness) race each other's seed-delete/overwrite —
-    // the values are path-independent, so uniqueness costs nothing
-    // but a leftover _applied dir under the (test-local) artifactDir
-    val digest = java.security.MessageDigest.getInstance("MD5")
-      .digest(sfDir.getBytes("UTF-8")).map("%02x".format(_)).mkString.take(8)
-    val runId = java.util.UUID.randomUUID().toString.take(8)
-    val storeDir = s"$artifactDir/line_store_${digest}_$runId"
+    val cut = math.floor(docs.count() * 0.8).toLong
+    val delta = docs.filter(col("doc_id") >= cut)
+    val dir = graft.sources.Sinks.freshStoreDir("line_store", sfDir, artifactDir)
     graft.PhaseTimer.timed("text_line_dedup_store", "seed") {
-      lineCountsOf(base).write.mode("overwrite").parquet(storeDir)
+      val counts = lineCountsOf(docs.filter(col("doc_id") < cut)).cache()
+      try {
+        val n = BucketStore.deriveBuckets(counts.count())
+        BucketStore.seed(counts, BucketStore.md5Bucket(md5(col("k")), n), dir, n,
+          kind = BucketStore.KindMd5)
+      } finally counts.unpersist()
     }
     graft.PhaseTimer.timed("text_line_dedup_store", "tick") {
-      val store = spark.read.parquet(storeDir)
-      val deltaCounts = lineCountsOf(delta).cache()
-      // one size-gate decides BOTH joins (r17): the previous shape
-      // called broadcastIfSmall twice on the same projection — two
-      // counting jobs over the cached delta for one decision
-      val deltaKeys = Hints.broadcastIfSmall(deltaCounts.select(col("k")))
-      val untouched = store.join(deltaKeys, Seq("k"), "left_anti")
-      val changes = store
-        .join(deltaKeys, Seq("k"), "left_semi")
-        .unionByName(deltaCounts)
-        .groupBy(col("k")).agg(sum(col("ndocs")).as("ndocs"))
-      untouched.unionByName(changes)
-        .write.mode("overwrite").parquet(storeDir + "_applied")
+      DocStream.lineCountTick(spark, dir, delta, batchId = 1L, nBuckets = -1)
     }
-    // the applied write consumed the seed — drop it; the applied dir
-    // IS the store until the next run overwrites it
-    val seedPath = new org.apache.hadoop.fs.Path(storeDir)
-    seedPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      .delete(seedPath, true)
-    val applied = spark.read.parquet(storeDir + "_applied")
-    cleanWithBoiler(delta, applied.filter(col("ndocs") >= minDocs).select(col("k")))
+    cleanWithBoiler(delta, DocStream.readLineCounts(spark, dir).filter(col("ndocs") >= 2))
   }
 
   /** Rolling polynomial (Rabin-Karp-style) document fingerprint over

@@ -17,6 +17,26 @@ object DocStream {
 
   private val log = org.slf4j.LoggerFactory.getLogger("graft.streaming.DocStream")
 
+  /** A document micro-batch, deduplicated: its (doc_id, text) rows, or
+    * (op, doc_id, text, text_before) when it carries an `op` column (a
+    * CDC feed). At-least-once delivery inside one trigger must not
+    * count a row twice.
+    */
+  private def docBatch(batch: DataFrame): DataFrame = {
+    val cols = if (batch.columns.contains("op")) Seq("op", "doc_id", "text", "text_before")
+      else Seq("doc_id", "text")
+    batch.select(cols.map(col): _*).distinct()
+  }
+
+  /** Run one micro-batch body over `df` cached, and release the cache
+    * whether the tick lands or throws: a failed tick must not leave its
+    * batch pinned for the rest of the session.
+    */
+  private def withCached(df: DataFrame)(body: DataFrame => Unit): Unit = {
+    val b = df.cache()
+    try body(b) finally { b.unpersist(); () }
+  }
+
   /** Keep the first arrival of each distinct content hash.
     * `dropDuplicatesWithinWatermark` holds one state entry per
     * DISTINCT content seen within the watermark horizon and expires
@@ -231,66 +251,65 @@ object DocStream {
         val isCdc = batch.columns.contains("op")
         val cols = if (isCdc) col("op") +: d.inputCols.map(col)
           else d.inputCols.map(col)
-        val b = batch.toDF().select(cols: _*).distinct().cache()
-        // replay guard on the store each path applies LAST (append:
-        // rows→band; CDC: band→rows). Guarding on the first-moved
-        // store would skip a crash-interrupted tick on redelivery and
-        // permanently strand the second store.
-        val commitDir = if (isCdc) rowsDir else bandDir
-        if (b.count() > 0 && BucketStore.appliedBatchId(commitDir) < batchId) {
-          // nBuckets ≤ 0 (the r15 default): the store's own meta IS
-          // the layout contract — recover it rather than trust an
-          // operator-typed count (seeds now DERIVE their count, so a
-          // maintainer default that guessed 64 would mismatch any
-          // derived-layout store; explicit counts still assert)
-          val n = if (nBuckets > 0) nBuckets
-            else BucketStore.seededBuckets(rowsDir)
-          if (isCdc)
-            graft.operators.Dedup.nearDupStoreCdcTick(spark, d, rowsDir, bandDir,
-              pairsDir, b, batchId, n, bucketCap)
-          else
-            graft.operators.Dedup.nearDupStoreTick(spark, d, rowsDir, bandDir,
-              pairsDir, b, batchId, n, bucketCap)
-          // planted-recall drift probe over a hash-sample of THIS
-          // tick's rows (the startIvfMaintain convention): exact-copy
-          // plants must pair with their just-ticked sources, so every
-          // miss isolates a stale hot-bucket freeze — the banded
-          // families' staleness signal. CDC batches skip it (delete
-          // rows carry null payloads the detector can't sample).
-          probe.filter(p => !isCdc && batchId % p.everyNTicks.max(1) == 0).foreach { p =>
-            val qs = b.orderBy(md5(col(d.idCol).cast("string"))).limit(p.sample)
-            val r = graft.operators.Dedup.bandedDriftProbe(spark, d,
-              rowsDir, bandDir, qs, n, bucketCap, p.floor)
-            log.info(s"$bandDir batch=$batchId $r")
-            if (r.tripped) {
-              log.warn(s"$bandDir batch=$batchId PLANTED-RECALL DRIFT: $r — " +
-                "the sampled rows' band keys are hot-frozen; raise bucketCap " +
-                "or re-band/rebuild the store")
-              p.onDrift(batchId, r)
+        withCached(batch.toDF().select(cols: _*).distinct()) { b =>
+          // replay guard on the store each path applies LAST (append:
+          // rows→band; CDC: band→rows). Guarding on the first-moved
+          // store would skip a crash-interrupted tick on redelivery and
+          // permanently strand the second store.
+          val commitDir = if (isCdc) rowsDir else bandDir
+          if (b.count() > 0 && BucketStore.appliedBatchId(commitDir) < batchId) {
+            // nBuckets ≤ 0 (the r15 default): the store's own meta IS
+            // the layout contract — recover it rather than trust an
+            // operator-typed count (seeds now DERIVE their count, so a
+            // maintainer default that guessed 64 would mismatch any
+            // derived-layout store; explicit counts still assert)
+            val n = if (nBuckets > 0) nBuckets
+              else BucketStore.seededBuckets(rowsDir)
+            if (isCdc)
+              graft.operators.Dedup.nearDupStoreCdcTick(spark, d, rowsDir, bandDir,
+                pairsDir, b, batchId, n, bucketCap)
+            else
+              graft.operators.Dedup.nearDupStoreTick(spark, d, rowsDir, bandDir,
+                pairsDir, b, batchId, n, bucketCap)
+            // planted-recall drift probe over a hash-sample of THIS
+            // tick's rows (the startIvfMaintain convention): exact-copy
+            // plants must pair with their just-ticked sources, so every
+            // miss isolates a stale hot-bucket freeze — the banded
+            // families' staleness signal. CDC batches skip it (delete
+            // rows carry null payloads the detector can't sample).
+            probe.filter(p => !isCdc && batchId % p.everyNTicks.max(1) == 0).foreach { p =>
+              val qs = b.orderBy(md5(col(d.idCol).cast("string"))).limit(p.sample)
+              val r = graft.operators.Dedup.bandedDriftProbe(spark, d,
+                rowsDir, bandDir, qs, n, bucketCap, p.floor)
+              log.info(s"$bandDir batch=$batchId $r")
+              if (r.tripped) {
+                log.warn(s"$bandDir batch=$batchId PLANTED-RECALL DRIFT: $r — " +
+                  "the sampled rows' band keys are hot-frozen; raise bucketCap " +
+                  "or re-band/rebuild the store")
+                p.onDrift(batchId, r)
+              }
+            }
+            // r15 (the r14 verdict's #6): the pair log folds ITSELF —
+            // every `compactPairsEveryNTicks` ticks the maintainer runs
+            // the live-filtered fold (the maxLiveGenerations deferred-
+            // compaction precedent), instead of leaving compaction
+            // operator-initiated. Without this the log grows one dir per
+            // tick forever AND keeps tombstoned ids' pairs (an event log
+            // grows with history, not the live corpus). Fold point:
+            // after this tick's stores committed, up to the replay-guard
+            // marker — a replayed batch ≤ the marker skips its tick
+            // (pair write included), so folded batches are never
+            // rewritten. The live set is the row store's current id
+            // column (corpus-∝ — semi-joined, never collected).
+            if (compactPairsEveryNTicks > 0 && batchId > 0 &&
+                batchId % compactPairsEveryNTicks == 0) {
+              val live = BucketStore.readAll(spark, rowsDir).select(col(d.idCol))
+              graft.operators.Dedup.compactPairLog(spark, pairsDir,
+                upTo = BucketStore.appliedBatchId(commitDir),
+                live = Some(live), idCols = Seq(d.aCol, d.bCol))
             }
           }
-          // r15 (the r14 verdict's #6): the pair log folds ITSELF —
-          // every `compactPairsEveryNTicks` ticks the maintainer runs
-          // the live-filtered fold (the maxLiveGenerations deferred-
-          // compaction precedent), instead of leaving compaction
-          // operator-initiated. Without this the log grows one dir per
-          // tick forever AND keeps tombstoned ids' pairs (an event log
-          // grows with history, not the live corpus). Fold point:
-          // after this tick's stores committed, up to the replay-guard
-          // marker — a replayed batch ≤ the marker skips its tick
-          // (pair write included), so folded batches are never
-          // rewritten. The live set is the row store's current id
-          // column (corpus-∝ — semi-joined, never collected).
-          if (compactPairsEveryNTicks > 0 && batchId > 0 &&
-              batchId % compactPairsEveryNTicks == 0) {
-            val live = BucketStore.readAll(spark, rowsDir).select(col(d.idCol))
-            graft.operators.Dedup.compactPairLog(spark, pairsDir,
-              upTo = BucketStore.appliedBatchId(commitDir),
-              live = Some(live), idCols = Seq(d.aCol, d.bCol))
-          }
         }
-        b.unpersist()
-        ()
       }
       .start()
 
@@ -325,7 +344,9 @@ object DocStream {
     * The store IS the dedup decision surface: `keep_doc_id` per
     * content group, `n_copies` for audit — the reference recomputes
     * its dedup from scratch per ingest (prepare_dataset.py); this is
-    * that tick made incremental.
+    * that tick made incremental. Each micro-batch runs one
+    * [[graft.operators.Dedup.dedupMemberTick]], the tick the
+    * registered `dedup_exact_store` rung runs too.
     *
     * @param docs          streaming (doc_id, text) ingest rows —
     *                      optionally with the CDC op columns above
@@ -345,54 +366,19 @@ object DocStream {
       .outputMode(OutputMode.Append())
       .option("checkpointLocation", checkpointDir)
       .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        val spark = batch.sparkSession
         BucketStore.recover(storeDir)
-        val isCdc = batch.columns.contains("op")
-        val cols = if (isCdc)
-          Seq(col("op"), col("doc_id"), col("text"), col("text_before"))
-        else Seq(col("doc_id"), col("text"))
-        val b = batch.toDF().select(cols: _*).distinct().cache()
-        if (b.count() > 0 && BucketStore.appliedBatchId(storeDir) < batchId) {
-          // nBuckets ≤ 0 (r15 default): recover the layout from the
-          // store's own meta — seeds derive their count now, so a
-          // guessed default would mismatch a derived-layout store.
-          // Resolved INSIDE the guard (the other maintainers'
-          // convention): an empty first batch against a not-yet-
-          // seeded store must stay a no-op, not a meta lookup crash.
-          val n = if (nBuckets > 0) nBuckets else BucketStore.seededBuckets(storeDir)
-          def members(df: DataFrame): DataFrame = df
-            .filter(col("text").isNotNull)
-            .select(md5(col("text")).as("text_md5"), col("doc_id")).distinct()
-            .withColumn(BucketStore.BucketCol,
-              BucketStore.md5Bucket(col("text_md5"), n))
-          if (isCdc) {
-            val changes = members(
-              b.filter(col("op").isin("i", "u")).select(col("doc_id"), col("text")))
-            // before-image members not re-asserted by the new text
-            // (an unchanged-content 'u' must not delete its member)
-            val removedKeys = members(b.filter(col("op").isin("u", "d"))
-                .select(col("doc_id"), col("text_before").as("text")))
-              .join(changes.select(col("text_md5"), col("doc_id")),
-                Seq("text_md5", "doc_id"), "left_anti")
-            BucketStore.applyTick(spark, storeDir, changes,
-              Seq("text_md5", "doc_id"), batchId, n = n,
-              removed = Some(removedKeys))
-          } else {
-            BucketStore.applyAppendTick(spark, storeDir,
-              members(b), batchId, n = n,
-              onCompact = Some(_.dropDuplicates("text_md5", "doc_id")))
-          }
-          ()
+        withCached(docBatch(batch)) { b =>
+          if (b.count() > 0 && BucketStore.appliedBatchId(storeDir) < batchId)
+            graft.operators.Dedup.dedupMemberTick(batch.sparkSession, storeDir, b,
+              batchId, nBuckets)
         }
-        b.unpersist()
-        ()
       }
       .start()
 
   /** Streaming materialized view of the boilerplate LINE-COUNT store —
     * the continuous rung of the [[graft.operators.TextAnalysis
-    * .lineDedup]] family (batch → inc → parquet store → this): each
-    * micro-batch's distinct (line-key, doc) counts land as PARTIAL
+    * .lineDedup]] family (batch → inc → store rung → this; the last
+    * two share [[lineCountTick]]): each micro-batch's distinct (line-key, doc) counts land as PARTIAL
     * (k, ndocs) rows through the MERGE-ON-READ append protocol
     * (r13): the tick writes its own counts as one stacked generation
     * with ZERO carry-over reads — a text batch's line keys hash
@@ -427,39 +413,46 @@ object DocStream {
       .outputMode(OutputMode.Append())
       .option("checkpointLocation", checkpointDir)
       .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        val spark = batch.sparkSession
         BucketStore.recover(storeDir)
-        val isCdc = batch.columns.contains("op")
-        val cols = if (isCdc)
-          Seq(col("op"), col("doc_id"), col("text"), col("text_before"))
-        else Seq(col("doc_id"), col("text"))
-        val b = batch.toDF().select(cols: _*).distinct().cache()
-        if (b.count() > 0 && BucketStore.appliedBatchId(storeDir) < batchId) {
-          // nBuckets ≤ 0 (r15 default): the store meta is the layout
-          val n = if (nBuckets > 0) nBuckets
-            else BucketStore.seededBuckets(storeDir)
-          def counts(df: DataFrame, sign: Int): DataFrame =
-            graft.operators.TextAnalysis.lineCountsOf(df.filter(col("text").isNotNull))
-              .select(col("k"), (col("ndocs") * sign).as("ndocs"))
-          val deltaCounts =
-            if (isCdc)
-              counts(b.filter(col("op").isin("i", "u"))
-                  .select(col("doc_id"), col("text")), 1)
-                .unionByName(counts(b.filter(col("op").isin("u", "d"))
-                  .select(col("doc_id"), col("text_before").as("text")), -1))
-            else counts(b, 1)
-          BucketStore.applyAppendTick(spark, storeDir,
-            deltaCounts.withColumn(BucketStore.BucketCol,
-              BucketStore.md5Bucket(md5(col("k")), n)),
-            batchId, n = n,
-            onCompact = Some(_.groupBy(col("k"), col(BucketStore.BucketCol))
-              .agg(sum(col("ndocs")).as("ndocs"))
-              .filter(col("ndocs") =!= 0)))
+        withCached(docBatch(batch)) { b =>
+          if (b.count() > 0 && BucketStore.appliedBatchId(storeDir) < batchId)
+            lineCountTick(batch.sparkSession, storeDir, b, batchId, nBuckets)
         }
-        b.unpersist()
-        ()
       }
       .start()
+
+  /** One tick of the line-count store — the single body behind
+    * [[startLineCountMaintain]] and
+    * [[graft.operators.TextAnalysis.lineDedupStore]]: the batch's
+    * (line-key, doc) counts append as one generation of PARTIAL
+    * (k, ndocs) rows, with the SUM fold as the compaction reduction.
+    * A batch WITH (op, doc_id, text, text_before) columns appends
+    * signed partials: the before-image's counts negated, the new
+    * text's positive. `nBuckets` ≤ 0 recovers the layout from the
+    * store's meta.
+    */
+  private[graft] def lineCountTick(spark: SparkSession, storeDir: String, b: DataFrame,
+                                   batchId: Long, nBuckets: Int): Unit = {
+    val n = if (nBuckets > 0) nBuckets else BucketStore.seededBuckets(storeDir)
+    def counts(df: DataFrame, sign: Int): DataFrame =
+      graft.operators.TextAnalysis.lineCountsOf(df.filter(col("text").isNotNull))
+        .select(col("k"), (col("ndocs") * sign).as("ndocs"))
+    val deltaCounts =
+      if (b.columns.contains("op"))
+        counts(b.filter(col("op").isin("i", "u"))
+            .select(col("doc_id"), col("text")), 1)
+          .unionByName(counts(b.filter(col("op").isin("u", "d"))
+            .select(col("doc_id"), col("text_before").as("text")), -1))
+      else counts(b, 1)
+    BucketStore.applyAppendTick(spark, storeDir,
+      deltaCounts.withColumn(BucketStore.BucketCol,
+        BucketStore.md5Bucket(md5(col("k")), n)),
+      batchId, n = n,
+      onCompact = Some(_.groupBy(col("k"), col(BucketStore.BucketCol))
+        .agg(sum(col("ndocs")).as("ndocs"))
+        .filter(col("ndocs") =!= 0)))
+    ()
+  }
 
   /** Canonical reader of the line-count store: generations hold
     * PARTIAL per-tick counts (see [[startLineCountMaintain]]), so
@@ -577,99 +570,97 @@ object DocStream {
         // coexist as a duplicate. Re-embeds MUST arrive as CDC
         // delete+upsert; "insert" below names that contract.
         val hasOp = batch.columns.contains("op")
-        val b = batch.toDF()
-          .select(col("vec_id"), col("embedding").cast("array<double>").as("v"),
-            (if (hasOp) col("op") else lit("insert")).as("op"))
-          .distinct()
-          .withColumn("norm", sqrt(expr("graft_dot(v, v)")))
-          .cache()
-        if (b.count() > 0 && BucketStore.appliedBatchId(storeDir) < batchId) {
-          val cents = graft.operators.Similarity.loadCentroids(spark, centroidsDir)
-          // nlist ≤ 0: the centroid artifact is the bucket contract
-          val nl = if (nlist > 0) nlist else cents.size
-          val ups = b.filter(col("op").isin("upsert", "insert")).drop("op")
-          val removed =
-            if (hasOp) Some(b.filter(col("op") === "delete").drop("op")) else None
-          // optional id-bucketed (vec_id, v, norm) SIDECAR mirror —
-          // the row store hard-negative mining reads id-pruned (r14;
-          // seed with Retrieval.seedVecSidecar). Applies BEFORE the
-          // main store so the main marker stays the batch's commit
-          // point (the r14 commit-store rule); a crash in between
-          // replays, the sidecar skipping on its own marker. Deletes
-          // need no before-image here — the sidecar is bucketed by
-          // the id itself.
-          byIdDir.foreach { sd =>
-            BucketStore.recover(sd)
-            // r16: the sidecar layout derives at seed time — recover
-            // it from the store meta (the seededBuckets contract)
-            val sb = BucketStore.seededBuckets(sd)
-            def bucketed(df: DataFrame) = df
-              .select(col("vec_id"), col("v"), col("norm"))
-              .withColumn(BucketStore.BucketCol,
-                BucketStore.longBucket(col("vec_id"), sb))
-            removed match {
-              case Some(r) =>
-                BucketStore.applyTick(spark, sd, bucketed(ups),
-                  Seq("vec_id"), batchId, n = sb,
-                  removed = Some(r.select(col("vec_id"),
-                    BucketStore.longBucket(col("vec_id"), sb)
-                      .as(BucketStore.BucketCol))))
+        withCached(batch.toDF()
+            .select(col("vec_id"), col("embedding").cast("array<double>").as("v"),
+              (if (hasOp) col("op") else lit("insert")).as("op"))
+            .distinct()
+            .withColumn("norm", sqrt(expr("graft_dot(v, v)")))) { b =>
+          if (b.count() > 0 && BucketStore.appliedBatchId(storeDir) < batchId) {
+            val cents = graft.operators.Similarity.loadCentroids(spark, centroidsDir)
+            // nlist ≤ 0: the centroid artifact is the bucket contract
+            val nl = if (nlist > 0) nlist else cents.size
+            val ups = b.filter(col("op").isin("upsert", "insert")).drop("op")
+            val removed =
+              if (hasOp) Some(b.filter(col("op") === "delete").drop("op")) else None
+            // optional id-bucketed (vec_id, v, norm) SIDECAR mirror —
+            // the row store hard-negative mining reads id-pruned (r14;
+            // seed with Retrieval.seedVecSidecar). Applies BEFORE the
+            // main store so the main marker stays the batch's commit
+            // point (the r14 commit-store rule); a crash in between
+            // replays, the sidecar skipping on its own marker. Deletes
+            // need no before-image here — the sidecar is bucketed by
+            // the id itself.
+            byIdDir.foreach { sd =>
+              BucketStore.recover(sd)
+              // r16: the sidecar layout derives at seed time — recover
+              // it from the store meta (the seededBuckets contract)
+              val sb = BucketStore.seededBuckets(sd)
+              def bucketed(df: DataFrame) = df
+                .select(col("vec_id"), col("v"), col("norm"))
+                .withColumn(BucketStore.BucketCol,
+                  BucketStore.longBucket(col("vec_id"), sb))
+              removed match {
+                case Some(r) =>
+                  BucketStore.applyTick(spark, sd, bucketed(ups),
+                    Seq("vec_id"), batchId, n = sb,
+                    removed = Some(r.select(col("vec_id"),
+                      BucketStore.longBucket(col("vec_id"), sb)
+                        .as(BucketStore.BucketCol))))
+                case None =>
+                  BucketStore.applyAppendTick(spark, sd, bucketed(ups),
+                    batchId, n = sb)
+              }
+              ()
+            }
+            codebooksDir match {
+              case Some(bd) =>
+                graft.operators.Similarity.ivfPqAppendTick(spark, storeDir, cents,
+                  graft.operators.Similarity.loadCodebooks(spark, bd),
+                  ups, batchId, nl, removedVectors = removed)
               case None =>
-                BucketStore.applyAppendTick(spark, sd, bucketed(ups),
-                  batchId, n = sb)
+                graft.operators.Similarity.ivfAppendTick(spark, storeDir, cents,
+                  ups, batchId, nl, removedVectors = removed)
             }
-            ()
-          }
-          codebooksDir match {
-            case Some(bd) =>
-              graft.operators.Similarity.ivfPqAppendTick(spark, storeDir, cents,
-                graft.operators.Similarity.loadCodebooks(spark, bd),
-                ups, batchId, nl, removedVectors = removed)
-            case None =>
-              graft.operators.Similarity.ivfAppendTick(spark, storeDir, cents,
-                ups, batchId, nl, removedVectors = removed)
-          }
-          probe.filter(p => batchId % p.everyNTicks.max(1) == 0).foreach { p =>
-            // probe queries = a deterministic hash-sample of THIS
-            // tick's upserts: freshly landed vectors are where frozen-
-            // quantizer drift shows first (the indexed backlog was
-            // either seeded under this quantizer or already probed)
-            val qs = ups
-              .orderBy(md5(col("vec_id").cast("string"))).limit(p.sample)
-              .select(col("vec_id").as("query_id"), col("v").as("qv"),
-                col("norm").as("qnorm"))
-            val r = graft.operators.Similarity.ivfRecallProbe(spark, storeDir,
-              cents, qs, p.k, probeWidth(p, nl), nl, p.threshold, p.corpusFraction)
-            log.info(s"$storeDir batch=$batchId $r")
-            if (r.tripped) {
-              log.warn(s"$storeDir batch=$batchId RECALL DRIFT: $r — " +
-                "schedule a rebuildIvfIndex (versioned-root cutover)")
-              p.onDrift(batchId, r)
+            probe.filter(p => batchId % p.everyNTicks.max(1) == 0).foreach { p =>
+              // probe queries = a deterministic hash-sample of THIS
+              // tick's upserts: freshly landed vectors are where frozen-
+              // quantizer drift shows first (the indexed backlog was
+              // either seeded under this quantizer or already probed)
+              val qs = ups
+                .orderBy(md5(col("vec_id").cast("string"))).limit(p.sample)
+                .select(col("vec_id").as("query_id"), col("v").as("qv"),
+                  col("norm").as("qnorm"))
+              val r = graft.operators.Similarity.ivfRecallProbe(spark, storeDir,
+                cents, qs, p.k, probeWidth(p, nl), nl, p.threshold, p.corpusFraction)
+              log.info(s"$storeDir batch=$batchId $r")
+              if (r.tripped) {
+                log.warn(s"$storeDir batch=$batchId RECALL DRIFT: $r — " +
+                  "schedule a rebuildIvfIndex (versioned-root cutover)")
+                p.onDrift(batchId, r)
+              }
             }
-          }
-          // corpus-sample probe: the tick sample above sees fresh-data
-          // drift, but damage to OLD vectors' neighborhoods (a past
-          // tick's mass straddling a stale quantizer boundary) is
-          // invisible to it — this rarer probe draws its queries
-          // hash-uniformly from the WHOLE store instead
-          probe.filter(p => p.corpusSample > 0 && p.corpusEveryNTicks > 0 &&
-              batchId % p.corpusEveryNTicks == 0).foreach { p =>
-            val qs = BucketStore.readAll(spark, storeDir)
-              .orderBy(md5(col("vec_id").cast("string"))).limit(p.corpusSample)
-              .select(col("vec_id").as("query_id"), col("v").as("qv"),
-                col("norm").as("qnorm"))
-            val r = graft.operators.Similarity.ivfRecallProbe(spark, storeDir,
-              cents, qs, p.k, probeWidth(p, nl), nl, p.threshold, p.corpusFraction)
-            log.info(s"$storeDir batch=$batchId corpus-probe $r")
-            if (r.tripped) {
-              log.warn(s"$storeDir batch=$batchId CORPUS RECALL DRIFT: $r — " +
-                "schedule a rebuildIvfIndex (versioned-root cutover)")
-              p.onDrift(batchId, r)
+            // corpus-sample probe: the tick sample above sees fresh-data
+            // drift, but damage to OLD vectors' neighborhoods (a past
+            // tick's mass straddling a stale quantizer boundary) is
+            // invisible to it — this rarer probe draws its queries
+            // hash-uniformly from the WHOLE store instead
+            probe.filter(p => p.corpusSample > 0 && p.corpusEveryNTicks > 0 &&
+                batchId % p.corpusEveryNTicks == 0).foreach { p =>
+              val qs = BucketStore.readAll(spark, storeDir)
+                .orderBy(md5(col("vec_id").cast("string"))).limit(p.corpusSample)
+                .select(col("vec_id").as("query_id"), col("v").as("qv"),
+                  col("norm").as("qnorm"))
+              val r = graft.operators.Similarity.ivfRecallProbe(spark, storeDir,
+                cents, qs, p.k, probeWidth(p, nl), nl, p.threshold, p.corpusFraction)
+              log.info(s"$storeDir batch=$batchId corpus-probe $r")
+              if (r.tripped) {
+                log.warn(s"$storeDir batch=$batchId CORPUS RECALL DRIFT: $r — " +
+                  "schedule a rebuildIvfIndex (versioned-root cutover)")
+                p.onDrift(batchId, r)
+              }
             }
           }
         }
-        b.unpersist()
-        ()
       }
       .start()
 
@@ -732,22 +723,14 @@ object DocStream {
       .option("checkpointLocation", checkpointDir)
       .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], batchId: Long) =>
         val spark = batch.sparkSession
-        if (batch.columns.contains("op")) {
-          val b = batch.toDF()
-            .select(col("op"), col("doc_id"), col("text"), col("text_before"))
-            .distinct().cache()
+        withCached(docBatch(batch)) { b =>
           if (b.count() > 0) {
-            graft.operators.Retrieval.cdcBm25Tick(spark, indexDir, b, batchId)
+            if (b.columns.contains("op"))
+              graft.operators.Retrieval.cdcBm25Tick(spark, indexDir, b, batchId)
+            else
+              graft.operators.Retrieval.appendBm25Tick(spark, indexDir, b, batchId)
           }
-          b.unpersist()
-        } else {
-          val b = batch.toDF().select(col("doc_id"), col("text")).distinct().cache()
-          if (b.count() > 0) {
-            graft.operators.Retrieval.appendBm25Tick(spark, indexDir, b, batchId)
-          }
-          b.unpersist()
         }
-        ()
       }
       .start()
 
@@ -778,36 +761,35 @@ object DocStream {
         val cols =
           (if (isCdc) Seq(col("op")) else Seq.empty) ++
             Seq(col("vec_id"), col("embedding").cast("array<double>").as("v"))
-        val b = batch.toDF().select(cols: _*).distinct().cache()
-        if (b.count() > 0 && BucketStore.appliedBatchId(storeDir) < batchId) {
-          val cents = graft.operators.Similarity.loadCentroids(spark, centroidsDir)
-          // nlist ≤ 0: the quantizer artifact IS the bucket contract
-          val nl = if (nlist > 0) nlist else cents.size
-          if (isCdc)
-            graft.operators.Similarity.semanticDedupCdcTick(spark, storeDir,
-              cents, b, threshold, nl, batchId, verdictsDir = Some(verdictsDir))
-          else
-            graft.operators.Similarity.semanticDedupTick(spark, storeDir, cents,
-              b, threshold, nl, batchId, verdictsDir = Some(verdictsDir))
-          // keeper-recall drift probe over a hash-sample of THIS
-          // tick's vectors — fresh data is where frozen-quantizer
-          // drift shows first (the startIvfMaintain convention);
-          // append batches only (CDC deletes carry before-images)
-          probe.filter(p => !isCdc && batchId % p.everyNTicks.max(1) == 0).foreach { p =>
-            val qs = b.orderBy(md5(col("vec_id").cast("string"))).limit(p.sample)
-              .select(col("vec_id"), col("v"))
-            val r = graft.operators.Similarity.semanticDriftProbe(spark,
-              storeDir, cents, qs, threshold, p.floor, p.corpusFraction)
-            log.info(s"$storeDir batch=$batchId $r")
-            if (r.tripped) {
-              log.warn(s"$storeDir batch=$batchId KEEPER-RECALL DRIFT: $r — " +
-                "schedule a rebuildSemanticIndex (versioned-root cutover)")
-              p.onDrift(batchId, r)
+        withCached(batch.toDF().select(cols: _*).distinct()) { b =>
+          if (b.count() > 0 && BucketStore.appliedBatchId(storeDir) < batchId) {
+            val cents = graft.operators.Similarity.loadCentroids(spark, centroidsDir)
+            // nlist ≤ 0: the quantizer artifact IS the bucket contract
+            val nl = if (nlist > 0) nlist else cents.size
+            if (isCdc)
+              graft.operators.Similarity.semanticDedupCdcTick(spark, storeDir,
+                cents, b, threshold, nl, batchId, verdictsDir = Some(verdictsDir))
+            else
+              graft.operators.Similarity.semanticDedupTick(spark, storeDir, cents,
+                b, threshold, nl, batchId, verdictsDir = Some(verdictsDir))
+            // keeper-recall drift probe over a hash-sample of THIS
+            // tick's vectors — fresh data is where frozen-quantizer
+            // drift shows first (the startIvfMaintain convention);
+            // append batches only (CDC deletes carry before-images)
+            probe.filter(p => !isCdc && batchId % p.everyNTicks.max(1) == 0).foreach { p =>
+              val qs = b.orderBy(md5(col("vec_id").cast("string"))).limit(p.sample)
+                .select(col("vec_id"), col("v"))
+              val r = graft.operators.Similarity.semanticDriftProbe(spark,
+                storeDir, cents, qs, threshold, p.floor, p.corpusFraction)
+              log.info(s"$storeDir batch=$batchId $r")
+              if (r.tripped) {
+                log.warn(s"$storeDir batch=$batchId KEEPER-RECALL DRIFT: $r — " +
+                  "schedule a rebuildSemanticIndex (versioned-root cutover)")
+                p.onDrift(batchId, r)
+              }
             }
           }
         }
-        b.unpersist()
-        ()
       }
       .start()
 }

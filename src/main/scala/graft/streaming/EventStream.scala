@@ -171,18 +171,19 @@ object EventStream {
   }
 
   /** Streaming materialized view of the co-occurrence matrix: each
-    * micro-batch of new interactions flows through
-    * [[graft.operators.ItemCF.coocDelta]]'s two phases (changed
-    * matrix rows only — work ∝ batch, zero shuffles of matrix or
-    * facts) and is MERGED into a bucket-partitioned matrix store
-    * ([[BucketStore]]). This is the reference's 15-minute full
-    * recompute (web/service.py APScheduler) turned into a
+    * micro-batch of new interactions runs one
+    * [[graft.operators.ItemCF.coocMergeTick]] — [[graft.operators
+    * .ItemCF.coocDelta]]'s two phases (changed matrix rows only — work
+    * ∝ batch, zero shuffles of matrix or facts) MERGED into a
+    * bucket-partitioned matrix store ([[BucketStore]]). This is the
+    * reference's 15-minute full recompute (web/service.py
+    * APScheduler) turned into a
     * continuously maintained view whose per-tick cost no longer grows
     * with history.
     *
     * The tick is O(delta) end-to-end, reads included: the changed-key
     * set ≡ the delta-pair key set
-    * ([[graft.operators.ItemCF.coocChangesFromPairs]]), so the
+    * ([[graft.operators.ItemCF.coocChangesFromPairsPk]]), so the
     * touched buckets are known BEFORE any matrix read — the merge
     * reads only those bucket partitions and the apply publishes only
     * those buckets into a new generation; untouched buckets stay
@@ -225,44 +226,22 @@ object EventStream {
         // one trigger would otherwise corrupt the facts snapshot
         val b = batch.toDF().select(col("user_id"), col("item_id"))
           .distinct().cache()
-        if (b.count() > 0) {
-          val old = spark.read.parquet(factsDir)
-          if (BucketStore.appliedBatchId(matrixDir) < batchId) {
-            // nBuckets ≤ 0 (r15 default): the store meta is the layout
-            val n = if (nBuckets > 0) nBuckets
-              else BucketStore.seededBuckets(matrixDir)
-            // phase 1 — delta pair counts: needs facts + batch only
-            val (pairCounts, pairCaches) =
-              graft.operators.ItemCF.deltaPairCountsTracked(old, b)
-            val deltaPairs = pairCounts.cache()
-            // phase 2 — merge against ONLY the touched buckets: the
-            // changed keys are exactly the delta-pair keys, so the
-            // pruned read cannot miss a bump
-            val touched = BucketStore.touchedBuckets(deltaPairs.select(
-              graft.operators.ItemCF.pairBucket(col("pk"), n).as(BucketStore.BucketCol)))
-            val matrix = BucketStore.readBuckets(spark, matrixDir, touched, n)
-            // r17: the matrix store is packed-key — (pk, n_users) rows,
-            // single-long merge keys (see ItemCF.coocIncrementalStore)
-            val (changes, mergeCaches) =
-              graft.operators.ItemCF.coocChangesFromPairsPk(matrix, deltaPairs)
-            BucketStore.applyTick(spark, matrixDir,
-              changes.withColumn(BucketStore.BucketCol,
-                graft.operators.ItemCF.pairBucket(col("pk"), n)),
-              Seq("pk"), batchId, n = n)
-            // unpersist ONLY this tick's intermediates — a session-wide
-            // clearCache would thrash concurrent queries' caches
-            (pairCaches ++ Seq(deltaPairs) ++ mergeCaches).foreach(_.unpersist())
+        try {
+          if (b.count() > 0) {
+            val old = spark.read.parquet(factsDir)
+            if (BucketStore.appliedBatchId(matrixDir) < batchId)
+              graft.operators.ItemCF.coocMergeTick(spark, matrixDir, old, b,
+                batchId, nBuckets)
+            // facts gain only the batch's genuinely-new (user, item)
+            // rows (the tick ignored the rest); materialize before
+            // writing — the plan reads the directory being appended to
+            val newFacts = b.join(old, Seq("user_id", "item_id"), "left_anti").cache()
+            try {
+              newFacts.count()
+              newFacts.write.mode("append").parquet(factsDir)
+            } finally newFacts.unpersist()
           }
-          // facts gain only the batch's genuinely-new (user, item)
-          // rows (coocDelta ignored the rest); materialize before
-          // writing — the plan reads the directory being appended to
-          val newFacts = b.join(old, Seq("user_id", "item_id"), "left_anti").cache()
-          newFacts.count()
-          newFacts.write.mode("append").parquet(factsDir)
-          newFacts.unpersist()
-        }
-        b.unpersist()
-        ()
+        } finally { b.unpersist(); () }
       }
       .start()
 

@@ -2,7 +2,9 @@
 # Gate-on-commit guard (r11 verdict task #8): a commit that touches
 # compiled sources must at minimum COMPILE. The r7 and r11 round
 # failures were both "last snapshot commit broke the build" — a
-# 10-second compile check at commit time ends that class.
+# 10-second compile check at commit time ends that class. It compiles
+# the test tree too: its probe and drive mains call main-tree
+# signatures a main-only compile never checks.
 #
 # Install (once per clone):  ln -sf ../../tools/precommit.sh .git/hooks/pre-commit
 #
@@ -12,8 +14,8 @@
 set -euo pipefail
 cd "$(git rev-parse --show-toplevel)"
 if git diff --cached --name-only | grep -qE '^(src/|build\.sbt$|project/)'; then
-  echo "[precommit] staged source changes -> sbt compile" >&2
-  sbt -batch compile >/tmp/precommit_compile.log 2>&1 || {
+  echo "[precommit] staged source changes -> sbt Test/compile" >&2
+  sbt -batch Test/compile >/tmp/precommit_compile.log 2>&1 || {
     echo "[precommit] COMPILE FAILED — commit blocked (tail of /tmp/precommit_compile.log):" >&2
     tail -20 /tmp/precommit_compile.log >&2
     exit 1
