@@ -193,42 +193,45 @@ object Curation {
     // before scoring. Values unchanged: same artifact, same dir, and
     // the cutpoints still freeze AFTER the funnel (they depend on the
     // kept set). The phase wall is recorded under "select" either way.
-    val lmCounts = freezeLmTo.map { case (countsDir, _) =>
-      Overlap.start("curate-lm-counts") {
-        graft.PhaseTimer.timed("q_corpus_curate", "select") {
-          Lm.buildLmArtifact(target, countsDir)
+    val (kept, selected) = Overlap.scoped { legs =>
+      val lmCounts = freezeLmTo.map { case (countsDir, _) =>
+        legs.start("curate-lm-counts") {
+          graft.PhaseTimer.timed("q_corpus_curate", "select") {
+            Lm.buildLmArtifact(target, countsDir)
+          }
         }
       }
-    }
-    val keep1 = graft.PhaseTimer.timed("q_corpus_curate", "semantic") {
-      val k = Similarity.semanticVerdicts(assigned, threshold)
-        .filter(col("keep")).select(col("vec_id")).cache()
-      log.info(s"q_corpus_curate semantic: ${k.count()} of ${assigned.count()} kept")
-      k
-    }
-    val keep2 = graft.PhaseTimer.timed("q_corpus_curate", "proto") {
-      val k = protoVerdicts(assigned.join(keep1, Seq("vec_id"), "left_semi"),
-          cents, pruneFrac)
-        .filter(col("keep")).select(col("vec_id")).cache()
-      log.info(s"q_corpus_curate proto: ${k.count()} kept")
-      k
-    }
-    val kept = docs.join(keep2.withColumnRenamed("vec_id", "doc_id"),
-      Seq("doc_id"), "left_semi")
-    val selected = graft.PhaseTimer.timed("q_corpus_curate", "select") {
-      val labeled = freezeLmTo match {
-        case Some((countsDir, cutsDir)) =>
-          lmCounts.foreach(_.await()) // scoring reads the counts artifact
-          val scored = Lm.scoreWithArtifact(spark, countsDir, kept)
-          Lm.buildLmCutpoints(scored, cutsDir)
-          Lm.withStoredTerciles(spark, scored, cutsDir)
-        case None =>
-          val (uni, bi) = Lm.fitCounts(target)
-          Lm.withTerciles(Lm.scoreOf(kept, uni, bi))
+      val keep1 = graft.PhaseTimer.timed("q_corpus_curate", "semantic") {
+        val k = Similarity.semanticVerdicts(assigned, threshold)
+          .filter(col("keep")).select(col("vec_id")).cache()
+        log.info(s"q_corpus_curate semantic: ${k.count()} of ${assigned.count()} kept")
+        k
       }
-      val s = labeled.filter(col("tercile") <= 2).select(col("doc_id")).cache()
-      log.info(s"q_corpus_curate select: ${s.count()} kept")
-      s
+      val keep2 = graft.PhaseTimer.timed("q_corpus_curate", "proto") {
+        val k = protoVerdicts(assigned.join(keep1, Seq("vec_id"), "left_semi"),
+            cents, pruneFrac)
+          .filter(col("keep")).select(col("vec_id")).cache()
+        log.info(s"q_corpus_curate proto: ${k.count()} kept")
+        k
+      }
+      val kept = docs.join(keep2.withColumnRenamed("vec_id", "doc_id"),
+        Seq("doc_id"), "left_semi")
+      val selected = graft.PhaseTimer.timed("q_corpus_curate", "select") {
+        val labeled = freezeLmTo match {
+          case Some((countsDir, cutsDir)) =>
+            lmCounts.foreach(_.await()) // scoring reads the counts artifact
+            val scored = Lm.scoreWithArtifact(spark, countsDir, kept)
+            Lm.buildLmCutpoints(scored, cutsDir)
+            Lm.withStoredTerciles(spark, scored, cutsDir)
+          case None =>
+            val (uni, bi) = Lm.fitCounts(target)
+            Lm.withTerciles(Lm.scoreOf(kept, uni, bi))
+        }
+        val s = labeled.filter(col("tercile") <= 2).select(col("doc_id")).cache()
+        log.info(s"q_corpus_curate select: ${s.count()} kept")
+        s
+      }
+      (kept, selected)
     }
     val finalDocs = kept.join(selected, Seq("doc_id"), "left_semi")
       .select(col("doc_id"), col("text"))

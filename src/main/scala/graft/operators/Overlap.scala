@@ -14,8 +14,9 @@ package graft.operators
   * inline. `await()` joins and RETHROWS the body's failure — the
   * fail-fast contract of the previously-inline action is preserved;
   * callers must await before any store mutation the leg's reads race.
-  * Legs started through [[scoped]] are also joined when the scope
-  * exits by a throw, so none outlives the code that started it.
+  * Legs start only through [[scoped]], which joins every leg when the
+  * scope exits, by a return or a throw, so none outlives the code that
+  * started it.
   */
 private[graft] object Overlap {
 
@@ -33,7 +34,7 @@ private[graft] object Overlap {
     }
   }
 
-  def start[T](name: String)(body: => T): Started[T] = {
+  private def start[T](name: String)(body: => T): Started[T] = {
     val ref = new java.util.concurrent.atomic.AtomicReference[Either[Throwable, T]]()
     val t = new Thread(
       () => ref.set(try Right(body) catch { case e: Throwable => Left(e) }),

@@ -232,13 +232,14 @@ object Retrieval {
     // postings explode+write. The TICK paths keep their serial order
     // deliberately: there the postings marker is the batch's commit
     // point and the stats store must publish before it.
-    val statsLeg = graft.operators.Overlap.start("bm25-stats-seed") {
-      BucketStore.seed(statsPartialOf(docs), statsBucket,
-        s"$dir/stats", StatsBuckets)
+    Overlap.scoped { legs =>
+      legs.start("bm25-stats-seed") {
+        BucketStore.seed(statsPartialOf(docs), statsBucket,
+          s"$dir/stats", StatsBuckets)
+      }
+      BucketStore.seed(postingsOf(docs), tokenBucket(col("token")),
+        s"$dir/postings", IndexBuckets)
     }
-    BucketStore.seed(postingsOf(docs), tokenBucket(col("token")),
-      s"$dir/postings", IndexBuckets)
-    statsLeg.await()
   }
 
   /** Append one batch of NEW documents into the index — the
@@ -552,38 +553,40 @@ object Retrieval {
     // — so the lexical build runs on a helper thread while the dense
     // arm trains. The dense train is iteration-bound (per-round
     // scheduling barriers leave executors idle between small jobs),
-    // exactly the tail the text build's tasks can back-fill; the await
-    // sits before fuseStored, which is the first reader of both.
-    val textLeg = Overlap.start("hybrid-text-build") {
-      graft.PhaseTimer.timed("q_hybrid_rrf_store", "text_build") {
-        buildBm25Index(docs.select(col("doc_id"), col("text")), textDir)
-      }
-    }
+    // exactly the tail the text build's tasks can back-fill; the scope
+    // joins the text leg before fuseStored, the first reader of both.
     val denseRoot = freshStoreDir("hybrid_ivf", sfDir, artifactDir)
     val emb = Tables.embeddings(spark, sfDir)
       .select(col("vec_id"), col("embedding").cast("array<double>").as("v"))
       .withColumn("norm", sqrt(expr("graft_dot(v, v)")))
       .cache()
-    // r15: the dense arm's coarse knobs scale-derive like every other
-    // IVF site (deriveIvfNlist/deriveIvfNprobe — the r14 verdict's #1
-    // class; a fixed nlist here would leave the hybrid's ANN arm
-    // probing corpus/4-sized lists at scale while knn_ivf_store's own
-    // entry derived correctly)
-    val nEmb = emb.count()
-    val nlist = if (nlist0 > 0) nlist0 else Similarity.deriveIvfNlist(nEmb)
-    val nprobe = if (nprobe0 > 0) nprobe0 else Similarity.deriveIvfNprobe(nlist)
-    val cents = graft.PhaseTimer.timed("q_hybrid_rrf_store", "dense_train") {
-      Similarity.trainQuantizer(spark, emb, s"$denseRoot/centroids", nlist, nEmb)
-    }
-    graft.PhaseTimer.timed("q_hybrid_rrf_store", "dense_seed") {
-      Similarity.seedIvfStore(spark,
-        emb.select(col("vec_id"), col("v"), col("norm")),
-        s"$denseRoot/store", cents, nlist)
+    val (cents, nlist, nprobe) = Overlap.scoped { legs =>
+      legs.start("hybrid-text-build") {
+        graft.PhaseTimer.timed("q_hybrid_rrf_store", "text_build") {
+          buildBm25Index(docs.select(col("doc_id"), col("text")), textDir)
+        }
+      }
+      // r15: the dense arm's coarse knobs scale-derive like every other
+      // IVF site (deriveIvfNlist/deriveIvfNprobe — the r14 verdict's #1
+      // class; a fixed nlist here would leave the hybrid's ANN arm
+      // probing corpus/4-sized lists at scale while knn_ivf_store's own
+      // entry derived correctly)
+      val nEmb = emb.count()
+      val nlist = if (nlist0 > 0) nlist0 else Similarity.deriveIvfNlist(nEmb)
+      val nprobe = if (nprobe0 > 0) nprobe0 else Similarity.deriveIvfNprobe(nlist)
+      val cents = graft.PhaseTimer.timed("q_hybrid_rrf_store", "dense_train") {
+        Similarity.trainQuantizer(spark, emb, s"$denseRoot/centroids", nlist, nEmb)
+      }
+      graft.PhaseTimer.timed("q_hybrid_rrf_store", "dense_seed") {
+        Similarity.seedIvfStore(spark,
+          emb.select(col("vec_id"), col("v"), col("norm")),
+          s"$denseRoot/store", cents, nlist)
+      }
+      (cents, nlist, nprobe)
     }
     val qvecs = emb.join(broadcast(queries.select(col("q_id"))),
         col("vec_id") === col("q_id"))
       .select(col("q_id").as("query_id"), col("v").as("qv"), col("norm").as("qnorm"))
-    textLeg.await() // fuseStored reads the postings store below
     val out = fuseStored(spark, textDir, s"$denseRoot/store", cents,
       queries, qvecs, topK, nprobe, nlist)
     emb.unpersist()
@@ -778,21 +781,23 @@ object Retrieval {
     val textDir = freshStoreDir("hn_bm25", sfDir, artifactDir)
     // r18, guide §2.6 (the hybridRrfStored overlap): the postings
     // build and the vector sidecar seed are artifact builds over
-    // disjoint inputs; the mining below is the first reader of both
-    val textLeg = Overlap.start("hn-text-build") {
-      graft.PhaseTimer.timed("q_hard_negatives_store", "text_build") {
-        buildBm25Index(docs.select(col("doc_id"), col("text")), textDir)
-      }
-    }
+    // disjoint inputs; the mining below is the first reader of both,
+    // and runs after the scope has joined the text leg
     val emb = Tables.embeddings(spark, sfDir)
       .select(col("vec_id"), col("embedding").cast("array<double>").as("v"))
       .withColumn("norm", sqrt(expr("graft_dot(v, v)")))
       .cache()
     val byIdDir = freshStoreDir("hn_byid", sfDir, artifactDir)
-    graft.PhaseTimer.timed("q_hard_negatives_store", "byid_seed") {
-      seedVecSidecar(spark, emb, byIdDir)
+    Overlap.scoped { legs =>
+      legs.start("hn-text-build") {
+        graft.PhaseTimer.timed("q_hard_negatives_store", "text_build") {
+          buildBm25Index(docs.select(col("doc_id"), col("text")), textDir)
+        }
+      }
+      graft.PhaseTimer.timed("q_hard_negatives_store", "byid_seed") {
+        seedVecSidecar(spark, emb, byIdDir)
+      }
     }
-    textLeg.await() // the mining below reads the postings store
     val out = hardNegativesFromIndexes(spark, textDir, byIdDir,
       queries, nNeg, simFloor)
     emb.unpersist()

@@ -130,7 +130,7 @@ private[graft] object BucketStore {
     * [[applyTick]]): once the previous manifest references this many
     * distinct generations, the next tick folds the whole store into
     * its own generation. Bounds live generations (and with them the
-    * manifest fan-out and read-plan width) at a constant; one
+    * manifest fan-out and the paths a read lists) at a constant; one
     * amortized full rewrite every ~`DefaultMaxLiveGenerations` ticks
     * is the LSM trade. It does NOT bound files per bucket: a
     * broadcast-gated merge or a plain append fold writes narrowly (no
@@ -369,7 +369,7 @@ private[graft] object BucketStore {
     require(m.nonEmpty || fs.exists(new HPath(p, ManifestPrefix + batchId)),
       s"store $dir has no retained manifest for batch $batchId " +
         s"(retention window: current + previous tick)")
-    selectOrEmpty(spark, dir, m, m).drop(BucketCol)
+    selectOrEmpty(spark, dir, m, m, withBucket = false).drop(BucketCol)
   }
 
   /** Pruned read of only the named buckets — the manifest resolves
@@ -528,7 +528,7 @@ private[graft] object BucketStore {
     // (append ticks may have stacked several) — the merged write then
     // collapses those buckets back to one
     val old = selectOrEmpty(spark, dir, prevManifest,
-      prevManifest.filter { case (b, _) => touched.contains(b) })
+      prevManifest.filter { case (b, _) => touched.contains(b) }, withBucket = true)
     // carry-over: touched-bucket rows the tick neither changed nor
     // removed. The changed-key side is delta-sized — size-gated
     // broadcast at the conservative (string-key) row cap, same
@@ -542,14 +542,15 @@ private[graft] object BucketStore {
         keyCols, "left_anti")
     // r18 (guide §2.4 "remove shuffles outright"): when the delta side
     // is broadcast, the carry-over anti is a NARROW probe over the
-    // partition-discovered scan — every carried row is already in its
-    // bucket's files, so repartitioning the whole merged frame by
-    // bucket re-shuffled the entire touched store per tick for a
-    // clustering the scan already had. Only the delta-sized `ch` needs
-    // clustering before the partitionBy write; the union concatenates
-    // both sides' partitions without an exchange. Above the broadcast
-    // gate the anti is a key-shuffled join (bucket locality destroyed),
-    // so the full merged repartition stays.
+    // store scan — every carried row is already in its bucket's files
+    // (its bucket read back off the file path), so repartitioning the
+    // whole merged frame by bucket re-shuffled the entire touched store
+    // per tick for a clustering the scan already had. Only the
+    // delta-sized `ch` needs clustering before the partitionBy write;
+    // the union concatenates both sides' partitions without an
+    // exchange. Above the broadcast gate the anti is a key-shuffled
+    // join (bucket locality destroyed), so the full merged repartition
+    // stays.
     val merged =
       if (deltaBroadcast) carry.unionByName(ch.repartition(col(BucketCol)))
       else carry.unionByName(ch).repartition(col(BucketCol))
@@ -649,15 +650,16 @@ private[graft] object BucketStore {
       // once it leaves the retention window.
       // r18 (guide §2.4, the applyTick narrow-merge twin): a plain
       // disjoint-key fold (onCompact = None) re-clusters nothing — the
-      // store side is already bucket-clustered by the partition-
-      // discovered scan, so only the delta needs the bucket
-      // repartition and the fold's write skips the full-store
-      // exchange. A reducing onCompact re-groups rows (its aggregation
-      // hash-partitions by key, not bucket), so that path keeps the
-      // full repartition.
+      // store side is already bucket-clustered (each scanned file lies
+      // in one bucket dir, and its rows take that bucket off the file
+      // path), so only the delta needs the bucket repartition and the
+      // fold's write skips the full-store exchange. A reducing
+      // onCompact re-groups rows (its aggregation hash-partitions by
+      // key, not bucket), so that path keeps the full repartition.
       val out =
         if (compacting) {
-          val store = selectOrEmpty(spark, dir, prevManifest, prevManifest)
+          val store = selectOrEmpty(spark, dir, prevManifest, prevManifest,
+            withBucket = true)
           onCompact match {
             case None => store.unionByName(appended.repartition(col(BucketCol)))
             case Some(reduce) =>
@@ -684,7 +686,7 @@ private[graft] object BucketStore {
   }
 
   /** Distinct generations the manifest's live state spans — the
-    * compaction trigger and the bound on both read-plan width and a
+    * compaction trigger and the bound on both the paths a read lists and a
     * bucket's generation-stack depth (a bucket's list is a subset of
     * the distinct set).
     */
@@ -797,14 +799,16 @@ private[graft] object BucketStore {
     m
   }
 
-  /** Read the selected (or all) buckets of the current snapshot,
-    * bucket column preserved.
+  /** Read the selected (or all) buckets of the current snapshot for a
+    * public read: no bucket column is derived, and an empty selection's
+    * frame may still carry one (callers drop it).
     */
   private def resolve(spark: SparkSession, dir: String,
                       buckets: Option[Seq[Int]]): DataFrame = {
     val m = currentManifest(dir)
     selectOrEmpty(spark, dir, m,
-      buckets.map(bs => m.filter { case (b, _) => bs.contains(b) }).getOrElse(m))
+      buckets.map(bs => m.filter { case (b, _) => bs.contains(b) }).getOrElse(m),
+      withBucket = false)
   }
 
   /** [[selectPaths]] that degrades to a SCHEMA-CORRECT empty frame
@@ -820,9 +824,10 @@ private[graft] object BucketStore {
     * existed fall back to the seed generation's footer.
     */
   private def selectOrEmpty(spark: SparkSession, dir: String,
-                            m: Map[Int, Seq[String]], sel: Map[Int, Seq[String]]): DataFrame =
-    if (sel.nonEmpty) selectPaths(spark, dir, sel)
-    else if (m.nonEmpty) selectPaths(spark, dir, m.take(1)).limit(0)
+                            m: Map[Int, Seq[String]], sel: Map[Int, Seq[String]],
+                            withBucket: Boolean): DataFrame =
+    if (sel.nonEmpty) selectPaths(spark, dir, sel, withBucket)
+    else if (m.nonEmpty) selectPaths(spark, dir, m.take(1), withBucket).limit(0)
     else storedSchema(dir) match {
       // nullable-relaxed exactly like selectPaths' reads, so an
       // empty-store read reports the same schema as a pruned read
@@ -844,39 +849,59 @@ private[graft] object BucketStore {
         .asInstanceOf[org.apache.spark.sql.types.StructType])
   }
 
-  /** One DataFrame over exact bucket paths, grouped per generation so
-    * Spark's partition discovery (basePath = the generation dir)
-    * restores the bucket column. A bucket with several live
-    * generations (append ticks) contributes one path per generation —
-    * its rows are the UNION across them (disjoint keys by the
-    * append-only contract). Plan width is bounded by the number of
-    * DISTINCT generations among the selected buckets — at most
-    * `maxLiveGenerations` (the compaction bound), and a re-seed or
-    * fold collapses it to one.
+  /** One parquet relation over the selected buckets' exact paths,
+    * `gen-<id>/bucket=<b>` for every generation the manifest lists per
+    * bucket. A bucket with several live generations (append ticks)
+    * contributes one path per generation — its rows are the UNION
+    * across them (disjoint keys by the append-only contract). Each
+    * path is read as its own root with no `basePath`, so partition
+    * discovery infers nothing (a `basePath` of the store dir over the
+    * `gen-*` dirs fails with CONFLICTING_DIRECTORY_STRUCTURES) and the
+    * read carries the store schema minus `bucket`.
+    *
+    * One relation whatever the number of live generations: under AQE a
+    * tick's semi or anti join pushed below a union of per-generation
+    * relations plans one broadcast per copy, about two jobs for every
+    * generation a read touches.
+    *
+    * `withBucket` restores the bucket column from each row's file path:
+    * the `bucket=<b>` dir the file sits in, found as the LAST
+    * `/bucket=` of the path (a file name holds no `/`), so a store root
+    * under a `bucket=…` dir cannot match. It runs once per carried row,
+    * so it is two substring searches, not a regex match. Only
+    * the tick reads that write rows back ask for it: once `_metadata`
+    * is referenced Spark keeps the whole struct in the scan even when
+    * the column is dropped later, which slowed the public pruned read's
+    * planning and scan, so [[readAll]], [[readBuckets]] and [[readAt]]
+    * never reference it.
     *
     * r17: the reader is handed the schema [[seed]] recorded instead of
     * inferring it — a bare `spark.read.parquet` schedules a
-    * footer-inference JOB per generation group, so every pruned read
-    * and merge tick paid one-plus scheduling round trips for a fact
-    * the store's own meta already holds. Fields are declared nullable,
-    * exactly as Spark's parquet reader declares footer-inferred
-    * schemas ("all columns are automatically converted to be nullable
-    * for compatibility reasons"), so the read frame is bit-identical
-    * to the inferred one. Pre-schema-file stores fall back to
-    * inference.
+    * footer-inference JOB, so every pruned read and merge tick paid a
+    * scheduling round trip for a fact the store's own meta already
+    * holds. Fields are declared nullable, exactly as Spark's parquet
+    * reader declares footer-inferred schemas ("all columns are
+    * automatically converted to be nullable for compatibility
+    * reasons"), so the read frame is bit-identical to the inferred
+    * one. A store seeded before the schema file existed takes its
+    * schema once from one selected path's footer and reads the same
+    * single relation.
     */
   private def selectPaths(spark: SparkSession, dir: String,
-                          sel: Map[Int, Seq[String]]): DataFrame = {
-    val recorded = storedSchema(dir).map(s =>
-      org.apache.spark.sql.types.StructType(s.fields.map(_.copy(nullable = true))))
-    sel.toSeq.flatMap { case (b, gens) => gens.map(g => (g, b)) }
-      .groupBy(_._1).map { case (gen, pairs) =>
-        val reader = recorded.map(spark.read.schema).getOrElse(spark.read)
-        reader
-          .option("basePath", s"$dir/$gen")
-          .parquet(pairs.map(_._2).distinct.sorted
-            .map(b => s"$dir/$gen/$BucketCol=$b"): _*)
-      }.reduce(_ unionByName _)
+                          sel: Map[Int, Seq[String]], withBucket: Boolean): DataFrame = {
+    val paths = sel.toSeq.sortBy(_._1).flatMap { case (b, gens) =>
+      gens.map(g => s"$dir/$g/$BucketCol=$b")
+    }
+    val schema = storedSchema(dir)
+      .map(s => org.apache.spark.sql.types.StructType(
+        s.fields.filter(_.name != BucketCol).map(_.copy(nullable = true))))
+      .getOrElse(spark.read.parquet(paths.head).schema)
+    val rows = spark.read.schema(schema).parquet(paths: _*)
+    if (withBucket)
+      rows.withColumn(BucketCol,
+        substring_index(substring_index(col("_metadata.file_path"), s"/$BucketCol=", -1),
+          "/", 1).cast("int"))
+    else rows
   }
 
   // ---------------------------------------------------------------

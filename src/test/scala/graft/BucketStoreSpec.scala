@@ -30,9 +30,12 @@ class BucketStoreSpec extends AnyFunSuite {
     * bus's delivery lag for the section's OWN jobs. AQE surfaces each
     * query stage as its own job, which would make a budget
     * Spark-version-shaped; the pins are about GRAFT's job structure,
-    * so the body runs with AQE off (session conf restored after).
+    * so the body runs with AQE off (session conf restored after)
+    * unless `aqe` asks for it on, as the bench session runs: with AQE
+    * off, per-copy broadcasts of one plan reuse one exchange, so a
+    * read that fans out per live generation only shows with it on.
     */
-  private def withJobCounts(body: JobsOf => Unit): Unit = {
+  private def withJobCounts(aqe: Boolean = false)(body: JobsOf => Unit): Unit = {
     val jobsByGroup = new java.util.concurrent.ConcurrentHashMap[String, Integer]()
     val listener = new org.apache.spark.scheduler.SparkListener {
       override def onJobStart(js: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
@@ -53,7 +56,7 @@ class BucketStoreSpec extends AnyFunSuite {
     }
     spark.sparkContext.addSparkListener(listener)
     val aqe0 = spark.conf.get("spark.sql.adaptive.enabled")
-    spark.conf.set("spark.sql.adaptive.enabled", "false")
+    spark.conf.set("spark.sql.adaptive.enabled", aqe.toString)
     try body(new JobsOf {
       def apply(group: String)(f: => Unit): Int = {
         spark.sparkContext.setJobGroup(group, group)
@@ -97,6 +100,31 @@ class BucketStoreSpec extends AnyFunSuite {
 
   /** Ids of the session's materialised persisted RDDs. */
   private def persistedRdds(): Set[Int] = spark.sparkContext.getPersistentRDDs.keySet.toSet
+
+  /** Executed plan of the write of generation `gen` that `tick` runs,
+    * caught off the listener manager (the bus is async, so this polls
+    * until the write shows).
+    */
+  private def genWritePlan(gen: String)(tick: => Unit): String = {
+    val plans = scala.collection.mutable.ArrayBuffer.empty[String]
+    val listener = new org.apache.spark.sql.util.QueryExecutionListener {
+      override def onSuccess(funcName: String,
+          qe: org.apache.spark.sql.execution.QueryExecution, durationNs: Long): Unit =
+        plans.synchronized { plans += qe.executedPlan.toString; () }
+      override def onFailure(funcName: String,
+          qe: org.apache.spark.sql.execution.QueryExecution, exception: Exception): Unit = ()
+    }
+    spark.listenerManager.register(listener)
+    try {
+      tick
+      def write(): Option[String] = plans.synchronized {
+        plans.find(p => p.contains(gen) && p.contains("InsertIntoHadoopFsRelation"))
+      }
+      var spins = 0
+      while (write().isEmpty && spins < 100) { Thread.sleep(50); spins += 1 }
+      write().getOrElse(fail(s"$gen write plan never reached the listener"))
+    } finally spark.listenerManager.unregister(listener)
+  }
 
   test("recover rolls an unpublished tick back; replayed batch recomputes idempotently") {
     import spark.implicits._
@@ -687,7 +715,7 @@ class BucketStoreSpec extends AnyFunSuite {
     // into ONE aggregation job, and removed the append tick's pre-write
     // distinct outright (touched buckets come off the written
     // generation's partition dirs, a filesystem listing)
-    withJobCounts { jobsOf =>
+    withJobCounts() { jobsOf =>
       // merge tick: ONE delta stats job (touched buckets + gate count
       // fused) + the broadcast build + the generation write = 3; the
       // pre-r17 shape paid 4 (distinct, gate count, broadcast, write)
@@ -725,6 +753,44 @@ class BucketStoreSpec extends AnyFunSuite {
       assert(!st2.applied)
       assert(storeRows(dir) === Set((1L, 11L), (3L, 30L)))
     }
+    // live-generation sweep, AQE on as the bench session runs it: a
+    // tick-shaped pruned read (readBuckets semi-joined to the broadcast
+    // keys of a cached batch) schedules the same jobs whether its
+    // buckets hold 1 or DefaultMaxLiveGenerations − 1 stacked append
+    // generations. A read planned as one relation per generation paid
+    // one broadcast job per copy
+    val sn = 8
+    def prunedReadJobs(jobsOf: JobsOf, liveGens: Int): Int = {
+      val sd = java.nio.file.Files.createTempDirectory("bucket_store_sweep").toString + "/store"
+      BucketStore.seed((0L until 32L).map(k => (k, k)).toDF("k", "v"),
+        BucketStore.longBucket(col("k"), sn), sd, n = sn)
+      // each append tick stacks one generation of new keys on buckets 1..3
+      (1 until liveGens).foreach { g =>
+        BucketStore.applyAppendTick(spark, sd,
+          (1L to 3L).map(b => (b + sn * (10L + g), g.toLong)).toDF("k", "v")
+            .withColumn("bucket", BucketStore.longBucket(col("k"), sn)),
+          batchId = g - 1L, n = sn)
+      }
+      assert(BucketStore.readBuckets(spark, sd, Seq(1, 2, 3), sn).inputFiles
+        .map(_.split("/").find(_.startsWith("gen-")).get).toSet.size === liveGens)
+      val probe = Seq(1L, 2L, 3L, 1L + sn * 11L).toDF("k").cache()
+      probe.count()
+      var found = 0
+      val jobs = jobsOf(s"sweep-read-$liveGens") {
+        found = BucketStore.readBuckets(spark, sd, Seq(1, 2, 3), sn)
+          .join(broadcast(probe), Seq("k"), "left_semi").collect().length
+      }
+      probe.unpersist()
+      assert(found === (if (liveGens > 1) 4 else 3))
+      jobs
+    }
+    withJobCounts(aqe = true) { jobsOf =>
+      val top = BucketStore.DefaultMaxLiveGenerations - 1
+      val one = prunedReadJobs(jobsOf, 1)
+      val stacked = prunedReadJobs(jobsOf, top)
+      assert(one === stacked,
+        s"pruned read jobs should not grow with live generations: $one at 1, $stacked at $top")
+    }
   }
 
   test("r18 narrow merge: a broadcast-gated merge tick's generation write plans exactly one shuffle (the delta side)") {
@@ -735,46 +801,29 @@ class BucketStoreSpec extends AnyFunSuite {
     BucketStore.seed(
       spark.range(0L, 1000L).select(col("id").as("k"), (col("id") * 2).as("v")),
       BucketStore.longBucket(col("k"), 8), dir, n = 8)
-    // capture the tick's write plans off the listener manager; the bus
-    // is async, so the assertion below polls until the gen write shows
-    val plans = scala.collection.mutable.ArrayBuffer.empty[String]
-    val listener = new org.apache.spark.sql.util.QueryExecutionListener {
-      override def onSuccess(funcName: String,
-          qe: org.apache.spark.sql.execution.QueryExecution, durationNs: Long): Unit =
-        plans.synchronized { plans += qe.executedPlan.toString; () }
-      override def onFailure(funcName: String,
-          qe: org.apache.spark.sql.execution.QueryExecution, exception: Exception): Unit = ()
-    }
-    spark.listenerManager.register(listener)
-    try {
+    val planFull = genWritePlan("gen-1") {
       BucketStore.applyTick(spark, dir,
         Seq((1L, 99L), (9L, 90L)).toDF("k", "v")
           .withColumn("bucket", BucketStore.longBucket(col("k"), 8)),
         Seq("k"), batchId = 1L, n = 8,
         removed = Some(Seq((2L, 0L)).toDF("k", "v")
           .select(col("k"), BucketStore.longBucket(col("k"), 8).as("bucket"))))
-      def genWrite(): Option[String] = plans.synchronized {
-        plans.find(p => p.contains("gen-1") && p.contains("InsertIntoHadoopFsRelation"))
-      }
-      var spins = 0
-      while (genWrite().isEmpty && spins < 100) { Thread.sleep(50); spins += 1 }
-      val planFull = genWrite().getOrElse(fail("gen-1 write plan never reached the listener"))
-      // AdaptiveSparkPlan's toString appends the pre-AQE "Initial Plan"
-      // section after the final one — count shuffles in the FINAL plan
-      val plan = planFull.split("== Initial Plan ==")(0)
-      // the carry-over side must stay NARROW: scan → broadcast anti →
-      // union, no hashpartitioning exchange of the touched store; the
-      // ONLY shuffle is the delta-sized repartition(bucket) of ch
-      val shuffles = "Exchange hashpartitioning".r.findAllIn(plan).length
-      assert(shuffles === 1,
-        s"broadcast-gated merge write should shuffle only the delta, saw $shuffles exchanges in:\n$plan")
-      assert(plan.contains("BroadcastHashJoin") && plan.contains("LeftAnti"),
-        s"carry-over anti should be a broadcast join in:\n$plan")
-      // and the merged content is right
-      assert(storeRows(dir) === (
-        (0L until 1000L).filterNot(k => k == 1L || k == 2L || k == 9L)
-          .map(k => (k, k * 2)).toSet ++ Set((1L, 99L), (9L, 90L))))
-    } finally spark.listenerManager.unregister(listener)
+    }
+    // AdaptiveSparkPlan's toString appends the pre-AQE "Initial Plan"
+    // section after the final one — count shuffles in the FINAL plan
+    val plan = planFull.split("== Initial Plan ==")(0)
+    // the carry-over side must stay NARROW: scan → broadcast anti →
+    // union, no hashpartitioning exchange of the touched store; the
+    // ONLY shuffle is the delta-sized repartition(bucket) of ch
+    val shuffles = "Exchange hashpartitioning".r.findAllIn(plan).length
+    assert(shuffles === 1,
+      s"broadcast-gated merge write should shuffle only the delta, saw $shuffles exchanges in:\n$plan")
+    assert(plan.contains("BroadcastHashJoin") && plan.contains("LeftAnti"),
+      s"carry-over anti should be a broadcast join in:\n$plan")
+    // and the merged content is right
+    assert(storeRows(dir) === (
+      (0L until 1000L).filterNot(k => k == 1L || k == 2L || k == 9L)
+        .map(k => (k, k * 2)).toSet ++ Set((1L, 99L), (9L, 90L))))
   }
 
   test("cdc tick job budget: one keys pass and one resolution, inside the write, on a store with 3 live generations") {
@@ -798,14 +847,14 @@ class BucketStoreSpec extends AnyFunSuite {
       .map(_.split("/").find(_.startsWith("gen-")).get).toSet ===
       Set("gen-base", "gen-0", "gen-1"))
     b.count() // the caller's batch cache is not the tick's work
-    withJobCounts { jobsOf =>
+    withJobCounts() { jobsOf =>
       var st: Option[BucketStore.TickStats] = None
       val jobs = jobsOf("budget-cdc") {
         st = EventStream.cdcMergeTick(spark, dir, b, batchId = 2L, nBuckets = n)
       }
       assert(st.exists(s => s.applied && s.touchedBuckets === 3 && !s.compacted))
       // one keys stats job, one broadcast of the batch keys (the semi
-      // join's per-generation copies and the carry-over anti join
+      // join over the store's one scan and the carry-over anti join
       // reuse one exchange with AQE off) and the generation write,
       // which runs the resolution. A second resolution (applyTick
       // caching its own changes/removed) or a second stats pass costs
@@ -817,6 +866,42 @@ class BucketStoreSpec extends AnyFunSuite {
     assert(ratingRows(dir).collect { case (u, i, r, _, _) if u <= 3L => (u, i, r) } ===
       Set((0L, 1L, 3.0), (1L, 2L, 3.0), (1L, 100L, 2.0), (2L, 100L, 4.0),
         (3L, 4L, 3.0), (3L, 200L, 5.0)))
+    // live-generation sweep, AQE on as the bench session runs it: a
+    // tick touching 7 buckets schedules the same jobs whether they sit
+    // in the seed alone or in DefaultMaxLiveGenerations − 1 generations.
+    // With one relation per generation, AQE planned the semi join's
+    // broadcast once per copy, about two jobs per live generation
+    def cdcTickJobs(jobsOf: JobsOf, liveGens: Int): Int = {
+      val sd = java.nio.file.Files.createTempDirectory("bucket_store_cdc_sweep").toString + "/store"
+      seedRatings(sd, n, (0L until 48L).map(u => (u, u % 5 + 1, 3.0)))
+      // one tick per bucket 1..liveGens-1 stacks one live generation each
+      (1 until liveGens).foreach { u =>
+        val s = batch(RatingUpdate(u.toLong, 100L, 4.0, false, ts("2024-01-02 00:00:00"), "upsert"))
+        EventStream.cdcMergeTick(spark, sd, s, u - 1L, n)
+        s.unpersist()
+      }
+      val buckets = 1 to 7
+      assert(BucketStore.readBuckets(spark, sd, buckets, n).inputFiles
+        .map(_.split("/").find(_.startsWith("gen-")).get).toSet.size === liveGens)
+      val s = batch(buckets.map(u =>
+        RatingUpdate(u.toLong, 200L, 5.0, true, ts("2024-01-03 00:00:00"), "upsert")): _*)
+      s.count()
+      var st: Option[BucketStore.TickStats] = None
+      val jobs = jobsOf(s"sweep-cdc-$liveGens") {
+        st = EventStream.cdcMergeTick(spark, sd, s, liveGens - 1L, n)
+      }
+      s.unpersist()
+      assert(st.exists(t => t.applied && t.touchedBuckets === 7 && !t.compacted))
+      assert(ratingRows(sd).count(_._2 == 200L) === 7)
+      jobs
+    }
+    withJobCounts(aqe = true) { jobsOf =>
+      val top = BucketStore.DefaultMaxLiveGenerations - 1
+      val one = cdcTickJobs(jobsOf, 1)
+      val stacked = cdcTickJobs(jobsOf, top)
+      assert(one === stacked,
+        s"cdc tick jobs should not grow with live generations: $one at 1, $stacked at $top")
+    }
   }
 
   test("cdc summary path ≡ applyTick's own derivation: rows, manifest buckets and TickStats per tick") {
@@ -872,5 +957,110 @@ class BucketStoreSpec extends AnyFunSuite {
     assert(EventStream.cdcMergeTick(spark, summary,
       Seq.empty[RatingUpdate].toDF(), marker0 + 1, n).isEmpty)
     assert(BucketStore.appliedBatchId(summary) === marker0)
+  }
+
+  test("public reads plan no _metadata / file_path attribute; a merge tick's carry-over read does") {
+    import spark.implicits._
+    val dir = java.nio.file.Files.createTempDirectory("bucket_store_plan_guard").toString + "/store"
+    val n = 8
+    BucketStore.seed((0L until 40L).map(k => (k, k)).toDF("k", "v"),
+      BucketStore.longBucket(col("k"), n), dir, n = n)
+    def bucketed(rows: (Long, Long)*) = rows.toDF("k", "v")
+      .withColumn("bucket", BucketStore.longBucket(col("k"), n))
+    // the tick's own read does plan the attribute: the guard below can see it
+    val tickPlan = genWritePlan("gen-0") {
+      BucketStore.applyTick(spark, dir, bucketed((1L, 11L)), Seq("k"), batchId = 0L, n = n)
+    }
+    assert(tickPlan.contains("file_path"),
+      s"the carry-over read restores bucket off the file path, plan:\n$tickPlan")
+    BucketStore.applyAppendTick(spark, dir, bucketed((41L, 41L)), batchId = 1L, n = n)
+    // a Spark plan that references _metadata keeps the whole struct in
+    // the scan even once bucket is dropped, so the public reads, which
+    // drop bucket, must never reference it
+    Seq(
+      "readAll" -> BucketStore.readAll(spark, dir),
+      "readBuckets" -> BucketStore.readBuckets(spark, dir, Seq(1, 2), n),
+      "readAt" -> BucketStore.readAt(spark, dir, 0L)).foreach { case (name, df) =>
+      assert(df.collect().nonEmpty)
+      assert(!df.columns.contains("bucket"), s"$name returned the storage column")
+      val plan = df.queryExecution.executedPlan.toString
+      assert(!plan.contains("_metadata") && !plan.contains("file_path"),
+        s"$name plans a file-metadata attribute:\n$plan")
+    }
+  }
+
+  test("a store rooted under a bucket=<b> dir: merge ticks and compaction folds write every row back to its own bucket") {
+    import spark.implicits._
+    val n = 8
+    // the root path itself holds a bucket=5 segment: the bucket a tick
+    // read restores must come from the file's own dir, not the first
+    // bucket= in its path
+    val dir = java.nio.file.Files.createTempDirectory("bucket_store_root").toString +
+      "/bucket=5/store"
+    BucketStore.seed((0L until 40L).map(k => (k, k)).toDF("k", "v"),
+      BucketStore.longBucket(col("k"), n), dir, n = n)
+    def bucketed(rows: (Long, Long)*) = rows.toDF("k", "v")
+      .withColumn("bucket", BucketStore.longBucket(col("k"), n))
+    val merge = BucketStore.applyTick(spark, dir, bucketed((1L, 11L), (2L, 22L), (41L, 41L)),
+      Seq("k"), batchId = 0L, n = n,
+      removed = Some(Seq(4L).toDF("k").withColumn("bucket", BucketStore.longBucket(col("k"), n))))
+    assert(merge.applied && !merge.compacted && merge.touchedBuckets === 3)
+    // base + gen-0 are live, so a bound of 2 makes the next append fold
+    val fold = BucketStore.applyAppendTick(spark, dir, bucketed((50L, 50L), (53L, 53L)),
+      batchId = 1L, n = n, maxLiveGenerations = 2)
+    assert(fold.applied && fold.compacted)
+    val expected = ((0L until 40L).filterNot(_ == 4L).map(k => k -> k).toMap ++
+      Map(1L -> 11L, 2L -> 22L, 41L -> 41L, 50L -> 50L, 53L -> 53L)).toSet
+    assert(storeRows(dir) === expected)
+    // every data file under every generation holds only its own bucket's keys
+    val gens = new java.io.File(dir).listFiles().toSeq
+      .filter(f => f.isDirectory && f.getName.startsWith("gen-"))
+    assert(gens.map(_.getName).toSet === Set("gen-base", "gen-0", "gen-1"))
+    gens.foreach { g =>
+      g.listFiles().toSeq.filter(_.getName.startsWith("bucket=")).foreach { bd =>
+        val b = bd.getName.stripPrefix("bucket=").toInt
+        val ks = spark.read.parquet(bd.toString).select("k").collect().map(_.getLong(0))
+        assert(ks.nonEmpty && ks.forall(k => java.lang.Math.floorMod(k, n.toLong) == b),
+          s"${g.getName}/${bd.getName} holds keys of other buckets: ${ks.sorted.mkString(",")}")
+      }
+    }
+  }
+
+  test("a store without its schema file reads and ticks off one generation's footer schema, unchanged") {
+    import spark.implicits._
+    val n = 8
+    val root = java.nio.file.Files.createTempDirectory("bucket_store_no_schema").toString
+    val kept = root + "/kept"; val bare = root + "/bare"
+    def bucketed(rows: (Long, Long)*) = rows.toDF("k", "v")
+      .withColumn("bucket", BucketStore.longBucket(col("k"), n))
+    // two identical multi-generation stores: base, a merge gen, an append gen
+    Seq(kept, bare).foreach { d =>
+      BucketStore.seed((0L until 40L).map(k => (k, k)).toDF("k", "v"),
+        BucketStore.longBucket(col("k"), n), d, n = n)
+      BucketStore.applyTick(spark, d, bucketed((1L, 11L), (2L, 22L)), Seq("k"),
+        batchId = 0L, n = n)
+      BucketStore.applyAppendTick(spark, d, bucketed((43L, 43L), (44L, 44L)), batchId = 1L, n = n)
+    }
+    def schemaOf(df: DataFrame) = df.schema.fields.map(f => (f.name, f.dataType, f.nullable)).toSeq
+    val before = storeRows(bare)
+    val beforeSchema = schemaOf(BucketStore.readAll(spark, bare))
+    assert(new java.io.File(bare, "_graft_schema").delete())
+    assert(storeRows(bare) === before)
+    assert(schemaOf(BucketStore.readAll(spark, bare)) === beforeSchema)
+    assert(BucketStore.readBuckets(spark, bare, Seq(1, 3, 4), n).collect().toSet ===
+      BucketStore.readBuckets(spark, kept, Seq(1, 3, 4), n).collect().toSet)
+    // the next merge tick reads buckets out of all three generations,
+    // then an append folds the store: both equal the schema-file twin
+    Seq(kept, bare).foreach { d =>
+      BucketStore.applyTick(spark, d, bucketed((3L, 33L), (9L, 99L), (43L, 430L)), Seq("k"),
+        batchId = 2L, n = n,
+        removed = Some(Seq(12L).toDF("k").withColumn("bucket", BucketStore.longBucket(col("k"), n))))
+      assert(BucketStore.applyAppendTick(spark, d, bucketed((60L, 60L)), batchId = 3L, n = n,
+        maxLiveGenerations = 2).compacted)
+    }
+    val expected = (before.toMap -- Seq(12L) ++
+      Map(3L -> 33L, 9L -> 99L, 43L -> 430L, 60L -> 60L)).toSet
+    assert(storeRows(kept) === expected)
+    assert(storeRows(bare) === expected)
   }
 }
