@@ -146,11 +146,11 @@ object BenchScale {
       minCommon = 3, minSim = 0.0))
     timed("recs_serve")(graft.operators.Serving.recsServeOn(
       factsSkewed, cutoff = "2024-07-01"))
-    // the MF path at scale: blocked MLlib ALS train + measured
-    // over-fetch + distributed seen anti-join on the 20M-fact set
+    // the MF path at scale: blocked MLlib ALS train + one-pass
+    // unseen top-n scoring on the 20M-fact set
     timed("als_top_n")(graft.recommender.Als.topNOn(
       factsUnskewed.select(col("user_id"), col("item_id"), col("rating")),
-      n = 20, bufferCap = 1000))
+      n = 20))
 
     // store soak: full-matrix seed + one ~5% delta tick through the
     // bucketed store (the two heaviest maintainer operations). r16

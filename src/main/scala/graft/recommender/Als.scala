@@ -1,10 +1,11 @@
 package graft.recommender
 
+import dev.ludovic.netlib.blas.JavaBLAS
 import graft.Tables
+import graft.functions.TopKAgg
 import org.apache.spark.ml.evaluation.RegressionEvaluator
 import org.apache.spark.ml.recommendation.{ALS, ALSModel}
-import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.expressions.Window
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Matrix-factorization recommender — the Spark-native re-expression of
@@ -21,17 +22,19 @@ import org.apache.spark.sql.functions._
   *  - SVD.fit                 → ALS.fit (rank/maxIter/regParam ↔
   *                              n_factors/n_epochs/reg_all)
   *  - build_anti_testset + test + get_top_n
-  *                            → recommendForAllUsers (blocked top-k via
-  *                              BLAS gemm) + distributed anti-join of
-  *                              seen pairs (the anti-testset filter)
+  *                            → [[topNUnseen]]: one scoring pass per
+  *                              user over the item-factor blocks (the
+  *                              BLAS sgemv MLlib's recommendForAll
+  *                              runs) that skips the user's seen items
+  *                              as it scores and keeps a top-n heap
   *  - GridSearchCV(rmse/mae)  → train/validation sweep with
   *                              RegressionEvaluator
   *
   * The reference materializes the full anti-testset (all unseen
   * user×item pairs) in memory — O(|U|·|I|) on the driver, the exact
   * thing that cannot survive 100 TB. Here the candidate set never
-  * materializes: recommendForAllUsers scores in factor-block batches
-  * and keeps only per-user top-k heaps.
+  * materializes: each user's scores live one item block at a time and
+  * only a per-user n-element heap survives the block.
   */
 object Als {
 
@@ -124,29 +127,39 @@ object Als {
       StructField(idxCol, IntegerType, nullable = false))))
   }
 
-  private def rawSet(spark: SparkSession, sfDir: String): DataFrame =
-    Tables.interactions(spark, sfDir)
+  /** Orders and lineitem, each read ONCE per ALS call: every
+    * `spark.read.parquet` runs a one-task schema job, and both the raw
+    * set and its bounds probe are built from the two tables.
+    */
+  private case class BaseTables(orders: DataFrame, lineitem: DataFrame) {
+    def interactions: DataFrame = Tables.interactionsFrom(orders, lineitem)
+
+    /** Conservative key-bounds probe for every interactions-derived
+      * raw set: user ids ⊆ orders.o_custkey and item ids ⊆
+      * lineitem.l_partkey (the interactions join projects them; the
+      * upsert window and any downstream filter only SHRINK the key
+      * set), so min/max over the two base key columns bound the raw
+      * set's keys from two plain column scans — no join, no window
+      * (see keyedTrainingSet's boundsProbe contract).
+      */
+    def boundsProbe: DataFrame =
+      orders.select(col("o_custkey").as("user_id"),
+          lit(null).cast("long").as("item_id"))
+        .unionByName(lineitem.select(lit(null).cast("long").as("user_id"),
+          col("l_partkey").as("item_id")))
+  }
+
+  private def baseTables(spark: SparkSession, sfDir: String): BaseTables =
+    BaseTables(Tables.orders(spark, sfDir), Tables.lineitem(spark, sfDir))
+
+  private def rawSet(base: BaseTables): DataFrame =
+    base.interactions
       .select(col("user_id"), col("item_id"), col("rating").cast("float").as("rating"))
 
-  /** Conservative key-bounds probe for every interactions-derived raw
-    * set: user ids ⊆ orders.o_custkey and item ids ⊆ lineitem.l_partkey
-    * (the interactions join projects them; the upsert window and any
-    * downstream filter only SHRINK the key set), so min/max over the
-    * two base key columns bound the raw set's keys from two plain
-    * column scans — no join, no window (see keyedTrainingSet's
-    * boundsProbe contract).
-    */
-  private def rawBoundsProbe(spark: SparkSession, sfDir: String): DataFrame =
-    Tables.orders(spark, sfDir)
-      .select(col("o_custkey").as("user_id"),
-        lit(null).cast("long").as("item_id"))
-      .unionByName(Tables.lineitem(spark, sfDir)
-        .select(lit(null).cast("long").as("user_id"),
-          col("l_partkey").as("item_id")))
-
-  private def trainingSet(spark: SparkSession, sfDir: String): DataFrame =
-    keyedTrainingSet(rawSet(spark, sfDir),
-      boundsProbe = Some(rawBoundsProbe(spark, sfDir))).train
+  private def trainingSet(spark: SparkSession, sfDir: String): DataFrame = {
+    val base = baseTables(spark, sfDir)
+    keyedTrainingSet(rawSet(base), boundsProbe = Some(base.boundsProbe)).train
+  }
 
   def fit(train: DataFrame, rank: Int = 8, maxIter: Int = 10, regParam: Double = 0.1,
           implicitPrefs: Boolean = false, alpha: Double = 1.0, seed: Long = 42L): ALSModel = {
@@ -175,64 +188,43 @@ object Als {
       .fit(train)
   }
 
-  /** Per-user top-N over UNSEEN items (the reference's anti-testset
-    * semantics): over-fetch n+buffer candidates from the blocked top-k,
-    * anti-join the seen pairs, re-rank, keep n.
-    *
-    * The buffer is MEASURED, not guessed: buffer = max per-user seen
-    * count (one cheap agg over the cached training set), which is the
-    * smallest value guaranteeing every user still has ≥ n unseen
-    * candidates after the anti-join. recommendForAllUsers scores every
-    * item per user regardless of k (k only sizes the top-k heap and
-    * output), so the win is in the exploded output volume: at sf0.1
-    * this is k = 125 vs the previous hardcoded 130, and it stays
-    * minimal as data grows instead of silently under- or
-    * over-fetching. `bufferCap` bounds a pathological power user (at
-    * 100 TB, profile truncation — the ItemCF degree-cap policy —
-    * applies before this ever binds).
+  /** Per-user top-N over UNSEEN items — the reference's anti-testset
+    * semantics (estimator.py's build_anti_testset + get_top_n), scored
+    * in one pass by [[topNUnseen]]. Nothing is over-fetched, so there
+    * is no buffer to size: a user with many seen items still gets n
+    * recommendations, or all of their unseen items when fewer exist.
     */
-  def topN(spark: SparkSession, sfDir: String, n: Int = 20, bufferCap: Int = 1000): DataFrame =
-    topNOn(rawSet(spark, sfDir), n, bufferCap,
-      boundsProbe = Some(rawBoundsProbe(spark, sfDir)))
+  def topN(spark: SparkSession, sfDir: String, n: Int = 20): DataFrame = {
+    val base = baseTables(spark, sfDir)
+    topNOn(rawSet(base), n, boundsProbe = Some(base.boundsProbe))
+  }
 
   /** [[topN]] over an explicit (user_id, item_id, rating) frame —
     * the id seam applies here: out-of-int32 keys re-index densely and
     * the output joins back to the original ids (`force` exercises the
     * re-index path on in-range keys; AlsReindexSpec).
     */
-  private[graft] def topNOn(raw: DataFrame, n: Int, bufferCap: Int,
+  private[graft] def topNOn(raw: DataFrame, n: Int,
                             force: Boolean = false,
                             boundsProbe: Option[DataFrame] = None): DataFrame = {
     val keyed = keyedTrainingSet(raw, force, boundsProbe)
     val train = keyed.train.cache()
     val model = fit(train)
     keyed.release()
-    val out = topNUnseen(train, model, n, bufferCap, keyed)
+    val out = servedTopN(train, model, n, keyed)
     train.unpersist()
     out
   }
 
-  /** Shared top-N-over-unseen tail of [[topN]] / [[implicitTopN]]:
-    * measured over-fetch, distributed anti-join of seen pairs,
-    * re-rank, keep n, then translate ids back through the re-index
-    * maps when present. `train` must be cached (the buffer agg and
-    * the seen anti-join both read it).
+  /** Shared serving tail of [[topNOn]] / [[implicitTopN]]: the one-pass
+    * unseen top-n, then ids translated back through the re-index maps
+    * when present. [[topNUnseen]] materializes its user side from the
+    * cached `train` before returning, so the caller may release `train`
+    * and writing the returned frame never re-derives the training set.
     */
-  private def topNUnseen(train: DataFrame, model: ALSModel, n: Int, bufferCap: Int,
+  private def servedTopN(train: DataFrame, model: ALSModel, n: Int,
                          keyed: AlsInput): DataFrame = {
-    val maxSeen = train.groupBy(col("user")).count()
-      .agg(max(col("count"))).head().getLong(0).toInt
-    val buffer = math.min(maxSeen, bufferCap)
-    val recs = model.recommendForAllUsers(n + buffer)
-      .select(col("user"), explode(col("recommendations")).as("rec"))
-      .select(col("user"), col("rec.item").as("item"), col("rec.rating").as("score"))
-    val seen = train.select(col("user"), col("item")).distinct()
-    val unseen = recs.join(seen, Seq("user", "item"), "left_anti")
-    val w = Window.partitionBy(col("user"))
-      .orderBy(col("score").desc, col("item").asc)
-    val ranked = unseen
-      .withColumn("rn", row_number().over(w))
-      .filter(col("rn") <= n)
+    val ranked = topNUnseen(model, train, n)
     val mapped = (keyed.userMap, keyed.itemMap) match {
       case (Some(u), Some(i)) =>
         // standard dim joins on the dense int keys; Catalyst/AQE
@@ -245,6 +237,129 @@ object Als {
     mapped.select(
       col("user_id"), col("item_id"),
       round(col("score").cast("double"), 4).as("score"), col("rn"))
+  }
+
+  /** Per-user top-`n` over the items each user has NOT seen, in one
+    * scoring pass — top-k selection during scoring, not after it.
+    *
+    * Each user carries their factor and the sorted ids of their seen
+    * items ([[userSide]]). For each item-factor block, one BLAS `sgemv`
+    * scores the whole block; seen items are skipped by binary search
+    * and the rest go to a `TopKAgg.Heap(n)` ordered score desc, item
+    * asc. The blocks are MLlib's (`recommendForAll`'s blockify of the
+    * same `itemFactors`, same `blockSize`) and so is the call, so every
+    * score is bit-identical to `recommendForAllUsers`'.
+    *
+    * When the item factors fit Spark's broadcast threshold
+    * (`spark.sql.autoBroadcastJoinThreshold`, as rows × rank × 4 B) the
+    * blocks are broadcast and each user-partition task sees every item:
+    * one heap per user is the answer. Otherwise user blocks cross-join
+    * item blocks as in MLlib, each pair yields ≤ n candidates per user,
+    * and `graft_topk` merges them per user. A user who has seen every
+    * item gets no rows; one with fewer than n unseen items gets all.
+    *
+    * @param seen  (user, item) pairs, typically the cached training set
+    * @param users predicate on the model's user ids (`id`): the users
+    *              to score
+    * @return (user int, item int, score float, rn int), rn 1 = best
+    */
+  private[graft] def topNUnseen(model: ALSModel, seen: DataFrame, n: Int,
+                                users: Column = lit(true)): DataFrame =
+    scoreUnseen(userSide(model.userFactors.filter(users), seen),
+      model.itemFactors, model.rank, n, model.getBlockSize)
+
+  /** The scorer's user side: (user, features, seen), `seen` holding the
+    * user's item ids sorted ascending (empty when they have none).
+    * Materialized eagerly (`localCheckpoint`) while `seen` is still
+    * cached, so the frames built on it stop their lineage here.
+    *
+    * Hash-partitioned on `user` and sorted by it: the scored output
+    * keeps this layout, so a sink written from it gets one file per
+    * shuffle partition with each user's rows together — not one file
+    * per ALS user block.
+    */
+  private[graft] def userSide(userFactors: DataFrame, seen: DataFrame): DataFrame = {
+    val seenByUser = seen.groupBy(col("user").cast("int").as("user"))
+      .agg(sort_array(collect_list(col("item").cast("int"))).as("seen"))
+    userFactors.select(col("id").as("user"), col("features"))
+      .join(seenByUser, Seq("user"), "left")
+      .select(col("user"), col("features"),
+        coalesce(col("seen"), array().cast("array<int>")).as("seen"))
+      .repartition(col("user"))
+      .sortWithinPartitions(col("user"))
+      .localCheckpoint(eager = true)
+  }
+
+  /** [[topNUnseen]]'s scoring pass over an explicit user side
+    * ([[userSide]]) and item factors (id int, features array<float>).
+    */
+  private[graft] def scoreUnseen(users: DataFrame, itemFactors: DataFrame,
+                                 rank: Int, n: Int, blockSize: Int): DataFrame = {
+    require(n > 0, s"n must be positive, got $n")
+    val spark = users.sparkSession
+    import spark.implicits._
+    val blocks = itemFactors.select(col("id"), col("features"))
+      .as[(Int, Array[Float])]
+      .mapPartitions(_.grouped(blockSize)
+        .map(b => (b.map(_._1).toArray, b.flatMap(_._2).toArray)))
+    val userRows = users.select(col("user"), col("features"), col("seen"))
+      .as[(Int, Array[Float], Array[Int])]
+    val threshold = spark.sessionState.conf.autoBroadcastJoinThreshold
+    if (threshold > 0 && itemFactors.count() * rank * 4L <= threshold) {
+      val bc = spark.sparkContext.broadcast(blocks.collect())
+      userRows.mapPartitions { it =>
+        val scores = new Array[Float](blockSize)
+        it.flatMap { case (u, x, seen) =>
+          val heap = new TopKAgg.Heap(n)
+          bc.value.foreach(b => offerUnseen(heap, rank, x, 0, seen, b._1, b._2, scores))
+          heap.sortedDesc.iterator.zipWithIndex.map { case ((s, i), r) =>
+            (u, i.toInt, s.toFloat, r + 1)
+          }
+        }
+      }.toDF("user", "item", "score", "rn")
+    } else {
+      TopKAgg.register(spark)
+      val userBlocks = userRows.mapPartitions(_.grouped(blockSize).map { b =>
+        (b.map(_._1).toArray, b.flatMap(_._2).toArray, b.map(_._3).toArray)
+      })
+      userBlocks.crossJoin(blocks)
+        .as[(Array[Int], Array[Float], Array[Array[Int]], Array[Int], Array[Float])]
+        .mapPartitions { it =>
+          val scores = new Array[Float](blockSize)
+          it.flatMap { case (uIds, uMat, seens, iIds, iMat) =>
+            Iterator.range(0, uIds.length).flatMap { j =>
+              val heap = new TopKAgg.Heap(n)
+              offerUnseen(heap, rank, uMat, j * rank, seens(j), iIds, iMat, scores)
+              heap.sortedDesc.iterator.map { case (s, i) => (uIds(j), i.toInt, s) }
+            }
+          }
+        }.toDF("user", "item", "score")
+        .groupBy(col("user"))
+        .agg(expr(s"graft_topk(score, cast(item as bigint), $n)").as("topk"))
+        .select(col("user"), posexplode(col("topk")))
+        .select(col("user"), col("col.id").cast("int").as("item"),
+          col("col.score").cast("float").as("score"), (col("pos") + 1).as("rn"))
+    }
+  }
+
+  /** Offers one user's unseen items of one item block to `heap`: one
+    * `sgemv` scores the block (the call MLlib's `recommendForAll`
+    * makes), then each item not found in the sorted `seen` is offered.
+    * `x` holds the user's factor at `xOff`; `scores` is scratch of at
+    * least the block's length.
+    */
+  private def offerUnseen(heap: TopKAgg.Heap, rank: Int, x: Array[Float], xOff: Int,
+                          seen: Array[Int], ids: Array[Int], mat: Array[Float],
+                          scores: Array[Float]): Unit = {
+    val m = ids.length
+    JavaBLAS.getInstance.sgemv("T", rank, m, 1.0f, mat, 0, rank,
+      x, xOff, 1, 0.0f, scores, 0, 1)
+    var j = 0
+    while (j < m) {
+      if (java.util.Arrays.binarySearch(seen, ids(j)) < 0)
+        heap.offer(scores(j).toDouble, ids(j).toLong)
+      j += 1
+    }
   }
 
   /** Implicit-feedback ALS — the reference's watched-but-unrated flow
@@ -263,13 +378,14 @@ object Als {
     * must pass to be a model at all).
     */
   def implicitTopN(spark: SparkSession, sfDir: String, n: Int = 20,
-                   alpha: Double = 10.0, bufferCap: Int = 1000): DataFrame = {
-    val keyed = keyedTrainingSet(implicitRawSet(spark, sfDir),
-      boundsProbe = Some(rawBoundsProbe(spark, sfDir)))
+                   alpha: Double = 10.0): DataFrame = {
+    val base = baseTables(spark, sfDir)
+    val keyed = keyedTrainingSet(implicitRawSet(base),
+      boundsProbe = Some(base.boundsProbe))
     val train = keyed.train.cache()
     val model = fit(train, implicitPrefs = true, alpha = alpha)
     keyed.release()
-    val out = topNUnseen(train, model, n, bufferCap, keyed)
+    val out = servedTopN(train, model, n, keyed)
     train.unpersist()
     out
   }
@@ -477,11 +593,13 @@ object Als {
     */
   def foldInTopN(spark: SparkSession, sfDir: String, n: Int = 20,
                  holdMod: Int = 50, holdVal: Int = 7,
-                 rank: Int = 8, regParam: Double = 0.1): DataFrame =
-    foldInServe(rawSet(spark, sfDir), n, holdMod, holdVal,
+                 rank: Int = 8, regParam: Double = 0.1): DataFrame = {
+    val base = baseTables(spark, sfDir)
+    foldInServe(rawSet(base), n, holdMod, holdVal,
       t => fit(t, rank = rank, regParam = regParam),
       (yf, r) => foldInFactors(yf, r, regParam),
-      boundsProbe = Some(rawBoundsProbe(spark, sfDir)))
+      boundsProbe = Some(base.boundsProbe))
+  }
 
   /** [[foldInTopN]] for the IMPLICIT model (registered as
     * `als_implicit_fold_in`): the same hold-out serve, with the
@@ -495,11 +613,13 @@ object Als {
   def implicitFoldInTopN(spark: SparkSession, sfDir: String, n: Int = 20,
                          holdMod: Int = 50, holdVal: Int = 7,
                          rank: Int = 8, regParam: Double = 0.1,
-                         alpha: Double = 10.0): DataFrame =
-    foldInServe(implicitRawSet(spark, sfDir), n, holdMod, holdVal,
+                         alpha: Double = 10.0): DataFrame = {
+    val base = baseTables(spark, sfDir)
+    foldInServe(implicitRawSet(base), n, holdMod, holdVal,
       t => fit(t, rank = rank, regParam = regParam, implicitPrefs = true, alpha = alpha),
       (yf, r) => implicitFoldInFactors(yf, r, regParam, alpha),
-      boundsProbe = Some(rawBoundsProbe(spark, sfDir)))
+      boundsProbe = Some(base.boundsProbe))
+  }
 
   /** Shared hold-out → train → fold-in → serve pipeline of
     * [[foldInTopN]] / [[implicitFoldInTopN]]; `fitFn` and `foldFn`
@@ -553,8 +673,8 @@ object Als {
   /** Confidence-weighted raw rows for the implicit model — same id
     * seam as the explicit path ([[keyedTrainingSet]]).
     */
-  private def implicitRawSet(spark: SparkSession, sfDir: String): DataFrame =
-    Tables.interactions(spark, sfDir)
+  private def implicitRawSet(base: BaseTables): DataFrame =
+    base.interactions
       .select(
         col("user_id"), col("item_id"),
         when(col("is_implicit"), lit(1.0))
@@ -563,9 +683,10 @@ object Als {
   /** Int-cast implicit training set (kept for spec use; the query
     * path routes through [[implicitRawSet]] + the id seam).
     */
-  private[graft] def implicitTrainingSet(spark: SparkSession, sfDir: String): DataFrame =
-    keyedTrainingSet(implicitRawSet(spark, sfDir),
-      boundsProbe = Some(rawBoundsProbe(spark, sfDir))).train
+  private[graft] def implicitTrainingSet(spark: SparkSession, sfDir: String): DataFrame = {
+    val base = baseTables(spark, sfDir)
+    keyedTrainingSet(implicitRawSet(base), boundsProbe = Some(base.boundsProbe)).train
+  }
 
   /** RMSE + MAE on a deterministic 80/20 split — the reference's
     * evaluation measures (trainer.py:57 GridSearchCV measures=['rmse','mae']).

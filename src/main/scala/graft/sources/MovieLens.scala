@@ -1,7 +1,6 @@
 package graft.sources
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
@@ -178,15 +177,11 @@ object MovieLens {
     // same swept cell as [[alsEval]] — the recs ship from the
     // reference-parity model, not the small-rank default
     val model = graft.recommender.Als.fit(train, rank = 48, maxIter = 15, regParam = 0.14)
-    val recs = model.recommendForAllUsers(n + 60)
-      .filter(col("user") <= sampleUsers)
-      .select(col("user"), explode(col("recommendations")).as("rec"))
-      .select(col("user"), col("rec.item").as("item"), col("rec.rating").as("score"))
-    val seen = train.select(col("user"), col("item")).distinct()
-    val w = Window.partitionBy(col("user")).orderBy(col("score").desc, col("item").asc)
-    val out = recs.join(seen, Seq("user", "item"), "left_anti")
-      .withColumn("rn", row_number().over(w))
-      .filter(col("rn") <= n)
+    // scored over each sampled user's unseen movies in one pass, so a
+    // user with many seen movies among their best candidates still
+    // gets n
+    val out = graft.recommender.Als.topNUnseen(model, train, n,
+        users = col("id") <= sampleUsers)
       .join(broadcast(movies(spark).select(col("movie_id").as("item"), col("title"))), Seq("item"))
       .select(col("user").as("user_id"), col("item").as("movie_id"),
         round(col("score").cast("double"), 4).as("score"), col("rn"), col("title"))

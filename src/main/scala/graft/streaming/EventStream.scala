@@ -254,8 +254,9 @@ object EventStream {
     * once `retrainEvery` mutations have accumulated since the last
     * train, ALS refits on the merged snapshot
     * ([[BucketStore.readAll]] — the refit is legitimately global; only
-    * the MERGE is O(delta)) and rewrites the per-user top-N recs (the
-    * reference's redis `u<id>` export refresh).
+    * the MERGE is O(delta)) and rewrites the per-user top-N recs over
+    * each user's unrated items (the reference's redis `u<id>` export
+    * refresh).
     *
     * The snapshot must be seeded with [[BucketStore.seed]] on
     * `pmod(user_id, nBuckets)`, same as [[startCdcApply]].
@@ -301,12 +302,13 @@ object EventStream {
           // half-written directory, and reset the pending counter only
           // AFTER the recs landed — a crash mid-train retrains on the
           // next batch instead of serving stale recs for a full window
-          model.recommendForAllUsers(topN)
-            .select(col("user"), explode(col("recommendations")).as("rec"))
+          // over the items each user has NOT rated — the reference's
+          // anti-testset, the snapshot's pairs as the seen set
+          graft.recommender.Als.topNUnseen(model, train, topN)
             .select(
               col("user").cast("long").as("user_id"),
-              col("rec.item").cast("long").as("item_id"),
-              round(col("rec.rating").cast("double"), 4).as("score"))
+              col("item").cast("long").as("item_id"),
+              round(col("score").cast("double"), 4).as("score"))
             .write.mode("overwrite").parquet(recsDir + "_staged")
           promoteStaged(recsDir)
           pending.set(0L)

@@ -23,7 +23,7 @@ class AlsReindexSpec extends AnyFunSuite {
     // unshifted corpus FORCED through the re-index path (the seam's
     // behavior is what's under test, not ALS-vs-ALS numeric noise
     // between dense ranks and raw ids)
-    val base = Als.topNOn(raw, n = 5, bufferCap = 1000, force = true)
+    val base = Als.topNOn(raw, n = 5, force = true)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2), r.getInt(3))).toSet
     assert(base.nonEmpty)
     // ids shifted past int32: the threshold check must trigger the
@@ -32,14 +32,14 @@ class AlsReindexSpec extends AnyFunSuite {
     val shifted = Als.topNOn(
       raw.withColumn("user_id", col("user_id") + shift)
          .withColumn("item_id", col("item_id") + shift),
-      n = 5, bufferCap = 1000)
+      n = 5)
       .collect().map(r => (r.getLong(0) - shift, r.getLong(1) - shift,
         r.getDouble(2), r.getInt(3))).toSet
     assert(shifted === base)
   }
 
   test("in-range keys keep the bare-cast fast path and its output schema") {
-    val direct = Als.topNOn(raw, n = 3, bufferCap = 1000)
+    val direct = Als.topNOn(raw, n = 3)
     assert(direct.columns.toSeq === Seq("user_id", "item_id", "score", "rn"))
     // every training user gets recs, under its ORIGINAL id
     val outUsers = direct.select("user_id").distinct()

@@ -147,6 +147,13 @@ class CdcStreamSpec extends AnyFunSuite {
     // and the snapshot itself carries both mutations
     val snap = graft.streaming.BucketStore.readAll(spark, dir)
     assert(snap.filter(col("user_id") === 2L && col("item_id") === 5L).count() === 1)
+    // recs are over unrated items only (the anti-testset): each user
+    // rated 4 of the 6 items (both mutations re-rate seeded pairs), so
+    // topN = 3 serves exactly that user's 2 unrated items
+    val served = recs.select("user_id", "item_id").as[(Long, Long)].collect()
+    val rated = snap.select("user_id", "item_id").as[(Long, Long)].collect().toSet
+    assert(served.forall(p => !rated(p)), served.filter(rated).mkString(", "))
+    assert(served.groupBy(_._1).values.map(_.length).toSet === Set(2))
   }
 
   test("streaming cooc maintenance equals batch recompute after every tick") {
