@@ -250,13 +250,12 @@ object Als {
     * same `itemFactors`, same `blockSize`) and so is the call, so every
     * score is bit-identical to `recommendForAllUsers`'.
     *
-    * When the item factors fit Spark's broadcast threshold
-    * (`spark.sql.autoBroadcastJoinThreshold`, as rows × rank × 4 B) the
-    * blocks are broadcast and each user-partition task sees every item:
-    * one heap per user is the answer. Otherwise user blocks cross-join
-    * item blocks as in MLlib, each pair yields ≤ n candidates per user,
-    * and `graft_topk` merges them per user. A user who has seen every
-    * item gets no rows; one with fewer than n unseen items gets all.
+    * User blocks cross-join item blocks as in MLlib, so no side has to
+    * fit in memory: each (user block, item block) pair yields ≤ n
+    * candidates per user, and `graft_topk` merges them per user (one
+    * shuffle of ≤ n × item blocks rows per user). A user who has seen
+    * every item gets no rows; one with fewer than n unseen items gets
+    * all.
     *
     * @param seen  (user, item) pairs, typically the cached training set
     * @param users predicate on the model's user ids (`id`): the users
@@ -273,10 +272,8 @@ object Als {
     * Materialized eagerly (`localCheckpoint`) while `seen` is still
     * cached, so the frames built on it stop their lineage here.
     *
-    * Hash-partitioned on `user` and sorted by it: the scored output
-    * keeps this layout, so a sink written from it gets one file per
-    * shuffle partition with each user's rows together — not one file
-    * per ALS user block.
+    * Hash-partitioned on `user`, so the cross join runs shuffle
+    * partitions × item blocks tasks, not ALS user blocks × item blocks.
     */
   private[graft] def userSide(userFactors: DataFrame, seen: DataFrame): DataFrame = {
     val seenByUser = seen.groupBy(col("user").cast("int").as("user"))
@@ -286,7 +283,6 @@ object Als {
       .select(col("user"), col("features"),
         coalesce(col("seen"), array().cast("array<int>")).as("seen"))
       .repartition(col("user"))
-      .sortWithinPartitions(col("user"))
       .localCheckpoint(eager = true)
   }
 
@@ -304,42 +300,27 @@ object Als {
         .map(b => (b.map(_._1).toArray, b.flatMap(_._2).toArray)))
     val userRows = users.select(col("user"), col("features"), col("seen"))
       .as[(Int, Array[Float], Array[Int])]
-    val threshold = spark.sessionState.conf.autoBroadcastJoinThreshold
-    if (threshold > 0 && itemFactors.count() * rank * 4L <= threshold) {
-      val bc = spark.sparkContext.broadcast(blocks.collect())
-      userRows.mapPartitions { it =>
+    TopKAgg.register(spark)
+    val userBlocks = userRows.mapPartitions(_.grouped(blockSize).map { b =>
+      (b.map(_._1).toArray, b.flatMap(_._2).toArray, b.map(_._3).toArray)
+    })
+    userBlocks.crossJoin(blocks)
+      .as[(Array[Int], Array[Float], Array[Array[Int]], Array[Int], Array[Float])]
+      .mapPartitions { it =>
         val scores = new Array[Float](blockSize)
-        it.flatMap { case (u, x, seen) =>
-          val heap = new TopKAgg.Heap(n)
-          bc.value.foreach(b => offerUnseen(heap, rank, x, 0, seen, b._1, b._2, scores))
-          heap.sortedDesc.iterator.zipWithIndex.map { case ((s, i), r) =>
-            (u, i.toInt, s.toFloat, r + 1)
+        it.flatMap { case (uIds, uMat, seens, iIds, iMat) =>
+          Iterator.range(0, uIds.length).flatMap { j =>
+            val heap = new TopKAgg.Heap(n)
+            offerUnseen(heap, rank, uMat, j * rank, seens(j), iIds, iMat, scores)
+            heap.sortedDesc.iterator.map { case (s, i) => (uIds(j), i.toInt, s) }
           }
         }
-      }.toDF("user", "item", "score", "rn")
-    } else {
-      TopKAgg.register(spark)
-      val userBlocks = userRows.mapPartitions(_.grouped(blockSize).map { b =>
-        (b.map(_._1).toArray, b.flatMap(_._2).toArray, b.map(_._3).toArray)
-      })
-      userBlocks.crossJoin(blocks)
-        .as[(Array[Int], Array[Float], Array[Array[Int]], Array[Int], Array[Float])]
-        .mapPartitions { it =>
-          val scores = new Array[Float](blockSize)
-          it.flatMap { case (uIds, uMat, seens, iIds, iMat) =>
-            Iterator.range(0, uIds.length).flatMap { j =>
-              val heap = new TopKAgg.Heap(n)
-              offerUnseen(heap, rank, uMat, j * rank, seens(j), iIds, iMat, scores)
-              heap.sortedDesc.iterator.map { case (s, i) => (uIds(j), i.toInt, s) }
-            }
-          }
-        }.toDF("user", "item", "score")
-        .groupBy(col("user"))
-        .agg(expr(s"graft_topk(score, cast(item as bigint), $n)").as("topk"))
-        .select(col("user"), posexplode(col("topk")))
-        .select(col("user"), col("col.id").cast("int").as("item"),
-          col("col.score").cast("float").as("score"), (col("pos") + 1).as("rn"))
-    }
+      }.toDF("user", "item", "score")
+      .groupBy(col("user"))
+      .agg(expr(s"graft_topk(score, cast(item as bigint), $n)").as("topk"))
+      .select(col("user"), posexplode(col("topk")))
+      .select(col("user"), col("col.id").cast("int").as("item"),
+        col("col.score").cast("float").as("score"), (col("pos") + 1).as("rn"))
   }
 
   /** Offers one user's unseen items of one item block to `heap`: one

@@ -295,21 +295,25 @@ object EventStream {
           val train = BucketStore.readAll(spark, snapshot).select(
             col("user_id").cast("int").as("user"),
             col("item_id").cast("int").as("item"),
-            col("rating").cast("float").as("rating"))
-          val model = graft.recommender.Als.fit(train, rank, maxIter)
-          // recsDir is the serving surface (the reference's redis
-          // export): stage + atomic swap so a reader never observes a
-          // half-written directory, and reset the pending counter only
-          // AFTER the recs landed — a crash mid-train retrains on the
-          // next batch instead of serving stale recs for a full window
-          // over the items each user has NOT rated — the reference's
-          // anti-testset, the snapshot's pairs as the seen set
-          graft.recommender.Als.topNUnseen(model, train, topN)
-            .select(
-              col("user").cast("long").as("user_id"),
-              col("item").cast("long").as("item_id"),
-              round(col("score").cast("double"), 4).as("score"))
-            .write.mode("overwrite").parquet(recsDir + "_staged")
+            col("rating").cast("float").as("rating")).cache()
+          // the fit and the seen side read the snapshot once, cached
+          try {
+            val model = graft.recommender.Als.fit(train, rank, maxIter)
+            // recs over the items each user has NOT rated — the
+            // reference's anti-testset, the snapshot's pairs as the
+            // seen set. recsDir is the serving surface (the reference's
+            // redis export): stage + atomic swap so a reader never
+            // observes a half-written directory, and reset the pending
+            // counter only AFTER the recs landed — a crash mid-train
+            // retrains on the next batch instead of serving stale recs
+            // for a full window
+            graft.recommender.Als.topNUnseen(model, train, topN)
+              .select(
+                col("user").cast("long").as("user_id"),
+                col("item").cast("long").as("item_id"),
+                round(col("score").cast("double"), 4).as("score"))
+              .write.mode("overwrite").parquet(recsDir + "_staged")
+          } finally { train.unpersist(); () }
           promoteStaged(recsDir)
           pending.set(0L)
         }

@@ -6,10 +6,10 @@ import org.scalatest.funsuite.AnyFunSuite
 
 /** The one-pass unseen top-n scorer ([[Als.topNUnseen]]): it must equal
   * a driver-side brute force (every score, seen items removed, sorted
-  * score desc / item asc, first n) exactly, on both of its paths — item
-  * blocks broadcast to every user task, and MLlib's blocked cross join
-  * merged by `graft_topk` — and the frame [[Als.topNOn]] returns must
-  * not reach back to the training source once it has returned.
+  * score desc / item asc, first n) exactly, whatever the block size
+  * (one or many item blocks per user block, merged by `graft_topk`) —
+  * and the frame [[Als.topNOn]] returns must not reach back to the
+  * training source once it has returned.
   */
 class AlsTopNSpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
@@ -52,29 +52,18 @@ class AlsTopNSpec extends AnyFunSuite {
       .map { case (u, i, s, r) => (u, i, s + 0.0f, r) }.toSet
   }
 
-  test("one-pass scorer ≡ brute force on both paths: ties, short lists, all-seen and no-seen users") {
+  test("one-pass scorer ≡ brute force: ties, short lists, all-seen and no-seen users") {
     val want = bruteForce
     assert(want.filter(_._1 == 10).map(_._2) === Set(1, 2, 3))
     assert(want.filter(_._1 == 11).map(r => (r._2, r._4)) === Set((3, 1), (6, 2)))
     assert(!want.exists(_._1 == 12))
     assert(want.count(_._1 == 13) === n)
 
-    // broadcast path (the item factors fit the threshold), several
-    // item blocks per task
+    // each (user block, item block) pair yields a heap per user and
+    // graft_topk merges them: several item blocks, and one for all
+    assert(scored(blockSize = 2) === want)
     assert(scored(blockSize = 3) === want)
     assert(scored(blockSize = 4096) === want)
-    // blocked cross join: each (user block, item block) pair yields a
-    // heap per user, graft_topk merges them
-    val key = "spark.sql.autoBroadcastJoinThreshold"
-    val prev = spark.conf.getOption(key)
-    spark.conf.set(key, "-1")
-    try {
-      assert(scored(blockSize = 3) === want)
-      assert(scored(blockSize = 2) === want)
-    } finally prev match {
-      case Some(v) => spark.conf.set(key, v)
-      case None => spark.conf.unset(key)
-    }
   }
 
   test("scores equal recommendForAllUsers' to the bit; a user filter scores only those users") {
