@@ -3,7 +3,6 @@ package graft.recommender
 import dev.ludovic.netlib.blas.JavaBLAS
 import graft.Tables
 import graft.functions.TopKAgg
-import org.apache.spark.ml.evaluation.RegressionEvaluator
 import org.apache.spark.ml.recommendation.{ALS, ALSModel}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -27,8 +26,8 @@ import org.apache.spark.sql.functions._
   *                              BLAS sgemv MLlib's recommendForAll
   *                              runs) that skips the user's seen items
   *                              as it scores and keeps a top-n heap
-  *  - GridSearchCV(rmse/mae)  → train/validation sweep with
-  *                              RegressionEvaluator
+  *  - GridSearchCV(rmse/mae)  → hash-fold fits, each fold's rmse/mae
+  *                              from one aggregate ([[scoreFold]])
   *
   * The reference materializes the full anti-testset (all unseen
   * user×item pairs) in memory — O(|U|·|I|) on the driver, the exact
@@ -37,6 +36,18 @@ import org.apache.spark.sql.functions._
   * only a per-user n-element heap survives the block.
   */
 object Als {
+
+  /** Settings of the registered ALS queries: the serve depth, the
+    * regularization every fit and fold-in solve shares, the implicit
+    * model's confidence scale (c = 1 + α·r), and the fold-in hold-out —
+    * users with `user_id % HoldMod == HoldVal` stand in for sign-ups
+    * since the last retrain.
+    */
+  private val ServeN = 20
+  private val RegParam = 0.1
+  private val ImplicitAlpha = 10.0
+  private val HoldMod = 50
+  private val HoldVal = 7
 
   /** Training input after the id seam: `train` carries int32
     * (user, item, rating); the maps are present iff the raw keys were
@@ -156,12 +167,7 @@ object Als {
     base.interactions
       .select(col("user_id"), col("item_id"), col("rating").cast("float").as("rating"))
 
-  private def trainingSet(spark: SparkSession, sfDir: String): DataFrame = {
-    val base = baseTables(spark, sfDir)
-    keyedTrainingSet(rawSet(base), boundsProbe = Some(base.boundsProbe)).train
-  }
-
-  def fit(train: DataFrame, rank: Int = 8, maxIter: Int = 10, regParam: Double = 0.1,
+  def fit(train: DataFrame, rank: Int = 8, maxIter: Int = 10, regParam: Double = RegParam,
           implicitPrefs: Boolean = false, alpha: Double = 1.0, seed: Long = 42L): ALSModel = {
     // MLlib ALS only engages its iteration checkpointing when the
     // context has a checkpoint dir — without one, every iteration's
@@ -194,7 +200,7 @@ object Als {
     * is no buffer to size: a user with many seen items still gets n
     * recommendations, or all of their unseen items when fewer exist.
     */
-  def topN(spark: SparkSession, sfDir: String, n: Int = 20): DataFrame = {
+  def topN(spark: SparkSession, sfDir: String, n: Int = ServeN): DataFrame = {
     val base = baseTables(spark, sfDir)
     topNOn(rawSet(base), n, boundsProbe = Some(base.boundsProbe))
   }
@@ -252,7 +258,7 @@ object Als {
     *
     * User blocks cross-join item blocks as in MLlib, so no side has to
     * fit in memory: each (user block, item block) pair yields ≤ n
-    * candidates per user, and `graft_topk` merges them per user (one
+    * candidates per user, and a top-k aggregate merges them per user (one
     * shuffle of ≤ n × item blocks rows per user). A user who has seen
     * every item gets no rows; one with fewer than n unseen items gets
     * all.
@@ -267,16 +273,18 @@ object Als {
     scoreUnseen(userSide(model.userFactors.filter(users), seen),
       model.itemFactors, model.rank, n, model.getBlockSize)
 
-  /** The scorer's user side: (user, features, seen), `seen` holding the
-    * user's item ids sorted ascending (empty when they have none).
-    * Materialized eagerly (`localCheckpoint`) while `seen` is still
-    * cached, so the frames built on it stop their lineage here.
+  /** The scorer's user side: (user, features, seen), `user` typed as
+    * the factors' `id` (int for a model's users, bigint for fold-in
+    * users) and `seen` holding the user's item ids sorted ascending
+    * (empty when they have none). Materialized eagerly
+    * (`localCheckpoint`) while `seen` is still cached, so the frames
+    * built on it stop their lineage here.
     *
     * Hash-partitioned on `user`, so the cross join runs shuffle
     * partitions × item blocks tasks, not ALS user blocks × item blocks.
     */
   private[graft] def userSide(userFactors: DataFrame, seen: DataFrame): DataFrame = {
-    val seenByUser = seen.groupBy(col("user").cast("int").as("user"))
+    val seenByUser = seen.groupBy(col("user").cast(userFactors.schema("id").dataType).as("user"))
       .agg(sort_array(collect_list(col("item").cast("int"))).as("seen"))
     userFactors.select(col("id").as("user"), col("features"))
       .join(seenByUser, Seq("user"), "left")
@@ -288,6 +296,8 @@ object Als {
 
   /** [[topNUnseen]]'s scoring pass over an explicit user side
     * ([[userSide]]) and item factors (id int, features array<float>).
+    * User keys ride as bigint and come back in the user side's own key
+    * type.
     */
   private[graft] def scoreUnseen(users: DataFrame, itemFactors: DataFrame,
                                  rank: Int, n: Int, blockSize: Int): DataFrame = {
@@ -298,14 +308,14 @@ object Als {
       .as[(Int, Array[Float])]
       .mapPartitions(_.grouped(blockSize)
         .map(b => (b.map(_._1).toArray, b.flatMap(_._2).toArray)))
-    val userRows = users.select(col("user"), col("features"), col("seen"))
-      .as[(Int, Array[Float], Array[Int])]
+    val userRows = users.select(col("user").cast("long"), col("features"), col("seen"))
+      .as[(Long, Array[Float], Array[Int])]
     TopKAgg.register(spark)
     val userBlocks = userRows.mapPartitions(_.grouped(blockSize).map { b =>
       (b.map(_._1).toArray, b.flatMap(_._2).toArray, b.map(_._3).toArray)
     })
     userBlocks.crossJoin(blocks)
-      .as[(Array[Int], Array[Float], Array[Array[Int]], Array[Int], Array[Float])]
+      .as[(Array[Long], Array[Float], Array[Array[Int]], Array[Int], Array[Float])]
       .mapPartitions { it =>
         val scores = new Array[Float](blockSize)
         it.flatMap { case (uIds, uMat, seens, iIds, iMat) =>
@@ -319,7 +329,8 @@ object Als {
       .groupBy(col("user"))
       .agg(expr(s"graft_topk(score, cast(item as bigint), $n)").as("topk"))
       .select(col("user"), posexplode(col("topk")))
-      .select(col("user"), col("col.id").cast("int").as("item"),
+      .select(col("user").cast(users.schema("user").dataType).as("user"),
+        col("col.id").cast("int").as("item"),
         col("col.score").cast("float").as("score"), (col("pos") + 1).as("rn"))
   }
 
@@ -358,13 +369,12 @@ object Als {
     * random negatives — the ranking-sanity check the implicit model
     * must pass to be a model at all).
     */
-  def implicitTopN(spark: SparkSession, sfDir: String, n: Int = 20,
-                   alpha: Double = 10.0): DataFrame = {
+  def implicitTopN(spark: SparkSession, sfDir: String, n: Int = ServeN): DataFrame = {
     val base = baseTables(spark, sfDir)
     val keyed = keyedTrainingSet(implicitRawSet(base),
       boundsProbe = Some(base.boundsProbe))
     val train = keyed.train.cache()
-    val model = fit(train, implicitPrefs = true, alpha = alpha)
+    val model = fit(train, implicitPrefs = true, alpha = ImplicitAlpha)
     keyed.release()
     val out = servedTopN(train, model, n, keyed)
     train.unpersist()
@@ -560,26 +570,21 @@ object Als {
   /** The fold-in SERVING path end-to-end (registered as
     * `als_fold_in`): train on the base population, hold out a slice of
     * users as "signed up since the last retrain", fold their factors
-    * in against the frozen item factors, and serve per-user top-N over
-    * their unseen items — scores from the same dot product
-    * `recommendForAllUsers` computes, ranked by the partial-
-    * aggregating top-k heap (≤ n rows per user per map partition
-    * shuffle). The fold-in side is broadcast (delta-sized by
-    * definition); the item-factor side streams map-side — no shuffle
-    * of the item factors at any point, which is the 100 TB shape
-    * (items are the big side of a mature recommender). Id seam: items
-    * translate through the re-index map when present; fold-in user
-    * ids never need translating (they stay original longs — fold-in
-    * is per-user independent, no int32 contract).
+    * in against the frozen item factors, and serve each of them the
+    * top `ServeN` over their unseen items through the same one-pass
+    * kernel as [[topN]] ([[scoreUnseen]]).
+    *
+    * The scores are the float `sgemv` ones `recommendForAllUsers`
+    * computes, and they are this query's oracle: a double-precision
+    * kernel would be a second unseen top-n path, so there is none.
+    * Id seam: items translate through the re-index map when present;
+    * fold-in user ids never need translating (they stay original longs
+    * — fold-in is per-user independent, no int32 contract).
     */
-  def foldInTopN(spark: SparkSession, sfDir: String, n: Int = 20,
-                 holdMod: Int = 50, holdVal: Int = 7,
-                 rank: Int = 8, regParam: Double = 0.1): DataFrame = {
+  def foldInTopN(spark: SparkSession, sfDir: String): DataFrame = {
     val base = baseTables(spark, sfDir)
-    foldInServe(rawSet(base), n, holdMod, holdVal,
-      t => fit(t, rank = rank, regParam = regParam),
-      (yf, r) => foldInFactors(yf, r, regParam),
-      boundsProbe = Some(base.boundsProbe))
+    foldInServe(rawSet(base), t => fit(t),
+      (yf, r) => foldInFactors(yf, r, RegParam), base.boundsProbe)
   }
 
   /** [[foldInTopN]] for the IMPLICIT model (registered as
@@ -591,32 +596,27 @@ object Als {
     * periodic recompute; controller.py:150's implicit rows deserve
     * the same freshness).
     */
-  def implicitFoldInTopN(spark: SparkSession, sfDir: String, n: Int = 20,
-                         holdMod: Int = 50, holdVal: Int = 7,
-                         rank: Int = 8, regParam: Double = 0.1,
-                         alpha: Double = 10.0): DataFrame = {
+  def implicitFoldInTopN(spark: SparkSession, sfDir: String): DataFrame = {
     val base = baseTables(spark, sfDir)
-    foldInServe(implicitRawSet(base), n, holdMod, holdVal,
-      t => fit(t, rank = rank, regParam = regParam, implicitPrefs = true, alpha = alpha),
-      (yf, r) => implicitFoldInFactors(yf, r, regParam, alpha),
-      boundsProbe = Some(base.boundsProbe))
+    foldInServe(implicitRawSet(base),
+      t => fit(t, implicitPrefs = true, alpha = ImplicitAlpha),
+      (yf, r) => implicitFoldInFactors(yf, r, RegParam, ImplicitAlpha),
+      base.boundsProbe)
   }
 
   /** Shared hold-out → train → fold-in → serve pipeline of
     * [[foldInTopN]] / [[implicitFoldInTopN]]; `fitFn` and `foldFn`
     * carry the model-specific halves.
     */
-  private def foldInServe(rawIn: DataFrame, n: Int, holdMod: Int, holdVal: Int,
-                          fitFn: DataFrame => ALSModel,
+  private def foldInServe(rawIn: DataFrame, fitFn: DataFrame => ALSModel,
                           foldFn: (DataFrame, DataFrame) => DataFrame,
-                          boundsProbe: Option[DataFrame] = None): DataFrame = {
-    val spark = rawIn.sparkSession
+                          boundsProbe: DataFrame): DataFrame = {
     val raw = rawIn.cache()
-    val newSide = raw.filter(col("user_id") % holdMod === holdVal)
-    val baseSide = raw.filter(col("user_id") % holdMod =!= holdVal)
+    val newSide = raw.filter(col("user_id") % HoldMod === HoldVal)
+    val baseSide = raw.filter(col("user_id") % HoldMod =!= HoldVal)
     // the hold-out filter only shrinks the key set, so the caller's
     // probe bounds still contain baseSide's
-    val keyed = keyedTrainingSet(baseSide, boundsProbe = boundsProbe)
+    val keyed = keyedTrainingSet(baseSide, boundsProbe = Some(boundsProbe))
     val train = keyed.train.cache()
     val model = fitFn(train)
     keyed.release()
@@ -627,26 +627,18 @@ object Als {
       case None => newSide
         .select(col("user_id"), col("item_id").cast("int").as("item"), col("rating"))
     }
-    val folded = foldFn(model.itemFactors, newKeyed)
-    graft.functions.VectorFunctions.register(spark)
-    graft.functions.TopKAgg.register(spark)
-    val scored = model.itemFactors
-      .select(col("id").as("item"), col("features").as("yf"))
-      .join(broadcast(folded), lit(true))
-      .withColumn("score",
-        expr("graft_dot(cast(features as array<double>), cast(yf as array<double>))"))
-    val seen = newKeyed.select(col("user_id"), col("item")).distinct()
-    val top = scored.join(seen, Seq("user_id", "item"), "left_anti")
-      .groupBy(col("user_id"))
-      .agg(expr(s"graft_topk(score, cast(item as bigint), $n)").as("topk"))
-      .select(col("user_id"), posexplode(col("topk")))
-      .select(col("user_id"), col("col.id").cast("int").as("item"),
-        col("col.score").as("score"), (col("pos") + 1).as("rn"))
+    // built while `raw` is cached: its eager checkpoint ends the
+    // returned frame's lineage here
+    val users = userSide(
+      foldFn(model.itemFactors, newKeyed).withColumnRenamed("user_id", "id"),
+      newKeyed.select(col("user_id").as("user"), col("item")))
+    raw.unpersist()
+    val top = scoreUnseen(users, model.itemFactors, model.rank, ServeN, model.getBlockSize)
+      .withColumnRenamed("user", "user_id")
     val out = keyed.itemMap match {
       case Some(im) => top.join(im, Seq("item"))
       case None => top.withColumn("item_id", col("item").cast("long"))
     }
-    raw.unpersist()
     out.select(col("user_id"), col("item_id"),
       round(col("score").cast("double"), 4).as("score"), col("rn"))
   }
@@ -669,25 +661,40 @@ object Als {
     keyedTrainingSet(implicitRawSet(base), boundsProbe = Some(base.boundsProbe)).train
   }
 
+  /** The training set with a deterministic hash fold in `fold`
+    * (0 until k), cached: every fold's fit and scoring reads it.
+    */
+  private def foldedSet(spark: SparkSession, sfDir: String, k: Int): DataFrame = {
+    val base = baseTables(spark, sfDir)
+    keyedTrainingSet(rawSet(base), boundsProbe = Some(base.boundsProbe)).train
+      .withColumn("fold", pmod(hash(col("user"), col("item")), lit(k)))
+      .cache()
+  }
+
+  /** One fold of a train/validation protocol: fit on every fold of
+    * `all` but `f`, predict fold `f`, and return its (rmse, mae, n_test)
+    * from one aggregate — each metric rounded to 4 places.
+    */
+  private def scoreFold(all: DataFrame, f: Int, rank: Int, maxIter: Int,
+                        regParam: Double): (Double, Double, Long) = {
+    val model = fit(all.filter(col("fold") =!= f).drop("fold"), rank, maxIter, regParam)
+    val err = col("prediction").cast("double") - col("rating").cast("double")
+    val m = model.transform(all.filter(col("fold") === f).drop("fold"))
+      .agg(sqrt(avg(err * err)), avg(abs(err)), count(lit(1))).head()
+    (math.rint(m.getDouble(0) * 10000) / 10000,
+     math.rint(m.getDouble(1) * 10000) / 10000, m.getLong(2))
+  }
+
   /** RMSE + MAE on a deterministic 80/20 split — the reference's
     * evaluation measures (trainer.py:57 GridSearchCV measures=['rmse','mae']).
     */
   def evaluate(spark: SparkSession, sfDir: String, rank: Int = 8, maxIter: Int = 10,
-               regParam: Double = 0.1): DataFrame = {
+               regParam: Double = RegParam): DataFrame = {
     import spark.implicits._
-    val all = trainingSet(spark, sfDir)
-      .withColumn("fold", pmod(hash(col("user"), col("item")), lit(5)))
-    val train = all.filter(col("fold") =!= 0).drop("fold").cache()
-    val test = all.filter(col("fold") === 0).drop("fold").cache()
-    val model = fit(train, rank, maxIter, regParam)
-    val pred = model.transform(test).cache()
-    val rmse = new RegressionEvaluator().setMetricName("rmse")
-      .setLabelCol("rating").setPredictionCol("prediction").evaluate(pred)
-    val mae = new RegressionEvaluator().setMetricName("mae")
-      .setLabelCol("rating").setPredictionCol("prediction").evaluate(pred)
-    val nTest = pred.count()
-    Seq((rank, maxIter, regParam, math.rint(rmse * 10000) / 10000,
-         math.rint(mae * 10000) / 10000, nTest))
+    val all = foldedSet(spark, sfDir, 5)
+    val (rmse, mae, nTest) = scoreFold(all, 0, rank, maxIter, regParam)
+    all.unpersist()
+    Seq((rank, maxIter, regParam, rmse, mae, nTest))
       .toDF("rank", "max_iter", "reg_param", "rmse", "mae", "n_test")
   }
 
@@ -696,22 +703,12 @@ object Als {
     * folds, one distributed fit per fold, mean±range RMSE/MAE.
     */
   def crossValidate(spark: SparkSession, sfDir: String, folds: Int = 3,
-                    rank: Int = 8, maxIter: Int = 5, regParam: Double = 0.1): DataFrame = {
+                    rank: Int = 8, maxIter: Int = 5, regParam: Double = RegParam): DataFrame = {
     import spark.implicits._
-    val all = trainingSet(spark, sfDir)
-      .withColumn("fold", pmod(hash(col("user"), col("item")), lit(folds)))
-      .cache()
-    val evalRmse = new RegressionEvaluator().setMetricName("rmse")
-      .setLabelCol("rating").setPredictionCol("prediction")
-    val evalMae = new RegressionEvaluator().setMetricName("mae")
-      .setLabelCol("rating").setPredictionCol("prediction")
+    val all = foldedSet(spark, sfDir, folds)
     val rows = (0 until folds).map { f =>
-      val model = fit(all.filter(col("fold") =!= f).drop("fold"), rank, maxIter, regParam)
-      val pred = model.transform(all.filter(col("fold") === f).drop("fold")).cache()
-      val r = (f, math.rint(evalRmse.evaluate(pred) * 10000) / 10000,
-               math.rint(evalMae.evaluate(pred) * 10000) / 10000, pred.count())
-      pred.unpersist()
-      r
+      val (rmse, mae, nTest) = scoreFold(all, f, rank, maxIter, regParam)
+      (f, rmse, mae, nTest)
     }
     all.unpersist()
     rows.toDF("fold", "rmse", "mae", "n_test")
@@ -739,23 +736,12 @@ object Als {
                  ranks: Seq[Int] = Seq(4, 8), regs: Seq[Double] = Seq(0.05, 0.1),
                  iters: Seq[Int] = Seq(5, 10), folds: Int = 3): DataFrame = {
     import spark.implicits._
-    val all = trainingSet(spark, sfDir)
-      .withColumn("fold", pmod(hash(col("user"), col("item")), lit(folds)))
-      .cache()
-    val evalRmse = new RegressionEvaluator().setMetricName("rmse")
-      .setLabelCol("rating").setPredictionCol("prediction")
-    val evalMae = new RegressionEvaluator().setMetricName("mae")
-      .setLabelCol("rating").setPredictionCol("prediction")
+    val all = foldedSet(spark, sfDir, folds)
     val cells = for (r <- ranks; reg <- regs; it <- iters) yield (r, reg, it)
     val perFold = cells.flatMap { case (r, reg, it) =>
       (0 until folds).map { f =>
-        val m = fit(all.filter(col("fold") =!= f).drop("fold"), rank = r, maxIter = it, regParam = reg)
-        val pred = m.transform(all.filter(col("fold") === f).drop("fold")).cache()
-        val row = (r, reg, it, f.toLong,
-          math.rint(evalRmse.evaluate(pred) * 10000) / 10000,
-          math.rint(evalMae.evaluate(pred) * 10000) / 10000)
-        pred.unpersist()
-        row
+        val (rmse, mae, _) = scoreFold(all, f, r, it, reg)
+        (r, reg, it, f.toLong, rmse, mae)
       }
     }
     all.unpersist()

@@ -1,15 +1,18 @@
 package graft
 
 import graft.recommender.Als
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{IntegerType, LongType}
 import org.scalatest.funsuite.AnyFunSuite
 
 /** The one-pass unseen top-n scorer ([[Als.topNUnseen]]): it must equal
   * a driver-side brute force (every score, seen items removed, sorted
   * score desc / item asc, first n) exactly, whatever the block size
-  * (one or many item blocks per user block, merged by `graft_topk`) —
-  * and the frame [[Als.topNOn]] returns must not reach back to the
-  * training source once it has returned.
+  * (one or many item blocks per user block, merged by `graft_topk`) and
+  * whatever the user key's width — and the frames [[Als.topNOn]] and
+  * the fold-in serves return must not reach back to the training
+  * source once they have returned.
   */
 class AlsTopNSpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
@@ -33,22 +36,31 @@ class AlsTopNSpec extends AnyFunSuite {
   private val seen = Seq(10 -> 7, 10 -> 4) ++
     Seq(1, 2, 4, 5, 7).map(11 -> _) ++ (1 to 7).map(12 -> _)
   private val n = 3
+  // beyond int32: fold-in users keep their original long ids
+  private val wide = 1L << 33
 
-  private def bruteForce: Set[(Int, Int, Float, Int)] = userFactors.flatMap { case (u, x) =>
+  private def bruteForce: Set[(Long, Int, Float, Int)] = userFactors.flatMap { case (u, x) =>
     val s = seen.collect { case (`u`, i) => i }.toSet
     itemFactors.filterNot(i => s(i._1))
       .map { case (i, y) => (i, x(0) * y(0) + x(1) * y(1)) }
       .sortBy { case (i, score) => (-score, i) }
       .take(n).zipWithIndex
-      .map { case ((i, score), r) => (u, i, score + 0.0f, r + 1) }
+      .map { case ((i, score), r) => (u.toLong, i, score + 0.0f, r + 1) }
   }.toSet
 
-  private def scored(blockSize: Int): Set[(Int, Int, Float, Int)] = {
+  /** The kernel's rows; with `offset`, every user id is shifted by it,
+    * so the user side is keyed bigint and must come back so.
+    */
+  private def scored(blockSize: Int, offset: Option[Long] = None): Set[(Long, Int, Float, Int)] = {
     import spark.implicits._
-    val users = Als.userSide(userFactors.toDF("id", "features"), seen.toDF("user", "item"))
-    Als.scoreUnseen(users, itemFactors.toDF("id", "features").repartition(2),
+    def keyed(df: DataFrame, c: String) = offset.fold(df)(o => df.withColumn(c, col(c) + o))
+    val users = Als.userSide(keyed(userFactors.toDF("id", "features"), "id"),
+      keyed(seen.toDF("user", "item"), "user"))
+    val out = Als.scoreUnseen(users, itemFactors.toDF("id", "features").repartition(2),
         rank = 2, n = n, blockSize = blockSize)
-      .as[(Int, Int, Float, Int)].collect()
+    assert(out.schema("user").dataType === (if (offset.isEmpty) IntegerType else LongType))
+    out.select(col("user").cast("long"), col("item"), col("score"), col("rn"))
+      .as[(Long, Int, Float, Int)].collect()
       .map { case (u, i, s, r) => (u, i, s + 0.0f, r) }.toSet
   }
 
@@ -64,6 +76,7 @@ class AlsTopNSpec extends AnyFunSuite {
     assert(scored(blockSize = 2) === want)
     assert(scored(blockSize = 3) === want)
     assert(scored(blockSize = 4096) === want)
+    assert(scored(blockSize = 2, Some(wide)) === want.map(r => r.copy(_1 = r._1 + wide)))
   }
 
   test("scores equal recommendForAllUsers' to the bit; a user filter scores only those users") {
@@ -114,5 +127,14 @@ class AlsTopNSpec extends AnyFunSuite {
       assert(rs.map(_._3).sorted.toSeq === (1 to 5))
     }
     assert(recs.map(_._1).toSet === rawPairs.map(_._1))
+  }
+
+  test("the fold-in serves' frames read no parquet once they return") {
+    // the fold-in user side is materialized before the raw set is
+    // released: writing either frame must not re-derive orders⋈lineitem
+    for (out <- Seq(Als.foldInTopN(spark, sf), Als.implicitFoldInTopN(spark, sf))) {
+      val plan = out.queryExecution.executedPlan.toString
+      assert(!plan.toLowerCase.contains("parquet"), plan)
+    }
   }
 }
