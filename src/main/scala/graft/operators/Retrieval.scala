@@ -260,29 +260,24 @@ object Retrieval {
     * crash consistency and live readers.
     *
     * Ordering: the stats tick publishes BEFORE the postings tick;
-    * the postings marker is the batch's commit point (the replay
-    * guard below watches it). A crash in between replays
-    * idempotently — the stats store's own replay guard skips its
-    * half. Contract: delta doc_ids are NEW (corpus ingest is
+    * the postings marker is the batch's commit point (the
+    * maintainer's replay guard, [[graft.streaming.Maintainer]],
+    * watches it). A crash in between replays idempotently — each
+    * apply no-ops a batch its store already holds, so the stats half
+    * skips. Contract: delta doc_ids are NEW (corpus ingest is
     * append-only); a deleted or re-crawled id is [[cdcBm25Tick]]'s
     * job — appending an existing id would stack duplicate keys.
     */
   def appendBm25Tick(spark: SparkSession, dir: String, delta: DataFrame,
                      batchId: Long): Unit = {
     import graft.streaming.BucketStore
-    val store = s"$dir/postings"
-    val statsStore = s"$dir/stats"
-    BucketStore.recover(store)
-    BucketStore.recover(statsStore)
-    if (BucketStore.appliedBatchId(store) < batchId) {
-      BucketStore.applyAppendTick(spark, statsStore,
-        statsPartialOf(delta).withColumn(BucketStore.BucketCol, statsBucket),
-        batchId = batchId, n = StatsBuckets, onCompact = Some(statsCompact))
-      BucketStore.applyAppendTick(spark, store,
-        postingsOf(delta).withColumn(BucketStore.BucketCol, tokenBucket(col("token"))),
-        batchId = batchId, n = IndexBuckets)
-      ()
-    }
+    BucketStore.applyAppendTick(spark, s"$dir/stats",
+      statsPartialOf(delta).withColumn(BucketStore.BucketCol, statsBucket),
+      batchId = batchId, n = StatsBuckets, onCompact = Some(statsCompact))
+    BucketStore.applyAppendTick(spark, s"$dir/postings",
+      postingsOf(delta).withColumn(BucketStore.BucketCol, tokenBucket(col("token"))),
+      batchId = batchId, n = IndexBuckets)
+    ()
   }
 
   /** CDC tick — delete / re-ingest (r12 verdict task #3, the
@@ -311,9 +306,6 @@ object Retrieval {
     import graft.streaming.BucketStore
     val store = s"$dir/postings"
     val statsStore = s"$dir/stats"
-    BucketStore.recover(store)
-    BucketStore.recover(statsStore)
-    if (BucketStore.appliedBatchId(store) >= batchId) return
     val cur = cdc.filter(col("op").isin("i", "u"))
       .select(col("doc_id"), col("text"))
     val before = cdc.filter(col("op").isin("u", "d"))
@@ -720,6 +712,31 @@ object Retrieval {
     graft.streaming.BucketStore.seed(rows,
       graft.streaming.BucketStore.longBucket(col("vec_id"), n), dir, n)
     rows.unpersist()
+    ()
+  }
+
+  /** One tick of the sidecar: the batch's upserted (vec_id, v, norm)
+    * rows, and with `removed` (a CDC batch) its deleted ids. Deletes
+    * need no before-image — the sidecar is bucketed by the id itself.
+    * An append-only batch stacks its new ids through `applyAppendTick`;
+    * a CDC batch merges through `applyTick`. The layout is recovered
+    * from the store meta (the seed derived it).
+    */
+  private[graft] def vecSidecarTick(spark: SparkSession, dir: String, ups: DataFrame,
+      removed: Option[DataFrame], batchId: Long): Unit = {
+    import graft.streaming.BucketStore
+    val n = BucketStore.seededBuckets(dir)
+    def bucketed(df: DataFrame) = df
+      .select(col("vec_id"), col("v"), col("norm"))
+      .withColumn(BucketStore.BucketCol, BucketStore.longBucket(col("vec_id"), n))
+    removed match {
+      case Some(r) =>
+        BucketStore.applyTick(spark, dir, bucketed(ups), Seq("vec_id"), batchId, n = n,
+          removed = Some(r.select(col("vec_id"),
+            BucketStore.longBucket(col("vec_id"), n).as(BucketStore.BucketCol))))
+      case None =>
+        BucketStore.applyAppendTick(spark, dir, bucketed(ups), batchId, n = n)
+    }
     ()
   }
 

@@ -1851,42 +1851,43 @@ object Similarity {
     import graft.streaming.BucketStore
     val d = assignClusters(withVecNorm(spark, delta), cents)
       .select(col("vec_id"), col("v"), col("norm"), col("cluster")).cache()
-    val touched = BucketStore.touchedBuckets(
-      d.select(BucketStore.longBucket(col("cluster"), nlist).as(BucketStore.BucketCol)))
-    val stored = BucketStore.readBuckets(spark, storeDir, touched, nlist)
-      .select(col("cluster"), col("vec_id").as("id_a"),
-        col("v").as("va"), col("norm").as("na"))
-    val candidates = stored.unionByName(
-      d.select(col("cluster"), col("vec_id").as("id_a"),
-        col("v").as("va"), col("norm").as("na")))
-    val probe = d.select(col("cluster"), col("vec_id").as("id_b"),
-      col("v").as("vb"), col("norm").as("nb"))
-    val dropped = candidates.join(probe, Seq("cluster"))
-      .filter(col("id_a") < col("id_b"))
-      .filter(round(expr("graft_dot(va, vb)") / (col("na") * col("nb")), 4) >= threshold)
-      .select(col("id_b").as("vec_id")).distinct()
-    // delta-sized; materialized eagerly so the returned frame never
-    // lazily re-reads pre-tick store generations (the gc hazard) —
-    // released by the caller's session-wide clearCache, the
-    // flagContaminatedFuzzyOf convention
-    val verdicts = d.select(col("vec_id"), col("cluster"))
-      .join(dropped.withColumn("dropFlag", lit(true)), Seq("vec_id"), "left")
-      .select(col("vec_id"), col("cluster"),
-        not(coalesce(col("dropFlag"), lit(false))).as("keep"))
-      .cache()
-    verdicts.count()
-    verdictsDir.foreach(dir =>
-      verdicts.write.mode("overwrite").parquet(s"$dir/batch=$batchId"))
-    // new vec_ids by the append-only ingest contract → the delta
-    // stacks as one generation with zero carry-over reads (tick
-    // write I/O ∝ delta, not the touched clusters' store size)
-    BucketStore.applyAppendTick(spark, storeDir,
-      d.join(verdicts.select(col("vec_id"), col("keep")), Seq("vec_id"))
-        .withColumn(BucketStore.BucketCol,
-          BucketStore.longBucket(col("cluster"), nlist)),
-      batchId = batchId, n = nlist)
-    d.unpersist()
-    verdicts
+    try {
+      val touched = BucketStore.touchedBuckets(
+        d.select(BucketStore.longBucket(col("cluster"), nlist).as(BucketStore.BucketCol)))
+      val stored = BucketStore.readBuckets(spark, storeDir, touched, nlist)
+        .select(col("cluster"), col("vec_id").as("id_a"),
+          col("v").as("va"), col("norm").as("na"))
+      val candidates = stored.unionByName(
+        d.select(col("cluster"), col("vec_id").as("id_a"),
+          col("v").as("va"), col("norm").as("na")))
+      val probe = d.select(col("cluster"), col("vec_id").as("id_b"),
+        col("v").as("vb"), col("norm").as("nb"))
+      val dropped = candidates.join(probe, Seq("cluster"))
+        .filter(col("id_a") < col("id_b"))
+        .filter(round(expr("graft_dot(va, vb)") / (col("na") * col("nb")), 4) >= threshold)
+        .select(col("id_b").as("vec_id")).distinct()
+      // delta-sized; materialized eagerly so the returned frame never
+      // lazily re-reads pre-tick store generations (the gc hazard) —
+      // released by the caller's session-wide clearCache, the
+      // flagContaminatedFuzzyOf convention
+      val verdicts = d.select(col("vec_id"), col("cluster"))
+        .join(dropped.withColumn("dropFlag", lit(true)), Seq("vec_id"), "left")
+        .select(col("vec_id"), col("cluster"),
+          not(coalesce(col("dropFlag"), lit(false))).as("keep"))
+        .cache()
+      verdicts.count()
+      verdictsDir.foreach(dir =>
+        verdicts.write.mode("overwrite").parquet(s"$dir/batch=$batchId"))
+      // new vec_ids by the append-only ingest contract → the delta
+      // stacks as one generation with zero carry-over reads (tick
+      // write I/O ∝ delta, not the touched clusters' store size)
+      BucketStore.applyAppendTick(spark, storeDir,
+        d.join(verdicts.select(col("vec_id"), col("keep")), Seq("vec_id"))
+          .withColumn(BucketStore.BucketCol,
+            BucketStore.longBucket(col("cluster"), nlist)),
+        batchId = batchId, n = nlist)
+      verdicts
+    } finally { d.unpersist(); () }
   }
 
   /** CDC tick for the semantic-dedup store — the delete/re-ingest
@@ -1927,46 +1928,47 @@ object Similarity {
       .select(col("vec_id"),
         BucketStore.longBucket(col("cluster"), nlist).as(BucketStore.BucketCol))
       .cache()
-    gone.count() // materialize before any store mutation (gc hazard)
     val d = assignClusters(
         withVecNorm(spark, cdc.filter(col("op") === "upsert")
           .select(col("vec_id"), col("v"))), cents)
       .select(col("vec_id"), col("v"), col("norm"), col("cluster")).cache()
-    val touched = BucketStore.touchedBuckets(
-      d.select(BucketStore.longBucket(col("cluster"), nlist).as(BucketStore.BucketCol)))
-    // candidate side = stored rows of the touched clusters MINUS this
-    // batch's tombstones (and minus the upserted ids' own old images —
-    // the new image replaces them) ∪ the delta itself
-    val stored = BucketStore.readBuckets(spark, storeDir, touched, nlist)
-      .join(gone.select(col("vec_id")), Seq("vec_id"), "left_anti")
-      .join(d.select(col("vec_id")), Seq("vec_id"), "left_anti")
-      .select(col("cluster"), col("vec_id").as("id_a"),
-        col("v").as("va"), col("norm").as("na"))
-    val candidates = stored.unionByName(
-      d.select(col("cluster"), col("vec_id").as("id_a"),
-        col("v").as("va"), col("norm").as("na")))
-    val probe = d.select(col("cluster"), col("vec_id").as("id_b"),
-      col("v").as("vb"), col("norm").as("nb"))
-    val dropped = candidates.join(probe, Seq("cluster"))
-      .filter(col("id_a") < col("id_b"))
-      .filter(round(expr("graft_dot(va, vb)") / (col("na") * col("nb")), 4) >= threshold)
-      .select(col("id_b").as("vec_id")).distinct()
-    val verdicts = d.select(col("vec_id"), col("cluster"))
-      .join(dropped.withColumn("dropFlag", lit(true)), Seq("vec_id"), "left")
-      .select(col("vec_id"), col("cluster"),
-        not(coalesce(col("dropFlag"), lit(false))).as("keep"))
-      .cache()
-    verdicts.count()
-    verdictsDir.foreach(dir =>
-      verdicts.write.mode("overwrite").parquet(s"$dir/batch=$batchId"))
-    BucketStore.applyTick(spark, storeDir,
-      d.join(verdicts.select(col("vec_id"), col("keep")), Seq("vec_id"))
-        .withColumn(BucketStore.BucketCol,
-          BucketStore.longBucket(col("cluster"), nlist)),
-      Seq("vec_id"), batchId = batchId, n = nlist,
-      removed = Some(gone))
-    d.unpersist(); gone.unpersist()
-    verdicts
+    try {
+      gone.count() // materialize before any store mutation (gc hazard)
+      val touched = BucketStore.touchedBuckets(
+        d.select(BucketStore.longBucket(col("cluster"), nlist).as(BucketStore.BucketCol)))
+      // candidate side = stored rows of the touched clusters MINUS this
+      // batch's tombstones (and minus the upserted ids' own old images —
+      // the new image replaces them) ∪ the delta itself
+      val stored = BucketStore.readBuckets(spark, storeDir, touched, nlist)
+        .join(gone.select(col("vec_id")), Seq("vec_id"), "left_anti")
+        .join(d.select(col("vec_id")), Seq("vec_id"), "left_anti")
+        .select(col("cluster"), col("vec_id").as("id_a"),
+          col("v").as("va"), col("norm").as("na"))
+      val candidates = stored.unionByName(
+        d.select(col("cluster"), col("vec_id").as("id_a"),
+          col("v").as("va"), col("norm").as("na")))
+      val probe = d.select(col("cluster"), col("vec_id").as("id_b"),
+        col("v").as("vb"), col("norm").as("nb"))
+      val dropped = candidates.join(probe, Seq("cluster"))
+        .filter(col("id_a") < col("id_b"))
+        .filter(round(expr("graft_dot(va, vb)") / (col("na") * col("nb")), 4) >= threshold)
+        .select(col("id_b").as("vec_id")).distinct()
+      val verdicts = d.select(col("vec_id"), col("cluster"))
+        .join(dropped.withColumn("dropFlag", lit(true)), Seq("vec_id"), "left")
+        .select(col("vec_id"), col("cluster"),
+          not(coalesce(col("dropFlag"), lit(false))).as("keep"))
+        .cache()
+      verdicts.count()
+      verdictsDir.foreach(dir =>
+        verdicts.write.mode("overwrite").parquet(s"$dir/batch=$batchId"))
+      BucketStore.applyTick(spark, storeDir,
+        d.join(verdicts.select(col("vec_id"), col("keep")), Seq("vec_id"))
+          .withColumn(BucketStore.BucketCol,
+            BucketStore.longBucket(col("cluster"), nlist)),
+        Seq("vec_id"), batchId = batchId, n = nlist,
+        removed = Some(gone))
+      verdicts
+    } finally { d.unpersist(); gone.unpersist(); () }
   }
 
   /** Registered `dedup_semantic_store`: the store rung — seed the

@@ -2,7 +2,7 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{OutputMode, StreamingQuery}
+import org.apache.spark.sql.streaming.StreamingQuery
 
 /** Typed document row for streaming corpus ingestion. */
 case class Doc(doc_id: Long, ts: java.sql.Timestamp, text: String)
@@ -26,15 +26,6 @@ object DocStream {
     val cols = if (batch.columns.contains("op")) Seq("op", "doc_id", "text", "text_before")
       else Seq("doc_id", "text")
     batch.select(cols.map(col): _*).distinct()
-  }
-
-  /** Run one micro-batch body over `df` cached, and release the cache
-    * whether the tick lands or throws: a failed tick must not leave its
-    * batch pinned for the rest of the session.
-    */
-  private def withCached(df: DataFrame)(body: DataFrame => Unit): Unit = {
-    val b = df.cache()
-    try body(b) finally { b.unpersist(); () }
   }
 
   /** Keep the first arrival of each distinct content hash.
@@ -208,15 +199,6 @@ object DocStream {
     startBandedMaintain(clips, _ => graft.multimodal.Multimodal.videoFpDetector(maxTrim, tol),
       rowsDir, bandDir, pairsDir, checkpointDir, nBuckets, bucketCap, probe, compactPairsEveryNTicks)
 
-  /** The shared maintainer loop behind all three detectors. The replay
-    * guard keys on whichever store each tick path moves LAST — the
-    * BAND store for append ticks, the ROW store for CDC ticks (CDC
-    * applies band-first because its removal keys derive from the row
-    * store's before-images) — so "commit store caught up" ⇒ the whole
-    * tick (pairs included) landed; anything earlier re-runs
-    * idempotently (the already-applied store skips on its own marker,
-    * the other catches up).
-    */
   /** The drift probe's operating width: an explicit `nprobe` wins;
     * the ≤ 0 default derives from the index's ACTUAL list count
     * ([[graft.operators.Similarity.deriveIvfNprobe]]) so the probe
@@ -229,89 +211,94 @@ object DocStream {
     if (p.nprobe > 0) p.nprobe
     else graft.operators.Similarity.deriveIvfNprobe(nlist)
 
+  /** The shared maintainer behind the seven near-dup wrappers above
+    * (six detector families: MinHash and SimHash text, embedding LSH
+    * in its narrow and wide forms, image, audio and video), run
+    * through [[Maintainer.start]]. The replay guard keys on whichever
+    * store each tick path moves LAST — the BAND store for append
+    * ticks, the ROW store for CDC ticks (CDC applies band-first
+    * because its removal keys derive from the row store's
+    * before-images) — so "commit store caught up" ⇒ the whole tick
+    * (pairs included) landed; anything earlier re-runs idempotently
+    * (the already-applied store skips on its own marker, the other
+    * catches up).
+    */
   private def startBandedMaintain(input: DataFrame,
       det: org.apache.spark.sql.SparkSession => graft.operators.Dedup.NearDupDetector,
       rowsDir: String, bandDir: String, pairsDir: String, checkpointDir: String,
       nBuckets: Int, bucketCap: Int,
       probe: Option[graft.operators.Dedup.BandedProbeConfig] = None,
-      compactPairsEveryNTicks: Int = 8): StreamingQuery =
-    input.writeStream
-      .outputMode(OutputMode.Append())
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        val spark = batch.sparkSession
-        val d = det(spark)
-        BucketStore.recover(rowsDir); BucketStore.recover(bandDir)
-        // a stream WITH an `op` column is a CDC feed (the
-        // startBm25Maintain convention): delete/re-ingest batches
-        // route through the tombstoning merge tick — before-images
-        // come from the row store itself, so the feed carries only
-        // (op, id, payload). Pure-insert streams keep the O(delta)
-        // append tick; don't put an op column on one.
-        val isCdc = batch.columns.contains("op")
-        val cols = if (isCdc) col("op") +: d.inputCols.map(col)
-          else d.inputCols.map(col)
-        withCached(batch.toDF().select(cols: _*).distinct()) { b =>
-          // replay guard on the store each path applies LAST (append:
-          // rows→band; CDC: band→rows). Guarding on the first-moved
-          // store would skip a crash-interrupted tick on redelivery and
-          // permanently strand the second store.
-          val commitDir = if (isCdc) rowsDir else bandDir
-          if (b.count() > 0 && BucketStore.appliedBatchId(commitDir) < batchId) {
-            // nBuckets ≤ 0 (the r15 default): the store's own meta IS
-            // the layout contract — recover it rather than trust an
-            // operator-typed count (seeds now DERIVE their count, so a
-            // maintainer default that guessed 64 would mismatch any
-            // derived-layout store; explicit counts still assert)
-            val n = if (nBuckets > 0) nBuckets
-              else BucketStore.seededBuckets(rowsDir)
-            if (isCdc)
-              graft.operators.Dedup.nearDupStoreCdcTick(spark, d, rowsDir, bandDir,
-                pairsDir, b, batchId, n, bucketCap)
-            else
-              graft.operators.Dedup.nearDupStoreTick(spark, d, rowsDir, bandDir,
-                pairsDir, b, batchId, n, bucketCap)
-            // planted-recall drift probe over a hash-sample of THIS
-            // tick's rows (the startIvfMaintain convention): exact-copy
-            // plants must pair with their just-ticked sources, so every
-            // miss isolates a stale hot-bucket freeze — the banded
-            // families' staleness signal. CDC batches skip it (delete
-            // rows carry null payloads the detector can't sample).
-            probe.filter(p => !isCdc && batchId % p.everyNTicks.max(1) == 0).foreach { p =>
-              val qs = b.orderBy(md5(col(d.idCol).cast("string"))).limit(p.sample)
-              val r = graft.operators.Dedup.bandedDriftProbe(spark, d,
-                rowsDir, bandDir, qs, n, bucketCap, p.floor)
-              log.info(s"$bandDir batch=$batchId $r")
-              if (r.tripped) {
-                log.warn(s"$bandDir batch=$batchId PLANTED-RECALL DRIFT: $r — " +
-                  "the sampled rows' band keys are hot-frozen; raise bucketCap " +
-                  "or re-band/rebuild the store")
-                p.onDrift(batchId, r)
-              }
-            }
-            // r15 (the r14 verdict's #6): the pair log folds ITSELF —
-            // every `compactPairsEveryNTicks` ticks the maintainer runs
-            // the live-filtered fold (the maxLiveGenerations deferred-
-            // compaction precedent), instead of leaving compaction
-            // operator-initiated. Without this the log grows one dir per
-            // tick forever AND keeps tombstoned ids' pairs (an event log
-            // grows with history, not the live corpus). Fold point:
-            // after this tick's stores committed, up to the replay-guard
-            // marker — a replayed batch ≤ the marker skips its tick
-            // (pair write included), so folded batches are never
-            // rewritten. The live set is the row store's current id
-            // column (corpus-∝ — semi-joined, never collected).
-            if (compactPairsEveryNTicks > 0 && batchId > 0 &&
-                batchId % compactPairsEveryNTicks == 0) {
-              val live = BucketStore.readAll(spark, rowsDir).select(col(d.idCol))
-              graft.operators.Dedup.compactPairLog(spark, pairsDir,
-                upTo = BucketStore.appliedBatchId(commitDir),
-                live = Some(live), idCols = Seq(d.aCol, d.bCol))
-            }
-          }
+      compactPairsEveryNTicks: Int = 8): StreamingQuery = {
+    // a stream WITH an `op` column is a CDC feed (the
+    // startBm25Maintain convention): delete/re-ingest batches
+    // route through the tombstoning merge tick — before-images
+    // come from the row store itself, so the feed carries only
+    // (op, id, payload). Pure-insert streams keep the O(delta)
+    // append tick; don't put an op column on one.
+    val isCdc = input.columns.contains("op")
+    // replay guard on the store each path applies LAST (append:
+    // rows→band; CDC: band→rows). Guarding on the first-moved
+    // store would skip a crash-interrupted tick on redelivery and
+    // permanently strand the second store.
+    val commitDir = if (isCdc) rowsDir else bandDir
+    val inputCols = det(input.sparkSession).inputCols
+    Maintainer.start(input, checkpointDir, Seq(rowsDir, bandDir), Some(commitDir)) { batch =>
+      batch.select(((if (isCdc) Seq("op") else Seq.empty) ++ inputCols).map(col): _*).distinct()
+    } { (b, batchId, _) =>
+      val spark = b.sparkSession
+      val d = det(spark)
+      // nBuckets ≤ 0 (the r15 default): the store's own meta IS
+      // the layout contract — recover it rather than trust an
+      // operator-typed count (seeds now DERIVE their count, so a
+      // maintainer default that guessed 64 would mismatch any
+      // derived-layout store; explicit counts still assert)
+      val n = if (nBuckets > 0) nBuckets
+        else BucketStore.seededBuckets(rowsDir)
+      if (isCdc)
+        graft.operators.Dedup.nearDupStoreCdcTick(spark, d, rowsDir, bandDir,
+          pairsDir, b, batchId, n, bucketCap)
+      else
+        graft.operators.Dedup.nearDupStoreTick(spark, d, rowsDir, bandDir,
+          pairsDir, b, batchId, n, bucketCap)
+      // planted-recall drift probe over a hash-sample of THIS
+      // tick's rows (the startIvfMaintain convention): exact-copy
+      // plants must pair with their just-ticked sources, so every
+      // miss isolates a stale hot-bucket freeze — the banded
+      // families' staleness signal. CDC batches skip it (delete
+      // rows carry null payloads the detector can't sample).
+      probe.filter(p => !isCdc && batchId % p.everyNTicks.max(1) == 0).foreach { p =>
+        val qs = b.orderBy(md5(col(d.idCol).cast("string"))).limit(p.sample)
+        val r = graft.operators.Dedup.bandedDriftProbe(spark, d,
+          rowsDir, bandDir, qs, n, bucketCap, p.floor)
+        log.info(s"$bandDir batch=$batchId $r")
+        if (r.tripped) {
+          log.warn(s"$bandDir batch=$batchId PLANTED-RECALL DRIFT: $r — " +
+            "the sampled rows' band keys are hot-frozen; raise bucketCap " +
+            "or re-band/rebuild the store")
+          p.onDrift(batchId, r)
         }
       }
-      .start()
+      // r15 (the r14 verdict's #6): the pair log folds ITSELF —
+      // every `compactPairsEveryNTicks` ticks the maintainer runs
+      // the live-filtered fold (the maxLiveGenerations deferred-
+      // compaction precedent), instead of leaving compaction
+      // operator-initiated. Without this the log grows one dir per
+      // tick forever AND keeps tombstoned ids' pairs (an event log
+      // grows with history, not the live corpus). Fold point:
+      // after this tick's stores committed, up to the replay-guard
+      // marker — a replayed batch ≤ the marker skips its tick
+      // (pair write included), so folded batches are never
+      // rewritten. The live set is the row store's current id
+      // column (corpus-∝ — semi-joined, never collected).
+      if (compactPairsEveryNTicks > 0 && batchId > 0 &&
+          batchId % compactPairsEveryNTicks == 0) {
+        val live = BucketStore.readAll(spark, rowsDir).select(col(d.idCol))
+        graft.operators.Dedup.compactPairLog(spark, pairsDir,
+          upTo = BucketStore.appliedBatchId(commitDir),
+          live = Some(live), idCols = Seq(d.aCol, d.bCol))
+      }
+    }
+  }
 
   /** Streaming materialized view of the exact-dedup store — the
     * corpus twin of [[EventStream.startCoocMaintain]], and the
@@ -362,18 +349,10 @@ object DocStream {
     */
   def startDedupMaintain(docs: DataFrame, storeDir: String, checkpointDir: String,
                          nBuckets: Int = -1): StreamingQuery =
-    docs.writeStream
-      .outputMode(OutputMode.Append())
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        BucketStore.recover(storeDir)
-        withCached(docBatch(batch)) { b =>
-          if (b.count() > 0 && BucketStore.appliedBatchId(storeDir) < batchId)
-            graft.operators.Dedup.dedupMemberTick(batch.sparkSession, storeDir, b,
-              batchId, nBuckets)
-        }
-      }
-      .start()
+    Maintainer.start(docs, checkpointDir, Seq(storeDir), Some(storeDir))(docBatch) {
+      (b, batchId, _) =>
+        graft.operators.Dedup.dedupMemberTick(b.sparkSession, storeDir, b, batchId, nBuckets)
+    }
 
   /** Streaming materialized view of the boilerplate LINE-COUNT store —
     * the continuous rung of the [[graft.operators.TextAnalysis
@@ -409,17 +388,9 @@ object DocStream {
     */
   def startLineCountMaintain(docs: DataFrame, storeDir: String, checkpointDir: String,
                              nBuckets: Int = -1): StreamingQuery =
-    docs.writeStream
-      .outputMode(OutputMode.Append())
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        BucketStore.recover(storeDir)
-        withCached(docBatch(batch)) { b =>
-          if (b.count() > 0 && BucketStore.appliedBatchId(storeDir) < batchId)
-            lineCountTick(batch.sparkSession, storeDir, b, batchId, nBuckets)
-        }
-      }
-      .start()
+    Maintainer.start(docs, checkpointDir, Seq(storeDir), Some(storeDir))(docBatch) {
+      (b, batchId, _) => lineCountTick(b.sparkSession, storeDir, b, batchId, nBuckets)
+    }
 
   /** One tick of the line-count store — the single body behind
     * [[startLineCountMaintain]] and
@@ -552,117 +523,124 @@ object DocStream {
                        checkpointDir: String, nlist: Int = -1,
                        probe: Option[graft.operators.Similarity.IvfProbeConfig] = None,
                        codebooksDir: Option[String] = None,
-                       byIdDir: Option[String] = None): StreamingQuery =
-    vecs.writeStream
-      .outputMode(OutputMode.Append())
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        val spark = batch.sparkSession
-        graft.functions.VectorFunctions.register(spark)
-        BucketStore.recover(storeDir)
-        // optional CDC op column: "delete" rows are tombstones and
-        // must carry the INDEXED (before-image) embedding — see
-        // Similarity.ivfAppendTick; a re-embed is delete + upsert in
-        // one batch. An OP-LESS stream is strictly append-only (new
-        // vec_ids by contract — the banded stores' key-purity rule):
-        // its ticks take the O(delta) append path, which stacks rows
-        // without keyed replacement, so a re-sent vec_id would
-        // coexist as a duplicate. Re-embeds MUST arrive as CDC
-        // delete+upsert; "insert" below names that contract.
-        val hasOp = batch.columns.contains("op")
-        withCached(batch.toDF()
-            .select(col("vec_id"), col("embedding").cast("array<double>").as("v"),
-              (if (hasOp) col("op") else lit("insert")).as("op"))
-            .distinct()
-            .withColumn("norm", sqrt(expr("graft_dot(v, v)")))) { b =>
-          if (b.count() > 0 && BucketStore.appliedBatchId(storeDir) < batchId) {
-            val cents = graft.operators.Similarity.loadCentroids(spark, centroidsDir)
-            // nlist ≤ 0: the centroid artifact is the bucket contract
-            val nl = if (nlist > 0) nlist else cents.size
-            val ups = b.filter(col("op").isin("upsert", "insert")).drop("op")
-            val removed =
-              if (hasOp) Some(b.filter(col("op") === "delete").drop("op")) else None
-            // optional id-bucketed (vec_id, v, norm) SIDECAR mirror —
-            // the row store hard-negative mining reads id-pruned (r14;
-            // seed with Retrieval.seedVecSidecar). Applies BEFORE the
-            // main store so the main marker stays the batch's commit
-            // point (the r14 commit-store rule); a crash in between
-            // replays, the sidecar skipping on its own marker. Deletes
-            // need no before-image here — the sidecar is bucketed by
-            // the id itself.
-            byIdDir.foreach { sd =>
-              BucketStore.recover(sd)
-              // r16: the sidecar layout derives at seed time — recover
-              // it from the store meta (the seededBuckets contract)
-              val sb = BucketStore.seededBuckets(sd)
-              def bucketed(df: DataFrame) = df
-                .select(col("vec_id"), col("v"), col("norm"))
-                .withColumn(BucketStore.BucketCol,
-                  BucketStore.longBucket(col("vec_id"), sb))
-              removed match {
-                case Some(r) =>
-                  BucketStore.applyTick(spark, sd, bucketed(ups),
-                    Seq("vec_id"), batchId, n = sb,
-                    removed = Some(r.select(col("vec_id"),
-                      BucketStore.longBucket(col("vec_id"), sb)
-                        .as(BucketStore.BucketCol))))
-                case None =>
-                  BucketStore.applyAppendTick(spark, sd, bucketed(ups),
-                    batchId, n = sb)
-              }
-              ()
-            }
-            codebooksDir match {
-              case Some(bd) =>
-                graft.operators.Similarity.ivfPqAppendTick(spark, storeDir, cents,
-                  graft.operators.Similarity.loadCodebooks(spark, bd),
-                  ups, batchId, nl, removedVectors = removed)
-              case None =>
-                graft.operators.Similarity.ivfAppendTick(spark, storeDir, cents,
-                  ups, batchId, nl, removedVectors = removed)
-            }
-            probe.filter(p => batchId % p.everyNTicks.max(1) == 0).foreach { p =>
-              // probe queries = a deterministic hash-sample of THIS
-              // tick's upserts: freshly landed vectors are where frozen-
-              // quantizer drift shows first (the indexed backlog was
-              // either seeded under this quantizer or already probed)
-              val qs = ups
-                .orderBy(md5(col("vec_id").cast("string"))).limit(p.sample)
-                .select(col("vec_id").as("query_id"), col("v").as("qv"),
-                  col("norm").as("qnorm"))
-              val r = graft.operators.Similarity.ivfRecallProbe(spark, storeDir,
-                cents, qs, p.k, probeWidth(p, nl), nl, p.threshold, p.corpusFraction)
-              log.info(s"$storeDir batch=$batchId $r")
-              if (r.tripped) {
-                log.warn(s"$storeDir batch=$batchId RECALL DRIFT: $r — " +
-                  "schedule a rebuildIvfIndex (versioned-root cutover)")
-                p.onDrift(batchId, r)
-              }
-            }
-            // corpus-sample probe: the tick sample above sees fresh-data
-            // drift, but damage to OLD vectors' neighborhoods (a past
-            // tick's mass straddling a stale quantizer boundary) is
-            // invisible to it — this rarer probe draws its queries
-            // hash-uniformly from the WHOLE store instead
-            probe.filter(p => p.corpusSample > 0 && p.corpusEveryNTicks > 0 &&
-                batchId % p.corpusEveryNTicks == 0).foreach { p =>
-              val qs = BucketStore.readAll(spark, storeDir)
-                .orderBy(md5(col("vec_id").cast("string"))).limit(p.corpusSample)
-                .select(col("vec_id").as("query_id"), col("v").as("qv"),
-                  col("norm").as("qnorm"))
-              val r = graft.operators.Similarity.ivfRecallProbe(spark, storeDir,
-                cents, qs, p.k, probeWidth(p, nl), nl, p.threshold, p.corpusFraction)
-              log.info(s"$storeDir batch=$batchId corpus-probe $r")
-              if (r.tripped) {
-                log.warn(s"$storeDir batch=$batchId CORPUS RECALL DRIFT: $r — " +
-                  "schedule a rebuildIvfIndex (versioned-root cutover)")
-                p.onDrift(batchId, r)
-              }
-            }
-          }
+                       byIdDir: Option[String] = None): StreamingQuery = {
+    // optional CDC op column: "delete" rows are tombstones and
+    // must carry the INDEXED (before-image) embedding — see
+    // Similarity.ivfAppendTick; a re-embed is delete + upsert in
+    // one batch. An OP-LESS stream is strictly append-only (new
+    // vec_ids by contract — the banded stores' key-purity rule):
+    // its ticks take the O(delta) append path, which stacks rows
+    // without keyed replacement, so a re-sent vec_id would
+    // coexist as a duplicate. Re-embeds MUST arrive as CDC
+    // delete+upsert; "insert" below names that contract.
+    val hasOp = vecs.columns.contains("op")
+    Maintainer.start(vecs, checkpointDir, Seq(storeDir) ++ byIdDir, Some(storeDir)) { batch =>
+      graft.functions.VectorFunctions.register(batch.sparkSession)
+      batch
+        .select(col("vec_id"), col("embedding").cast("array<double>").as("v"),
+          (if (hasOp) col("op") else lit("insert")).as("op"))
+        .distinct()
+        .withColumn("norm", sqrt(expr("graft_dot(v, v)")))
+    } { (b, batchId, _) =>
+      val spark = b.sparkSession
+      val cents = graft.operators.Similarity.loadCentroids(spark, centroidsDir)
+      // nlist ≤ 0: the centroid artifact is the bucket contract
+      val nl = if (nlist > 0) nlist else cents.size
+      val ups = b.filter(col("op").isin("upsert", "insert")).drop("op")
+      val removed =
+        if (hasOp) Some(b.filter(col("op") === "delete").drop("op")) else None
+      // optional id-bucketed (vec_id, v, norm) SIDECAR mirror —
+      // the row store hard-negative mining reads id-pruned (r14;
+      // seed with Retrieval.seedVecSidecar). Applies BEFORE the
+      // main store so the main marker stays the batch's commit
+      // point (the r14 commit-store rule); a crash in between
+      // replays, the sidecar skipping on its own marker.
+      byIdDir.foreach(graft.operators.Retrieval.vecSidecarTick(spark, _, ups, removed, batchId))
+      codebooksDir match {
+        case Some(bd) =>
+          graft.operators.Similarity.ivfPqAppendTick(spark, storeDir, cents,
+            graft.operators.Similarity.loadCodebooks(spark, bd),
+            ups, batchId, nl, removedVectors = removed)
+        case None =>
+          graft.operators.Similarity.ivfAppendTick(spark, storeDir, cents,
+            ups, batchId, nl, removedVectors = removed)
+      }
+      probe.filter(p => batchId % p.everyNTicks.max(1) == 0).foreach { p =>
+        // probe queries = a deterministic hash-sample of THIS
+        // tick's upserts: freshly landed vectors are where frozen-
+        // quantizer drift shows first (the indexed backlog was
+        // either seeded under this quantizer or already probed)
+        val qs = ups
+          .orderBy(md5(col("vec_id").cast("string"))).limit(p.sample)
+          .select(col("vec_id").as("query_id"), col("v").as("qv"),
+            col("norm").as("qnorm"))
+        val r = graft.operators.Similarity.ivfRecallProbe(spark, storeDir,
+          cents, qs, p.k, probeWidth(p, nl), nl, p.threshold, p.corpusFraction)
+        log.info(s"$storeDir batch=$batchId $r")
+        if (r.tripped) {
+          log.warn(s"$storeDir batch=$batchId RECALL DRIFT: $r — " +
+            "schedule a rebuildIvfIndex (versioned-root cutover)")
+          p.onDrift(batchId, r)
         }
       }
-      .start()
+      // corpus-sample probe: the tick sample above sees fresh-data
+      // drift, but damage to OLD vectors' neighborhoods (a past
+      // tick's mass straddling a stale quantizer boundary) is
+      // invisible to it — this rarer probe draws its queries
+      // hash-uniformly from the WHOLE store instead
+      probe.filter(p => p.corpusSample > 0 && p.corpusEveryNTicks > 0 &&
+          batchId % p.corpusEveryNTicks == 0).foreach { p =>
+        val qs = BucketStore.readAll(spark, storeDir)
+          .orderBy(md5(col("vec_id").cast("string"))).limit(p.corpusSample)
+          .select(col("vec_id").as("query_id"), col("v").as("qv"),
+            col("norm").as("qnorm"))
+        val r = graft.operators.Similarity.ivfRecallProbe(spark, storeDir,
+          cents, qs, p.k, probeWidth(p, nl), nl, p.threshold, p.corpusFraction)
+        log.info(s"$storeDir batch=$batchId corpus-probe $r")
+        if (r.tripped) {
+          log.warn(s"$storeDir batch=$batchId CORPUS RECALL DRIFT: $r — " +
+            "schedule a rebuildIvfIndex (versioned-root cutover)")
+          p.onDrift(batchId, r)
+        }
+      }
+    }
+  }
+
+  /** Continuous maintainer for the PERSISTED BM25 index
+    * (`text_bm25_store`'s store) — the rung that completes the
+    * retrieval family's batch → inc → store → streaming ladder: each
+    * micro-batch of (doc_id, text) rows appends its dl-denormalized
+    * postings plus one corpus-stats partial as stacked O(delta)
+    * generations through
+    * [[graft.operators.Retrieval.appendBm25Tick]] (stats tick
+    * BEFORE the postings marker — the verdict-log ordering; the
+    * postings marker is the commit store [[Maintainer.start]] guards
+    * on, and a replay after a crash between the two skips the stats
+    * half on its own marker; the store's `maxLiveGenerations` fold
+    * amortizes compaction across ticks).
+    * Streams WITHOUT an `op` column are append-only ingest (new
+    * doc_ids — the O(delta) fast path); a stream WITH (op, doc_id,
+    * text, text_before) columns is a CDC feed and every batch routes
+    * through [[graft.operators.Retrieval.cdcBm25Tick]] — deletes and
+    * re-ingests tombstone their before-image postings through one
+    * merge tick (the `startIvfMaintain` op-column convention). Don't
+    * put an op column on a pure-insert stream: CDC batches pay the
+    * merge tick's touched-bucket re-merge. Searches against the live
+    * index keep BucketStore's snapshot isolation while it grows.
+    * Seed with
+    * [[graft.operators.Retrieval.buildBm25Index]]; RetrievalSpec
+    * pins streamed ticks ≡ one-shot full-corpus build.
+    */
+  def startBm25Maintain(docs: DataFrame, indexDir: String,
+                        checkpointDir: String): StreamingQuery = {
+    val postings = s"$indexDir/postings"
+    val isCdc = docs.columns.contains("op")
+    Maintainer.start(docs, checkpointDir, Seq(postings, s"$indexDir/stats"),
+        Some(postings))(docBatch) { (b, batchId, _) =>
+      if (isCdc) graft.operators.Retrieval.cdcBm25Tick(b.sparkSession, indexDir, b, batchId)
+      else graft.operators.Retrieval.appendBm25Tick(b.sparkSession, indexDir, b, batchId)
+    }
+  }
 
   /** Continuous SEMANTIC dedup (the streaming rung of
     * `dedup_semantic` — see [[graft.operators.Similarity.semanticDedupOn]]):
@@ -692,52 +670,10 @@ object DocStream {
     * versioned-root cutover. Replay guard: the store marker gates
     * the tick, and because the verdict write precedes the marker, a
     * redelivered batch (marker ≥ id) skips both.
-    */
-  /** Continuous maintainer for the PERSISTED BM25 index
-    * (`text_bm25_store`'s store) — the rung that completes the
-    * retrieval family's batch → inc → store → streaming ladder: each
-    * micro-batch of (doc_id, text) rows appends its dl-denormalized
-    * postings plus one corpus-stats partial as stacked O(delta)
-    * generations through
-    * [[graft.operators.Retrieval.appendBm25Tick]] (stats tick
-    * BEFORE the postings marker — the verdict-log ordering; replay
-    * skips both via the applied-batch guards; the store's
-    * `maxLiveGenerations` fold amortizes compaction across ticks).
+    *
     * Streams WITHOUT an `op` column are append-only ingest (new
-    * doc_ids — the O(delta) fast path); a stream WITH (op, doc_id,
-    * text, text_before) columns is a CDC feed and every batch routes
-    * through [[graft.operators.Retrieval.cdcBm25Tick]] — deletes and
-    * re-ingests tombstone their before-image postings through one
-    * merge tick (the `startIvfMaintain` op-column convention). Don't
-    * put an op column on a pure-insert stream: CDC batches pay the
-    * merge tick's touched-bucket re-merge. Searches against the live
-    * index keep BucketStore's snapshot isolation while it grows.
-    * Seed with
-    * [[graft.operators.Retrieval.buildBm25Index]]; RetrievalSpec
-    * pins streamed ticks ≡ one-shot full-corpus build.
-    */
-  def startBm25Maintain(docs: DataFrame, indexDir: String,
-                        checkpointDir: String): StreamingQuery =
-    docs.writeStream
-      .outputMode(OutputMode.Append())
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        val spark = batch.sparkSession
-        withCached(docBatch(batch)) { b =>
-          if (b.count() > 0) {
-            if (b.columns.contains("op"))
-              graft.operators.Retrieval.cdcBm25Tick(spark, indexDir, b, batchId)
-            else
-              graft.operators.Retrieval.appendBm25Tick(spark, indexDir, b, batchId)
-          }
-        }
-      }
-      .start()
-
-  /** Continuous maintainer for the semantic-dedup store. Streams
-    * WITHOUT an `op` column are append-only ingest (new vec_ids by
-    * contract — the O(delta) append tick); a stream WITH (op, vec_id,
-    * embedding) columns is a CDC feed routed through
+    * vec_ids by contract — the O(delta) append tick); a stream WITH
+    * (op, vec_id, embedding) columns is a CDC feed routed through
     * [[graft.operators.Similarity.semanticDedupCdcTick]] — the
     * `startIvfMaintain` op convention (op ∈ 'upsert'|'delete',
     * deletes carry the INDEXED before-image embedding, a re-embed is
@@ -750,46 +686,40 @@ object DocStream {
   def startSemanticDedupMaintain(vecs: DataFrame, storeDir: String,
       centroidsDir: String, verdictsDir: String, checkpointDir: String,
       threshold: Double = 0.92, nlist: Int = -1,
-      probe: Option[graft.operators.Similarity.SemanticProbeConfig] = None): StreamingQuery =
-    vecs.writeStream
-      .outputMode(OutputMode.Append())
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        val spark = batch.sparkSession
-        BucketStore.recover(storeDir)
-        val isCdc = batch.columns.contains("op")
-        val cols =
-          (if (isCdc) Seq(col("op")) else Seq.empty) ++
-            Seq(col("vec_id"), col("embedding").cast("array<double>").as("v"))
-        withCached(batch.toDF().select(cols: _*).distinct()) { b =>
-          if (b.count() > 0 && BucketStore.appliedBatchId(storeDir) < batchId) {
-            val cents = graft.operators.Similarity.loadCentroids(spark, centroidsDir)
-            // nlist ≤ 0: the quantizer artifact IS the bucket contract
-            val nl = if (nlist > 0) nlist else cents.size
-            if (isCdc)
-              graft.operators.Similarity.semanticDedupCdcTick(spark, storeDir,
-                cents, b, threshold, nl, batchId, verdictsDir = Some(verdictsDir))
-            else
-              graft.operators.Similarity.semanticDedupTick(spark, storeDir, cents,
-                b, threshold, nl, batchId, verdictsDir = Some(verdictsDir))
-            // keeper-recall drift probe over a hash-sample of THIS
-            // tick's vectors — fresh data is where frozen-quantizer
-            // drift shows first (the startIvfMaintain convention);
-            // append batches only (CDC deletes carry before-images)
-            probe.filter(p => !isCdc && batchId % p.everyNTicks.max(1) == 0).foreach { p =>
-              val qs = b.orderBy(md5(col("vec_id").cast("string"))).limit(p.sample)
-                .select(col("vec_id"), col("v"))
-              val r = graft.operators.Similarity.semanticDriftProbe(spark,
-                storeDir, cents, qs, threshold, p.floor, p.corpusFraction)
-              log.info(s"$storeDir batch=$batchId $r")
-              if (r.tripped) {
-                log.warn(s"$storeDir batch=$batchId KEEPER-RECALL DRIFT: $r — " +
-                  "schedule a rebuildSemanticIndex (versioned-root cutover)")
-                p.onDrift(batchId, r)
-              }
-            }
-          }
+      probe: Option[graft.operators.Similarity.SemanticProbeConfig] = None): StreamingQuery = {
+    val isCdc = vecs.columns.contains("op")
+    Maintainer.start(vecs, checkpointDir, Seq(storeDir), Some(storeDir)) { batch =>
+      batch.select(((if (isCdc) Seq(col("op")) else Seq.empty) ++
+        Seq(col("vec_id"), col("embedding").cast("array<double>").as("v"))): _*).distinct()
+    } { (b, batchId, _) =>
+      val spark = b.sparkSession
+      val cents = graft.operators.Similarity.loadCentroids(spark, centroidsDir)
+      // nlist ≤ 0: the quantizer artifact IS the bucket contract
+      val nl = if (nlist > 0) nlist else cents.size
+      // the tick returns its verdicts cached; they are already in the
+      // log, so release them here
+      (if (isCdc)
+        graft.operators.Similarity.semanticDedupCdcTick(spark, storeDir,
+          cents, b, threshold, nl, batchId, verdictsDir = Some(verdictsDir))
+      else
+        graft.operators.Similarity.semanticDedupTick(spark, storeDir, cents,
+          b, threshold, nl, batchId, verdictsDir = Some(verdictsDir))).unpersist()
+      // keeper-recall drift probe over a hash-sample of THIS
+      // tick's vectors — fresh data is where frozen-quantizer
+      // drift shows first (the startIvfMaintain convention);
+      // append batches only (CDC deletes carry before-images)
+      probe.filter(p => !isCdc && batchId % p.everyNTicks.max(1) == 0).foreach { p =>
+        val qs = b.orderBy(md5(col("vec_id").cast("string"))).limit(p.sample)
+          .select(col("vec_id"), col("v"))
+        val r = graft.operators.Similarity.semanticDriftProbe(spark,
+          storeDir, cents, qs, threshold, p.floor, p.corpusFraction)
+        log.info(s"$storeDir batch=$batchId $r")
+        if (r.tripped) {
+          log.warn(s"$storeDir batch=$batchId KEEPER-RECALL DRIFT: $r — " +
+            "schedule a rebuildSemanticIndex (versioned-root cutover)")
+          p.onDrift(batchId, r)
         }
       }
-      .start()
+    }
+  }
 }

@@ -82,9 +82,10 @@ object EventStream {
     * against only its touched buckets' rows and publishes only those
     * buckets — tombstones included (a delete that empties a bucket
     * drops it from the manifest). An empty micro-batch is detected by
-    * that keys pass and leaves the store and its marker untouched.
-    * The batch is cached for the two passes and released on every
-    * exit, a failed tick's included. On a lake this whole body is one
+    * [[Maintainer.start]]'s one count and leaves the store and its
+    * marker untouched. The skeleton caches the batch for that count
+    * and the tick's two passes, and releases it on every exit, a
+    * failed tick's included. On a lake this whole body is one
     * `MERGE INTO` against Delta/Iceberg; the bucket layout is the
     * plain-parquet equivalent.
     *
@@ -100,22 +101,13 @@ object EventStream {
     */
   def startCdcApply(updates: DataFrame, snapshot: String, checkpointDir: String,
                     nBuckets: Int = -1): org.apache.spark.sql.streaming.StreamingQuery =
-    updates.writeStream
-      .outputMode(OutputMode.Append())
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        val spark = batch.sparkSession
-        BucketStore.recover(snapshot)
-        if (BucketStore.appliedBatchId(snapshot) < batchId) {
-          val b = batch.toDF().cache()
-          // nBuckets ≤ 0 (r15 default): the store meta is the layout
-          try cdcMergeTick(spark, snapshot, b, batchId,
-            if (nBuckets > 0) nBuckets else BucketStore.seededBuckets(snapshot))
-          finally { b.unpersist(); () }
-        }
+    Maintainer.start(updates, checkpointDir, Seq(snapshot), Some(snapshot))(identity) {
+      (b, batchId, _) =>
+        // nBuckets ≤ 0 (r15 default): the store meta is the layout
+        cdcMergeTick(b.sparkSession, snapshot, b, batchId,
+          if (nBuckets > 0) nBuckets else BucketStore.seededBuckets(snapshot))
         ()
-      }
-      .start()
+    }
 
   /** One CDC merge tick against a bucketed ratings snapshot — the
     * shared body of [[startCdcApply]] and [[startRetrainLoop]]. It
@@ -191,7 +183,11 @@ object EventStream {
     * applied-batch marker lands only after the tick's generation and
     * manifest are complete, so an at-least-once redelivery
     * (marker >= batchId) skips the apply; the facts append re-runs
-    * and no-ops via its anti-join.
+    * and no-ops via its anti-join. The facts dir carries no marker,
+    * so this maintainer passes [[Maintainer.start]] no commit store:
+    * every non-empty batch, a replayed one included, reaches the
+    * tick, and a crash between the matrix publish and the facts
+    * append heals on replay.
     *
     * @param interactions  streaming (user_id, item_id) new-interaction rows
     * @param factsDir      parquet snapshot of interactions seen so far
@@ -215,35 +211,27 @@ object EventStream {
   def startCoocMaintain(interactions: DataFrame, factsDir: String,
                         matrixDir: String, checkpointDir: String,
                         nBuckets: Int = -1): org.apache.spark.sql.streaming.StreamingQuery =
-    interactions.writeStream
-      .outputMode(OutputMode.Append())
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        val spark = batch.sparkSession
-        recoverSnapshot(factsDir); BucketStore.recover(matrixDir)
-        // distinct: the matrix path dedups internally (coocDelta), so
-        // the facts append must too — a doubly-delivered row inside
-        // one trigger would otherwise corrupt the facts snapshot
-        val b = batch.toDF().select(col("user_id"), col("item_id"))
-          .distinct().cache()
-        try {
-          if (b.count() > 0) {
-            val old = spark.read.parquet(factsDir)
-            if (BucketStore.appliedBatchId(matrixDir) < batchId)
-              graft.operators.ItemCF.coocMergeTick(spark, matrixDir, old, b,
-                batchId, nBuckets)
-            // facts gain only the batch's genuinely-new (user, item)
-            // rows (the tick ignored the rest); materialize before
-            // writing — the plan reads the directory being appended to
-            val newFacts = b.join(old, Seq("user_id", "item_id"), "left_anti").cache()
-            try {
-              newFacts.count()
-              newFacts.write.mode("append").parquet(factsDir)
-            } finally newFacts.unpersist()
-          }
-        } finally { b.unpersist(); () }
-      }
-      .start()
+    // distinct: the matrix path dedups internally (coocDelta), so
+    // the facts append must too — a doubly-delivered row inside
+    // one trigger would otherwise corrupt the facts snapshot
+    Maintainer.start(interactions, checkpointDir, Seq(matrixDir), None) {
+      _.select(col("user_id"), col("item_id")).distinct()
+    } { (b, batchId, _) =>
+      val spark = b.sparkSession
+      recoverSnapshot(factsDir)
+      val old = spark.read.parquet(factsDir)
+      if (BucketStore.appliedBatchId(matrixDir) < batchId)
+        graft.operators.ItemCF.coocMergeTick(spark, matrixDir, old, b,
+          batchId, nBuckets)
+      // facts gain only the batch's genuinely-new (user, item)
+      // rows (the tick ignored the rest); materialize before
+      // writing — the plan reads the directory being appended to
+      val newFacts = b.join(old, Seq("user_id", "item_id"), "left_anti").cache()
+      try {
+        newFacts.count()
+        newFacts.write.mode("append").parquet(factsDir)
+      } finally { newFacts.unpersist(); () }
+    }
 
   /** Continuous retrain loop — the reference's periodic recompute
     * (web/service.py APScheduler: recompute_recommendations every
@@ -267,9 +255,11 @@ object EventStream {
     *   ids must stay monotonic across restarts — without a checkpoint
     *   they restart at 0 and every batch up to the marker would be
     *   silently skipped, dropping its mutations). The pending counter
-    *   is process-local (a restart retrains on the first qualifying
-    *   batch — safe, just eager); production tracking belongs in the
-    *   streaming checkpoint / a metadata table.
+    *   is process-local and takes each applied batch's row count from
+    *   [[Maintainer.start]]'s one count; a batch the replay guard
+    *   skips adds nothing (its mutations already landed before the
+    *   restart). Production tracking belongs in the streaming
+    *   checkpoint / a metadata table.
     */
   def startRetrainLoop(updates: DataFrame, snapshot: String, recsDir: String,
                        checkpointDir: String,
@@ -277,21 +267,13 @@ object EventStream {
                        rank: Int = 4, maxIter: Int = 5,
                        nBuckets: Int = -1): org.apache.spark.sql.streaming.StreamingQuery = {
     val pending = new java.util.concurrent.atomic.AtomicLong(0L)
-    updates.writeStream.outputMode(OutputMode.Append())
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        val spark = batch.sparkSession
-        BucketStore.recover(snapshot)
-        val b = batch.toDF().cache()
-        val n = try {
-          val rows = b.count()
-          // nBuckets ≤ 0 (r15 default): the store meta is the layout
-          if (rows > 0 && BucketStore.appliedBatchId(snapshot) < batchId)
-            cdcMergeTick(spark, snapshot, b, batchId,
-              if (nBuckets > 0) nBuckets else BucketStore.seededBuckets(snapshot))
-          rows
-        } finally { b.unpersist(); () }
-        if (n > 0 && pending.addAndGet(n) >= retrainEvery) {
+    Maintainer.start(updates, checkpointDir, Seq(snapshot), Some(snapshot))(identity) {
+      (b, batchId, rows) =>
+        val spark = b.sparkSession
+        // nBuckets ≤ 0 (r15 default): the store meta is the layout
+        cdcMergeTick(spark, snapshot, b, batchId,
+          if (nBuckets > 0) nBuckets else BucketStore.seededBuckets(snapshot))
+        if (pending.addAndGet(rows) >= retrainEvery) {
           val train = BucketStore.readAll(spark, snapshot).select(
             col("user_id").cast("int").as("user"),
             col("item_id").cast("int").as("item"),
@@ -317,9 +299,7 @@ object EventStream {
           promoteStaged(recsDir)
           pending.set(0L)
         }
-        ()
-      }
-      .start()
+    }
   }
 
   /** Hadoop FileSystem + path for a snapshot dir — resolved from the

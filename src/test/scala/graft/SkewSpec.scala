@@ -72,6 +72,11 @@ class SkewSpec extends AnyFunSuite {
   }
 
   test("salting beats the plain shuffle join under 90% skew (timing evidence)") {
+    // what earlier suites in this JVM left behind competes with the
+    // measurement: a running query takes cores, a cached frame heap
+    val leftover = spark.sparkContext.getPersistentRDDs.values.map(r => s"${r.id}:${r.name}")
+    info(s"active streams: ${spark.streams.active.map(_.name).mkString("[", ", ", "]")}; " +
+      s"persistent RDDs: ${leftover.size} ${leftover.take(20).mkString("[", ", ", "]")}")
     // 10M rows: the hot key's 9M-row sort must dominate the plain
     // join's wall time, or scheduler noise drowns the signal
     val fact = spark.read.format("graft.sources.v2.RatingsGenSource")

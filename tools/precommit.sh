@@ -3,8 +3,8 @@
 # compiled sources must at minimum COMPILE. The r7 and r11 round
 # failures were both "last snapshot commit broke the build" — a
 # 10-second compile check at commit time ends that class. It compiles
-# the test tree too: its probe and drive mains call main-tree
-# signatures a main-only compile never checks.
+# the test tree too: the specs call main-tree signatures a main-only
+# compile never checks.
 #
 # Install (once per clone):  ln -sf ../../tools/precommit.sh .git/hooks/pre-commit
 #
