@@ -576,7 +576,8 @@ object Dedup {
     // has joined every overlapped leg (which read them) — on the
     // failure path too
     val caches = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
-    def cached(df: DataFrame): DataFrame = caches.synchronized { caches += df.cache(); df }
+    def held(df: DataFrame): DataFrame = caches.synchronized { caches += df; df }
+    def cached(df: DataFrame): DataFrame = held(df.cache())
     // the scope joins every leg it started before the tick returns or
     // throws: no store writer outlives the tick, and a leg's failure
     // rides along as suppressed on the inline failure that ended it
@@ -617,7 +618,8 @@ object Dedup {
     // must never generate or verify a candidate
     val storeBands = gone.map(g => storeBands0.join(g, Seq(id), "left_anti"))
       .getOrElse(storeBands0)
-    val hot = hotBucketList(storeBands, bucketCap)
+    // hotBucketList caches its list; the tick releases it with the rest
+    val hot = held(hotBucketList(storeBands, bucketCap))
     val dPruned = deltaBands.join(broadcast(hot), Seq("band", "key"), "left_anti")
     val probe = storeBands.unionByName(deltaBands)
       .join(broadcast(hot), Seq("band", "key"), "left_anti")
@@ -832,7 +834,7 @@ object Dedup {
     val found = verified
       .filter(col(det.aCol) < 0 && col(det.bCol) === -col(det.aCol) - lit(1))
       .select(col(det.aCol)).distinct().count()
-    Seq(plants, pRows, cand).foreach(_.unpersist())
+    Seq(plants, pRows, hot, cand).foreach(_.unpersist())
     val recall = found.toDouble / nPlanted
     BandedProbeResult(nPlanted, found, recall, tripped = recall < floor)
   }

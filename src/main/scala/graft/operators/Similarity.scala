@@ -1456,7 +1456,7 @@ object Similarity {
   private[graft] def rebuildIvfIndex(spark: SparkSession, vectors: DataFrame,
       indexRoot: String, nlist: Int = -1,
       beforePublish: () => Unit = () => ()): Long =
-    publishIndexVersion(spark, indexRoot, vDir => {
+    publishIndexVersion(indexRoot, vDir => {
       // nlist ≤ 0 RE-derives from the GROWN corpus — the whole point
       // of a rebuild is that the index shape no longer fits the data,
       // and that includes the list count (the semantic-family
@@ -1480,7 +1480,7 @@ object Similarity {
   private[graft] def rebuildIvfPqIndex(spark: SparkSession, vectors: DataFrame,
       indexRoot: String, nlist: Int = -1, m: Int = 16, ncent: Int = -1,
       beforePublish: () => Unit = () => ()): Long =
-    publishIndexVersion(spark, indexRoot, vDir => {
+    publishIndexVersion(indexRoot, vDir => {
       // defaulted knobs re-derive from the GROWN corpus (one count
       // shared across both quantizers) — the rebuildIvfIndex contract
       val n = vectors.count()
@@ -1507,40 +1507,43 @@ object Similarity {
     * the fence check + one-small-file pointer overwrite publishes it
     * atomically; current + previous versions are retained, older
     * ones (and loser orphans) reclaimed. See [[rebuildIvfIndex]]'s
-    * original commentary for the fence rationale.
+    * original commentary for the fence rationale. The pointer's I/O,
+    * fence read and fence check are the BucketStore marker's.
+    *
+    * It stays a pointer rather than a BucketStore replace tick: a
+    * version's centroids, codebooks and postings store must flip
+    * together, and a store manifest names only its own bucket
+    * generations, so a replace over the postings alone could not
+    * publish the quantizer artifacts with them.
     */
-  private def publishIndexVersion(spark: SparkSession, indexRoot: String,
+  private def publishIndexVersion(indexRoot: String,
       build: String => Unit, beforePublish: () => Unit): Long = {
-    val (fs, root) = hadoopFs(spark, indexRoot)
-    // fence: same loud-loser protocol as the BucketStore marker — a
-    // rebuild snapshots the raw pointer at entry and requires it
-    // unchanged at publish, so of two concurrent rebuilds (minutes of
-    // wall-clock each: the accident is easy to have) exactly one cuts
-    // over and the other throws instead of overwriting a version
-    // readers already resolved. And unlike a bare version counter, the
-    // version DIR carries a per-build nonce (the pointer names the
-    // dir): two racing rebuilds that both derive v0+1 write DISJOINT
-    // directories, so even the eventual loser can never scribble over
-    // the dir the winner's pointer serves — the fence decides only the
-    // pointer, and the loser's orphan dir ages out through retention.
-    // beforePublish is the spec's fault-injection seam.
-    val (v0, fence0) = ivfPointerSnapshot(spark, indexRoot)
+    import graft.streaming.BucketStore
+    // fence: the BucketStore marker's loud-loser protocol on the
+    // pointer file — a rebuild snapshots the raw pointer at entry and
+    // requires it unchanged at publish, so of two concurrent rebuilds
+    // (minutes of wall-clock each: the accident is easy to have)
+    // exactly one cuts over and the other throws instead of
+    // overwriting a version readers already resolved. And unlike a
+    // bare version counter, the version DIR carries a per-build nonce
+    // (the pointer names the dir): two racing rebuilds that both derive
+    // v0+1 write DISJOINT directories, so even the eventual loser can
+    // never scribble over the dir the winner's pointer serves — the
+    // fence decides only the pointer, and the loser's orphan dir ages
+    // out through retention. beforePublish is the spec's
+    // fault-injection seam.
+    val (v0, fence0) = BucketStore.markerSnapshot(indexRoot, IvfPointer)
     val v = v0 + 1L
     val dirName = s"idx-$v-${java.util.UUID.randomUUID().toString.take(8)}"
-    val vDir = s"$indexRoot/$dirName"
-    build(vDir)
+    build(s"$indexRoot/$dirName")
     beforePublish()
-    val now = readPointerRaw(spark, indexRoot)
-    if (now != fence0)
-      throw new graft.streaming.BucketStore.ConcurrentWriterException(
-        s"ivf index $indexRoot: pointer changed while rebuild to $dirName was " +
-          s"running (expected ${fence0.getOrElse("<absent>")}, found " +
-          s"${now.getOrElse("<absent>")}) — another rebuild published; aborting")
+    BucketStore.checkFence(indexRoot, fence0, s"rebuild to $dirName",
+      rival = "rebuild", file = IvfPointer)
     // the publish point: one small-file overwrite
     // (version \n fence-token \n dir-name)
-    val out = fs.create(new org.apache.hadoop.fs.Path(root, "_graft_ivf_current"), true)
-    try out.write(s"$v\n${java.util.UUID.randomUUID()}\n$dirName".getBytes("UTF-8"))
-    finally out.close()
+    val (fs, root) = BucketStore.fsFor(indexRoot)
+    BucketStore.writeSmall(fs, new org.apache.hadoop.fs.Path(root, IvfPointer),
+      s"$v\n${java.util.UUID.randomUUID()}\n$dirName")
     // retention: current + previous version; older rebuilds (and any
     // loser orphans from two versions back) reclaimed
     fs.listStatus(root).foreach { st =>
@@ -1551,6 +1554,12 @@ object Similarity {
     }
     v
   }
+
+  /** The version pointer under an index root: the version on line 1 and
+    * a fence token on line 2 (the BucketStore marker's form), the live
+    * version's dir name on line 3.
+    */
+  private val IvfPointer = "_graft_ivf_current"
 
   /** Version prefix of an index dir name: `idx-<v>` (legacy) or
     * `idx-<v>-<nonce>`.
@@ -1564,61 +1573,11 @@ object Similarity {
     * falls back to the bare `idx-<v>` name.
     */
   private[graft] def resolveIvfIndex(spark: SparkSession, indexRoot: String): (String, String) = {
-    val (v, raw) = ivfPointerSnapshot(spark, indexRoot)
+    val (v, raw) = graft.streaming.BucketStore.markerSnapshot(indexRoot, IvfPointer)
     require(v >= 0, s"no published IVF index under $indexRoot")
     val dirName = raw.flatMap(_.linesIterator.toSeq.lift(2).map(_.trim).filter(_.nonEmpty))
       .getOrElse(s"idx-$v")
     (s"$indexRoot/$dirName/store", s"$indexRoot/$dirName/centroids")
-  }
-
-  private def currentIvfVersion(spark: SparkSession, indexRoot: String): Long =
-    ivfPointerSnapshot(spark, indexRoot)._1
-
-  private def readPointerRaw(spark: SparkSession, indexRoot: String): Option[String] = {
-    val (fs, root) = hadoopFs(spark, indexRoot)
-    val p = new org.apache.hadoop.fs.Path(root, "_graft_ivf_current")
-    if (!fs.exists(p)) None
-    else {
-      val in = fs.open(p)
-      try {
-        val bytes = new java.io.ByteArrayOutputStream()
-        val buf = new Array[Byte](64); var r = in.read(buf)
-        while (r >= 0) { bytes.write(buf, 0, r); r = in.read(buf) }
-        Some(new String(bytes.toByteArray, "UTF-8"))
-      } finally in.close()
-    }
-  }
-
-  /** Pointer read as (version, raw content) — the raw content is the
-    * rebuild fence. In-place overwrites can expose a momentarily empty
-    * file on HDFS/POSIX: a missing pointer legitimately means -1
-    * (never published), unparseable content must not (it would resolve
-    * a reader to the wrong version), so the glimpse retries briefly
-    * then fails loudly — same contract as the BucketStore marker.
-    */
-  private def ivfPointerSnapshot(spark: SparkSession, indexRoot: String): (Long, Option[String]) = {
-    var attempt = 0
-    while (true) {
-      readPointerRaw(spark, indexRoot) match {
-        case None => return (-1L, None)
-        case Some(s) =>
-          scala.util.Try(s.linesIterator.next().trim.toLong).toOption match {
-            case Some(v) => return (v, Some(s))
-            case None =>
-              attempt += 1
-              require(attempt < 20,
-                s"ivf pointer under $indexRoot unreadable after $attempt attempts " +
-                  s"(content ${s.length} bytes)")
-              Thread.sleep(25)
-          }
-      }
-    }
-    (-1L, None) // unreachable
-  }
-
-  private def hadoopFs(spark: SparkSession, dir: String) = {
-    val p = new org.apache.hadoop.fs.Path(dir)
-    (p.getFileSystem(spark.sparkContext.hadoopConfiguration), p)
   }
 
   /** The IVF index LIFECYCLE as a registered query (`knn_ivf_store`) —
@@ -2139,7 +2098,7 @@ object Similarity {
   private[graft] def rebuildSemanticIndex(spark: SparkSession, vectors: DataFrame,
       indexRoot: String, threshold: Double, nlist: Int = -1,
       beforePublish: () => Unit = () => ()): Long =
-    publishIndexVersion(spark, indexRoot, vDir => {
+    publishIndexVersion(indexRoot, vDir => {
       val nl = if (nlist > 0) nlist else deriveSemanticNlist(vectors.count())
       seedSemanticStore(spark, vectors, s"$vDir/store", s"$vDir/centroids",
         threshold, nl)

@@ -1,6 +1,6 @@
 package graft.sources
 
-import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.{DataFrame, SaveMode}
 import org.apache.spark.sql.functions._
 
 /** Write-side layout operators — the at-scale counterparts of the
@@ -45,46 +45,6 @@ object Sinks {
       .sortBy(bucketCol)
       .format("parquet")
       .saveAsTable(table)
-
-  /** Small-file compaction: rewrite a parquet directory into files of
-    * ~`targetBytes` each. Streaming/CDC sinks (e.g.
-    * [[graft.streaming.EventStream.startCdcApply]]) emit one file per
-    * micro-batch partition; after a day that is thousands of KB-sized
-    * files, and every subsequent scan pays a per-file open + footer
-    * read. Compaction is the standing maintenance job every lake runs
-    * (Delta OPTIMIZE / Iceberg rewrite_data_files — here the plain-
-    * parquet equivalent).
-    *
-    * The target file count comes from the directory's actual on-disk
-    * bytes (compressed), not a row-count guess. The rewrite stages to
-    * a sibling dir then swaps, so a concurrent reader never sees a
-    * half-written directory; crash mid-swap leaves `_staged` intact
-    * for recovery — same protocol as the CDC snapshot writer.
-    */
-  def compact(spark: SparkSession, path: String, targetBytes: Long = 128L << 20): Unit = {
-    // size from the directory's actual (compressed) bytes, via the
-    // path's own Hadoop FileSystem — works on local disk, HDFS, and
-    // object-store connectors alike
-    val live = new org.apache.hadoop.fs.Path(path)
-    val fs = live.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val onDisk = fs.listStatus(live)
-      .filter(st => st.isFile && st.getPath.getName.endsWith(".parquet"))
-      .map(_.getLen).sum
-    val nFiles = math.max(1, math.ceil(onDisk.toDouble / targetBytes).toInt)
-    val staged = new org.apache.hadoop.fs.Path(path + "_staged")
-    spark.read.parquet(path)
-      .repartition(nFiles)
-      .write.mode(SaveMode.Overwrite).parquet(staged.toString)
-    // a failed rename must THROW (ignoring it could delete the sole
-    // surviving copy); a crash between the two moves leaves _old or
-    // _staged intact for manual recovery, never zero copies
-    val old = new org.apache.hadoop.fs.Path(path + "_old")
-    fs.delete(old, true)
-    require(fs.rename(live, old), s"failed to move $live aside")
-    require(fs.rename(staged, live), s"failed to promote $staged -> $live")
-    fs.delete(old, true)
-    ()
-  }
 
   /** The reference's redis export shape (estimator.persist:81-99):
     * key `u<user_id>`, value `item;item;...` ordered by rank. Emitted

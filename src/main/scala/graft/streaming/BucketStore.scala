@@ -13,8 +13,10 @@ import org.apache.hadoop.fs.{FileSystem, Path => HPath}
   * `gen-<batchId>/bucket=<i>/part-*.parquet`, and the live state is a
   * MANIFEST mapping each bucket to the generationS that hold its live
   * rows (oldest first; a MERGE tick collapses a bucket to one
-  * generation, an APPEND tick stacks one more — see [[applyTick]] /
-  * [[applyAppendTick]]). The current manifest is named by the
+  * generation, an APPEND tick stacks one more, a REPLACE tick publishes
+  * one generation as the whole store — see [[applyTick]] /
+  * [[applyAppendTick]] / [[applyReplaceTick]], which share one publish
+  * step). The current manifest is named by the
   * applied-batch marker, so a reader resolves (marker → manifest →
   * exact file paths) one consistent snapshot. Because the bucket is a
   * pure function of the key (`pmod(pk, n)` for long keys, an
@@ -85,7 +87,7 @@ import org.apache.hadoop.fs.{FileSystem, Path => HPath}
   *
   * '''Writer fencing.''' The single-writer contract is additionally
   * ENFORCED, not just documented: every marker publish embeds a fresh
-  * fence token, [[applyTick]] snapshots the raw marker at entry, and
+  * fence token, every tick snapshots the raw marker at entry, and
   * requires it unchanged immediately before its generation write and
   * again before its publish. Two maintainers accidentally pointed at
   * the same store (a real operational hazard at scale) therefore
@@ -208,29 +210,18 @@ private[graft] object BucketStore {
   case class WriterLease(writerId: String = java.util.UUID.randomUUID().toString,
                          ttlMs: Long = 10 * 60 * 1000L)
 
-  private def readLease(fs: org.apache.hadoop.fs.FileSystem,
-      lp: org.apache.hadoop.fs.Path): Option[(String, Long)] =
-    try {
-      if (!fs.exists(lp)) None
-      else {
-        val in = fs.open(lp)
-        val s = try {
-          val bytes = new java.io.ByteArrayOutputStream()
-          val buf = new Array[Byte](128); var r = in.read(buf)
-          while (r >= 0) { bytes.write(buf, 0, r); r = in.read(buf) }
-          new String(bytes.toByteArray, "UTF-8")
-        } finally in.close()
-        val lines = s.linesIterator.toSeq
-        for {
-          h <- lines.headOption.map(_.trim).filter(_.nonEmpty)
-          e <- lines.lift(1).flatMap(x => scala.util.Try(x.trim.toLong).toOption)
-        } yield (h, e)
-      }
+  private def readLease(fs: FileSystem, lp: HPath): Option[(String, Long)] =
+    try readSmall(fs, lp).flatMap { s =>
+      val lines = s.linesIterator.toSeq
+      for {
+        h <- lines.headOption.map(_.trim).filter(_.nonEmpty)
+        e <- lines.lift(1).flatMap(x => scala.util.Try(x.trim.toLong).toOption)
+      } yield (h, e)
     } catch { case _: java.io.IOException => None }
 
   private[graft] def acquireLease(dir: String, lease: WriterLease): Unit = {
     val (fs, p) = fsFor(dir)
-    val lp = new org.apache.hadoop.fs.Path(p, LeaseFile)
+    val lp = new HPath(p, LeaseFile)
     def tryCreate(): Boolean =
       try {
         val out = fs.create(lp, false) // overwrite=false: create-exclusive
@@ -266,7 +257,7 @@ private[graft] object BucketStore {
 
   private[graft] def releaseLease(dir: String, lease: WriterLease): Unit = {
     val (fs, p) = fsFor(dir)
-    val lp = new org.apache.hadoop.fs.Path(p, LeaseFile)
+    val lp = new HPath(p, LeaseFile)
     if (readLease(fs, lp).exists(_._1 == lease.writerId)) { fs.delete(lp, false); () }
   }
 
@@ -297,13 +288,18 @@ private[graft] object BucketStore {
     * mismatched the seed would bucket rows into the wrong dirs; this
     * cannot).
     */
-  def seededBuckets(dir: String): Int = {
+  def seededBuckets(dir: String): Int =
+    metaBuckets(dir).getOrElse(throw new IllegalStateException(
+      s"store $dir has no meta file — cannot recover its bucket count"))
+
+  /** The bucket count in a store's meta file; None where no store was
+    * seeded.
+    */
+  private[graft] def metaBuckets(dir: String): Option[Int] = {
     val (fs, p) = fsFor(dir)
     readSmall(fs, new HPath(p, MetaFile))
       .flatMap(_.split("\n").find(_.startsWith("n="))
         .map(_.stripPrefix("n=").trim.toInt))
-      .getOrElse(throw new IllegalStateException(
-        s"store $dir has no meta file — cannot recover its bucket count"))
   }
 
   /** Bucket of a non-negative long key. */
@@ -472,121 +468,75 @@ private[graft] object BucketStore {
                 beforePublish: () => Unit = () => (),
                 lease: Option[WriterLease] = None,
                 keys: Option[TickKeys] = None): TickStats = {
-    // fence snapshot: the raw marker this tick's view of the store is
-    // based on. Any publish by another writer changes it (the UUID on
-    // line 2), and this tick then aborts at a checkFence instead of
-    // overwriting that writer's tick. beforePublish is a fault-
-    // injection seam (specs interleave a competing writer there); it
-    // runs after merge compute, before the fence check + publish.
-    val (prevId, fence0) = markerSnapshot(dir)
-    if (prevId >= batchId)
-      return TickStats(batchId, applied = false, touchedBuckets = 0,
-        compacted = false, liveGenerations = 0)
-    requireBucketCount(dir, n)
-    // opt-in lease: where create-exclusive is atomic this blocks a
-    // second maintainer HERE — before any manifest read, merge
-    // compute, or orphan generation write (see WriterLease)
-    lease.foreach(acquireLease(dir, _))
-    try {
-    val (fs, p) = fsFor(dir)
-    val prevManifest = readManifest(fs, p, prevId)
     // with a caller's summary the delta is consumed once (by the
-    // write), so there is nothing to cache
+    // write), so there is nothing to cache. Marking a frame cached runs
+    // no job, so a replayed batch that no-ops below still costs none
     val ownStats = keys.isEmpty
     val ch = if (ownStats) changes.cache() else changes
     val rm = if (ownStats) removed.map(_.cache()) else None
-    try {
-    // one delta pass yields the touched buckets AND the row count the
-    // broadcast gate below needs (previously a distinct + a count —
-    // two scheduled jobs per tick for one aggregation's worth of
-    // facts). dropKeys projects the same ch ∪ rm rows, so its size is
-    // that row count by construction
-    val TickKeys(changed, deltaKeyRows, dropKeys) = keys.getOrElse {
-      def project(cs: Seq[String]) = rm.map(r => ch.select(cs.map(col): _*)
-          .unionByName(r.select(cs.map(col): _*)))
-        .getOrElse(ch.select(cs.map(col): _*))
-      val (buckets, rows) = touchedBucketStats(project(Seq(BucketCol)))
-      TickKeys(buckets, rows, project(keyCols))
-    }
-    val compacting = liveGenCount(prevManifest) >= maxLiveGenerations
-    if (changed.isEmpty && !compacting) {
+    try publishTick(dir, batchId, n, beforePublish, lease) { prevManifest =>
+      // one delta pass yields the touched buckets AND the row count the
+      // broadcast gate below needs. dropKeys projects the same ch ∪ rm
+      // rows, so its size is that row count by construction
+      val TickKeys(changed, deltaKeyRows, dropKeys) = keys.getOrElse {
+        def project(cs: Seq[String]) = rm.map(r => ch.select(cs.map(col): _*)
+            .unionByName(r.select(cs.map(col): _*)))
+          .getOrElse(ch.select(cs.map(col): _*))
+        val (buckets, rows) = touchedBucketStats(project(Seq(BucketCol)))
+        TickKeys(buckets, rows, project(keyCols))
+      }
+      val compacting = liveGenCount(prevManifest) >= maxLiveGenerations
       // an all-duplicate tick changes nothing but must still advance
       // the marker, or the replay guard would re-run it forever
-      beforePublish()
-      checkFence(dir, fence0, batchId)
-      writeManifest(fs, p, batchId, prevManifest.toSeq.sortBy(_._1))
-      writeMarker(dir, batchId)
-      gc(fs, p, dir, batchId)
-      val st = TickStats(batchId, applied = true, touchedBuckets = 0,
-        compacted = false, liveGenerations = liveGenCount(prevManifest))
-      log.info(s"$dir $st")
-      return st
-    }
-    val touched =
-      if (compacting) (prevManifest.keySet ++ changed).toSeq else changed
-    // the merge read unions ALL of a touched bucket's generations
-    // (append ticks may have stacked several) — the merged write then
-    // collapses those buckets back to one
-    val old = selectOrEmpty(spark, dir, prevManifest,
-      prevManifest.filter { case (b, _) => touched.contains(b) }, withBucket = true)
-    // carry-over: touched-bucket rows the tick neither changed nor
-    // removed. The changed-key side is delta-sized — size-gated
-    // broadcast at the conservative (string-key) row cap, same
-    // convention as every delta hint (Hints.broadcastIfSmall); the
-    // gate reuses the stats row count instead of scheduling a second
-    // counting job.
-    val deltaBroadcast =
-      deltaKeyRows <= graft.operators.Hints.DeltaBroadcastMaxRowsMd5
-    val carry = old
-      .join(if (deltaBroadcast) broadcast(dropKeys) else dropKeys,
-        keyCols, "left_anti")
-    // r18 (guide §2.4 "remove shuffles outright"): when the delta side
-    // is broadcast, the carry-over anti is a NARROW probe over the
-    // store scan — every carried row is already in its bucket's files
-    // (its bucket read back off the file path), so repartitioning the
-    // whole merged frame by bucket re-shuffled the entire touched store
-    // per tick for a clustering the scan already had. Only the
-    // delta-sized `ch` needs clustering before the partitionBy write;
-    // the union concatenates both sides' partitions without an
-    // exchange. Above the broadcast gate the anti is a key-shuffled
-    // join (bucket locality destroyed), so the full merged repartition
-    // stays.
-    val merged =
-      if (deltaBroadcast) carry.unionByName(ch.repartition(col(BucketCol)))
-      else carry.unionByName(ch).repartition(col(BucketCol))
-    val gen = GenPrefix + batchId
-    // fence before the data write too: a writer that lost the store
-    // after the winner ALREADY published aborts here, before it can
-    // clobber a same-named generation dir the winner's manifest
-    // references (mode=overwrite deletes the dir first)
-    checkFence(dir, fence0, batchId)
-    // the write IS the materialisation, also of a caller's lazy
-    // `changes` whose plan reads this store. That read cannot hit the
-    // materialise-before-mutate hazard: the target gen-<batchId> is
-    // never a live generation (prevManifest names only the seed's and
-    // generations published at or before prevId < batchId), so the
-    // overwrite deletes no file the plan reads, and gc runs only after
-    // the write
-    merged.write.partitionBy(BucketCol).mode("overwrite").parquet(s"$dir/$gen")
-    // new manifest: touched buckets move (collapse) to this single
-    // generation iff the write produced rows for them (emptied
-    // buckets drop out); untouched buckets keep their previous
-    // generation list
-    val newManifest = (prevManifest -- touched) ++
-      presentBuckets(s"$dir/$gen").map(_ -> Seq(gen))
-    beforePublish()
-    checkFence(dir, fence0, batchId)
-    writeManifest(fs, p, batchId, newManifest.toSeq.sortBy(_._1))
-    // the publish point: one small-file overwrite, no renames —
-    // everything above is invisible to readers until this lands
-    writeMarker(dir, batchId)
-    gc(fs, p, dir, batchId)
-    val st = TickStats(batchId, applied = true, touchedBuckets = touched.size,
-      compacted = compacting, liveGenerations = liveGenCount(newManifest))
-    log.info(s"$dir $st")
-    st
+      if (changed.isEmpty && !compacting)
+        TickPlan(None, _ => prevManifest, _ => 0, compacted = false)
+      else {
+        val touched =
+          if (compacting) (prevManifest.keySet ++ changed).toSeq else changed
+        // the merge read unions ALL of a touched bucket's generations
+        // (append ticks may have stacked several) — the merged write then
+        // collapses those buckets back to one
+        val old = selectOrEmpty(spark, dir, prevManifest,
+          prevManifest.filter { case (b, _) => touched.contains(b) }, withBucket = true)
+        // carry-over: touched-bucket rows the tick neither changed nor
+        // removed. The changed-key side is delta-sized — size-gated
+        // broadcast at the conservative (string-key) row cap, same
+        // convention as every delta hint (Hints.broadcastIfSmall); the
+        // gate reuses the stats row count instead of scheduling a second
+        // counting job.
+        val deltaBroadcast =
+          deltaKeyRows <= graft.operators.Hints.DeltaBroadcastMaxRowsMd5
+        val carry = old
+          .join(if (deltaBroadcast) broadcast(dropKeys) else dropKeys,
+            keyCols, "left_anti")
+        // when the delta side is broadcast, the carry-over anti is a
+        // NARROW probe over the store scan — every carried row is already
+        // in its bucket's files (its bucket read back off the file path).
+        // Only the delta-sized `ch` needs clustering before the
+        // partitionBy write; the union concatenates both sides'
+        // partitions without an exchange. Above the broadcast gate the
+        // anti is a key-shuffled join (bucket locality destroyed), so the
+        // full merged repartition stays.
+        val merged =
+          if (deltaBroadcast) carry.unionByName(ch.repartition(col(BucketCol)))
+          else carry.unionByName(ch).repartition(col(BucketCol))
+        // the write IS the materialisation, also of a caller's lazy
+        // `changes` whose plan reads this store. That read cannot hit the
+        // materialise-before-mutate hazard: the target gen-<batchId> is
+        // never a live generation (prevManifest names only the seed's and
+        // generations published at or before prevId < batchId), so the
+        // overwrite deletes no file the plan reads, and gc runs only after
+        // the write.
+        // New manifest: touched buckets move (collapse) to this single
+        // generation iff the write produced rows for them (emptied
+        // buckets drop out); untouched buckets keep their previous
+        // generation list
+        val gen = GenPrefix + batchId
+        TickPlan(Some(merged),
+          written => (prevManifest -- touched) ++ written.map(_ -> Seq(gen)),
+          _ => touched.size, compacted = compacting)
+      }
     } finally if (ownStats) { ch.unpersist(); rm.foreach(_.unpersist()) }
-    } finally lease.foreach(releaseLease(dir, _))
   }
 
   /** Apply one APPEND-ONLY tick: `appended` (bucket column included)
@@ -603,10 +553,11 @@ private[graft] object BucketStore {
     *
     * Read-time cost is bounded by the SAME `maxLiveGenerations` knob:
     * once the live state spans that many generations, the next append
-    * tick compacts — reads everything, folds delta + store into one
-    * generation (the amortized LSM rewrite, now deferred instead of
-    * per-tick). Publish protocol (fence, lease, marker, manifest,
-    * recovery, gc, replay guard) is [[applyTick]]'s, unchanged.
+    * tick compacts — reads everything and publishes delta + store as
+    * one [[applyReplaceTick]] generation (the amortized LSM rewrite,
+    * now deferred instead of per-tick). Publish protocol (fence,
+    * lease, marker, manifest, recovery, gc, replay guard) is every
+    * tick's one publish step.
     *
     * `onCompact` generalizes the contract from disjoint-key appends
     * to MERGE-ON-READ reductions (the LSM memtable-flush shape): a
@@ -626,17 +577,8 @@ private[graft] object BucketStore {
                       maxLiveGenerations: Int = DefaultMaxLiveGenerations,
                       beforePublish: () => Unit = () => (),
                       lease: Option[WriterLease] = None,
-                      onCompact: Option[DataFrame => DataFrame] = None): TickStats = {
-    val (prevId, fence0) = markerSnapshot(dir)
-    if (prevId >= batchId)
-      return TickStats(batchId, applied = false, touchedBuckets = 0,
-        compacted = false, liveGenerations = 0)
-    requireBucketCount(dir, n)
-    lease.foreach(acquireLease(dir, _))
-    try {
-      val (fs, p) = fsFor(dir)
-      val prevManifest = readManifest(fs, p, prevId)
-      val compacting = liveGenCount(prevManifest) >= maxLiveGenerations
+                      onCompact: Option[DataFrame => DataFrame] = None): TickStats =
+    publishTick(dir, batchId, n, beforePublish, lease) { prevManifest =>
       val gen = GenPrefix + batchId
       // r17: the delta's touched buckets are read off the written
       // generation's partition DIRS (a filesystem listing, free)
@@ -648,38 +590,113 @@ private[graft] object BucketStore {
       // manifest unchanged, and the marker still advances (the replay
       // guard's requirement); the orphaned empty dir is swept by gc
       // once it leaves the retention window.
-      // r18 (guide §2.4, the applyTick narrow-merge twin): a plain
-      // disjoint-key fold (onCompact = None) re-clusters nothing — the
-      // store side is already bucket-clustered (each scanned file lies
-      // in one bucket dir, and its rows take that bucket off the file
-      // path), so only the delta needs the bucket repartition and the
-      // fold's write skips the full-store exchange. A reducing
-      // onCompact re-groups rows (its aggregation hash-partitions by
-      // key, not bucket), so that path keeps the full repartition.
-      val out =
-        if (compacting) {
-          val store = selectOrEmpty(spark, dir, prevManifest, prevManifest,
-            withBucket = true)
-          onCompact match {
-            case None => store.unionByName(appended.repartition(col(BucketCol)))
-            case Some(reduce) =>
-              reduce(store.unionByName(appended)).repartition(col(BucketCol))
-          }
-        } else appended.repartition(col(BucketCol))
-      checkFence(dir, fence0, batchId)
-      out.write.partitionBy(BucketCol).mode("overwrite").parquet(s"$dir/$gen")
-      val written = presentBuckets(s"$dir/$gen")
-      val newManifest =
-        if (compacting) written.map(_ -> Seq(gen)).toMap
-        else prevManifest ++ written.map(b =>
-          b -> (prevManifest.getOrElse(b, Seq.empty) :+ gen))
+      if (liveGenCount(prevManifest) >= maxLiveGenerations) {
+        val store = selectOrEmpty(spark, dir, prevManifest, prevManifest,
+          withBucket = true)
+        // the narrow fold, twin of applyTick's narrow merge: a plain
+        // disjoint-key fold (onCompact = None) re-clusters nothing — the
+        // store side is already bucket-clustered (each scanned file lies
+        // in one bucket dir, and its rows take that bucket off the file
+        // path), so only the delta needs the bucket repartition and the
+        // fold's write skips the full-store exchange. A reducing
+        // onCompact re-groups rows (its aggregation hash-partitions by
+        // key, not bucket), so that path keeps the full repartition.
+        replacePlan(onCompact match {
+          case None => store.unionByName(appended.repartition(col(BucketCol)))
+          case Some(reduce) =>
+            reduce(store.unionByName(appended)).repartition(col(BucketCol))
+        }, gen, compacted = true)
+      } else TickPlan(Some(appended.repartition(col(BucketCol))),
+        written => prevManifest ++ written.map(b =>
+          b -> (prevManifest.getOrElse(b, Seq.empty) :+ gen)),
+        _.size, compacted = false)
+    }
+
+  /** Apply one REPLACE tick: `rows` (bucket column included) is the
+    * store's whole new content. It is written as generation
+    * `gen-<batchId>` and published by a manifest that names only that
+    * generation's buckets, so a bucket absent from `rows` drops out and
+    * every older generation ages out through the normal retention gc.
+    * Nothing of the store is read. This is the publish of a periodic
+    * full recompute (the retrain loop's recs): readers keep the
+    * snapshot they resolved, a crash before the marker rolls back
+    * through [[recover]], and a second writer fails at the fence —
+    * the one publish step every tick shares. The stats report the
+    * buckets written as touched; `compacted` stays false, since nothing
+    * older was folded in.
+    */
+  def applyReplaceTick(dir: String, rows: DataFrame, batchId: Long, n: Int,
+                       beforePublish: () => Unit = () => (),
+                       lease: Option[WriterLease] = None): TickStats =
+    publishTick(dir, batchId, n, beforePublish, lease) { _ =>
+      replacePlan(rows.repartition(col(BucketCol)), GenPrefix + batchId, compacted = false)
+    }
+
+  /** What one tick publishes, planned against the previous manifest:
+    * `out` (bucket column included) is written as `gen-<batchId>` —
+    * None writes nothing and re-publishes under the new batch id, so
+    * the marker still advances — and `manifest` maps the buckets that
+    * write produced (none without one) to the new manifest. `touched`
+    * and `compacted` fill the tick's [[TickStats]].
+    */
+  private case class TickPlan(out: Option[DataFrame],
+                              manifest: Set[Int] => Map[Int, Seq[String]],
+                              touched: Set[Int] => Int, compacted: Boolean)
+
+  /** A plan whose write is the whole live state: the new manifest
+    * names only the buckets `out` produced.
+    */
+  private def replacePlan(out: DataFrame, gen: String, compacted: Boolean): TickPlan =
+    TickPlan(Some(out), written => written.map(_ -> Seq(gen)).toMap, _.size, compacted)
+
+  /** The one publish step under [[applyTick]], [[applyAppendTick]] and
+    * [[applyReplaceTick]], in order: the replay no-op (a batch at or
+    * below the marker), the bucket-count check, the opt-in lease, the
+    * tick's `plan` against the previous manifest, a fence check before
+    * the write (a writer that lost the store after the winner ALREADY
+    * published aborts before it can clobber a same-named generation dir
+    * the winner's manifest references — mode=overwrite deletes the dir
+    * first), the write of `gen-<batchId>`, `beforePublish` (a
+    * fault-injection seam: specs interleave a competing writer or a
+    * crash there), the fence again, the manifest, the marker, gc and
+    * the logged stats.
+    *
+    * Fence snapshot: the raw marker this tick's view of the store is
+    * based on. Any publish by another writer changes it (the UUID on
+    * line 2), and this tick then aborts at a fence check instead of
+    * overwriting that writer's tick.
+    */
+  private def publishTick(dir: String, batchId: Long, n: Int, beforePublish: () => Unit,
+                          lease: Option[WriterLease])(plan: Map[Int, Seq[String]] => TickPlan): TickStats = {
+    val (prevId, fence0) = markerSnapshot(dir)
+    if (prevId >= batchId)
+      return TickStats(batchId, applied = false, touchedBuckets = 0,
+        compacted = false, liveGenerations = 0)
+    requireBucketCount(dir, n)
+    // opt-in lease: where create-exclusive is atomic this blocks a
+    // second maintainer HERE — before any manifest read, merge
+    // compute, or orphan generation write (see WriterLease)
+    lease.foreach(acquireLease(dir, _))
+    try {
+      val (fs, p) = fsFor(dir)
+      val prevManifest = readManifest(fs, p, prevId)
+      val tick = plan(prevManifest)
+      val gen = GenPrefix + batchId
+      val written = tick.out.fold(Set.empty[Int]) { out =>
+        checkFence(dir, fence0, s"tick $batchId")
+        out.write.partitionBy(BucketCol).mode("overwrite").parquet(s"$dir/$gen")
+        presentBuckets(s"$dir/$gen")
+      }
+      val newManifest = tick.manifest(written)
       beforePublish()
-      checkFence(dir, fence0, batchId)
+      checkFence(dir, fence0, s"tick $batchId")
       writeManifest(fs, p, batchId, newManifest.toSeq.sortBy(_._1))
+      // the publish point: one small-file overwrite, no renames —
+      // everything above is invisible to readers until this lands
       writeMarker(dir, batchId)
       gc(fs, p, dir, batchId)
-      val st = TickStats(batchId, applied = true, touchedBuckets = written.size,
-        compacted = compacting, liveGenerations = liveGenCount(newManifest))
+      val st = TickStats(batchId, applied = true, touchedBuckets = tick.touched(written),
+        compacted = tick.compacted, liveGenerations = liveGenCount(newManifest))
       log.info(s"$dir $st")
       st
     } finally lease.foreach(releaseLease(dir, _))
@@ -725,7 +742,10 @@ private[graft] object BucketStore {
   /** Marker read as (batchId, raw content): the raw content is the
     * FENCE a tick must observe unchanged at publish time (the token on
     * line 2 makes every publish distinct even when batch ids repeat
-    * across writers).
+    * across writers). `file` names another small file of the same
+    * form under `dir` — the index rebuilds' version pointer
+    * ([[graft.operators.Similarity.resolveIvfIndex]]) — which gets the
+    * same read and the same [[checkFence]].
     *
     * The marker is overwritten in place (the atomic-PUT publish), and
     * on HDFS/POSIX an in-place overwrite can expose a momentarily
@@ -735,9 +755,9 @@ private[graft] object BucketStore {
     * apply) or resolve a reader to the wrong manifest. So: retry the
     * glimpse briefly, then fail loudly.
     */
-  private def markerSnapshot(dir: String): (Long, Option[String]) = {
+  private[graft] def markerSnapshot(dir: String, file: String = Marker): (Long, Option[String]) = {
     val (fs, p) = fsFor(dir)
-    val mp = new HPath(p, Marker)
+    val mp = new HPath(p, file)
     var attempt = 0
     while (true) {
       readSmall(fs, mp) match {
@@ -748,7 +768,7 @@ private[graft] object BucketStore {
             case None =>
               attempt += 1
               require(attempt < 20,
-                s"marker $mp unreadable after $attempt attempts (content ${s.length} bytes)")
+                s"$mp unreadable after $attempt attempts (content ${s.length} bytes)")
               Thread.sleep(25)
           }
       }
@@ -756,23 +776,25 @@ private[graft] object BucketStore {
     (-1L, None) // unreachable
   }
 
-  /** Loud-loser fence check: the raw marker must still be exactly what
-    * this tick read at entry. Any change means another writer
-    * published under us — abort rather than overwrite its tick.
+  /** Loud-loser fence check: the raw `file` (the marker by default)
+    * must still be exactly what this writer read at entry. Any change
+    * means another `rival` published under it — abort `action` rather
+    * than overwrite that publish.
     */
-  private def checkFence(dir: String, fence0: Option[String], batchId: Long): Unit = {
+  private[graft] def checkFence(dir: String, fence0: Option[String], action: String,
+                                rival: String = "maintainer", file: String = Marker): Unit = {
     val (fs, p) = fsFor(dir)
-    val now = readSmall(fs, new HPath(p, Marker))
+    val now = readSmall(fs, new HPath(p, file))
     if (now != fence0)
       throw new ConcurrentWriterException(
-        s"store $dir: marker changed while tick $batchId was computing " +
+        s"$dir: $file changed while $action was running " +
           s"(expected ${fence0.map(_.linesIterator.mkString("/")).getOrElse("<absent>")}, " +
           s"found ${now.map(_.linesIterator.mkString("/")).getOrElse("<absent>")}) — " +
-          "another maintainer owns this store; this tick aborts without publishing")
+          s"another $rival published; $action aborts without publishing")
   }
 
-  /** Thrown by [[applyTick]] when the fence check detects a concurrent
-    * writer. Deliberately NOT an IllegalStateException subclass a
+  /** Thrown by a tick or an index rebuild when the fence check detects
+    * a concurrent writer. Deliberately NOT an IllegalStateException subclass a
     * caller might blanket-swallow: losing a fence means two maintainers
     * are pointed at one store and an operator must intervene.
     */
@@ -912,7 +934,7 @@ private[graft] object BucketStore {
     * hdfs://, s3a:// etc. all route to the right implementation
     * (the same resolution Spark's own parquet writes use).
     */
-  private def fsFor(dir: String): (FileSystem, HPath) = {
+  private[graft] def fsFor(dir: String): (FileSystem, HPath) = {
     val conf = SparkSession.getActiveSession
       .orElse(SparkSession.getDefaultSession)
       .map(_.sparkContext.hadoopConfiguration)
@@ -924,7 +946,7 @@ private[graft] object BucketStore {
   private def genId(name: String): Option[Long] =
     scala.util.Try(name.stripPrefix(GenPrefix).toLong).toOption
 
-  private def readSmall(fs: FileSystem, p: HPath): Option[String] =
+  private[graft] def readSmall(fs: FileSystem, p: HPath): Option[String] =
     if (fs.exists(p)) {
       val in = fs.open(p)
       try {
@@ -936,22 +958,17 @@ private[graft] object BucketStore {
       } finally in.close()
     } else None
 
-  private def writeSmall(fs: FileSystem, p: HPath, s: String): Unit = {
+  private[graft] def writeSmall(fs: FileSystem, p: HPath, s: String): Unit = {
     val out = fs.create(p, true)
     try out.write(s.getBytes(java.nio.charset.StandardCharsets.UTF_8))
     finally out.close()
   }
 
-  private def requireBucketCount(dir: String, n: Int): Unit = {
-    val (fs, p) = fsFor(dir)
-    readSmall(fs, new HPath(p, MetaFile))
-      .flatMap(_.split("\n").find(_.startsWith("n="))
-        .map(_.stripPrefix("n=").trim.toInt))
-      .foreach(declared => require(declared == n,
-        s"bucket-count mismatch for store $dir: seeded with n=$declared, " +
-          s"caller uses n=$n — a mismatched bucket fn would prune to the " +
-          "wrong directories and silently duplicate keys"))
-  }
+  private def requireBucketCount(dir: String, n: Int): Unit =
+    metaBuckets(dir).foreach(declared => require(declared == n,
+      s"bucket-count mismatch for store $dir: seeded with n=$declared, " +
+        s"caller uses n=$n — a mismatched bucket fn would prune to the " +
+        "wrong directories and silently duplicate keys"))
 
   /** Bucket ids present as partition dirs inside one generation. */
   private def presentBuckets(genDir: String): Set[Int] = {

@@ -179,18 +179,25 @@ object EventStream {
     * touched buckets are known BEFORE any matrix read — the merge
     * reads only those bucket partitions and the apply publishes only
     * those buckets into a new generation; untouched buckets stay
-    * byte-identical (CdcStreamSpec pins it). Replay guard: the
-    * applied-batch marker lands only after the tick's generation and
-    * manifest are complete, so an at-least-once redelivery
-    * (marker >= batchId) skips the apply; the facts append re-runs
-    * and no-ops via its anti-join. The facts dir carries no marker,
-    * so this maintainer passes [[Maintainer.start]] no commit store:
-    * every non-empty batch, a replayed one included, reaches the
-    * tick, and a crash between the matrix publish and the facts
-    * append heals on replay.
+    * byte-identical (CdcStreamSpec pins it). The facts are a
+    * user-bucketed store too: the tick reads only the batch users'
+    * facts buckets, which is all both delta-pair semi-joins need, and
+    * appends the batch's genuinely-new facts as one
+    * [[BucketStore.applyAppendTick]] generation that the read never
+    * scans.
+    *
+    * The facts store is the commit store: it moves last, so a batch
+    * at or below its marker is skipped by [[Maintainer.start]] before
+    * any Spark job. The matrix keeps its own guard inside the tick:
+    * after a crash between the matrix publish and the facts append the
+    * matrix is one batch ahead, and the replay skips the matrix and
+    * appends the facts.
     *
     * @param interactions  streaming (user_id, item_id) new-interaction rows
-    * @param factsDir      parquet snapshot of interactions seen so far
+    * @param factsDir      store of the interactions seen so far — seed
+    *                      with [[BucketStore.seed]] on
+    *                      `longBucket(user_id, n)`; the tick reads `n`
+    *                      from its meta
     * @param matrixDir     bucketed store of UNFILTERED pair counts
     *                      (minUsers = 1, coocIncrement's contract) in
     *                      the PACKED-key schema (pk, n_users) — seed
@@ -203,7 +210,7 @@ object EventStream {
     *                      batch ids restart at 0 on every launch while
     *                      the applied-batch marker persists, and the
     *                      guard would skip real matrix updates forever
-    * @param nBuckets      the store's bucket count — part of its
+    * @param nBuckets      the matrix store's bucket count — part of its
     *                      on-disk contract, must match the seed; ≤ 0
     *                      (the r15 default) recovers it from the
     *                      store's meta
@@ -213,24 +220,24 @@ object EventStream {
                         nBuckets: Int = -1): org.apache.spark.sql.streaming.StreamingQuery =
     // distinct: the matrix path dedups internally (coocDelta), so
     // the facts append must too — a doubly-delivered row inside
-    // one trigger would otherwise corrupt the facts snapshot
-    Maintainer.start(interactions, checkpointDir, Seq(matrixDir), None) {
+    // one trigger would otherwise corrupt the facts store
+    Maintainer.start(interactions, checkpointDir, Seq(matrixDir, factsDir), Some(factsDir)) {
       _.select(col("user_id"), col("item_id")).distinct()
     } { (b, batchId, _) =>
       val spark = b.sparkSession
-      recoverSnapshot(factsDir)
-      val old = spark.read.parquet(factsDir)
+      val nf = BucketStore.seededBuckets(factsDir)
+      val bucket = BucketStore.longBucket(col("user_id"), nf)
+      val old = BucketStore.readBuckets(spark, factsDir,
+        BucketStore.touchedBuckets(b.select(bucket)), nf)
       if (BucketStore.appliedBatchId(matrixDir) < batchId)
         graft.operators.ItemCF.coocMergeTick(spark, matrixDir, old, b,
           batchId, nBuckets)
-      // facts gain only the batch's genuinely-new (user, item)
-      // rows (the tick ignored the rest); materialize before
-      // writing — the plan reads the directory being appended to
-      val newFacts = b.join(old, Seq("user_id", "item_id"), "left_anti").cache()
-      try {
-        newFacts.count()
-        newFacts.write.mode("append").parquet(factsDir)
-      } finally { newFacts.unpersist(); () }
+      // facts gain only the batch's genuinely-new (user, item) rows
+      // (the tick ignored the rest)
+      BucketStore.applyAppendTick(spark, factsDir,
+        b.join(old, Seq("user_id", "item_id"), "left_anti")
+          .withColumn(BucketStore.BucketCol, bucket), batchId, nf)
+      ()
     }
 
   /** Continuous retrain loop — the reference's periodic recompute
@@ -242,24 +249,36 @@ object EventStream {
     * once `retrainEvery` mutations have accumulated since the last
     * train, ALS refits on the merged snapshot
     * ([[BucketStore.readAll]] — the refit is legitimately global; only
-    * the MERGE is O(delta)) and rewrites the per-user top-N recs over
+    * the MERGE is O(delta)) and publishes the per-user top-N recs over
     * each user's unrated items (the reference's redis `u<id>` export
     * refresh).
     *
+    * The recs are a user-bucketed [[BucketStore]] at the snapshot's
+    * bucket count, seeded empty when `recsDir` holds no store. Each
+    * retrain publishes them with one [[BucketStore.applyReplaceTick]]
+    * under the batch that triggered it, so the recs marker names the
+    * snapshot batch the recs were trained on; a reader keeps the recs
+    * it resolved, and a crash before the recs marker moves rolls the
+    * unpublished recs back on restart.
+    *
     * The snapshot must be seeded with [[BucketStore.seed]] on
     * `pmod(user_id, nBuckets)`, same as [[startCdcApply]].
+    *
+    * '''Restart contract.''' The pending counter lives in the running
+    * query, not on disk: it takes each applied batch's row count from
+    * [[Maintainer.start]]'s one count, and a failed fit kills the
+    * query. The snapshot is the commit store, so after a restart the
+    * batch whose CDC tick already landed is skipped by its replay
+    * guard without a retrain, and the counter starts again at 0. Until
+    * `retrainEvery` more rows arrive, readers get the recs the recs
+    * marker names: those trained on that earlier snapshot batch.
     *
     * @param checkpointDir durable streaming checkpoint (REQUIRED, same
     *   contract as [[startCdcApply]]: the replay guard compares the
     *   store's applied-batch marker against the stream's batch ids, so
     *   ids must stay monotonic across restarts — without a checkpoint
     *   they restart at 0 and every batch up to the marker would be
-    *   silently skipped, dropping its mutations). The pending counter
-    *   is process-local and takes each applied batch's row count from
-    *   [[Maintainer.start]]'s one count; a batch the replay guard
-    *   skips adds nothing (its mutations already landed before the
-    *   restart). Production tracking belongs in the streaming
-    *   checkpoint / a metadata table.
+    *   silently skipped, dropping its mutations)
     */
   def startRetrainLoop(updates: DataFrame, snapshot: String, recsDir: String,
                        checkpointDir: String,
@@ -267,7 +286,17 @@ object EventStream {
                        rank: Int = 4, maxIter: Int = 5,
                        nBuckets: Int = -1): org.apache.spark.sql.streaming.StreamingQuery = {
     val pending = new java.util.concurrent.atomic.AtomicLong(0L)
-    Maintainer.start(updates, checkpointDir, Seq(snapshot), Some(snapshot))(identity) {
+    val nRecs = BucketStore.seededBuckets(snapshot)
+    val recsBucket = BucketStore.longBucket(col("user_id"), nRecs)
+    if (BucketStore.metaBuckets(recsDir).isEmpty) {
+      val spark = updates.sparkSession
+      BucketStore.seed(spark.createDataFrame(
+        spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
+        org.apache.spark.sql.types.StructType.fromDDL(
+          "user_id BIGINT, item_id BIGINT, score DOUBLE")),
+        recsBucket, recsDir, nRecs)
+    }
+    Maintainer.start(updates, checkpointDir, Seq(snapshot, recsDir), Some(snapshot))(identity) {
       (b, batchId, rows) =>
         val spark = b.sparkSession
         // nBuckets ≤ 0 (r15 default): the store meta is the layout
@@ -283,81 +312,19 @@ object EventStream {
             val model = graft.recommender.Als.fit(train, rank, maxIter)
             // recs over the items each user has NOT rated — the
             // reference's anti-testset, the snapshot's pairs as the
-            // seen set. recsDir is the serving surface (the reference's
-            // redis export): stage + atomic swap so a reader never
-            // observes a half-written directory, and reset the pending
-            // counter only AFTER the recs landed — a crash mid-train
-            // retrains on the next batch instead of serving stale recs
-            // for a full window
-            graft.recommender.Als.topNUnseen(model, train, topN)
-              .select(
-                col("user").cast("long").as("user_id"),
-                col("item").cast("long").as("item_id"),
-                round(col("score").cast("double"), 4).as("score"))
-              .write.mode("overwrite").parquet(recsDir + "_staged")
+            // seen set — replace the whole recs store; the counter
+            // resets only once they are published
+            BucketStore.applyReplaceTick(recsDir,
+              graft.recommender.Als.topNUnseen(model, train, topN)
+                .select(
+                  col("user").cast("long").as("user_id"),
+                  col("item").cast("long").as("item_id"),
+                  round(col("score").cast("double"), 4).as("score"))
+                .withColumn(BucketStore.BucketCol, recsBucket),
+              batchId, nRecs)
           } finally { train.unpersist(); () }
-          promoteStaged(recsDir)
           pending.set(0L)
         }
-    }
-  }
-
-  /** Hadoop FileSystem + path for a snapshot dir — resolved from the
-    * path's scheme against the session's Hadoop conf (same resolution
-    * as [[BucketStore]]'s metadata I/O), so the swap protocol runs on
-    * file:/, a mounted shared FS, hdfs://, or an object-store
-    * connector. On object stores the renames are copy+delete, not
-    * atomic — the _SUCCESS guard + [[recoverSnapshot]] still yield a
-    * complete snapshot, but a whole-dir swap there is O(bytes);
-    * prefer the [[BucketStore]] generation protocol for anything
-    * large.
-    */
-  private def hadoopFs(path: String): (org.apache.hadoop.fs.FileSystem, org.apache.hadoop.fs.Path) = {
-    val conf = org.apache.spark.sql.SparkSession.getActiveSession
-      .orElse(org.apache.spark.sql.SparkSession.getDefaultSession)
-      .map(_.sparkContext.hadoopConfiguration)
-      .getOrElse(new org.apache.hadoop.conf.Configuration())
-    val p = new org.apache.hadoop.fs.Path(path)
-    (p.getFileSystem(conf), p)
-  }
-
-  /** Promote any staged directory → live: rename live aside, rename
-    * staged in, drop the old copy. Directory renames are atomic on
-    * POSIX/HDFS; the only non-atomic window (between the two renames)
-    * is covered by [[recoverSnapshot]] because the staged dir is
-    * already complete (guarded by its _SUCCESS marker). Tolerates a
-    * missing live dir (first-ever write of e.g. the recs export).
-    */
-  private[streaming] def promoteStaged(path: String): Unit = {
-    val (fs, live) = hadoopFs(path)
-    val staged = new org.apache.hadoop.fs.Path(path + "_staged")
-    val old = new org.apache.hadoop.fs.Path(path + "_old")
-    require(fs.exists(new org.apache.hadoop.fs.Path(staged, "_SUCCESS")),
-      s"staged dir $staged incomplete (no _SUCCESS)")
-    fs.delete(old, true)
-    // rename failure must THROW (silently losing it could delete the
-    // sole surviving copy on the trailing delete)
-    if (fs.exists(live))
-      require(fs.rename(live, old), s"failed to move $live aside")
-    require(fs.rename(staged, live), s"failed to promote $staged -> $live")
-    fs.delete(old, true)
-    ()
-  }
-
-  /** Crash recovery: if the live dir is missing, promote the completed
-    * staged copy (crash between the two renames) or restore the old
-    * copy (staged incomplete). Called before every merge, so a
-    * restarted query always reads a complete base snapshot.
-    */
-  private[streaming] def recoverSnapshot(snapshot: String): Unit = {
-    val (fs, live) = hadoopFs(snapshot)
-    val staged = new org.apache.hadoop.fs.Path(snapshot + "_staged")
-    val old = new org.apache.hadoop.fs.Path(snapshot + "_old")
-    if (!fs.exists(live)) {
-      if (fs.exists(new org.apache.hadoop.fs.Path(staged, "_SUCCESS")))
-        require(fs.rename(staged, live), s"failed to recover $staged -> $live")
-      else if (fs.exists(old))
-        require(fs.rename(old, live), s"failed to restore $old -> $live")
     }
   }
 

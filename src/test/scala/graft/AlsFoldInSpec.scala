@@ -14,7 +14,7 @@ import org.scalatest.funsuite.AnyFunSuite
   *    positive items outscore deterministic random negatives;
   *  - determinism and shape of the registered serving query.
   */
-class AlsFoldInSpec extends AnyFunSuite {
+class AlsFoldInSpec extends AnyFunSuite with ReleasesCaches {
   private lazy val spark = TestSpark.spark
   private val sf = TestSpark.sf
 

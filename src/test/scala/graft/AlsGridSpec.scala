@@ -9,7 +9,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * the suite stays fast; the metric values themselves are rows-only
   * (ML, not oracle-checkable).
   */
-class AlsGridSpec extends AnyFunSuite {
+class AlsGridSpec extends AnyFunSuite with ReleasesCaches {
   private lazy val spark = TestSpark.spark
   private val sf = TestSpark.sf
 

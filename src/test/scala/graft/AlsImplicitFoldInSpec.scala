@@ -16,7 +16,7 @@ import org.scalatest.funsuite.AnyFunSuite
   *    entire job is ordering observed above unobserved);
   *  - determinism and shape of the registered serving query.
   */
-class AlsImplicitFoldInSpec extends AnyFunSuite {
+class AlsImplicitFoldInSpec extends AnyFunSuite with ReleasesCaches {
   private lazy val spark = TestSpark.spark
   private val sf = TestSpark.sf
 

@@ -11,7 +11,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * same corpus through the re-index path unshifted. In-range keys
   * keep the bare-cast fast path.
   */
-class AlsReindexSpec extends AnyFunSuite {
+class AlsReindexSpec extends AnyFunSuite with ReleasesCaches {
   private lazy val spark = TestSpark.spark
   private val sf = TestSpark.sf
 

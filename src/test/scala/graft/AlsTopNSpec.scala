@@ -14,7 +14,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * the fold-in serves return must not reach back to the training
   * source once they have returned.
   */
-class AlsTopNSpec extends AnyFunSuite {
+class AlsTopNSpec extends AnyFunSuite with ReleasesCaches {
   private lazy val spark = TestSpark.spark
   private val sf = TestSpark.sf
 

@@ -493,6 +493,91 @@ class BucketStoreSpec extends AnyFunSuite {
     assert(storeRows(dir) === Set((1L, 10L), (2L, 20L)))
   }
 
+  /** A store of (k, v) rows seeded with keys 1 and 2 (buckets 1 and 2),
+    * and a frame of (k, v) rows with their bucket column.
+    */
+  private def replaceStore(name: String): String = {
+    import spark.implicits._
+    val dir = java.nio.file.Files.createTempDirectory(name).toString + "/store"
+    BucketStore.seed(Seq((1L, 10L), (2L, 20L)).toDF("k", "v"),
+      BucketStore.longBucket(col("k"), 64), dir, n = 64)
+    dir
+  }
+
+  private def kv(rows: (Long, Long)*): DataFrame = {
+    import spark.implicits._
+    rows.toDF("k", "v").withColumn("bucket", BucketStore.longBucket(col("k"), 64))
+  }
+
+  test("replace tick: a frame resolved before a replace still reads the old rows") {
+    val dir = replaceStore("bucket_store_replace_mvcc")
+    val snapshot = BucketStore.readAll(spark, dir).select("k", "v")
+    val st = BucketStore.applyReplaceTick(dir, kv((1L, 11L), (3L, 30L)), batchId = 0L, n = 64)
+    assert(st === BucketStore.TickStats(0L, applied = true, touchedBuckets = 2,
+      compacted = false, liveGenerations = 1))
+    // the replace is the whole new content: key 2 is gone
+    assert(storeRows(dir) === Set((1L, 11L), (3L, 30L)))
+    assert(snapshot.collect().map(r => (r.getLong(0), r.getLong(1))).toSet
+      === Set((1L, 10L), (2L, 20L)))
+  }
+
+  test("replace tick: a crash injected before publish leaves the old snapshot; recover deletes the orphan") {
+    val dir = replaceStore("bucket_store_replace_crash")
+    val boom = new RuntimeException("crash before publish")
+    val e = intercept[RuntimeException] {
+      BucketStore.applyReplaceTick(dir, kv((3L, 30L)), batchId = 0L, n = 64,
+        beforePublish = () => throw boom)
+    }
+    assert(e eq boom)
+    assert(java.nio.file.Files.exists(java.nio.file.Paths.get(dir, "gen-0")))
+    assert(storeRows(dir) === Set((1L, 10L), (2L, 20L)))
+    assert(BucketStore.appliedBatchId(dir) === -1L)
+    BucketStore.recover(dir)
+    assert(!java.nio.file.Files.exists(java.nio.file.Paths.get(dir, "gen-0")))
+    assert(storeRows(dir) === Set((1L, 10L), (2L, 20L)))
+  }
+
+  test("replace tick: a competing writer makes the replace throw ConcurrentWriterException") {
+    val dir = replaceStore("bucket_store_replace_fence")
+    val e = intercept[BucketStore.ConcurrentWriterException] {
+      BucketStore.applyReplaceTick(dir, kv((5L, 50L)), batchId = 5L, n = 64,
+        beforePublish = () => {
+          assert(BucketStore.applyReplaceTick(dir, kv((4L, 40L)), batchId = 4L,
+            n = 64).applied)
+          ()
+        })
+    }
+    assert(e.getMessage.contains("another maintainer"))
+    // the winner's content is live, the loser's is not
+    assert(storeRows(dir) === Set((4L, 40L)))
+    assert(BucketStore.appliedBatchId(dir) === 4L)
+  }
+
+  test("replace tick: a bucket absent from the replace drops out of the manifest") {
+    val dir = replaceStore("bucket_store_replace_drop")
+    assert(manifestBuckets(dir) === Set(1, 2))
+    BucketStore.applyReplaceTick(dir, kv((1L, 11L), (3L, 30L)), batchId = 0L, n = 64)
+    assert(manifestBuckets(dir) === Set(1, 3))
+    assert(BucketStore.readBuckets(spark, dir, Seq(2), n = 64).count() === 0L)
+  }
+
+  test("replace tick: pre-replace generations are gone after RetainManifests more publishes") {
+    val dir = replaceStore("bucket_store_replace_gc")
+    def gens(): Set[String] = new java.io.File(dir).listFiles().map(_.getName)
+      .filter(_.startsWith("gen-")).toSet
+    BucketStore.applyAppendTick(spark, dir, kv((3L, 30L)), batchId = 0L, n = 64)
+    BucketStore.applyAppendTick(spark, dir, kv((4L, 40L)), batchId = 1L, n = 64)
+    BucketStore.applyReplaceTick(dir, kv((7L, 70L)), batchId = 2L, n = 64)
+    // the previous manifest still names them: a reader resolved before
+    // the replace can finish
+    assert(Set("gen-base", "gen-0", "gen-1").subsetOf(gens()))
+    (1 to BucketStore.RetainManifests).foreach { i =>
+      BucketStore.applyAppendTick(spark, dir, kv((7L + i, 70L + i)), batchId = 2L + i, n = 64)
+    }
+    assert(gens().intersect(Set("gen-base", "gen-0", "gen-1")).isEmpty, gens())
+    assert(storeRows(dir) === Set((7L, 70L), (8L, 71L), (9L, 72L)))
+  }
+
   test("writer fencing: of two interleaved appliers exactly one wins and the loser fails loudly") {
     import spark.implicits._
     val dir = java.nio.file.Files.createTempDirectory("bucket_store_fence").toString + "/store"

@@ -122,7 +122,7 @@ class CdcStreamSpec extends AnyFunSuite {
     // batch 1: one mutation — below the threshold, no model yet
     input.addData(RatingUpdate(1L, 6L, 5.0, false, ts("2024-01-02 00:00:00"), "upsert"))
     q.processAllAvailable()
-    assert(!new java.io.File(recsDir).exists())
+    assert(graft.streaming.BucketStore.readAll(spark, recsDir).count() === 0L)
     val afterB1 = TestFiles.bucketFileHashes(spark, dir)
     // batch 2: second mutation crosses retrainEvery=2 → ALS refit + recs written
     input.addData(RatingUpdate(2L, 5L, 4.5, false, ts("2024-01-03 00:00:00"), "upsert"))
@@ -139,8 +139,10 @@ class CdcStreamSpec extends AnyFunSuite {
     assert(afterB1.filter(t => TestFiles.inBucket(t._1, 2)) !==
       afterB2.filter(t => TestFiles.inBucket(t._1, 2)))
 
-    val recs = spark.read.parquet(recsDir)
+    val recs = graft.streaming.BucketStore.readAll(spark, recsDir)
     assert(recs.count() > 0)
+    // the recs marker names the snapshot batch they were trained on
+    assert(graft.streaming.BucketStore.appliedBatchId(recsDir) === 1L)
     assert(recs.columns.toSet === Set("user_id", "item_id", "score"))
     // every user in the snapshot got its top-N refresh
     assert(recs.select("user_id").distinct().count() === 8)
@@ -164,10 +166,11 @@ class CdcStreamSpec extends AnyFunSuite {
     val matrixDir = root + "/matrix"
     // seed: 3 users with overlapping profiles
     val seed = Seq((1L, 10L), (1L, 11L), (2L, 10L), (2L, 11L), (2L, 12L), (3L, 12L))
-    seed.toDF("user_id", "item_id").write.parquet(factsDir)
+    graft.streaming.BucketStore.seed(seed.toDF("user_id", "item_id"),
+      graft.streaming.BucketStore.longBucket(col("user_id"), 64), factsDir, n = 64)
     // r17: the matrix store persists the packed pair key (pk, n_users)
     graft.streaming.BucketStore.seed(
-      graft.operators.ItemCF.coocCountsPkOn(spark.read.parquet(factsDir)),
+      graft.operators.ItemCF.coocCountsPkOn(seed.toDF("user_id", "item_id")),
       graft.operators.ItemCF.pairBucket(col("pk"), 64), matrixDir, n = 64)
 
     val input = MemoryStream[(Long, Long)]
@@ -179,7 +182,8 @@ class CdcStreamSpec extends AnyFunSuite {
         graft.streaming.BucketStore.readAll(spark, matrixDir))
       .select("item_a", "item_b", "n_users")
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
-    def batchNow = graft.operators.ItemCF.coocCountsOn(spark.read.parquet(factsDir))
+    def facts = graft.streaming.BucketStore.readAll(spark, factsDir)
+    def batchNow = graft.operators.ItemCF.coocCountsOn(facts)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
 
     // tick 1: new pairs for user 1 (bump 10-11 profile cross) + a
@@ -211,12 +215,14 @@ class CdcStreamSpec extends AnyFunSuite {
     assert(before.filter(t => TestFiles.inBucket(t._1, 10)) !==
       after.filter(t => TestFiles.inBucket(t._1, 10)))
     // facts snapshot deduplicated both repeats (seed 6 + 3 new)
-    assert(spark.read.parquet(factsDir).count() === 9)
+    assert(facts.count() === 9)
     // the applied-batch marker swapped in with the matrix (replay
     // guard: a redelivered batch <= marker skips the matrix apply)
     val marker = java.nio.file.FileSystems.getDefault
       .getPath(matrixDir, "_graft_applied_batch")
     assert(java.nio.file.Files.exists(marker))
     assert(graft.streaming.BucketStore.appliedBatchId(matrixDir) === 2L)
+    // the facts store moves last: its marker is the maintainer's commit
+    assert(graft.streaming.BucketStore.appliedBatchId(factsDir) === 2L)
   }
 }

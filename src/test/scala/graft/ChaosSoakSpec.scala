@@ -32,7 +32,7 @@ import org.scalatest.funsuite.AnyFunSuite
   *   4. the injected orphan generations are gone;
   *   5. the healthy-data drift probes never fired.
   */
-class ChaosSoakSpec extends AnyFunSuite {
+class ChaosSoakSpec extends AnyFunSuite with ReleasesCaches {
   private lazy val spark = TestSpark.spark
 
   test("five maintainers through interleaved CDC ticks, a restart, crash debris, folds, and probes end ≡ batch") {

@@ -20,7 +20,7 @@ import graft.operators.{Curation, Similarity}
   * k-means FIT itself is partition-sensitive at init, which is why
   * every stored rung in this codebase freezes its quantizer).
   */
-class CurationSpec extends AnyFunSuite {
+class CurationSpec extends AnyFunSuite with ReleasesCaches {
   private lazy val spark = TestSpark.spark
   import spark.implicits._
 

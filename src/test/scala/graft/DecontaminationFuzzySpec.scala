@@ -13,7 +13,7 @@ import org.scalatest.funsuite.AnyFunSuite
   *  - eval docs never appear as flagged TRAIN docs;
   *  - an unrelated corpus with NO overlap yields zero rows.
   */
-class DecontaminationFuzzySpec extends AnyFunSuite {
+class DecontaminationFuzzySpec extends AnyFunSuite with ReleasesCaches {
   private lazy val spark = TestSpark.spark
   private val sf = TestSpark.sf
 

@@ -4,7 +4,7 @@ import graft.operators.{Dedup, Similarity}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-class DedupSimilaritySpec extends AnyFunSuite {
+class DedupSimilaritySpec extends AnyFunSuite with ReleasesCaches {
   private lazy val spark = TestSpark.spark
   private val sf = TestSpark.sf
 

@@ -13,7 +13,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * crash debris — applied to the OTHER half of the store fleet, the
   * three maintainers fed by the events/ratings side:
   *
-  *   - cooc MATRIX store + facts snapshot
+  *   - cooc MATRIX store + facts store
   *                           ([[EventStream.startCoocMaintain]])
   *   - bucketed ratings snapshot (CDC merge)
   *                           ([[EventStream.startCdcApply]])
@@ -23,7 +23,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * Five micro-batches per stream (inserts, duplicate deliveries, a
   * re-rate, deletes, an update that moves lines between keys), a
   * session restart from the checkpoints between batches 2 and 3,
-  * orphan unpublished generations planted in all three stores during
+  * orphan unpublished generations planted in all four stores during
   * the outage (the next tick's `recover` must roll them back), then
   * the end pins:
   *
@@ -62,9 +62,10 @@ class EventsChaosSoakSpec extends AnyFunSuite {
 
     // ---- seeds: the three families' at-rest artifacts --------------
     val factsDir = s"$root/facts"; val matrixDir = s"$root/matrix"
-    facts.toSeq.toDF("user_id", "item_id").write.parquet(factsDir)
+    BucketStore.seed(facts.toSeq.toDF("user_id", "item_id"),
+      BucketStore.longBucket(col("user_id"), 64), factsDir, n = 64)
     // r17: the matrix store persists the packed pair key (pk, n_users)
-    BucketStore.seed(ItemCF.coocCountsPkOn(spark.read.parquet(factsDir)),
+    BucketStore.seed(ItemCF.coocCountsPkOn(facts.toSeq.toDF("user_id", "item_id")),
       ItemCF.pairBucket(col("pk"), 64), matrixDir, n = 64)
     val snapDir = s"$root/ratings"
     BucketStore.seed(
@@ -145,7 +146,7 @@ class EventsChaosSoakSpec extends AnyFunSuite {
       java.nio.file.Files.write(p.resolve("junk.parquet"), Array[Byte](1, 2, 3))
       ()
     }
-    plantOrphan(matrixDir); plantOrphan(snapDir); plantOrphan(lineDir)
+    plantOrphan(matrixDir); plantOrphan(factsDir); plantOrphan(snapDir); plantOrphan(lineDir)
     val restarted = startAll()
     qC = restarted._1; qR = restarted._2; qL = restarted._3
 
@@ -158,6 +159,7 @@ class EventsChaosSoakSpec extends AnyFunSuite {
     drain(Seq(qC, qL, qR))
     assert(!new java.io.File(s"$matrixDir/gen-99").exists(),
       "recover must roll the orphan generation back on the first post-crash tick")
+    assert(!new java.io.File(s"$factsDir/gen-99").exists())
     assert(!new java.io.File(s"$snapDir/gen-99").exists())
     assert(!new java.io.File(s"$lineDir/gen-99").exists())
 
@@ -176,10 +178,11 @@ class EventsChaosSoakSpec extends AnyFunSuite {
     val matrixNow = ItemCF.unpackCoocPk(BucketStore.readAll(spark, matrixDir))
       .select("item_a", "item_b", "n_users")
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
-    val batchNow = ItemCF.coocCountsOn(spark.read.parquet(factsDir))
+    val factsNow = BucketStore.readAll(spark, factsDir)
+    val batchNow = ItemCF.coocCountsOn(factsNow)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
     assert(matrixNow === batchNow)
-    assert(spark.read.parquet(factsDir).count() === facts.size.toLong)
+    assert(factsNow.count() === facts.size.toLong)
     assert(matrixNow === ItemCF.coocCountsOn(
       facts.toSeq.toDF("user_id", "item_id"))
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet,
@@ -208,6 +211,7 @@ class EventsChaosSoakSpec extends AnyFunSuite {
 
     // 4. markers: every store sits at the final batch id
     assert(BucketStore.appliedBatchId(matrixDir) === 4L)
+    assert(BucketStore.appliedBatchId(factsDir) === 4L)
     assert(BucketStore.appliedBatchId(snapDir) === 4L)
     assert(BucketStore.appliedBatchId(lineDir) === 4L)
   }

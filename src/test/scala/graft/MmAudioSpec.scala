@@ -19,7 +19,7 @@ import org.scalatest.funsuite.AnyFunSuite
   *  - corrupt payloads fingerprint to None instead of throwing;
   *  - the registered query finds every planted gain-scaled copy.
   */
-class MmAudioSpec extends AnyFunSuite {
+class MmAudioSpec extends AnyFunSuite with ReleasesCaches {
   private lazy val spark = TestSpark.spark
   private val sf = TestSpark.sf
 

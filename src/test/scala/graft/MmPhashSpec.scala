@@ -17,7 +17,7 @@ import org.scalatest.funsuite.AnyFunSuite
   *  - the registered query finds every planted brightened copy at
   *    hamming ≤ 7 and pairs nothing else.
   */
-class MmPhashSpec extends AnyFunSuite {
+class MmPhashSpec extends AnyFunSuite with ReleasesCaches {
   private lazy val spark = TestSpark.spark
   private val sf = TestSpark.sf
 

@@ -27,7 +27,7 @@ import org.scalatest.funsuite.AnyFunSuite
   *  - the registered query finds every planted trimmed re-encode;
   *  - maintainer ≡ batch with a cross-tick copy.
   */
-class MmVideoSpec extends AnyFunSuite {
+class MmVideoSpec extends AnyFunSuite with ReleasesCaches {
   private lazy val spark = TestSpark.spark
   private val sf = TestSpark.sf
 

@@ -15,7 +15,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * PREVIOUS tick's doc); and the bucketed stores advance with
   * touched-bucket I/O only — untouched bucket files byte-identical.
   */
-class NearDupStoreSpec extends AnyFunSuite {
+class NearDupStoreSpec extends AnyFunSuite with ReleasesCaches {
   private lazy val spark = TestSpark.spark
 
   test("streaming near-dup maintenance equals batch recompute after every tick") {

@@ -7,7 +7,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * scale — a query can stay value-correct while silently losing its
   * pushdown or broadcast, so correctness tests alone won't catch it.
   */
-class PlanShapeSpec extends AnyFunSuite {
+class PlanShapeSpec extends AnyFunSuite with ReleasesCaches {
   private lazy val spark = TestSpark.spark
   private val sf = TestSpark.sf
 

@@ -16,7 +16,7 @@ import org.scalatest.funsuite.AnyFunSuite
   *    probe bounds may only ever flip the decision TOWARD re-index
   *    (value-identical either way).
   */
-class R17OptSpec extends AnyFunSuite {
+class R17OptSpec extends AnyFunSuite with ReleasesCaches {
   private lazy val spark = TestSpark.spark
   private val sf = TestSpark.sf
 

@@ -4,7 +4,7 @@ import graft.operators.{Analytics, Relational}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-class RelationalSpec extends AnyFunSuite {
+class RelationalSpec extends AnyFunSuite with ReleasesCaches {
   private lazy val spark = TestSpark.spark
   private val sf = TestSpark.sf
 

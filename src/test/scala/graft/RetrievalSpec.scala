@@ -15,7 +15,7 @@ import graft.operators.Retrieval
   * the stored hybrid (both arms from their at-rest indexes) pinned ≡
   * the in-query fusion at full probe under the index's self rule.
   */
-class RetrievalSpec extends AnyFunSuite {
+class RetrievalSpec extends AnyFunSuite with ReleasesCaches {
   private lazy val spark = TestSpark.spark
   import spark.implicits._
 

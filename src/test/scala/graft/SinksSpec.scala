@@ -50,25 +50,6 @@ class SinksSpec extends AnyFunSuite {
     spark.sql("DROP TABLE b_inter_a"); spark.sql("DROP TABLE b_inter_b")
   }
 
-  test("compaction shrinks the file count and preserves every row") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_compact").toString + "/frag"
-    // simulate a micro-batch-fragmented sink: 64 files for a tiny table
-    val src = Tables.interactions(spark, sf).select("user_id", "item_id", "rating")
-    src.repartition(64).write.mode("overwrite").parquet(dir)
-    def parquetFiles = Option(new java.io.File(dir).listFiles()).getOrElse(Array.empty)
-      .count(f => f.getName.endsWith(".parquet"))
-    val before = parquetFiles
-    assert(before >= 32)
-    val expected = src.collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).sorted
-    Sinks.compact(spark, dir) // tiny dir → one target file
-    assert(parquetFiles === 1)
-    assert(!new java.io.File(dir + "_staged").exists())
-    assert(!new java.io.File(dir + "_old").exists())
-    val after = spark.read.parquet(dir)
-      .collect().map(r => (r.getAs[Long]("user_id"), r.getAs[Long]("item_id"), r.getAs[Double]("rating"))).sorted
-    assert(after.toSeq === expected.toSeq)
-  }
-
   test("topN key-value export matches the reference's redis format") {
     val recs = Relational.userTopRatings(spark, sf, k = 3)
     val kv = Sinks.topNKeyValue(recs).cache()

@@ -8,7 +8,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * every graph shape — and do it in O(log n) rounds where propagation
   * needs O(diameter).
   */
-class StarContractionSpec extends AnyFunSuite {
+class StarContractionSpec extends AnyFunSuite with ReleasesCaches {
   private lazy val spark = TestSpark.spark
   private val sf = TestSpark.sf
 

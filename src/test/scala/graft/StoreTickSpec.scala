@@ -7,6 +7,7 @@ import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, StreamingQueryException}
 import org.scalatest.funsuite.AnyFunSuite
+import scala.jdk.CollectionConverters._
 
 /** The nine streaming store maintainers all run through
   * [[graft.streaming.Maintainer.start]]. One table pins the skeleton's
@@ -18,7 +19,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * named tick, run by both their streaming maintainer and their
   * registered `_store` rung, which must return its `_inc` twin's rows.
   */
-class StoreTickSpec extends AnyFunSuite {
+class StoreTickSpec extends AnyFunSuite with ReleasesCaches {
   private lazy val spark = TestSpark.spark
   // the gate scale factor's corpus, beside the suites' default one
   private val sfGate = new java.io.File(TestSpark.sf).getParent + "/sf0.01"
@@ -48,12 +49,10 @@ class StoreTickSpec extends AnyFunSuite {
     * `badLayout` its first tick must fail on a bucket-count mismatch,
     * and `onDrift` counts drift-probe firings where the maintainer
     * has a probe (configured so that any run of it fires). `commitDir`
-    * is the store whose marker the tick moves last; `guarded` is
-    * false for the one maintainer whose replay guard stays in its
-    * tick (co-occurrence: its facts dir carries no marker).
+    * is the store whose marker the tick moves last.
     */
   private case class Maint(commitDir: String, start: (String, Boolean, () => Unit) => Running,
-      hasProbe: Boolean = false, guarded: Boolean = true)
+      hasProbe: Boolean = false)
 
   private def run[A: Encoder](rows: A*)(start: DataFrame => StreamingQuery): Running = {
     implicit val sqlCtx = spark.sqlContext
@@ -69,6 +68,16 @@ class StoreTickSpec extends AnyFunSuite {
         (2L, 11L, 3.0, false, ts("2024-01-01 00:00:00")))
         .toDF("user_id", "item_id", "rating", "is_implicit", "ts"),
       pmod(col("user_id"), lit(64)).cast("int"), dir, n = 64)
+  }
+
+  /** A user-bucketed co-occurrence facts store and the pair-count
+    * matrix store seeded from the same facts, both at 64 buckets.
+    */
+  private def seedCooc(factsDir: String, matrixDir: String, facts: Seq[(Long, Long)]): Unit = {
+    import spark.implicits._
+    val df = facts.toDF("user_id", "item_id")
+    BucketStore.seed(df, BucketStore.longBucket(col("user_id"), 64), factsDir, n = 64)
+    BucketStore.seed(ItemCF.coocCountsPkOn(df), ItemCF.pairBucket(col("pk"), 64), matrixDir, n = 64)
   }
 
   private val rating = RatingUpdate(3L, 10L, 2.5, false, ts("2024-01-02 00:00:00"), "upsert")
@@ -157,14 +166,13 @@ class StoreTickSpec extends AnyFunSuite {
       import spark.implicits._
       val factsDir = root + "/facts"
       val dir = root + "/matrix"
-      Seq((1L, 10L), (1L, 11L), (2L, 10L)).toDF("user_id", "item_id").write.parquet(factsDir)
-      BucketStore.seed(ItemCF.coocCountsPkOn(spark.read.parquet(factsDir)),
-        ItemCF.pairBucket(col("pk"), 64), dir, n = 64)
-      // user 1 gains item 12: delta pairs (10, 12) and (11, 12)
-      Maint(dir, (ckpt, bad, _) => run((1L, 12L)) { in =>
+      seedCooc(factsDir, dir, Seq((1L, 10L), (1L, 11L), (2L, 10L)))
+      // user 1 gains item 12: delta pairs (10, 12) and (11, 12). The
+      // facts store moves last; the bad layout is the matrix's
+      Maint(factsDir, (ckpt, bad, _) => run((1L, 12L)) { in =>
         EventStream.startCoocMaintain(in.toDF("user_id", "item_id"), factsDir, dir, ckpt,
           nBuckets = if (bad) 32 else 64)
-      }, guarded = false)
+      })
     },
     "retrain loop" -> { root =>
       import spark.implicits._
@@ -263,10 +271,7 @@ class StoreTickSpec extends AnyFunSuite {
         r.feed(); r.q.processAllAvailable(); r.q.stop(); r.q
       }
       assert(marker(m.commitDir) === marker0)
-      // co-occurrence keeps its matrix guard inside the tick, so the
-      // facts append re-runs on a replay; every other maintainer
-      // skips the batch before any job
-      if (m.guarded) assert(replayed === 0, s"the replayed batch ran $replayed Spark jobs")
+      assert(replayed === 0, s"the replayed batch ran $replayed Spark jobs")
     }
   }
 
@@ -275,15 +280,13 @@ class StoreTickSpec extends AnyFunSuite {
     val root = fresh("cooc_crash_window")
     val factsDir = root + "/facts"
     val dir = root + "/matrix"
-    Seq((1L, 10L), (1L, 11L), (2L, 10L), (3L, 12L)).toDF("user_id", "item_id")
-      .write.parquet(factsDir)
-    BucketStore.seed(ItemCF.coocCountsPkOn(spark.read.parquet(factsDir)),
-      ItemCF.pairBucket(col("pk"), 64), dir, n = 64)
+    seedCooc(factsDir, dir, Seq((1L, 10L), (1L, 11L), (2L, 10L), (3L, 12L)))
     // batch 0's matrix tick lands; the facts append never runs
     val batch = Seq((1L, 12L), (2L, 11L), (1L, 10L))
-    ItemCF.coocMergeTick(spark, dir, spark.read.parquet(factsDir),
+    ItemCF.coocMergeTick(spark, dir, BucketStore.readAll(spark, factsDir),
       batch.toDF("user_id", "item_id"), 0L, 64)
     assert(BucketStore.appliedBatchId(dir) === 0L)
+    assert(BucketStore.appliedBatchId(factsDir) === -1L)
     val marker0 = marker(dir)
     // the source re-delivers batch 0
     val r = run(batch: _*) { in =>
@@ -293,17 +296,84 @@ class StoreTickSpec extends AnyFunSuite {
     r.feed()
     r.q.processAllAvailable()
     r.q.stop()
-    val facts = spark.read.parquet(factsDir)
+    val facts = BucketStore.readAll(spark, factsDir)
     // the facts gain the batch's two new rows, not its existing one
     assert(facts.as[(Long, Long)].collect().toSet ===
       Set((1L, 10L), (1L, 11L), (2L, 10L), (3L, 12L), (1L, 12L), (2L, 11L)))
     assert(facts.count() === 6L)
-    // and the matrix tick was not applied twice
+    // and the matrix tick was not applied twice; the facts committed
     assert(marker(dir) === marker0)
+    assert(BucketStore.appliedBatchId(factsDir) === 0L)
     def rows(df: DataFrame) = df.select("item_a", "item_b", "n_users")
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
     assert(rows(ItemCF.unpackCoocPk(BucketStore.readAll(spark, dir))) ===
       rows(ItemCF.coocCountsOn(facts)))
+  }
+
+  /** Every file under `under` that a plan executed while `body` runs
+    * scans — cached frames' build plans, AQE stages and write commands
+    * included — caught off the listener manager (the bus is async, so
+    * this polls until the set stops growing).
+    */
+  private def scannedFiles(under: String)(body: => Unit): Set[String] = {
+    import org.apache.spark.sql.execution.{FileSourceScanExec, SparkPlan}
+    import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+    import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
+    def scans(p: SparkPlan): Seq[FileSourceScanExec] = p match {
+      case f: FileSourceScanExec => Seq(f)
+      case a: AdaptiveSparkPlanExec => scans(a.executedPlan)
+      case q: QueryStageExec => scans(q.plan)
+      case m: InMemoryTableScanExec => scans(m.relation.cachedPlan)
+      case other => (other.children ++ other.subqueries ++
+        other.innerChildren.collect { case c: SparkPlan => c }).flatMap(scans)
+    }
+    val files = java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
+    val seen = new java.util.concurrent.atomic.AtomicInteger(0)
+    val listener = new org.apache.spark.sql.util.QueryExecutionListener {
+      override def onSuccess(funcName: String,
+          qe: org.apache.spark.sql.execution.QueryExecution, durationNs: Long): Unit = {
+        scans(qe.executedPlan).flatMap(_.relation.location.inputFiles)
+          .filter(_.contains(under)).foreach(files.add)
+        seen.incrementAndGet(); ()
+      }
+      override def onFailure(funcName: String,
+          qe: org.apache.spark.sql.execution.QueryExecution, exception: Exception): Unit = ()
+    }
+    spark.listenerManager.register(listener)
+    try {
+      body
+      var prev = -1; var spins = 0
+      while (seen.get != prev && spins < 100) { prev = seen.get; Thread.sleep(100); spins += 1 }
+      files.asScala.toSet
+    } finally spark.listenerManager.unregister(listener)
+  }
+
+  test("co-occurrence: a tick opens only the delta users' facts buckets") {
+    import spark.implicits._
+    val root = fresh("cooc_facts_read")
+    val factsDir = root + "/facts"
+    val dir = root + "/matrix"
+    // users 1..8 in facts buckets 1..8; the batch names users 2 and 5
+    seedCooc(factsDir, dir, (1L to 8L).flatMap(u => Seq((u, 10L), (u, 10L + u))))
+    val batch = Seq((2L, 15L), (5L, 12L), (5L, 10L))
+    val files = scannedFiles(factsDir) {
+      val r = run(batch: _*) { in =>
+        EventStream.startCoocMaintain(in.toDF("user_id", "item_id"), factsDir, dir,
+          root + "/ckpt")
+      }
+      r.feed(); r.q.processAllAvailable(); r.q.stop()
+    }
+    val buckets = files.map(f => "bucket=(\\d+)".r.findFirstMatchIn(f).get.group(1).toInt)
+    assert(buckets === Set(2, 5), files.mkString(", "))
+    // the read was the delta users' whole facts: the matrix and the
+    // facts still agree with a batch recount
+    val facts = BucketStore.readAll(spark, factsDir)
+    assert(facts.count() === 18L)
+    def rows(df: DataFrame) = df.select("item_a", "item_b", "n_users")
+      .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
+    assert(rows(ItemCF.unpackCoocPk(BucketStore.readAll(spark, dir))) ===
+      rows(ItemCF.coocCountsOn(facts)))
+    assert(facts.as[(Long, Long)].collect().toSet.contains((2L, 15L)))
   }
 
   for ((store, inc) <- Seq(

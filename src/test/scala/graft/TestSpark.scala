@@ -19,3 +19,25 @@ object TestSpark {
   }
   val sf: String = "/root/testdata/sf0.001"
 }
+
+/** For a suite whose operators hand back frames they cached or
+  * checkpointed (a connected-components label table, a hot-bucket
+  * list, a fitted model's factors): after the suite's last test, the
+  * failed ones included, every RDD the suite left persisted is
+  * released, so a later suite in the same JVM does not inherit its
+  * heap.
+  */
+trait ReleasesCaches extends org.scalatest.BeforeAndAfterAll { this: org.scalatest.Suite =>
+  private var before = Set.empty[Int]
+
+  override def beforeAll(): Unit = {
+    before = TestSpark.spark.sparkContext.getPersistentRDDs.keySet.toSet
+    super.beforeAll()
+  }
+
+  override def afterAll(): Unit =
+    try super.afterAll()
+    finally TestSpark.spark.sparkContext.getPersistentRDDs.foreach { case (id, rdd) =>
+      if (!before(id)) rdd.unpersist(blocking = false)
+    }
+}

@@ -11,7 +11,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * ([[TextAnalysis.qualityFilterOf]]), and n-gram top-k counts with
   * deterministic tie-breaks ([[TextAnalysis.ngramTopKOf]]).
   */
-class TextPipelineSpec extends AnyFunSuite {
+class TextPipelineSpec extends AnyFunSuite with ReleasesCaches {
   private lazy val spark = TestSpark.spark
   private val sf = TestSpark.sf
 

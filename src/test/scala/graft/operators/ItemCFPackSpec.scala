@@ -6,7 +6,7 @@ import org.scalatest.funsuite.AnyFunSuite
 /** Regression: pair-key packing must round-trip ids in [2^31, 2^32) —
   * an arithmetic unpack shift would sign-extend them negative.
   */
-class ItemCFPackSpec extends AnyFunSuite {
+class ItemCFPackSpec extends AnyFunSuite with graft.ReleasesCaches {
   private lazy val spark = graft.TestSpark.spark
 
   test("pair ids at and above 2^31 unpack unchanged") {

@@ -14,6 +14,13 @@
 set -euo pipefail
 cd "$(git rev-parse --show-toplevel)"
 if git diff --cached --name-only | grep -qE '^(src/|build\.sbt$|project/)'; then
+  # one publish protocol: main code publishes stores through
+  # BucketStore's marker, never by renaming a directory on a Hadoop
+  # FileSystem (a rename is copy + delete on object stores)
+  if git grep --cached -nE '\.rename\(' -- 'src/main/*.scala' >&2; then
+    echo "[precommit] src/main calls .rename( — publish through BucketStore instead; commit blocked" >&2
+    exit 1
+  fi
   echo "[precommit] staged source changes -> sbt Test/compile" >&2
   sbt -batch Test/compile >/tmp/precommit_compile.log 2>&1 || {
     echo "[precommit] COMPILE FAILED — commit blocked (tail of /tmp/precommit_compile.log):" >&2
