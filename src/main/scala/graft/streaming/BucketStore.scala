@@ -469,12 +469,15 @@ private[graft] object BucketStore {
                 lease: Option[WriterLease] = None,
                 keys: Option[TickKeys] = None): TickStats = {
     // with a caller's summary the delta is consumed once (by the
-    // write), so there is nothing to cache. Marking a frame cached runs
-    // no job, so a replayed batch that no-ops below still costs none
+    // write), so there is nothing to cache. The frames are cached inside
+    // the plan, which runs only after the replay check: a replayed batch
+    // neither plans nor caches the delta (nor unpersists a caller's cache)
     val ownStats = keys.isEmpty
-    val ch = if (ownStats) changes.cache() else changes
-    val rm = if (ownStats) removed.map(_.cache()) else None
+    val cached = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
+    def own(df: DataFrame): DataFrame = { cached += df.cache(); df }
     try publishTick(dir, batchId, n, beforePublish, lease) { prevManifest =>
+      val ch = if (ownStats) own(changes) else changes
+      val rm = if (ownStats) removed.map(own) else None
       // one delta pass yields the touched buckets AND the row count the
       // broadcast gate below needs. dropKeys projects the same ch ∪ rm
       // rows, so its size is that row count by construction
@@ -489,7 +492,7 @@ private[graft] object BucketStore {
       // an all-duplicate tick changes nothing but must still advance
       // the marker, or the replay guard would re-run it forever
       if (changed.isEmpty && !compacting)
-        TickPlan(None, _ => prevManifest, _ => 0, compacted = false)
+        TickPlan(None, _ => prevManifest, Some(0), compacted = false)
       else {
         val touched =
           if (compacting) (prevManifest.keySet ++ changed).toSeq else changed
@@ -534,9 +537,9 @@ private[graft] object BucketStore {
         val gen = GenPrefix + batchId
         TickPlan(Some(merged),
           written => (prevManifest -- touched) ++ written.map(_ -> Seq(gen)),
-          _ => touched.size, compacted = compacting)
+          Some(touched.size), compacted = compacting)
       }
-    } finally if (ownStats) { ch.unpersist(); rm.foreach(_.unpersist()) }
+    } finally cached.foreach(_.unpersist())
   }
 
   /** Apply one APPEND-ONLY tick: `appended` (bucket column included)
@@ -609,7 +612,7 @@ private[graft] object BucketStore {
       } else TickPlan(Some(appended.repartition(col(BucketCol))),
         written => prevManifest ++ written.map(b =>
           b -> (prevManifest.getOrElse(b, Seq.empty) :+ gen)),
-        _.size, compacted = false)
+        None, compacted = false)
     }
 
   /** Apply one REPLACE tick: `rows` (bucket column included) is the
@@ -626,9 +629,8 @@ private[graft] object BucketStore {
     * older was folded in.
     */
   def applyReplaceTick(dir: String, rows: DataFrame, batchId: Long, n: Int,
-                       beforePublish: () => Unit = () => (),
-                       lease: Option[WriterLease] = None): TickStats =
-    publishTick(dir, batchId, n, beforePublish, lease) { _ =>
+                       beforePublish: () => Unit = () => ()): TickStats =
+    publishTick(dir, batchId, n, beforePublish, lease = None) { _ =>
       replacePlan(rows.repartition(col(BucketCol)), GenPrefix + batchId, compacted = false)
     }
 
@@ -637,17 +639,18 @@ private[graft] object BucketStore {
     * None writes nothing and re-publishes under the new batch id, so
     * the marker still advances — and `manifest` maps the buckets that
     * write produced (none without one) to the new manifest. `touched`
-    * and `compacted` fill the tick's [[TickStats]].
+    * and `compacted` fill the tick's [[TickStats]]; `touched` = None
+    * reports the buckets written, a merge reports the buckets it planned.
     */
   private case class TickPlan(out: Option[DataFrame],
                               manifest: Set[Int] => Map[Int, Seq[String]],
-                              touched: Set[Int] => Int, compacted: Boolean)
+                              touched: Option[Int], compacted: Boolean)
 
   /** A plan whose write is the whole live state: the new manifest
     * names only the buckets `out` produced.
     */
   private def replacePlan(out: DataFrame, gen: String, compacted: Boolean): TickPlan =
-    TickPlan(Some(out), written => written.map(_ -> Seq(gen)).toMap, _.size, compacted)
+    TickPlan(Some(out), written => written.map(_ -> Seq(gen)).toMap, None, compacted)
 
   /** The one publish step under [[applyTick]], [[applyAppendTick]] and
     * [[applyReplaceTick]], in order: the replay no-op (a batch at or
@@ -695,7 +698,7 @@ private[graft] object BucketStore {
       // everything above is invisible to readers until this lands
       writeMarker(dir, batchId)
       gc(fs, p, dir, batchId)
-      val st = TickStats(batchId, applied = true, touchedBuckets = tick.touched(written),
+      val st = TickStats(batchId, applied = true, touchedBuckets = tick.touched.getOrElse(written.size),
         compacted = tick.compacted, liveGenerations = liveGenCount(newManifest))
       log.info(s"$dir $st")
       st

@@ -509,6 +509,28 @@ class BucketStoreSpec extends AnyFunSuite {
     rows.toDF("k", "v").withColumn("bucket", BucketStore.longBucket(col("k"), 64))
   }
 
+  test("a replayed merge tick runs no job and leaves the caller's cached delta cached") {
+    val dir = replaceStore("bucket_store_merge_replay")
+    BucketStore.applyTick(spark, dir, kv((1L, 11L)), Seq("k"), batchId = 0L, n = 64)
+    val replay = kv((1L, 12L)).cache()
+    try {
+      replay.count()
+      withJobCounts() { jobsOf =>
+        var st: BucketStore.TickStats = null
+        val jobs = jobsOf("merge_replay") {
+          st = BucketStore.applyTick(spark, dir, replay, Seq("k"), batchId = 0L, n = 64,
+            removed = Some(kv((2L, 20L))))
+        }
+        assert(!st.applied)
+        assert(jobs === 0)
+      }
+      // the tick returned at the replay check, before it cached (and so
+      // before it released) the delta
+      assert(replay.storageLevel != org.apache.spark.storage.StorageLevel.NONE)
+      assert(storeRows(dir) === Set((1L, 11L), (2L, 20L)))
+    } finally replay.unpersist()
+  }
+
   test("replace tick: a frame resolved before a replace still reads the old rows") {
     val dir = replaceStore("bucket_store_replace_mvcc")
     val snapshot = BucketStore.readAll(spark, dir).select("k", "v")
