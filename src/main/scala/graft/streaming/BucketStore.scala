@@ -134,12 +134,10 @@ private[graft] object BucketStore {
     * its own generation. Bounds live generations (and with them the
     * manifest fan-out and the paths a read lists) at a constant; one
     * amortized full rewrite every ~`DefaultMaxLiveGenerations` ticks
-    * is the LSM trade. It does NOT bound files per bucket: a
-    * broadcast-gated merge or a plain append fold writes narrowly (no
-    * re-shuffle of the carried rows), so a bucket's file count after
-    * such a write follows the scan's file packing
-    * (`spark.sql.files.maxPartitionBytes` — a task packing k buckets
-    * writes k files) plus the delta's own files.
+    * is the LSM trade. It bounds files per bucket too: every
+    * generation holds one file per bucket (see [[writeGeneration]]), so
+    * a bucket's file count is the number of live generations that list
+    * it — at most this bound, and one right after a fold.
     */
   val DefaultMaxLiveGenerations = 8
 
@@ -324,9 +322,7 @@ private[graft] object BucketStore {
     val (fs, p) = fsFor(dir)
     fs.delete(p, true)
     val bucketed = df.withColumn(BucketCol, bucket)
-    bucketed
-      .repartition(col(BucketCol))
-      .write.partitionBy(BucketCol).mode("overwrite").parquet(s"$dir/$SeedGen")
+    writeGeneration(bucketed, s"$dir/$SeedGen")
     writeSmall(fs, new HPath(p, MetaFile), s"n=$n\nkind=$kind\n")
     // the store's schema, durable beyond any data file: once every row
     // is tombstoned and gc reclaims the last generation (including the
@@ -442,12 +438,11 @@ private[graft] object BucketStore {
     * ticks bounds live generations at a constant, with zero protocol
     * changes — the compacting tick publishes, recovers, and
     * snapshot-isolates exactly like any other, and older generations
-    * age out through the normal retention gc. The fold does not bound
-    * files per bucket: below the broadcast gate the write is narrow,
-    * so a bucket's file count depends on the scan's file packing (see
-    * [[DefaultMaxLiveGenerations]]). Callers that pin untouched-bucket
-    * byte-identity across a tick must size `maxLiveGenerations` above
-    * their tick count or account for the fold.
+    * age out through the normal retention gc. After the fold every
+    * live bucket is one file in one generation. Callers that pin
+    * untouched-bucket byte-identity across a tick must size
+    * `maxLiveGenerations` above their tick count or account for the
+    * fold.
     *
     * '''Caller-supplied key summary.''' Without `keys` the tick
     * derives its touched buckets, key-row count and drop-key set from
@@ -506,23 +501,15 @@ private[graft] object BucketStore {
         // broadcast at the conservative (string-key) row cap, same
         // convention as every delta hint (Hints.broadcastIfSmall); the
         // gate reuses the stats row count instead of scheduling a second
-        // counting job.
+        // counting job. The merged rows (carried ∪ changed) are clustered
+        // by bucket in the generation write, so each touched bucket comes
+        // out as one file.
         val deltaBroadcast =
           deltaKeyRows <= graft.operators.Hints.DeltaBroadcastMaxRowsMd5
-        val carry = old
+        val merged = old
           .join(if (deltaBroadcast) broadcast(dropKeys) else dropKeys,
             keyCols, "left_anti")
-        // when the delta side is broadcast, the carry-over anti is a
-        // NARROW probe over the store scan — every carried row is already
-        // in its bucket's files (its bucket read back off the file path).
-        // Only the delta-sized `ch` needs clustering before the
-        // partitionBy write; the union concatenates both sides'
-        // partitions without an exchange. Above the broadcast gate the
-        // anti is a key-shuffled join (bucket locality destroyed), so the
-        // full merged repartition stays.
-        val merged =
-          if (deltaBroadcast) carry.unionByName(ch.repartition(col(BucketCol)))
-          else carry.unionByName(ch).repartition(col(BucketCol))
+          .unionByName(ch)
         // the write IS the materialisation, also of a caller's lazy
         // `changes` whose plan reads this store. That read cannot hit the
         // materialise-before-mutate hazard: the target gen-<batchId> is
@@ -594,22 +581,13 @@ private[graft] object BucketStore {
       // guard's requirement); the orphaned empty dir is swept by gc
       // once it leaves the retention window.
       if (liveGenCount(prevManifest) >= maxLiveGenerations) {
-        val store = selectOrEmpty(spark, dir, prevManifest, prevManifest,
-          withBucket = true)
-        // the narrow fold, twin of applyTick's narrow merge: a plain
-        // disjoint-key fold (onCompact = None) re-clusters nothing — the
-        // store side is already bucket-clustered (each scanned file lies
-        // in one bucket dir, and its rows take that bucket off the file
-        // path), so only the delta needs the bucket repartition and the
-        // fold's write skips the full-store exchange. A reducing
-        // onCompact re-groups rows (its aggregation hash-partitions by
-        // key, not bucket), so that path keeps the full repartition.
-        replacePlan(onCompact match {
-          case None => store.unionByName(appended.repartition(col(BucketCol)))
-          case Some(reduce) =>
-            reduce(store.unionByName(appended)).repartition(col(BucketCol))
-        }, gen, compacted = true)
-      } else TickPlan(Some(appended.repartition(col(BucketCol))),
+        // the fold (store ∪ delta, reduced by onCompact if given) is
+        // clustered by bucket in the generation write like every other
+        // tick's, so it leaves each live bucket as one file
+        val folded = selectOrEmpty(spark, dir, prevManifest, prevManifest,
+          withBucket = true).unionByName(appended)
+        replacePlan(onCompact.fold(folded)(_(folded)), gen, compacted = true)
+      } else TickPlan(Some(appended),
         written => prevManifest ++ written.map(b =>
           b -> (prevManifest.getOrElse(b, Seq.empty) :+ gen)),
         None, compacted = false)
@@ -631,7 +609,7 @@ private[graft] object BucketStore {
   def applyReplaceTick(dir: String, rows: DataFrame, batchId: Long, n: Int,
                        beforePublish: () => Unit = () => ()): TickStats =
     publishTick(dir, batchId, n, beforePublish, lease = None) { _ =>
-      replacePlan(rows.repartition(col(BucketCol)), GenPrefix + batchId, compacted = false)
+      replacePlan(rows, GenPrefix + batchId, compacted = false)
     }
 
   /** What one tick publishes, planned against the previous manifest:
@@ -687,7 +665,7 @@ private[graft] object BucketStore {
       val gen = GenPrefix + batchId
       val written = tick.out.fold(Set.empty[Int]) { out =>
         checkFence(dir, fence0, s"tick $batchId")
-        out.write.partitionBy(BucketCol).mode("overwrite").parquet(s"$dir/$gen")
+        writeGeneration(out, s"$dir/$gen")
         presentBuckets(s"$dir/$gen")
       }
       val newManifest = tick.manifest(written)
@@ -704,6 +682,22 @@ private[graft] object BucketStore {
       st
     } finally lease.foreach(releaseLease(dir, _))
   }
+
+  /** The one generation writer under [[seed]] and [[publishTick]]:
+    * `out` (bucket column included) is clustered by bucket and written
+    * Hive-partitioned into `genDir`, so every generation holds exactly
+    * one file per bucket it lists — a bucket's file count is its
+    * live-generation count, whatever the plan above the write (a
+    * narrow probe over a multi-file scan would instead write one file
+    * per scan task that meets the bucket). No `_SUCCESS` marker: the
+    * store's own marker is the commit point, and nothing reads a
+    * generation's.
+    */
+  private def writeGeneration(out: DataFrame, genDir: String): Unit =
+    out.repartition(col(BucketCol))
+      .write.partitionBy(BucketCol)
+      .option("mapreduce.fileoutputcommitter.marksuccessfuljobs", "false")
+      .mode("overwrite").parquet(genDir)
 
   /** Distinct generations the manifest's live state spans — the
     * compaction trigger and the bound on both the paths a read lists and a

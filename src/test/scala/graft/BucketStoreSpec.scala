@@ -2,7 +2,7 @@ package graft
 
 import graft.operators.Mutations
 import graft.streaming.{BucketStore, EventStream}
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -900,9 +900,9 @@ class BucketStoreSpec extends AnyFunSuite {
     }
   }
 
-  test("r18 narrow merge: a broadcast-gated merge tick's generation write plans exactly one shuffle (the delta side)") {
+  test("one bucket exchange: a broadcast-gated merge tick's generation write shuffles once, above the union of carried and changed rows") {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("bucket_store_narrow").toString + "/store"
+    val dir = java.nio.file.Files.createTempDirectory("bucket_store_cluster").toString + "/store"
     // a store with rows in several buckets, so the carry-over side is
     // a real multi-bucket scan
     BucketStore.seed(
@@ -917,20 +917,185 @@ class BucketStoreSpec extends AnyFunSuite {
           .select(col("k"), BucketStore.longBucket(col("k"), 8).as("bucket"))))
     }
     // AdaptiveSparkPlan's toString appends the pre-AQE "Initial Plan"
-    // section after the final one — count shuffles in the FINAL plan
+    // section after the final one — read the FINAL plan
     val plan = planFull.split("== Initial Plan ==")(0)
-    // the carry-over side must stay NARROW: scan → broadcast anti →
-    // union, no hashpartitioning exchange of the touched store; the
-    // ONLY shuffle is the delta-sized repartition(bucket) of ch
-    val shuffles = "Exchange hashpartitioning".r.findAllIn(plan).length
-    assert(shuffles === 1,
-      s"broadcast-gated merge write should shuffle only the delta, saw $shuffles exchanges in:\n$plan")
-    assert(plan.contains("BroadcastHashJoin") && plan.contains("LeftAnti"),
+    val lines = plan.split("\n").toSeq
+    // the ONLY shuffle is the write's bucket clustering, and it sits
+    // above the union: carried and changed rows of a bucket meet in one
+    // task, so the bucket comes out as one file
+    val exchanges = lines.zipWithIndex.filter(_._1.contains("Exchange hashpartitioning"))
+    assert(exchanges.size === 1,
+      s"merge write should plan exactly one hashpartitioning exchange, saw ${exchanges.size} in:\n$plan")
+    val (exchange, at) = exchanges.head
+    assert(exchange.contains("hashpartitioning(bucket"),
+      s"the one exchange should cluster by bucket: $exchange")
+    val union = lines.indexWhere(_.contains("Union"))
+    assert(union > at, s"the bucket exchange should sit above the Union in:\n$plan")
+    // the carry-over anti join stays a broadcast probe of the delta keys
+    assert(lines.exists(l => l.contains("BroadcastHashJoin") && l.contains("LeftAnti")),
       s"carry-over anti should be a broadcast join in:\n$plan")
     // and the merged content is right
     assert(storeRows(dir) === (
       (0L until 1000L).filterNot(k => k == 1L || k == 2L || k == 9L)
         .map(k => (k, k * 2)).toSet ++ Set((1L, 99L), (9L, 90L))))
+  }
+
+  /** Parquet files per `gen-*` / `bucket=*` dir of a store, keyed by
+    * `gen/bucket`, plus every generation dir's entries.
+    */
+  private def genLayout(dir: String): (Map[String, Int], Seq[String]) = {
+    val gens = new java.io.File(dir).listFiles().filter(f => f.isDirectory && f.getName.startsWith("gen-"))
+    val files = gens.flatMap { g =>
+      g.listFiles().filter(f => f.isDirectory && f.getName.startsWith("bucket=")).map { b =>
+        s"${g.getName}/${b.getName}" -> b.listFiles().count(_.getName.endsWith(".parquet"))
+      }
+    }.toMap
+    (files, gens.flatMap(g => g.listFiles().map(f => s"${g.getName}/${f.getName}")).toSeq)
+  }
+
+  test("every publish kind writes exactly one file per bucket per generation and no _SUCCESS marker") {
+    import spark.implicits._
+    val n = 8
+    val dir = java.nio.file.Files.createTempDirectory("bucket_store_one_file").toString + "/store"
+    def bucketed(df: DataFrame) = df.withColumn("bucket", BucketStore.longBucket(col("k"), n))
+    // multi-partition inputs: written as they come, a bucket would take
+    // one file per input partition that holds its rows
+    def range(from: Long, until: Long, v: Column) =
+      spark.range(from, until, 1L, 4).select(col("id").as("k"), v.as("v"))
+    // driver-side reference: a multiset of (k, v)
+    var ref: Seq[(Long, Long)] = (0L until 400L).map(k => (k, k * 2))
+    def check(kind: String): Unit = {
+      val (files, entries) = genLayout(dir)
+      assert(files.nonEmpty, s"$kind: no bucket dirs")
+      files.foreach { case (b, c) => assert(c === 1, s"$kind: $b holds $c parquet files") }
+      assert(!entries.exists(_.endsWith("_SUCCESS")), s"$kind: a generation holds a _SUCCESS marker")
+      val rows = BucketStore.readAll(spark, dir).select("k", "v").as[(Long, Long)].collect().toSeq
+      assert(rows.sorted === ref.sorted, s"$kind: store rows differ from the reference")
+    }
+    def upsert(rows: Seq[(Long, Long)], drop: Set[Long]): Unit = {
+      val keys = rows.map(_._1).toSet ++ drop
+      ref = ref.filterNot(r => keys(r._1)) ++ rows
+    }
+    BucketStore.seed(range(0L, 400L, col("id") * 2), BucketStore.longBucket(col("k"), n), dir, n)
+    check("seed")
+
+    // broadcast-gated merge: upserts, a new key and a delete
+    val m1 = Seq((1L, 91L), (9L, 99L), (500L, 5L))
+    BucketStore.applyTick(spark, dir, bucketed(m1.toDF("k", "v")), Seq("k"), batchId = 0L, n = n,
+      removed = Some(bucketed(Seq(2L).toDF("k"))))
+    upsert(m1, Set(2L))
+    check("broadcast-gated merge")
+
+    // above-gate merge: a key summary whose row bound exceeds the
+    // broadcast cap makes the carry-over anti a shuffled join
+    val m2 = (10L until 40L).map(k => (k, k + 1000L))
+    val m2Drop = Set(41L, 42L)
+    val m2Keys = bucketed((m2.map(_._1) ++ m2Drop).toDF("k"))
+    val st2 = BucketStore.applyTick(spark, dir, bucketed(m2.toDF("k", "v")), Seq("k"),
+      batchId = 1L, n = n, keys = Some(BucketStore.TickKeys(
+        BucketStore.touchedBuckets(m2Keys.select("bucket")),
+        graft.operators.Hints.DeltaBroadcastMaxRowsMd5 + 1, m2Keys.select("k"))))
+    assert(st2.applied && !st2.compacted)
+    upsert(m2, m2Drop)
+    check("above-gate merge")
+
+    // append: new keys stack one generation
+    val a1 = range(1000L, 1040L, lit(7L))
+    assert(!BucketStore.applyAppendTick(spark, dir, bucketed(a1), batchId = 2L, n = n).compacted)
+    ref ++= (1000L until 1040L).map((_, 7L))
+    check("append")
+
+    // compacting merge: the fold rewrites every live bucket
+    val m3 = Seq((3L, 33L))
+    val st3 = BucketStore.applyTick(spark, dir, bucketed(m3.toDF("k", "v")), Seq("k"),
+      batchId = 3L, n = n, maxLiveGenerations = 1)
+    assert(st3.compacted)
+    upsert(m3, Set.empty)
+    check("compacting merge")
+
+    // compacting append, plain fold
+    val st4 = BucketStore.applyAppendTick(spark, dir, bucketed(range(2000L, 2040L, lit(8L))),
+      batchId = 4L, n = n, maxLiveGenerations = 1)
+    assert(st4.compacted)
+    ref ++= (2000L until 2040L).map((_, 8L))
+    check("compacting append, onCompact = None")
+
+    // compacting append with a reduction: partial rows of keys 2000..2039
+    // fold into one row each
+    val st5 = BucketStore.applyAppendTick(spark, dir, bucketed(range(2000L, 2040L, lit(1L))),
+      batchId = 5L, n = n, maxLiveGenerations = 1,
+      onCompact = Some(_.groupBy("k", "bucket").agg(sum("v").as("v"))))
+    assert(st5.compacted)
+    ref = ref.map { case (k, v) => if (k >= 2000L) (k, v + 1L) else (k, v) }
+    check("compacting append, onCompact = Some")
+
+    // replace: the whole store becomes one new generation
+    BucketStore.applyReplaceTick(dir, bucketed(range(5000L, 5100L, col("id") % 3)), batchId = 6L, n = n)
+    ref = (5000L until 5100L).map(k => (k, k % 3))
+    check("replace")
+  }
+
+  test("a merge tick whose generation write fails mid-job publishes nothing; recover and replay match a recompute") {
+    import spark.implicits._
+    val n = 8
+    val dir = java.nio.file.Files.createTempDirectory("bucket_store_failed_write").toString + "/store"
+    def bucketed(df: DataFrame) = df.withColumn("bucket", BucketStore.longBucket(col("k"), n))
+    BucketStore.seed((0L until 64L).map(k => (k, k)).toDF("k", "v"),
+      BucketStore.longBucket(col("k"), n), dir, n)
+    BucketStore.applyTick(spark, dir, bucketed(Seq((1L, 100L)).toDF("k", "v")), Seq("k"),
+      batchId = 0L, n = n)
+    val p = java.nio.file.Paths.get(dir)
+    def read(f: String) = new String(java.nio.file.Files.readAllBytes(p.resolve(f)), "UTF-8")
+    val marker0 = read("_graft_applied_batch")
+    val manifest0 = read("_graft_manifest_0")
+    val before = storeRows(dir)
+    // the batch: keys 0..31 get v = k + 500; key 13's value throws, so
+    // the generation write fails inside one task, after the plan started.
+    // A key summary keeps the tick from caching the delta first, so the
+    // write is the job that runs the failing column
+    def batch(failing: Boolean) = {
+      val v = col("id") + 500L
+      spark.range(0L, 32L, 1L, 4).select(col("id").as("k"),
+        (if (failing) when(col("id") === 13L, raise_error(lit("injected write failure")).cast("long"))
+          .otherwise(v) else v).as("v"))
+    }
+    def keys = {
+      val ks = bucketed(spark.range(0L, 32L).select(col("id").as("k")))
+      BucketStore.TickKeys(BucketStore.touchedBuckets(ks.select("bucket")), 32L, ks.select("k"))
+    }
+    val err = intercept[Exception] {
+      BucketStore.applyTick(spark, dir, bucketed(batch(failing = true)), Seq("k"),
+        batchId = 1L, n = n, keys = Some(keys))
+    }
+    assert(Iterator.iterate[Throwable](err)(_.getCause).takeWhile(_ != null)
+      .exists(e => String.valueOf(e.getMessage).contains("injected write failure")), err.toString)
+    // nothing published: marker and manifest as before, readers unchanged
+    assert(read("_graft_applied_batch") === marker0)
+    assert(read("_graft_manifest_0") === manifest0)
+    assert(!java.nio.file.Files.exists(p.resolve("_graft_manifest_1")))
+    assert(storeRows(dir) === before)
+    // no retained manifest names a generation that is not on disk
+    val gens = new java.io.File(dir).listFiles().map(_.getName).filter(_.startsWith("gen-")).toSet
+    new java.io.File(dir).listFiles().map(_.getName).filter(_.startsWith("_graft_manifest_"))
+      .foreach { m =>
+        read(m).split("\n").filter(_.nonEmpty).flatMap(_.split("\t")(1).split(","))
+          .foreach(g => assert(gens(g), s"$m names missing generation $g"))
+      }
+    // the job abort cleans up after the failed write; a writer killed
+    // mid-job gets no abort and leaves its task files under
+    // gen-1/_temporary. Plant that orphan: it is invisible to readers,
+    // and recover deletes it
+    val partial = p.resolve("gen-1/_temporary/0/_temporary/attempt_0/bucket=1")
+    java.nio.file.Files.createDirectories(partial)
+    java.nio.file.Files.write(partial.resolve("part-00000.parquet"), Array[Byte](1, 2, 3))
+    assert(storeRows(dir) === before)
+    BucketStore.recover(dir)
+    assert(!java.nio.file.Files.exists(p.resolve("gen-1")))
+    // the replayed batch equals a batch recompute of the same change
+    val st = BucketStore.applyTick(spark, dir, bucketed(batch(failing = false)), Seq("k"),
+      batchId = 1L, n = n, keys = Some(keys))
+    assert(st.applied)
+    assert(storeRows(dir) === (before.filterNot(_._1 < 32L) ++ (0L until 32L).map(k => (k, k + 500L))))
   }
 
   test("cdc tick job budget: one keys pass and one resolution, inside the write, on a store with 3 live generations") {

@@ -21,6 +21,14 @@ if git diff --cached --name-only | grep -qE '^(src/|build\.sbt$|project/)'; then
     echo "[precommit] src/main calls .rename( — publish through BucketStore instead; commit blocked" >&2
     exit 1
   fi
+  # one generation writer: only BucketStore partitions a write by the
+  # store's bucket column, and it clusters the rows by bucket first so a
+  # generation holds one file per bucket
+  if git grep --cached -nE 'partitionBy\((BucketStore\.)?BucketCol\b|partitionBy\("bucket"' \
+      -- 'src/main/*.scala' ':!src/main/scala/graft/streaming/BucketStore.scala' >&2; then
+    echo "[precommit] src/main partitions a write by bucket outside BucketStore.scala — write generations through BucketStore; commit blocked" >&2
+    exit 1
+  fi
   echo "[precommit] staged source changes -> sbt Test/compile" >&2
   sbt -batch Test/compile >/tmp/precommit_compile.log 2>&1 || {
     echo "[precommit] COMPILE FAILED — commit blocked (tail of /tmp/precommit_compile.log):" >&2
